@@ -54,6 +54,19 @@ object BenchHost {
       else "unknown"
     } catch { case _: Throwable => "unknown" }
 
+  /** `s` as a JSON string literal: backslash, quote and ALL control
+    * chars (< 0x20) escaped — a tab or CR in a name or in builder-authored
+    * SQL would otherwise make a reader's json.load fail. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   /** -Xmx actually in effect, as a self-description field. */
   def heapDesc: String = {
     val mb = Runtime.getRuntime.maxMemory() / (1024L * 1024L)
@@ -86,7 +99,6 @@ object BenchHost {
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // optional trailing query names: time only that subset (scaling
     // studies — the driver passes no args and times the full registry).
     // Fail fast on typos: a misspelled name would otherwise benchmark
@@ -94,31 +106,7 @@ object Bench {
     val subset = args.toSet
     val unknown = subset.diff(SparkEntry.queries.keySet)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", GraftExtensions.Name)
-      // Benchmark SFs are MBs, not TBs: the 4 MB openCostInBytes default
-      // collapses these scans to a handful of partitions and idles the
-      // other cores (a 2 MB parquet = ONE partition). 128 KB keeps every
-      // scan ~numCores-wide here; at 100 TB the defaults are the right
-      // sizing and this override is unnecessary (splits are plentiful).
-      .config("spark.sql.files.openCostInBytes", "131072")
-      // Kryo: the StageCache serialized pins (and any non-UnsafeRow RDD
-      // path) pay ObjectOutputStream per row otherwise — measured 2x on
-      // the largest stage build (QUERIES.md §"Stage pin storage")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.rdd.compress",
-        sys.env.getOrElse("SPARK_GRAFT_RDD_COMPRESS", "true"))
-      .config("spark.ui.enabled", "false")
-    // StageCache pin-level A/B knob (r16) — unset = StageCache.DefaultLevel
-    sys.env.get("SPARK_GRAFT_STAGE_LEVEL").foreach(
-      builder.config(graft.engine.StageCache.StorageLevelConf, _))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.engine.ingest.Sources.ensureNanosAsLong(spark)
+    val spark = GraftSession.local("graft-bench")
     // Force FULL evaluation of every output column via the no-op v2 sink.
     // The earlier `.count()` consumer let Catalyst prune the measured work:
     // a projection-only query (text_winnow, corpus_clean, mm_features, …)
@@ -163,7 +151,7 @@ object Bench {
     val gitSha = BenchHost.gitSha
     val scopeNames = SparkEntry.queries.keysIterator
       .filter(n => subset.isEmpty || subset(n)).toSeq.sorted
-    val scopeJson = scopeNames.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val scopeJson = scopeNames.map(BenchHost.jsonString).mkString("[", ",", "]")
     val mode =
       if (subset.isEmpty) "full"
       else if (sys.env.get("SPARK_GRAFT_STAGES").contains("1")) "subset+stages"
@@ -290,8 +278,10 @@ object Bench {
     val withCanary = ok ++
       canaryPre.map("_canary_pre" -> _).toSeq ++
       canaryPost.map("_canary_post" -> _).toSeq
-    val qs = withCanary.map { case (k, v) => "\"" + k + "\":" + ms(v) }.mkString("{", ",", "}")
-    val es = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }.mkString("{", ",", "}")
+    def row(k: String, v: Double): String = BenchHost.jsonString(k) + ":" + ms(v)
+    val qs = withCanary.map { case (k, v) => row(k, v) }.mkString("{", ",", "}")
+    val es = errors.map { case (k, v) => BenchHost.jsonString(k) + ":\"" + v + "\"" }
+      .mkString("{", ",", "}")
     val totalSec = ok.map(_._2).sum
     val total = ms(totalSec)
     // canary_mean / total_canary_norm (r12 verdict ask #7): the
@@ -322,8 +312,7 @@ object Bench {
     // lines (plus the final headline, printed last).
     val chunks = withCanary.sortBy(_._1).grouped(20).toSeq
     chunks.zipWithIndex.foreach { case (chunk, i) =>
-      val rows = chunk.map { case (k, v) => "\"" + k + "\":" + ms(v) }
-        .mkString("{", ",", "}")
+      val rows = chunk.map { case (k, v) => row(k, v) }.mkString("{", ",", "}")
       println(s"""{"metric":"queries_chunk","i":$i,"n_chunks":${chunks.size},"rows":$rows}""")
     }
     println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${ok.size},"n_errors":${errors.size},$canaries"sf":"$sfDir"}""")

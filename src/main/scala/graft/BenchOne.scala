@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Profiling aid: time ONE named query repeatedly under the exact Bench
   * session config. `runMain graft.BenchOne <name> [reps] [sfDir]` prints a
   * JSON line with every sample so stalls and steady-state are visible
@@ -12,25 +10,8 @@ object BenchOne {
     val name = args.headOption.getOrElse(sys.error("usage: BenchOne <query> [reps] [sfDir]"))
     val reps = if (args.length > 1) args(1).toInt else 3
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", GraftExtensions.Name)
-      .config("spark.sql.files.openCostInBytes", "131072")
-      // Kryo: see Bench — the serialized stage pins need it
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.rdd.compress",
-        sys.env.getOrElse("SPARK_GRAFT_RDD_COMPRESS", "true"))
-      .config("spark.ui.enabled", "false")
-    // StageCache pin-level A/B knob (r16) — unset = StageCache.DefaultLevel
-    sys.env.get("SPARK_GRAFT_STAGE_LEVEL").foreach(
-      builder.config(graft.engine.StageCache.StorageLevelConf, _))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.engine.ingest.Sources.ensureNanosAsLong(spark)
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local("graft-bench-one")
     // `_stage_*` names resolve from BenchStages and measure the COLD
     // build (cache cleared before every sample) — the one timing Bench's
     // subset mode structurally cannot produce (subset runs prewarm
@@ -100,7 +81,7 @@ object BenchOne {
     val stageLevel = spark.conf
       .getOption(graft.engine.StageCache.StorageLevelConf)
       .getOrElse(graft.engine.StageCache.autoModeDesc(spark))
-    println(s"""{"metric":"bench_one","query":"$name","sf":"$sfDir",""" +
+    println(s"""{"metric":"bench_one","query":${BenchHost.jsonString(name)},"sf":"$sfDir",""" +
       s""""git_sha":"${BenchHost.gitSha}","heap":"${BenchHost.heapDesc}",""" +
       s""""stage_level":"$stageLevel",""" +
       s""""canary_proto":${BenchHost.CanaryProto},""" +

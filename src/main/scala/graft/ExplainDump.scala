@@ -1,14 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Measurement aid: dump `.explain("formatted")` for a list of registry
   * queries (or `_stage_*` rows) to files, one JVM for the whole batch.
   *
   *   runMain graft.ExplainDump <sfDir> <outDir> <suffix> <name> [name...]
   *
-  * writes `<outDir>/<name>_<suffix>.txt` for each name. Session config
-  * matches Bench exactly so the dumped plan is the plan the bench runs
+  * writes `<outDir>/<name>_<suffix>.txt` for each name. The session is
+  * Bench's ([[GraftSession]] local profile), so the dumped plan is the
+  * plan the bench runs
   * (AQE initial plan — `isFinalPlan=false` — as `explain` shows before
   * execution). Used to produce the committed `plans/r16` before/after
   * artifacts; not part of the library surface.
@@ -21,25 +20,7 @@ object ExplainDump {
     val suffix = args(2)
     val names = args.drop(3).toSeq
     outDir.mkdirs()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", GraftExtensions.Name)
-      .config("spark.sql.files.openCostInBytes", "131072")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.ui.enabled", "false")
-    // StageCache pin-level knob (same as Bench/BenchOne/Verify) — lets a
-    // CONSUMER dump show what its scan of the pin looks like under a
-    // given pin mode (e.g. FileSourceScan w/ pruned ReadSchema vs a
-    // whole-row Scan ExistingRDD)
-    sys.env.get("SPARK_GRAFT_STAGE_LEVEL").foreach(
-      builder.config(graft.engine.StageCache.StorageLevelConf, _))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.engine.ingest.Sources.ensureNanosAsLong(spark)
+    val spark = GraftSession.local("graft-explain")
     try SparkEntry.prepare(spark, sfDir) catch { case _: Throwable => () }
     names.foreach { name =>
       val fn =

@@ -2,156 +2,28 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.engine.expr.{NativeFunctions, PyParity}
+import graft.engine.expr.NativeFunctions
 
-/** Cluster-wide installation of graft's native expressions.
+/** Session-wide installation of graft's engine functions and optimizer
+  * rule — Spark's supported route (`spark.sql.extensions`, which
+  * [[GraftSession]] sets on every graft session): the builder applies this
+  * class when each session (and each `newSession()`) is constructed, so
+  * the functions behave like built-ins in SQL gateways, notebooks and
+  * thriftservers without application code running first.
   *
-  * `NativeFunctions.ensureRegistered` covers the embedded case (register on
-  * whatever session the caller already has), but a real deployment wants the
-  * functions present in EVERY session — SQL gateways, notebooks, thriftserver
-  * — without application code running first. Spark's supported route is
-  * `spark.sql.extensions=graft.GraftExtensions`: the builder applies this
-  * class when each session (and each `newSession()`) is constructed, so the
-  * functions behave like built-ins. `ensureRegistered` stays as the
-  * idempotent fallback and is a no-op when this extension is installed.
+  * The functions come from [[NativeFunctions.Functions]], the same table
+  * `NativeFunctions.ensureRegistered` reads for a session built without
+  * this extension — so `ensureRegistered` is a no-op on a graft session.
+  * The optimizer rule ([[graft.engine.plans.RewriteDeclarativeDot]]) is
+  * installed only here.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  import GraftExtensions._
-
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => graft.engine.plans.RewriteDeclarativeDot)
-    ext.injectFunction((
-      FunctionIdentifier(NativeFunctions.QdotName),
-      info(NativeFunctions.QdotName,
-        "exact BIGINT dot product of two array<bigint> columns (codegen'd)",
-        "_FUNC_(array(1L,2L), array(3L,4L)) -> 11"),
-      (exprs: Seq[Expression]) => NativeFunctions.buildQdot(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier(NativeFunctions.PyCheckName),
-      info(NativeFunctions.PyCheckName,
-        "reference-parity exception text for a mongod log line, NULL if none",
-        "_FUNC_(line)"),
-      (exprs: Seq[Expression]) => {
-        NativeFunctions.checkArity(NativeFunctions.PyCheckName, 1, exprs)
-        PyParity.PyParityCheck(exprs(0))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier(NativeFunctions.PyErrorBranchName),
-      info(NativeFunctions.PyErrorBranchName,
-        "whether the reference would route this mongod line to parse_errors",
-        "_FUNC_(line)"),
-      (exprs: Seq[Expression]) => {
-        NativeFunctions.checkArity(NativeFunctions.PyErrorBranchName, 1, exprs)
-        PyParity.PyErrorBranchCheck(exprs(0))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier(NativeFunctions.OpaqueName),
-      info(NativeFunctions.OpaqueName,
-        "optimizer-opaque identity: value-equal to its argument, blocks " +
-          "predicate pushdown / project collapse through it",
-        "_FUNC_(expensive_expr)"),
-      (exprs: Seq[Expression]) => {
-        NativeFunctions.checkArity(NativeFunctions.OpaqueName, 1, exprs)
-        NativeFunctions.OpaqueBarrier(exprs(0))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier(NativeFunctions.RegexFindName),
-      info(NativeFunctions.RegexFindName,
-        "group 1 of the first regex match, '' for a non-participating " +
-          "group, NULL when the pattern does not match — rlike + " +
-          "regexp_extract in one regex execution",
-        "_FUNC_(entry, '# Time: (.*)')"),
-      (exprs: Seq[Expression]) => {
-        NativeFunctions.checkArity(NativeFunctions.RegexFindName, 2, exprs)
-        NativeFunctions.RegexFindGroup(exprs(0), exprs(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier(graft.engine.expr.MongoJson.MongoLineParseName),
-      info(graft.engine.expr.MongoJson.MongoLineParseName,
-        "mongod structured-log line parsed to the MongodLine struct in " +
-          "ONE Jackson streaming pass — observably identical to " +
-          "from_json(line, MongodLine, PERMISSIVE + _corrupt)",
-        "_FUNC_(line)"),
-      (exprs: Seq[Expression]) => {
-        NativeFunctions.checkArity(
-          graft.engine.expr.MongoJson.MongoLineParseName, 1, exprs)
-        graft.engine.expr.MongoJson.MongoLineParse(exprs(0))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier(NativeFunctions.MySqlFieldsName),
-      info(NativeFunctions.MySqlFieldsName,
-        "all seven MySQL slow-log field captures in ONE compiled pass; " +
-          "array<string> of 7 nullable captures in battery order — " +
-          "value-identical to running regex_find_group per pattern",
-        "_FUNC_(entry)"),
-      (exprs: Seq[Expression]) => {
-        NativeFunctions.checkArity(NativeFunctions.MySqlFieldsName, 1, exprs)
-        NativeFunctions.MySqlEntryFields(exprs(0))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier(NativeFunctions.LangSignalName),
-      info(NativeFunctions.LangSignalName,
-        "per-word-set ASCII \\b match counts + Han-char count in ONE " +
-          "text scan; array<bigint> of size(sets)+1",
-        "_FUNC_(text, array(array('the','and'), array('el','la')))"),
-      (exprs: Seq[Expression]) => NativeFunctions.buildLangSignal(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier(NativeFunctions.TextStatName),
-      info(NativeFunctions.TextStatName,
-        "ws-token, BPE-token, punct, upper and stopword-hit counts in " +
-          "ONE text scan; array<bigint> of 5",
-        "_FUNC_(text, array('the','and'))"),
-      (exprs: Seq[Expression]) => NativeFunctions.buildTextStat(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier(NativeFunctions.WinnowName),
-      info(NativeFunctions.WinnowName,
-        "Karp-Rabin rolling-hash winnowing fingerprint: min and distinct " +
-          "count of every w-code-point window hash in ONE scan; " +
-          "struct<fingerprint_h: bigint, n_distinct_windows: int>",
-        "_FUNC_(text, 16)"),
-      (exprs: Seq[Expression]) => NativeFunctions.buildWinnow(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier(NativeFunctions.Md5PrefixName),
-      info(NativeFunctions.Md5PrefixName,
-        "first N hex digits of md5 as BIGINT — value-identical to " +
-          "conv(substring(md5(s), 1, N), 16, 10), allocation-free",
-        "_FUNC_(text, 15)"),
-      (exprs: Seq[Expression]) => NativeFunctions.buildMd5Prefix(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier(NativeFunctions.WordRepName),
-      info(NativeFunctions.WordRepName,
-        "single-pass Gopher-repetition counters over a token array: " +
-          "[n_words, n_distinct_words, top_word_cnt, n2, d2, n3, d3]; " +
-          "empty/null tokens skipped, distinct counts exact (dense ids)",
-        "_FUNC_(split(lower(text), '\\\\s+'))"),
-      (exprs: Seq[Expression]) => {
-        NativeFunctions.checkArity(NativeFunctions.WordRepName, 1, exprs)
-        NativeFunctions.WordRepCounts(exprs(0))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier(NativeFunctions.ShingleHashName),
-      info(NativeFunctions.ShingleHashName,
-        "positional n-token shingle md5-prefix hashes of lower(text) in " +
-          "ONE scan, array<bigint>; empty when the doc has < n tokens — " +
-          "value-identical to the tokens/element_at/concat_ws/" +
-          "md5_prefix_long chain, shingle strings never materialized",
-        "_FUNC_(text, 3, 15)"),
-      (exprs: Seq[Expression]) => NativeFunctions.buildShingleHashes(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier(NativeFunctions.SimhashSigName),
-      info(NativeFunctions.SimhashSigName,
-        "per-document band-packed SimHash signature over md5 token " +
-          "hashes in ONE scan, array<bigint> of `bands`; NULL for " +
-          "zero-token docs — value-identical to the explode + two " +
-          "md5 slices + wide vote aggregate it replaces",
-        "_FUNC_(text, 4, 15)"),
-      (exprs: Seq[Expression]) => NativeFunctions.buildSimhashSig(exprs)))
+    NativeFunctions.Functions.foreach(f =>
+      ext.injectFunction((FunctionIdentifier(f.name), f.info, f.builder)))
   }
-
-  private def info(name: String, usage: String, example: String): ExpressionInfo =
-    new ExpressionInfo("graft", null, name, s"$name - $usage", s"Examples: $example")
 }
 
 object GraftExtensions {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic: build every [[BenchStages]] row at one SF and report what
   * the pinned materializations actually WEIGH in the block manager —
   * per-stage build seconds plus cumulative memory/disk bytes — and how
@@ -13,32 +11,17 @@ import org.apache.spark.sql.SparkSession
   * default (row objects in old-gen) or a serialized/disk pin is the
   * right production shape.
   *
-  * `runMain graft.StageFootprint [sfDir]` — honors the same env knobs as
-  * Bench (SPARK_GRAFT_CPUS, SPARK_DRIVER_MEM via build.sbt) plus
-  * `SPARK_GRAFT_STAGE_LEVEL` to A/B the StageCache pin level. Prints one
-  * JSON line per stage and a trailing summary line.
+  * `runMain graft.StageFootprint [sfDir]` — runs the [[GraftSession]]
+  * local profile like Bench (SPARK_GRAFT_CPUS, SPARK_DRIVER_MEM via
+  * build.sbt); A/B the StageCache pin level with
+  * `SPARK_GRAFT_JVM_OPTS=-Dspark.graft.stageCache.storageLevel=PARQUET`.
+  * Prints one JSON line per stage and a trailing summary line.
   */
 object StageFootprint {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", GraftExtensions.Name)
-      .config("spark.sql.files.openCostInBytes", "131072")
-      // Kryo: see Bench — the serialized stage pins need it
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.rdd.compress",
-        sys.env.getOrElse("SPARK_GRAFT_RDD_COMPRESS", "true"))
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_STAGE_LEVEL").foreach(
-      builder.config(graft.engine.StageCache.StorageLevelConf, _))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.engine.ingest.Sources.ensureNanosAsLong(spark)
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local("graft-stage-footprint")
     def consume(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
     try SparkEntry.prepare(spark, sfDir) catch { case _: Throwable => () }

@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import BenchHost.{jsonString => q}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -10,22 +10,7 @@ object Verify {
     // optional trailing query names: dump only that subset (dev loop —
     // the driver always passes exactly two args and gets the full dump)
     val subset = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", GraftExtensions.Name)
-      // Kryo: see Bench — the serialized stage pins need it
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.ui.enabled", "false")
-    // StageCache pin-level A/B knob (same as Bench/BenchOne) — lets the
-    // oracle gate run under a non-default pin mode (e.g. PARQUET)
-    sys.env.get("SPARK_GRAFT_STAGE_LEVEL").foreach(
-      builder.config(graft.engine.StageCache.StorageLevelConf, _))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.engine.ingest.Sources.ensureNanosAsLong(spark)
+    val spark = GraftSession.local("graft-verify", logLevel = "WARN")
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries
@@ -38,18 +23,6 @@ object Verify {
         failed(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(300)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.window.WindowExec
@@ -72,18 +71,7 @@ object WindowAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val limit = if (args.length > 1) args(1).toLong else 4096L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", GraftExtensions.Name)
-      .config("spark.sql.files.openCostInBytes", "131072")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.engine.ingest.Sources.ensureNanosAsLong(spark)
+    val spark = GraftSession.local("graft-window-audit")
     try SparkEntry.prepare(spark, sfDir) catch { case _: Throwable => () }
 
     var worstQuery = ""

@@ -88,30 +88,15 @@ object Main {
 
     val preexisting = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession).isDefined
-    val builder = SparkSession.builder()
-      .appName(s"graft-${args.mode}")
-      .config("spark.sql.session.timeZone", "UTC")
-      // Kryo: the StageCache serialized pins pay ObjectOutputStream per
-      // row otherwise (QUERIES.md §"Stage pin storage"). spark.serializer
-      // is a static core conf: an embedding caller's or spark-submit's
-      // RUNNING context keeps whatever it launched with — this only
-      // takes effect when this CLI is the one creating the context
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      // lz4 the serialized pins: the DISK_ONLY stage materializations
-      // write multi-GB long/string tables whose blocks shrink 2-4x
-      // under lz4 — on hosts where disk bandwidth is the pin
-      // bottleneck the compressed write+read is the difference between
-      // a usable and an unusable stage build (r16 session-3 A/B,
-      // QUERIES.md §"Stage pin storage"). Same static-conf caveat as
-      // spark.serializer above.
-      .config("spark.rdd.compress", "true")
-      .config("spark.sql.extensions", graft.GraftExtensions.Name)
-    // under spark-submit (or an embedding test session) the master is
-    // already set; a bare `java`/`sbt runMain` invocation gets local[*]
-    val spark = (if (preexisting || sys.props.contains("spark.master")) builder
-                 else builder.master("local[*]")).getOrCreate()
+    // Engine profile only (graft.GraftSession): under spark-submit or an
+    // embedding caller's session, cli.Main must not resize the caller's
+    // shuffles or scans. Static confs (serializer, extensions) only take
+    // effect when this CLI is the one creating the context. A bare
+    // `java`/`sbt runMain` invocation gets local[*].
+    val spark = graft.GraftSession.engine(s"graft-${args.mode}",
+      if (preexisting || sys.props.contains("spark.master")) None
+      else Some("local[*]"))
     spark.sparkContext.setLogLevel("WARN")
-    graft.engine.ingest.Sources.ensureNanosAsLong(spark)
     if (args.stageCacheDir.nonEmpty)
       spark.conf.set(graft.engine.StageCache.DurableDirConf, args.stageCacheDir)
 

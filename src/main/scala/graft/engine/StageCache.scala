@@ -72,15 +72,14 @@ object StageCache {
     */
   val DurableDirConf = "spark.graft.stageCache.dir"
 
-  /** Storage level for the session-local (mode 1) pin, as a
-    * `StorageLevel.fromString` name (e.g. `MEMORY_AND_DISK`,
-    * `MEMORY_AND_DISK_SER`, `DISK_ONLY`), or the special value
-    * `PARQUET` — a session-local columnar pin: the stage is written as
-    * parquet under a temp dir (deleted on [[clear]]) and read back, so
-    * consumers get a vectorized scan with column pruning and predicate
-    * pushdown into the pin. Unset = size-adaptive AUTO
-    * ([[AutoParquetBytesConf]]): PARQUET for large corpora,
-    * [[DefaultLevel]] checkpoint below the crossover.
+  /** Pin mode for the session-local (mode 1) pin: `DISK_ONLY` (the
+    * [[DefaultLevel]] checkpoint pin) or `PARQUET` — a session-local
+    * columnar pin: the stage is written as parquet under a temp dir
+    * (deleted on [[clear]]) and read back, so consumers get a vectorized
+    * scan with column pruning and predicate pushdown into the pin. Unset
+    * = size-adaptive AUTO ([[AutoParquetBytesConf]]): PARQUET for large
+    * corpora, the checkpoint pin below the crossover. Any other value
+    * fails the stage build, naming the allowed values.
     */
   val StorageLevelConf = "spark.graft.stageCache.storageLevel"
 
@@ -163,8 +162,26 @@ object StageCache {
   /** run_meta self-description under this session's effective
     * [[AutoParquetBytesConf]]. */
   def autoModeDesc(spark: SparkSession): String =
-    autoModeDescFor(spark.conf.getOption(AutoParquetBytesConf)
-      .map(_.toLong).getOrElse(AutoParquetBytesDefault))
+    autoModeDescFor(autoParquetBytes(spark))
+
+  /** The session's effective [[AutoParquetBytesConf]] threshold; a
+    * malformed value falls back to [[AutoParquetBytesDefault]] rather
+    * than failing a run over a tuning knob. */
+  def autoParquetBytes(spark: SparkSession): Long =
+    spark.conf.getOption(AutoParquetBytesConf)
+      .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
+      .getOrElse(AutoParquetBytesDefault)
+
+  /** The session's explicit [[StorageLevelConf]]: `Some(true)` for
+    * PARQUET, `Some(false)` for DISK_ONLY, `None` when unset (AUTO). */
+  private def explicitParquet(spark: SparkSession): Option[Boolean] =
+    spark.conf.getOption(StorageLevelConf).map(_.trim.toUpperCase(java.util.Locale.ROOT)) match {
+      case None => None
+      case Some("PARQUET") => Some(true)
+      case Some("DISK_ONLY") => Some(false)
+      case Some(other) => throw new IllegalArgumentException(
+        s"$StorageLevelConf must be PARQUET or DISK_ONLY (unset = AUTO), got '$other'")
+    }
 
   private def autoModeDescFor(threshold: Long): String =
     s"AUTO(parquet>=${threshold / (1024 * 1024)}MB," +
@@ -255,7 +272,6 @@ object StageCache {
                   if (wrote) synchronized { builds += 1 }
                   Entry(df, None)
                 case None =>
-                  val levelStr = spark.conf.getOption(StorageLevelConf)
                   // Unset conf = size-adaptive AUTO: the parquet pin's
                   // fixed per-file cost only pays for itself once the
                   // corpus (and so the pin) is big — see
@@ -271,15 +287,9 @@ object StageCache {
                   // operator pins PARQUET explicitly (having pointed
                   // the temp dir at shared storage) — the durable mode
                   // ([[DurableDirConf]]) is the cluster-correct analog.
-                  val useParquet = levelStr match {
-                    case Some(s) => s.equalsIgnoreCase("PARQUET")
-                    case None =>
-                      val threshold = spark.conf
-                        .getOption(AutoParquetBytesConf).map(_.toLong)
-                        .getOrElse(AutoParquetBytesDefault)
-                      spark.sparkContext.isLocal &&
-                        corpusBytes(spark, dir) >= threshold
-                  }
+                  val useParquet = explicitParquet(spark).getOrElse(
+                    spark.sparkContext.isLocal &&
+                      corpusBytes(spark, dir) >= autoParquetBytes(spark))
                   if (useParquet) {
                     // Session-local COLUMNAR pin: write the stage as
                     // parquet under a temp dir and read it back. What
@@ -299,10 +309,7 @@ object StageCache {
                     synchronized { builds += 1 }
                     Entry(spark.read.parquet(path), None, Some(tmp))
                   } else {
-                    val level = levelStr
-                      .map(org.apache.spark.storage.StorageLevel.fromString)
-                      .getOrElse(DefaultLevel)
-                    val built = build.localCheckpoint(true, level)
+                    val built = build.localCheckpoint(true, DefaultLevel)
                     synchronized { builds += 1 }
                     Entry(built, checkpointRdd(built))
                   }

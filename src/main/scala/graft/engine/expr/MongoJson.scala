@@ -23,7 +23,7 @@ import graft.engine.schemas.Schemas
   * `mysql_entry_fields` fused-scan pattern applied to it).
   *
   * The semantics contract is "observably identical to from_json on THIS
-  * schema" — pinned empirically (graft.Probe battery, 2026-08) and held
+  * schema" — pinned empirically (a probe battery, 2026-08) and held
   * by MongoJsonKernelSpec against the live from_json on adversarial
   * inputs plus every generated line class:
   *  - empty / whitespace-only input → NULL struct;

@@ -1,7 +1,8 @@
 package graft.engine.expr
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, MathUtils}
 import org.apache.spark.sql.functions.call_function
@@ -103,9 +104,9 @@ object NativeFunctions {
     * Overflow-free by construction: |dot| ≤ dims · 1000 ≪ 2^63.
     *
     * The coefficient matrix arrives as a FOLDABLE array<array<bigint>>
-    * literal (builder evals it once at resolution, like RegexFindGroup
-    * folds its pattern); the expression itself carries the primitive
-    * long[][] into codegen via a reference object.
+    * literal (builder evals it once at resolution); the expression
+    * itself carries the primitive long[][] into codegen via a reference
+    * object.
     */
   case class SrpSignature(child: Expression, coefs: Array[Array[Long]])
       extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
@@ -198,105 +199,8 @@ object NativeFunctions {
       copy(child = newChild)
   }
 
-  /** Fused `rlike` + `regexp_extract` in ONE regex execution: returns
-    * group 1 of the first match (never null on a match — a
-    * non-participating group yields "", exactly like `regexp_extract`),
-    * or NULL when the pattern does not match. So
-    * `rlike(p)` ≡ `regex_find_group(s, p) IS NOT NULL` and
-    * `regexp_extract(s, p, 1)` ≡ `coalesce(regex_find_group(s, p), '')`
-    * — one `Matcher.find()` where the MySQL slow-log parse battery
-    * previously ran each pattern twice per entry (the suite's most
-    * expensive honest query, and the 100 TB ingest hot path).
-    *
-    * The pattern must be a foldable literal with ≥1 capturing group
-    * (compiled once per expression instance, shared by codegen via a
-    * reference object — never recompiled per row).
-    */
-  case class RegexFindGroup(subject: Expression, regexp: Expression)
-      extends BinaryExpression {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    import org.apache.spark.sql.types.StringType
-    import org.apache.spark.unsafe.types.UTF8String
-
-    override def left: Expression = subject
-    override def right: Expression = regexp
-    override def dataType: DataType = StringType
-    override def nullable: Boolean = true
-
-    /** Pattern problems fail ANALYSIS, not mid-execution: an invalid
-      * regex, a zero-capturing-group pattern, or a null literal each
-      * produce a clear TypeCheckFailure here rather than a
-      * PatternSyntaxException / require / NPE from the first evaluation
-      * deep inside a running stage (ADVICE r10).
-      */
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (subject.dataType != StringType || regexp.dataType != StringType)
-        TypeCheckResult.TypeCheckFailure(
-          s"${NativeFunctions.RegexFindName} expects (string, string), got " +
-            s"(${subject.dataType.sql}, ${regexp.dataType.sql})")
-      else if (!regexp.foldable)
-        TypeCheckResult.TypeCheckFailure(
-          s"${NativeFunctions.RegexFindName} pattern must be a literal")
-      else regexp.eval() match {
-        case null => TypeCheckResult.TypeCheckFailure(
-          s"${NativeFunctions.RegexFindName} pattern must not be NULL")
-        case p =>
-          try {
-            val compiled =
-              java.util.regex.Pattern.compile(p.asInstanceOf[UTF8String].toString)
-            if (compiled.matcher("").groupCount() < 1)
-              TypeCheckResult.TypeCheckFailure(
-                s"${NativeFunctions.RegexFindName} pattern has no capturing " +
-                  s"group: $p")
-            else TypeCheckResult.TypeCheckSuccess
-          } catch {
-            case e: java.util.regex.PatternSyntaxException =>
-              TypeCheckResult.TypeCheckFailure(
-                s"${NativeFunctions.RegexFindName} invalid pattern: " +
-                  e.getMessage)
-          }
-      }
-
-    // analysis (checkInputDataTypes above) has already validated the
-    // pattern; this is the once-per-instance compile both eval paths share
-    @transient private lazy val pattern: java.util.regex.Pattern =
-      java.util.regex.Pattern.compile(
-        regexp.eval().asInstanceOf[UTF8String].toString)
-
-    override def nullSafeEval(s: Any, p: Any): Any = {
-      val m = pattern.matcher(s.asInstanceOf[UTF8String].toString)
-      if (m.find()) {
-        val g = m.group(1)
-        UTF8String.fromString(if (g == null) "" else g)
-      } else null
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val patRef = ctx.addReferenceObj("graftFindPattern", pattern,
-        "java.util.regex.Pattern")
-      nullSafeCodeGen(ctx, ev, (subj, _) => {
-        val m = ctx.freshName("matcher")
-        val g = ctx.freshName("group")
-        s"""
-           |java.util.regex.Matcher $m = $patRef.matcher($subj.toString());
-           |if ($m.find()) {
-           |  String $g = $m.group(1);
-           |  ${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString(
-           |    $g == null ? "" : $g);
-           |} else {
-           |  ${ev.isNull} = true;
-           |}
-           |""".stripMargin
-      })
-    }
-
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): Expression =
-      copy(subject = newLeft, regexp = newRight)
-  }
-
   /** All seven MySQL slow-log field captures in ONE compiled pass — the
-    * fused successor of running [[RegexFindGroup]] seven times per entry
+    * fused successor of running rlike + regexp_extract per pattern
     * (r16's `_stage_mysql_parsed` spent its build almost entirely in the
     * regex battery: 7 × `Matcher.find()` backtracking scans and 7 ×
     * `UTF8String.toString` copies of the same multi-hundred-byte entry).
@@ -1029,16 +933,13 @@ object NativeFunctions {
     * replays `('0x' || substring(md5(s), 1, N))::BIGINT` exactly as
     * before.
     */
-  case class Md5PrefixLong(child: Expression, hexChars: Int,
-                           startHex: Int = 1)
+  case class Md5PrefixLong(child: Expression, hexChars: Int)
       extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
     import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
     import org.apache.spark.sql.types.StringType
 
     require(hexChars >= 1 && hexChars <= 15,
       s"$Md5PrefixName: hexChars must be 1..15 (a BIGINT holds < 16), got $hexChars")
-    require(startHex >= 1 && startHex - 1 + hexChars <= 32,
-      s"$Md5PrefixName: slice [$startHex, +$hexChars) exceeds the 32 md5 hex digits")
 
     override def dataType: DataType = LongType
     override def checkInputDataTypes(): TypeCheckResult =
@@ -1050,13 +951,12 @@ object NativeFunctions {
 
     override def nullSafeEval(s: Any): Any =
       NativeFunctions.md5PrefixRun(
-        s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-        hexChars, startHex)
+        s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], hexChars)
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       nullSafeCodeGen(ctx, ev, c =>
         s"${ev.value} = graft.engine.expr.NativeFunctions.md5PrefixRun(" +
-          s"$c, $hexChars, $startHex);")
+          s"$c, $hexChars);")
 
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
@@ -1067,31 +967,19 @@ object NativeFunctions {
       java.security.MessageDigest.getInstance("MD5")
   }
 
-  /** The per-row kernel of [[Md5PrefixLong]]: digest the UTF-8 bytes,
-    * read the 128-bit digest as two big-endian longs, and take the
-    * 4·hexChars bits starting at hex digit `startHex` (1-based) — the
-    * value of `substring(md5hex, startHex, hexChars)` parsed base-16,
-    * bit-for-bit (the simhash halves read slices at 1 and 16).
+  /** The per-row kernel of [[Md5PrefixLong]]: digest the UTF-8 bytes and
+    * take the top 4·hexChars bits of the big-endian digest — the value of
+    * `substring(md5hex, 1, hexChars)` parsed base-16, bit-for-bit.
     */
   def md5PrefixRun(s: org.apache.spark.unsafe.types.UTF8String,
-                   hexChars: Int, startHex: Int): Long = {
+                   hexChars: Int): Long = {
     val md = md5Digest.get()
     md.reset()
     val d = md.digest(s.getBytes)
-    def be(o: Int): Long =
-      ((d(o) & 0xffL) << 56) | ((d(o + 1) & 0xffL) << 48) |
-      ((d(o + 2) & 0xffL) << 40) | ((d(o + 3) & 0xffL) << 32) |
-      ((d(o + 4) & 0xffL) << 24) | ((d(o + 5) & 0xffL) << 16) |
-      ((d(o + 6) & 0xffL) << 8) | (d(o + 7) & 0xffL)
-    val off = 4 * (startHex - 1) // bit offset from the digest MSB
-    val hi = be(0)
-    // 128-bit left shift by `off`, keep the top 64: Java shifts are mod
-    // 64, so the off == 0 and off == 64 boundaries branch explicitly
-    val shifted =
-      if (off == 0) hi
-      else if (off < 64) (hi << off) | (be(8) >>> (64 - off))
-      else be(8) << (off - 64)
-    shifted >>> (64 - 4 * hexChars)
+    var hi = 0L
+    var k = 0
+    while (k < 8) { hi = (hi << 8) | (d(k) & 0xffL); k += 1 }
+    hi >>> (64 - 4 * hexChars)
   }
 
   /** Reusable 16-byte digest output for the tokenizing kernels below
@@ -1256,8 +1144,8 @@ object NativeFunctions {
         ((d(10) & 0xffL) << 40) | ((d(11) & 0xffL) << 32) |
         ((d(12) & 0xffL) << 24) | ((d(13) & 0xffL) << 16) |
         ((d(14) & 0xffL) << 8) | (d(15) & 0xffL)
-      // the two 60-bit md5 halves, exactly md5_prefix_long(tok, 15, 1)
-      // and md5_prefix_long(tok, 15, 16)
+      // the two 60-bit md5 halves, exactly
+      // conv(substring(md5(tok), 1 | 16, 15), 16, 10)
       val h0 = hi >>> 4
       val h1 = ((hi << 60) | (lo >>> 4)) >>> 4
       var p = 0
@@ -1476,7 +1364,6 @@ object NativeFunctions {
   val PyCheckName = "py_parity_check"
   val PyErrorBranchName = "py_error_branch"
   val OpaqueName = "graft_opaque"
-  val RegexFindName = "regex_find_group"
   val LangSignalName = "lang_signal_counts"
   val TextStatName = "text_stat_counts"
   val WinnowName = "winnow_karp_rabin"
@@ -1526,32 +1413,11 @@ object NativeFunctions {
     }
   }
 
-  /** `md5_prefix_long(text, hexChars[, startHex])` builder: width and
-    * optional 1-based start must be foldable integer literals. */
+  /** `md5_prefix_long(text, hexChars)` builder: the width must be a
+    * foldable integer literal. */
   def buildMd5Prefix(exprs: Seq[Expression]): Expression = {
-    if (exprs.length != 2 && exprs.length != 3)
-      // not checkArity: that helper states ONE expected count, and this
-      // function legitimately takes 2 or 3 arguments (r15 ADVICE — a
-      // 4-arg caller was told "takes exactly 2" when 3 is also valid)
-      throw new org.apache.spark.sql.AnalysisException(
-        "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-        Map(
-          "functionName" -> s"`$Md5PrefixName`",
-          "expectedNum" -> "[2, 3]",
-          "actualNum" -> exprs.length.toString,
-          "docroot" -> "https://spark.apache.org/docs/latest"))
-    def intOf(e: Expression, what: String): Int = {
-      require(e.foldable, s"$Md5PrefixName: $what must be foldable")
-      e.eval() match {
-        case i: java.lang.Integer => i.intValue()
-        case l: java.lang.Long => l.intValue()
-        case other => throw new IllegalArgumentException(
-          s"$Md5PrefixName: integral $what expected, got $other")
-      }
-    }
-    val h = intOf(exprs(1), "width")
-    val s = if (exprs.length == 3) intOf(exprs(2), "start") else 1
-    Md5PrefixLong(exprs(0), h, s)
+    checkArity(Md5PrefixName, 2, exprs)
+    Md5PrefixLong(exprs(0), foldableInt(Md5PrefixName, "width", exprs(1)))
   }
 
   /** `winnow_karp_rabin(text, w)` builder: the window width must be a
@@ -1628,87 +1494,116 @@ object NativeFunctions {
       failOnError = org.apache.spark.sql.internal.SQLConf.get.ansiEnabled)
   }
 
-  /** Idempotently register the expressions in the session's function
-    * registry (the public route to a Column over a custom Expression).
+  /** `srp_signature(q, coefs)` builder: the coefficient matrix must be a
+    * foldable array<array<bigint>> literal. */
+  def buildSrpSignature(exprs: Seq[Expression]): Expression = {
+    checkArity(SrpSignatureName, 2, exprs)
+    require(exprs(1).foldable,
+      s"$SrpSignatureName: the coefficient matrix must be foldable")
+    val ad = exprs(1).eval().asInstanceOf[ArrayData]
+    SrpSignature(exprs(0),
+      Array.tabulate(ad.numElements())(p => ad.getArray(p).toLongArray()))
+  }
+
+  /** One engine function: its SQL name, the DESCRIBE FUNCTION text, and
+    * the analysis-time builder. */
+  final case class GraftFunction(name: String, usage: String, example: String,
+                                 builder: Seq[Expression] => Expression) {
+    def info: ExpressionInfo =
+      new ExpressionInfo("graft", null, name, s"$name - $usage", s"Examples: $example")
+  }
+
+  private def unary(name: String)(f: Expression => Expression)
+      : Seq[Expression] => Expression = exprs => {
+    checkArity(name, 1, exprs)
+    f(exprs(0))
+  }
+
+  /** Every function graft installs — the ONE table both installers read:
+    * [[graft.GraftExtensions]] injects it into each session the builder
+    * constructs, and [[ensureRegistered]] registers it on a session
+    * built without the extension.
     */
+  val Functions: Seq[GraftFunction] = Seq(
+    GraftFunction(QdotName,
+      "exact BIGINT dot product of two array<bigint> columns (codegen'd)",
+      "_FUNC_(array(1L,2L), array(3L,4L)) -> 11", buildQdot),
+    GraftFunction(SrpSignatureName,
+      "sign-random-projection signature as BIGINT: bit p is set iff " +
+        "the array<bigint> vector's dot with literal plane p is > 0",
+      "_FUNC_(q, array(array(1L,-1L), array(2L,3L)))", buildSrpSignature),
+    GraftFunction(PyCheckName,
+      "reference-parity exception text for a mongod log line, NULL if none",
+      "_FUNC_(line)", unary(PyCheckName)(PyParity.PyParityCheck)),
+    GraftFunction(PyErrorBranchName,
+      "whether the reference would route this mongod line to parse_errors",
+      "_FUNC_(line)", unary(PyErrorBranchName)(PyParity.PyErrorBranchCheck)),
+    GraftFunction(OpaqueName,
+      "optimizer-opaque identity: value-equal to its argument, blocks " +
+        "predicate pushdown / project collapse through it",
+      "_FUNC_(expensive_expr)", unary(OpaqueName)(OpaqueBarrier)),
+    GraftFunction(MongoJson.MongoLineParseName,
+      "mongod structured-log line parsed to the MongodLine struct in " +
+        "ONE Jackson streaming pass — observably identical to " +
+        "from_json(line, MongodLine, PERMISSIVE + _corrupt)",
+      "_FUNC_(line)",
+      unary(MongoJson.MongoLineParseName)(MongoJson.MongoLineParse)),
+    GraftFunction(MySqlFieldsName,
+      "all seven MySQL slow-log field captures in ONE compiled pass; " +
+        "array<string> of the 7 nullable captures in battery order plus " +
+        "the normalized query — value-identical to rlike + " +
+        "regexp_extract per pattern",
+      "_FUNC_(entry)", unary(MySqlFieldsName)(MySqlEntryFields)),
+    GraftFunction(LangSignalName,
+      "per-word-set ASCII \\b match counts + Han-char count in ONE " +
+        "text scan; array<bigint> of size(sets)+1",
+      "_FUNC_(text, array(array('the','and'), array('el','la')))",
+      buildLangSignal),
+    GraftFunction(TextStatName,
+      "ws-token, BPE-token, punct, upper and stopword-hit counts in " +
+        "ONE text scan; array<bigint> of 5",
+      "_FUNC_(text, array('the','and'))", buildTextStat),
+    GraftFunction(WinnowName,
+      "Karp-Rabin rolling-hash winnowing fingerprint: min and distinct " +
+        "count of every w-code-point window hash in ONE scan; " +
+        "struct<fingerprint_h: bigint, n_distinct_windows: int>",
+      "_FUNC_(text, 16)", buildWinnow),
+    GraftFunction(Md5PrefixName,
+      "first N hex digits of md5 as BIGINT — value-identical to " +
+        "conv(substring(md5(s), 1, N), 16, 10), allocation-free",
+      "_FUNC_(text, 15)", buildMd5Prefix),
+    GraftFunction(WordRepName,
+      "single-pass Gopher-repetition counters over a token array: " +
+        "[n_words, n_distinct_words, top_word_cnt, n2, d2, n3, d3]; " +
+        "empty/null tokens skipped, distinct counts exact (dense ids)",
+      "_FUNC_(split(lower(text), '\\\\s+'))",
+      unary(WordRepName)(WordRepCounts)),
+    GraftFunction(ShingleHashName,
+      "positional n-token shingle md5-prefix hashes of lower(text) in " +
+        "ONE scan, array<bigint>; empty when the doc has < n tokens — " +
+        "value-identical to the tokens/element_at/concat_ws/" +
+        "md5_prefix_long chain, shingle strings never materialized",
+      "_FUNC_(text, 3, 15)", buildShingleHashes),
+    GraftFunction(ShingleHashSetName,
+      "distinct n-token shingle md5-prefix hashes of lower(text), sorted " +
+        "ascending, array<bigint> — array_sort(array_distinct(" +
+        "shingle_hashes(text, n, hexChars))) in ONE scan",
+      "_FUNC_(text, 3, 15)", buildShingleHashSet),
+    GraftFunction(SimhashSigName,
+      "per-document band-packed SimHash signature over md5 token " +
+        "hashes in ONE scan, array<bigint> of `bands`; NULL for " +
+        "zero-token docs — value-identical to the explode + two " +
+        "md5 slices + wide vote aggregate it replaces",
+      "_FUNC_(text, 4, 15)", buildSimhashSig))
+
+  /** Idempotently register [[Functions]] on a session built without
+    * [[graft.GraftExtensions]] (a no-op on one built with it). */
   def ensureRegistered(spark: SparkSession): Unit = {
-    if (!spark.catalog.functionExists(QdotName))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        QdotName, buildQdot, "built-in")
-    if (!spark.catalog.functionExists(PyCheckName))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        PyCheckName, exprs => {
-          checkArity(PyCheckName, 1, exprs)
-          PyParity.PyParityCheck(exprs(0))
-        }, "built-in")
-    if (!spark.catalog.functionExists(PyErrorBranchName))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        PyErrorBranchName, exprs => {
-          checkArity(PyErrorBranchName, 1, exprs)
-          PyParity.PyErrorBranchCheck(exprs(0))
-        }, "built-in")
-    if (!spark.catalog.functionExists(OpaqueName))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        OpaqueName, exprs => {
-          checkArity(OpaqueName, 1, exprs)
-          OpaqueBarrier(exprs(0))
-        }, "built-in")
-    if (!spark.catalog.functionExists(RegexFindName))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        RegexFindName, exprs => {
-          checkArity(RegexFindName, 2, exprs)
-          RegexFindGroup(exprs(0), exprs(1))
-        }, "built-in")
-    if (!spark.catalog.functionExists(LangSignalName))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        LangSignalName, buildLangSignal, "built-in")
-    if (!spark.catalog.functionExists(TextStatName))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        TextStatName, buildTextStat, "built-in")
-    if (!spark.catalog.functionExists(WinnowName))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        WinnowName, buildWinnow, "built-in")
-    if (!spark.catalog.functionExists(Md5PrefixName))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        Md5PrefixName, buildMd5Prefix, "built-in")
-    if (!spark.catalog.functionExists(MongoJson.MongoLineParseName))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        MongoJson.MongoLineParseName, exprs => {
-          checkArity(MongoJson.MongoLineParseName, 1, exprs)
-          MongoJson.MongoLineParse(exprs(0))
-        }, "built-in")
-    if (!spark.catalog.functionExists(MySqlFieldsName))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        MySqlFieldsName, exprs => {
-          checkArity(MySqlFieldsName, 1, exprs)
-          MySqlEntryFields(exprs(0))
-        }, "built-in")
-    if (!spark.catalog.functionExists(WordRepName))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        WordRepName, exprs => {
-          checkArity(WordRepName, 1, exprs)
-          WordRepCounts(exprs(0))
-        }, "built-in")
-    if (!spark.catalog.functionExists(ShingleHashName))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        ShingleHashName, buildShingleHashes, "built-in")
-    if (!spark.catalog.functionExists(ShingleHashSetName))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        ShingleHashSetName, buildShingleHashSet, "built-in")
-    if (!spark.catalog.functionExists(SimhashSigName))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        SimhashSigName, buildSimhashSig, "built-in")
-    if (!spark.catalog.functionExists(SrpSignatureName))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        SrpSignatureName, exprs => {
-          checkArity(SrpSignatureName, 2, exprs)
-          require(exprs(1).foldable,
-            s"$SrpSignatureName: the coefficient matrix must be foldable")
-          val ad = exprs(1).eval().asInstanceOf[ArrayData]
-          val coefs = Array.tabulate(ad.numElements())(p =>
-            ad.getArray(p).toLongArray())
-          SrpSignature(exprs(0), coefs)
-        }, "built-in")
+    val registry = spark.sessionState.functionRegistry
+    Functions.foreach { f =>
+      val id = FunctionIdentifier(f.name)
+      if (!registry.functionExists(id)) registry.registerFunction(id, f.info, f.builder)
+    }
   }
 
   /** Codegen'd exact dot product; caller must have ensureRegistered. */
@@ -1787,13 +1682,6 @@ object NativeFunctions {
     call_function(Md5PrefixName, text, lit(hexChars))
   }
 
-  /** Hex-slice variant: `substring(md5(s), startHex, hexChars)` base-16
-    * — the simhash second half reads digits 16..30. */
-  def md5SliceLong(text: Column, startHex: Int, hexChars: Int): Column = {
-    import org.apache.spark.sql.functions.lit
-    call_function(Md5PrefixName, text, lit(hexChars), lit(startHex))
-  }
-
   /** Optimizer-opaque identity (see [[OpaqueBarrier]]); caller must have
     * ensureRegistered.
     */
@@ -1806,12 +1694,6 @@ object NativeFunctions {
 
   /** Reference error-branch membership; caller must have ensureRegistered. */
   def pyErrorBranch(line: Column): Column = call_function(PyErrorBranchName, line)
-
-  /** One-execution regex find+extract (see [[RegexFindGroup]]); caller
-    * must have ensureRegistered.
-    */
-  def regexFindGroup(subject: Column, pattern: Column): Column =
-    call_function(RegexFindName, subject, pattern)
 
   /** All seven MySQL slow-log captures in one compiled pass (see
     * [[MySqlEntryFields]]); caller must have ensureRegistered.

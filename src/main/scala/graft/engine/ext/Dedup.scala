@@ -834,8 +834,8 @@ object Dedup {
       .orderBy(col("doc_id"))
 
   /** Validate a (bands, bitsPerBand) signature geometry — the r11 verdict
-    * ask #3: the split is a BUILD-TIME parameter with explicit bounds
-    * (like RegexFindGroup validates patterns), not a baked-in constant.
+    * ask #3: the split is a BUILD-TIME parameter with explicit bounds,
+    * not a baked-in constant.
     * Each band must fit a signed long; two md5 halves supply up to 120
     * hash bits per token, which covers the ~4M-doc occupancy boundary the
     * knob audit names (n/2^bits ≤ 128 holds to n = 2^37 at 4 × 30).

@@ -172,11 +172,22 @@ object Sources {
     * One row per file: (file_id, content). Only for small-file parity runs —
     * a single 100 TB record is the scale-killer SURVEY.md §7.2 flags; the
     * scale path is [[readDelimited]].
+    *
+    * `file_id` is dense and 0-based in file-name order — the order
+    * [[readLines]] and [[readDelimited]] number in — taken from the
+    * driver's sorted file listing and looked up by each row's file path,
+    * so no file content moves. (A partition-derived id such as
+    * `monotonically_increasing_id` jumps by 2^33 per partition, and the
+    * entry order key `file_id * 2^32 + entry_no` overflows.)
     */
   def readWholeFile(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    spark.read.option("wholetext", "true").text(path)
-      .select(monotonically_increasing_id().as("file_id"), col("value").as("content"))
+    val files = spark.read.option("wholetext", "true").text(path)
+    val ids = typedLit(files.inputFiles.sorted.zipWithIndex
+      .map { case (f, i) => f -> i.toLong }.toMap)
+    // input_file_name, not _metadata.file_path: it renders the path the
+    // way inputFiles does ("file:///x", not "file:/x")
+    files.select(element_at(ids, input_file_name()).as("file_id"),
+      col("value").as("content"))
   }
 
   /** S3 for MySQL: in-memory whole-log string. */

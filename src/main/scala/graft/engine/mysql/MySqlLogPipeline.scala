@@ -6,19 +6,20 @@ import org.apache.spark.sql.functions._
 /** MySQL/Percona slow-query-log analyzer, re-expressed as a declarative
   * Spark dataflow (reference behavior: /root/reference/MySql/mysqlLogParser.py:16-134).
   *
-  * Shape: whole-log content → entry split on "# Time: " (P8) → 7 regex field
-  * extractions (P9) → completeness gate (P10/R4) → unit conversion (P11) +
-  * empty-query placeholder (P12) + fingerprint (F2) → detailed table +
-  * per-pattern aggregate (A3) + warnings channel (E2).
+  * Shape: whole-log content → entry split on "# Time: " (P8) → the 7
+  * field captures (P9) → completeness gate (P10/R4) → unit conversion
+  * (P11) + empty-query placeholder (P12) + fingerprint (F2) → detailed
+  * table + per-pattern aggregate (A3) + warnings channel (E2).
   *
-  * Everything is Catalyst expressions — the codegen'd fused
-  * [[graft.engine.expr.NativeFunctions.RegexFindGroup]] (one regex
-  * execution yields both the match flag and the capture; rlike +
-  * regexp_extract would run each pattern twice), try_cast, min_by — so
-  * the whole parse is one WholeStageCodegen span per
-  * branch and the only shuffle is the aggregate's groupBy. At scale, input
-  * arrives pre-split as entry records ([[graft.engine.ingest.Sources.readDelimited]])
-  * rather than whole-file strings.
+  * Everything is Catalyst expressions — the codegen'd
+  * [[graft.engine.expr.NativeFunctions.MySqlEntryFields]] kernel (all
+  * seven captures, their pyStrip and the query fingerprint in ONE scan
+  * per entry, value-identical to the seven regex patterns below),
+  * try_cast, min_by — so the whole parse is one WholeStageCodegen span
+  * per branch and the only shuffle is the aggregate's groupBy. At scale,
+  * input arrives pre-split as entry records
+  * ([[graft.engine.ingest.Sources.readDelimited]]) rather than
+  * whole-file strings.
   */
 object MySqlLogPipeline {
 
@@ -62,7 +63,7 @@ object MySqlLogPipeline {
   def parseEntries(entries: DataFrame): Result =
     resultFromProjected(projectedOf(entries))
 
-  /** The parse's one expensive pass — the 7-regex battery + field
+  /** The parse's one expensive pass — the fused field kernel + field
     * projection over every entry — separated (r16) so the registry can
     * materialize it ONCE per (session, corpus) and serve all three
     * outputs from it ([[resultFromProjected]]): detailed, aggregate and

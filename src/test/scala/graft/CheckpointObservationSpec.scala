@@ -1,0 +1,33 @@
+package graft
+
+import org.apache.spark.sql.Observation
+import org.apache.spark.sql.functions._
+
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+
+/** `Dedup.connectedComponents` reads each round's set fingerprint from an
+  * `Observation` riding the round's eager `localCheckpoint` job, and
+  * `Observation.get` blocks until the listener reports it. This pins that
+  * the checkpoint action does report it — with a bounded wait, so a Spark
+  * that stops reporting fails here instead of hanging the CC loop.
+  */
+class CheckpointObservationSpec extends SparkTestBase {
+  import spark.implicits._
+
+  test("an Observation completes after an eager localCheckpoint") {
+    val obs = Observation()
+    val df = Seq((1L, 2L), (3L, 4L)).toDF("u", "v")
+      .observe(obs, count(lit(1)).as("n"),
+        sum(pmod(xxhash64(col("u"), col("v")), lit(1048573L))).as("h"))
+    val ck = df.localCheckpoint(true)
+    val m = Await.result(Future(obs.get), 60.seconds)
+    assert(m("n") === 2L)
+    val want = Seq((1L, 2L), (3L, 4L)).toDF("u", "v")
+      .agg(sum(pmod(xxhash64(col("u"), col("v")), lit(1048573L))))
+      .first().getLong(0)
+    assert(m("h") === want)
+    assert(ck.count() === 2L)
+  }
+}

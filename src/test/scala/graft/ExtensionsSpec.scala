@@ -37,70 +37,6 @@ class ExtensionsSpec extends SparkTestBase {
       graft.engine.expr.PyParity.InvalidJson.toString)
   }
 
-  test("regex_find_group fuses rlike + regexp_extract semantics exactly") {
-    val fresh = spark.newSession()
-    // contract: NULL ⇔ !rlike; on a match the value equals
-    // regexp_extract(s, p, 1) — including '' for an empty capture and
-    // '' for a non-participating group — for every battery pattern
-    // shape: plain capture, lazy capture with lookahead, DOTALL + \z.
-    val r = fresh.sql(
-      """SELECT
-        |  regex_find_group('no header here', '# Time: (.*)') AS miss,
-        |  regex_find_group('# Time: 2024-01-01T00:00:01Z', '# Time: (.*)') AS hit,
-        |  regex_find_group('# Time: ', '# Time: (.*)') AS empty_cap,
-        |  regex_find_group('ab', '(?:a(x)?)b') AS nonpart,
-        |  regex_find_group('SET timestamp=5;\nSELECT 1;\nmore',
-        |    '(?s)SET timestamp=.*?;\n(.*?)(?=\n# Time:|\\z)') AS dotall
-        |""".stripMargin)
-    val row = r.first()
-    assert(row.isNullAt(0))
-    assert(row.getString(1) === "2024-01-01T00:00:01Z")
-    assert(row.getString(2) === "")
-    assert(row.getString(3) === "")
-    assert(row.getString(4) === "SELECT 1;\nmore")
-    // cross-check against the built-ins it replaces, on the same inputs
-    val both = fresh.sql(
-      """SELECT s,
-        |  regex_find_group(s, '# Time: (.*)') IS NOT NULL AS fused_flag,
-        |  s RLIKE '# Time: (.*)' AS want_flag,
-        |  coalesce(regex_find_group(s, '# Time: (.*)'), '') AS fused_cap,
-        |  regexp_extract(s, '# Time: (.*)', 1) AS want_cap
-        |FROM VALUES ('# Time: abc'), ('# Time: '), ('nope'), ('') t(s)
-        |""".stripMargin).collect()
-    both.foreach { w =>
-      assert(w.getBoolean(1) === w.getBoolean(2), w.toString)
-      assert(w.getString(3) === w.getString(4), w.toString)
-    }
-  }
-
-  test("regex_find_group rejects a groupless or non-literal pattern") {
-    val fresh = spark.newSession()
-    intercept[Exception] {
-      fresh.sql("SELECT regex_find_group('x', 'no_group')").collect()
-    }
-    intercept[Exception] {
-      fresh.sql("SELECT regex_find_group('x', s) FROM VALUES ('(a)') t(s)")
-        .collect()
-    }
-  }
-
-  test("regex_find_group pattern problems fail at ANALYSIS, not mid-job") {
-    // ADVICE r10: an invalid regex / groupless pattern / null literal
-    // must be an AnalysisException raised while PLANNING (before any
-    // task runs), with the function named — not a PatternSyntaxException
-    // or NPE thrown from the first executor evaluation.
-    val fresh = spark.newSession()
-    for (bad <- Seq(
-        "SELECT regex_find_group('x', '(unclosed')", // invalid regex
-        "SELECT regex_find_group('x', 'no_group')",  // zero capture groups
-        "SELECT regex_find_group('x', cast(null as string))")) { // null
-      val e = intercept[org.apache.spark.sql.AnalysisException] {
-        fresh.sql(bad).queryExecution.analyzed // analysis only — no job
-      }
-      assert(e.getMessage.contains("regex_find_group"), s"$bad -> $e")
-    }
-  }
-
   test("extension-installed functions survive DESCRIBE FUNCTION") {
     val fresh = spark.newSession()
     val desc = fresh.sql("DESCRIBE FUNCTION qdot_native")

@@ -11,7 +11,7 @@ import graft.engine.schemas.Schemas
   * `from_json(line, Schemas.MongodLine, PERMISSIVE + _corrupt)` it
   * replaces: struct-for-struct equality (to_json rendering + null-ness +
   * per-field values) on an adversarial battery covering every observed
-  * from_json behavior class (graft.Probe, 2026-08) and on every
+  * from_json behavior class (probed 2026-08) and on every
   * generated mongod line class at sf0.001.
   */
 class MongoJsonKernelSpec extends SparkTestBase {

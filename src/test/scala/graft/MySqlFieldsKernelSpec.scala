@@ -27,14 +27,13 @@ class MySqlFieldsKernelSpec extends SparkTestBase {
     MySqlLogPipeline.RowsSentP, MySqlLogPipeline.RowsExaminedP,
     MySqlLogPipeline.QueryP)
 
-  /** The pre-r17 chain, verbatim: regex_find_group per pattern, pyStrip
-    * on every capture except Query_time (nullness preserved), normalize
-    * on the stripped query.
+  /** The regex chain in Spark built-ins: per pattern, the capture when
+    * `rlike` matches and NULL otherwise; pyStrip on every capture except
+    * Query_time (nullness preserved), normalize on the stripped query.
     */
   private def legacyChain(df: DataFrame): DataFrame = {
-    NativeFunctions.ensureRegistered(spark)
     def find(p: String): Column =
-      NativeFunctions.regexFindGroup(col("entry"), lit(p))
+      when(col("entry").rlike(p), regexp_extract(col("entry"), p, 1))
     def strippedOf(c: Column): Column =
       when(c.isNull, lit(null).cast("string")).otherwise(Normalizers.pyStrip(c))
     val qs = strippedOf(find(MySqlLogPipeline.QueryP))

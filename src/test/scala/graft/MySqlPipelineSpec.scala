@@ -189,6 +189,61 @@ class MySqlPipelineSpec extends SparkTestBase {
     }
   }
 
+  test("whole-file read: a log rotated into 4 files gives the same report " +
+    "sheets and warning counts as the single file") {
+    val extra =
+      """# Time: 231026 11:00:00
+        |# User@Host: a[a] @ h [ip] thread_id: 1
+        |# Query_time: oops Lock_time: 0.1 Rows_sent: 1 Rows_examined: 1
+        |SET timestamp=1;
+        |SELECT 1;
+        |# Time: 231026 11:00:01
+        |# User@Host: a[a] @ h [ip] thread_id: 2
+        |# Query_time: 0.5 Lock_time: 0.1 Rows_sent: 1 Rows_examined: 1
+        |SET timestamp=2;
+        |""".stripMargin
+    val full = log + extra
+    // rotate at entry boundaries: the preamble stays with the first file
+    val cuts = "# Time: ".r.findAllMatchIn(full).map(_.start).toIndexedSeq
+    val bounds = 0 +: Seq(2, 4, 6).map(cuts) :+ full.length
+    val parts = bounds.sliding(2).map { case Seq(a, b) => full.substring(a, b) }
+      .toSeq
+    assert(parts.size == 4 && parts.mkString == full)
+    val root = java.nio.file.Files.createTempDirectory("graft-rotated").toFile
+    val single = new java.io.File(root, "single"); single.mkdirs()
+    val rotated = new java.io.File(root, "rotated"); rotated.mkdirs()
+    def put(dir: java.io.File, name: String, text: String): Unit =
+      java.nio.file.Files.writeString(new java.io.File(dir, name).toPath, text)
+    put(single, "slow.log", full)
+    parts.zipWithIndex.foreach { case (p, i) => put(rotated, s"slow.log.$i", p) }
+    def report(dir: java.io.File) = {
+      val res = MySqlLogPipeline.parse(
+        Sources.readWholeFile(spark, dir.getAbsolutePath))
+      val detailed = MySqlLogPipeline.referenceDetailed(
+        res.detailed.orderBy("ord")).collect().toSeq
+      val kinds = res.warnings.collect().toSeq
+        .map(_.getAs[String]("warning").split(" ").take(3).mkString(" "))
+        .groupBy(identity).map { case (k, v) => k -> v.size }
+      (detailed, res.aggregate.collect().toSeq, kinds)
+    }
+    try {
+      val (d1, a1, w1) = report(single)
+      val (d4, a4, w4) = report(rotated)
+      assert(Sources.readWholeFile(spark, rotated.getAbsolutePath)
+        .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
+        .toSeq === parts.indices.map(_.toLong).zip(parts))
+      assert(d1.size === 7)
+      assert(d4 === d1)
+      assert(a4 === a1)
+      assert(w1 === Map("Skipped log entry" -> 1,
+        "Could not parse" -> 1, "Empty query string" -> 1))
+      assert(w4 === w1)
+    } finally {
+      Seq(single, rotated).foreach(d => { d.listFiles().foreach(_.delete()); d.delete() })
+      root.delete()
+    }
+  }
+
   test("P8: split fires on '# Time: ' ANYWHERE, even mid-line (reference semantics)") {
     // a query whose text contains the marker gets truncated into a new
     // (incomplete) entry — exactly what content.split('# Time: ') does

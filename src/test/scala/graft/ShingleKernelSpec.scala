@@ -111,7 +111,8 @@ class ShingleKernelSpec extends SparkTestBase {
     }
   }
 
-  /** The pre-r16 simhashSigAt aggregate, verbatim. */
+  /** The pre-r16 simhashSigAt aggregate, with the md5 halves taken by the
+    * built-in conv(substring(md5(tok), s, 15), 16, 10) chain. */
   private def legacySig(d: DataFrame, bands: Int, bitsPerBand: Int): DataFrame = {
     def toks(c: org.apache.spark.sql.Column) =
       filter(split(lower(c), "\\s+"), t => t =!= "")
@@ -120,8 +121,8 @@ class ShingleKernelSpec extends SparkTestBase {
     val tok = d.select(col("doc_id"), explode(toks(col("text"))).as("tok"))
       .select(col("doc_id") +:
         (0 until halves).map(k =>
-          graft.engine.expr.NativeFunctions
-            .md5SliceLong(col("tok"), 1 + 15 * k, 15).as(s"h$k")): _*)
+          conv(substring(md5(col("tok")), 1 + 15 * k, 15), 16, 10)
+            .cast("long").as(s"h$k")): _*)
     val onesCols = (0 until total).map(p =>
       sum(shiftright(col(s"h${p / 60}"), p % 60).bitwiseAND(lit(1L)))
         .as(s"ones_$p"))

@@ -4,27 +4,21 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local SparkSession for the whole forked test JVM — Spark
-  * startup is ~5s, so per-suite sessions would dominate test time.
+  * startup is ~5s, so per-suite sessions would dominate test time. It is
+  * the benchmarked [[GraftSession]] local profile at a fixed 4 threads,
+  * so specs run the configuration the tools measure.
   */
 object SparkTestBase {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-    .config("spark.sql.extensions", GraftExtensions.Name)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local("graft-test", cpus = 4,
+    extra = Map("spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
 }
 
 trait SparkTestBase extends AnyFunSuite {
+  /** Log level reset per suite: a spec running cli.Main leaves WARN. */
   lazy val spark: SparkSession = {
-    val s = SparkTestBase.spark
-    s.sparkContext.setLogLevel("ERROR")
-    graft.engine.ingest.Sources.ensureNanosAsLong(s)
-    s
+    SparkTestBase.spark.sparkContext.setLogLevel("ERROR")
+    SparkTestBase.spark
   }
 
   /** Every node of a physical plan, piercing the AQE wrapper —

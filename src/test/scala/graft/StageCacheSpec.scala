@@ -304,4 +304,52 @@ class StageCacheSpec extends SparkTestBase {
       StageCache.clear(spark)
     }
   }
+
+  test("a StorageLevelConf other than PARQUET or DISK_ONLY fails the build, " +
+    "naming the allowed values") {
+    val dir = tmpDocs(corpus.take(1))
+    StageCache.clear(spark)
+    try {
+      for (bad <- Seq("MEMORY_AND_DISK", "parquett", "")) {
+        spark.conf.set(StageCache.StorageLevelConf, bad)
+        val e = intercept[IllegalArgumentException] {
+          StageCache.materialized(spark, dir, s"spec.bad.$bad") {
+            fail("thunk must not run under an invalid pin mode")
+          }
+        }
+        assert(e.getMessage.contains("PARQUET or DISK_ONLY"), bad)
+      }
+      // case and surrounding blanks are forgiven, not the value
+      spark.conf.set(StageCache.StorageLevelConf, " parquet ")
+      StageCache.materialized(spark, dir, "spec.lower")(spark.range(2).toDF("n"))
+    } finally {
+      spark.conf.unset(StageCache.StorageLevelConf)
+      StageCache.clear(spark)
+    }
+  }
+
+  test("a malformed AutoParquetBytesConf falls back to the default threshold") {
+    try {
+      for (bad <- Seq("64MB", "1e6", "")) {
+        spark.conf.set(StageCache.AutoParquetBytesConf, bad)
+        assert(StageCache.autoParquetBytes(spark) ===
+          StageCache.AutoParquetBytesDefault, bad)
+        assert(StageCache.autoModeDesc(spark) === StageCache.autoModeDesc, bad)
+      }
+      spark.conf.set(StageCache.AutoParquetBytesConf, " 1048576 ")
+      assert(StageCache.autoParquetBytes(spark) === 1048576L)
+      // and a build under the malformed value takes the default-threshold
+      // decision: the tiny fixture pins by checkpoint, no crash
+      spark.conf.set(StageCache.AutoParquetBytesConf, "lots")
+      val dir = tmpDocs(corpus.take(1))
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      StageCache.materialized(spark, dir, "spec.bad.threshold") {
+        spark.range(3).toDF("n")
+      }.count()
+      assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).nonEmpty)
+    } finally {
+      spark.conf.unset(StageCache.AutoParquetBytesConf)
+      StageCache.clear(spark)
+    }
+  }
 }
