@@ -18,10 +18,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * star-contraction chain per query is pure waste at any scale.
   *
   * Mode 1 — session-local (default): computed once per session, pinned
-  * either as a `localCheckpoint(eager)` in the block manager or as a
-  * session-lifetime parquet temp dir, chosen size-adaptively (the AUTO
-  * rule on [[AutoParquetBytesConf]]) unless [[StorageLevelConf]] pins
-  * the mode. Zero-config, but the checkpoint form is
+  * either as a `localCheckpoint(eager)` in the block manager or as
+  * parquet under a session-lifetime temp dir (the mode-2 write path,
+  * rooted there), chosen size-adaptively (the AUTO rule on
+  * [[AutoParquetBytesConf]]) unless [[StorageLevelConf]] pins the
+  * mode. Zero-config, but the checkpoint form is
   * executor-LOSS-FRAGILE: local checkpoint blocks are not replicated,
   * so on a real cluster losing any executor silently invalidates the
   * cache mid-session. The right single-process / bench mode.
@@ -203,16 +204,33 @@ object StageCache {
     } catch { case _: Throwable => 0L } // unreadable dir: checkpoint pin
 
   /** df = what consumers get; persisted = the checkpoint RDD to free on
-    * [[clear]] (None in durable mode — files are the materialization
-    * and deliberately outlive the session); tmpDir = the session-local
-    * PARQUET pin's directory, deleted on [[clear]] (session-parquet
-    * pins, unlike durable ones, have no life past the session).
+    * [[clear]] (None for parquet pins — files are the materialization:
+    * durable ones deliberately outlive the session, session ones go
+    * with their [[sessionRoot]]).
     */
-  private final case class Entry(df: DataFrame, persisted: Option[RDD[_]],
-      tmpDir: Option[java.nio.file.Path] = None)
+  private final case class Entry(df: DataFrame, persisted: Option[RDD[_]])
 
   private val sessions =
     new java.util.IdentityHashMap[SparkSession, mutable.Map[String, Entry]]()
+
+  /** Per-session temp dir the session-local PARQUET pins are written
+    * under, through the same write → [[finalizeStage]] → read path as
+    * durable stages. Created on a session's first parquet pin, deleted
+    * with everything in it by [[clear]] (or the exit sweep).
+    */
+  private val sessionRoots =
+    new java.util.IdentityHashMap[SparkSession, java.nio.file.Path]()
+
+  private def sessionRoot(spark: SparkSession): java.nio.file.Path =
+    synchronized {
+      Option(sessionRoots.get(spark)).getOrElse {
+        val root = java.nio.file.Files.createTempDirectory("graft-stage-")
+        exitSweep.add(root) // reclaimed at JVM exit if never clear()ed
+        sessionRoots.put(spark, root)
+        root
+      }
+    }
+
   private val keyLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   private def canonical(dir: String): String =
@@ -230,7 +248,7 @@ object StageCache {
       val s = it.next()
       if (s.sparkContext.isStopped) dead += s
     }
-    dead.foreach(sessions.remove)
+    dead.foreach { s => sessions.remove(s); sessionRoots.remove(s) }
   }
 
   /** Return the materialized stage, building it on first use for this
@@ -263,14 +281,16 @@ object StageCache {
           lookup() match {
             case Some(df) => df
             case None =>
+              // counts as a build only when the stage was WRITTEN — a
+              // pre-existing durable stage short-circuits, and the
+              // counter's contract is "times the thunk actually ran"
+              def parquetPin(root: String): Entry = {
+                val (df, wrote) = durableStage(spark, root, dir, name, build)
+                if (wrote) synchronized { builds += 1 }
+                Entry(df, None)
+              }
               val entry = spark.conf.getOption(DurableDirConf) match {
-                case Some(root) =>
-                  // counts as a build only when the stage was WRITTEN —
-                  // a pre-existing durable stage short-circuits, and the
-                  // counter's contract is "times the thunk actually ran"
-                  val (df, wrote) = durableStage(spark, root, dir, name, build)
-                  if (wrote) synchronized { builds += 1 }
-                  Entry(df, None)
+                case Some(root) => parquetPin(root)
                 case None =>
                   // Unset conf = size-adaptive AUTO: the parquet pin's
                   // fixed per-file cost only pays for itself once the
@@ -290,25 +310,15 @@ object StageCache {
                   val useParquet = explicitParquet(spark).getOrElse(
                     spark.sparkContext.isLocal &&
                       corpusBytes(spark, dir) >= autoParquetBytes(spark))
-                  if (useParquet) {
-                    // Session-local COLUMNAR pin: write the stage as
-                    // parquet under a temp dir and read it back. What
-                    // the block-manager pin can never give consumers: a
-                    // vectorized scan with column pruning and predicate
-                    // pushdown INTO the pin (a Kryo DISK_ONLY pin decodes
-                    // whole rows no matter what the consumer projects).
-                    // Same lifetime as a checkpoint pin — [[clear]] deletes
-                    // the files. Production's durable mode already works
-                    // this way; this brings the session mode in line where
-                    // the stage is a wide fact table.
-                    val tmp = java.nio.file.Files.createTempDirectory(
-                      s"graft-stage-${name.replaceAll("[^A-Za-z0-9_.-]", "_")}-")
-                    exitSweep.add(tmp) // reclaimed at JVM exit if never clear()ed
-                    val path = tmp.resolve("stage.parquet").toString
-                    build.write.mode("overwrite").parquet(path)
-                    synchronized { builds += 1 }
-                    Entry(spark.read.parquet(path), None, Some(tmp))
-                  } else {
+                  // Session-local COLUMNAR pin: the durable path rooted at
+                  // the session's temp dir. What the block-manager pin can
+                  // never give consumers: a vectorized scan with column
+                  // pruning and predicate pushdown INTO the pin (a Kryo
+                  // DISK_ONLY pin decodes whole rows no matter what the
+                  // consumer projects). Same lifetime as a checkpoint
+                  // pin — [[clear]] deletes the session root.
+                  if (useParquet) parquetPin(sessionRoot(spark).toString)
+                  else {
                     val built = build.localCheckpoint(true, DefaultLevel)
                     synchronized { builds += 1 }
                     Entry(built, checkpointRdd(built))
@@ -466,11 +476,13 @@ object StageCache {
     Option(sessions.remove(spark)).foreach(_.valuesIterator.foreach { e =>
       try e.persisted.foreach(_.unpersist(blocking = true))
       catch { case _: Throwable => () }
-      e.tmpDir.foreach { d => deleteRecursively(d); exitSweep.remove(d) }
     })
+    Option(sessionRoots.remove(spark)).foreach { d =>
+      deleteRecursively(d); exitSweep.remove(d)
+    }
   }
 
-  /** Session-parquet pin dirs not yet reclaimed by [[clear]], swept at
+  /** Session pin roots not yet reclaimed by [[clear]], swept at
     * JVM exit — a bench or batch job that never calls clear() must not
     * leak multi-GB pin dirs into the temp filesystem (a full sf10 suite
     * pins ~3 GB; repeated runs would fill the disk). clear() removes
@@ -495,7 +507,7 @@ object StageCache {
     catch { case _: IllegalStateException => () }
   }
 
-  /** Best-effort recursive delete of a session-parquet pin dir. */
+  /** Best-effort recursive delete of a session pin root. */
   private def deleteRecursively(p: java.nio.file.Path): Unit =
     try {
       import scala.jdk.CollectionConverters._

@@ -63,15 +63,6 @@ object Dedup {
           .as("shingle"))
       .distinct()
 
-  /** All ordered in-bucket pairs (a < b by array position) of a SORTED id
-    * array: [1,2,3] → [(1,2),(1,3),(2,3)]. Local pair generation — the
-    * alternative to a bucket self-join; one shuffle instead of three.
-    */
-  def localPairs(sortedIds: Column): Column =
-    flatten(transform(sortedIds, (x, i) =>
-      transform(slice(sortedIds, i + 2, size(sortedIds)),
-        y => struct(x.as("a"), y.as("b")))))
-
   /** 60-bit hash of a string via md5 (15 hex chars → BIGINT) — chosen over
     * xxhash64 because every engine has md5, making results portable, and
     * 60 bits keeps the value positive in signed 64-bit space.
@@ -353,13 +344,8 @@ object Dedup {
         lit(" p="), p.cast("string"))))
 
   /** The shared-rare core over per-doc distinct (doc_id, shs) SETS:
-    * df-capped shingle buckets → streamed in-bucket pair expansion →
-    * shared counts → Jaccard vs per-doc sizes. UNSORTED — callers order.
-    *
-    * Blocking: group per shingle hash, drop hashes with document
-    * frequency > dfCap, emit in-bucket pairs locally. Pairs stream
-    * through the two-level posexplode + slice shape (r14) inside
-    * whole-stage codegen.
+    * df-capped shingle buckets → [[BucketPairs]] expansion → shared
+    * counts → Jaccard vs per-doc sizes. UNSORTED — callers order.
     *
     * TWO exchanges total (r16; the r15 shape had five): the per-doc
     * size is PACKED into the low [[SizeBits]] bits of the doc key
@@ -378,51 +364,24 @@ object Dedup {
     val packed = sets.select(
       packDocKey(col("doc_id"), size(col("shs")).cast("long")).as("pid"),
       explode(col("shs")).as("sh_h"))
-
-    // repartition BEFORE the bucket aggregate — not a bare groupBy. The
-    // input is already (doc, sh_h)-distinct (the kernel deduped per
-    // doc), so a partial collect_list map-side would dedup NOTHING and
-    // only convert 16-byte primitive rows into millions of per-key list
-    // buffers shipped through the exchange (ObjectHashAggregate's
-    // 128-key fallback additionally sorts every scan-sized partition).
-    // The explicit hash exchange ships the slim rows; the aggregate
-    // then runs once, post-exchange, on balanced partitions — the
-    // groupBy below reuses the repartition's hashpartitioning, so this
-    // is ONE exchange, not two.
-    val buckets = packed
-      .repartition(col("sh_h"))
-      .groupBy(col("sh_h"))
-      .agg(collect_list(col("pid")).as("ids"))
+    val buckets = BucketPairs.buckets(packed, Seq("sh_h"), col("pid"))
     // Census observe point: one row per DISTINCT shingle with df =
-    // size(ids) — BEFORE the df-cap filter, so the metrics see every
-    // bucket including singletons and over-cap boilerplate (Catalyst
-    // does not push predicates below CollectMetrics; DedupSpec pins
-    // that). Integer-exact aggregates only, so the harvested census is
-    // bit-identical to the standalone [[shingleAudit]] pipeline and the
-    // DuckDB oracle replay.
+    // size(ms), seen before the df cap (DedupSpec pins that). Integer-
+    // exact aggregates only, so the harvested census is bit-identical to
+    // the standalone [[shingleAudit]] pipeline and the DuckDB oracle
+    // replay.
     val observed = census match {
       case Some((obs, cap)) =>
+        val docFreq = size(col("ms"))
         buckets.observe(obs,
           count(lit(1)).as("n_shingles"),
-          sum(when(size(col("ids")) >= 2, 1L).otherwise(0L)).as("n_buckets"),
-          max(size(col("ids")).cast("long")).as("max_df"),
-          sum(when(size(col("ids")) > cap, 1L).otherwise(0L)).as("n_over_cap"),
-          sum(when(size(col("ids")) > cap,
-            expr("cast(size(ids) AS bigint) * (size(ids) - 1) div 2"))
-            .otherwise(0L)).as("excluded_pair_mass"),
-          sum(when(size(col("ids")).between(2, cap),
-            expr("cast(size(ids) AS bigint) * (size(ids) - 1) div 2"))
-            .otherwise(0L)).as("kept_pair_mass"))
+          (sum(when(docFreq >= 2, 1L).otherwise(0L)).as("n_buckets") +:
+            max(docFreq.cast("long")).as("max_df") +:
+            BucketPairs.capCensus(docFreq, cap)): _*)
       case None => buckets
     }
-    val pairs = observed
-      .filter(size(col("ids")).between(2, dfCap))
-      .select(array_sort(col("ids")).as("ids"))
-      .select(col("ids"), posexplode(col("ids")).as(Seq("i", "pa")))
-      .select(col("pa"),
-        explode(slice(col("ids"), col("i") + lit(2),
-          greatest(size(col("ids")) - col("i") - 1, lit(0)))).as("pb"))
-      .groupBy(col("pa"), col("pb"))
+    val pairs = BucketPairs.pairs(observed, dfCap)
+      .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("shared_rare"))
 
     // n_a/n_b stay in the output (r15): the T0 stage row is the full
@@ -433,11 +392,11 @@ object Dedup {
     // They are bit-field reads of the packed keys (r16) — no joins.
     pairs
       .select(
-        shiftrightunsigned(col("pa"), SizeBits).as("doc_a"),
-        shiftrightunsigned(col("pb"), SizeBits).as("doc_b"),
+        shiftrightunsigned(col("a"), SizeBits).as("doc_a"),
+        shiftrightunsigned(col("b"), SizeBits).as("doc_b"),
         col("shared_rare"),
-        col("pa").bitwiseAND(lit(MaxNsh)).as("n_a"),
-        col("pb").bitwiseAND(lit(MaxNsh)).as("n_b"))
+        col("a").bitwiseAND(lit(MaxNsh)).as("n_a"),
+        col("b").bitwiseAND(lit(MaxNsh)).as("n_b"))
       .withColumn("jaccard_ppm",
         (col("shared_rare") * lit(1000000L)
           / (col("n_a") + col("n_b") - col("shared_rare"))).cast("long"))
@@ -538,7 +497,7 @@ object Dedup {
 
   def containmentPairs(docs: DataFrame, n: Int = 3,
                        dfCap: Int = 100, minContainPpm: Long = 400000L): DataFrame =
-    // same packed-key blocking + streamed two-level pair explode as
+    // same packed-key blocking and [[BucketPairs]] expansion as
     // [[sharedRareJaccard]] (threshold 0 — containment > 0 implies
     // jaccard > 0, so no qualifying pair is lost); only the score
     // (shared / min size) differs
@@ -609,32 +568,16 @@ object Dedup {
         posexplode(graft.engine.expr.NativeFunctions
           .shingleHashes(col("text"), n, 15)).as(Seq("p", "fp")))
 
-    // df-capped occurrence buckets → cross-document occurrence pairs,
-    // expanded locally (one shuffle, no bucket self-join) through the
-    // streamed two-level explode — see ngramJaccardPairsFromShingles.
-    // The occurrence (doc_id, p) rides ONE packed long ([[packDocPos]] —
-    // the sharedRareJaccard bit-field idiom): the fp exchange ships two
-    // longs instead of a struct row, the bucket arrays stay primitive
-    // (array_sort over packed longs IS the (doc_id, p) sort — doc_id
-    // holds the high bits), and the cross-document filter/unpack are
-    // shifts on the aggregated pair row.
-    // repartition BEFORE the bucket aggregate (r16 session 3, the
-    // sharedRareJaccard lesson): positional rows are near-unique per
-    // fp within a scan partition, so a map-side partial collect_list
-    // dedups nothing and ships millions of per-key list buffers —
-    // the explicit fp exchange ships slim 16-byte rows and the
-    // aggregate runs once on balanced partitions (the groupBy reuses
-    // the repartition's hashpartitioning; still one exchange).
-    val pairs = sh
-      .select(packDocPos(col("doc_id"), col("p").cast("long")).as("dp"),
-        col("fp"))
-      .repartition(col("fp")).groupBy(col("fp"))
-      .agg(array_sort(collect_list(col("dp"))).as("occ"))
-      .filter(size(col("occ")).between(2, dfCap))
-      .select(col("occ"), posexplode(col("occ")).as(Seq("i", "a")))
-      .select(col("a"),
-        explode(slice(col("occ"), col("i") + lit(2),
-          greatest(size(col("occ")) - col("i") - 1, lit(0)))).as("b"))
+    // df-capped occurrence buckets → cross-document occurrence pairs
+    // ([[BucketPairs]]). The occurrence (doc_id, p) rides ONE packed
+    // long ([[packDocPos]]): the fp exchange ships two longs instead of
+    // a struct row, the bucket arrays stay primitive (sorting packed
+    // longs IS the (doc_id, p) sort — doc_id holds the high bits), and
+    // the cross-document filter/unpack are shifts on the pair row.
+    val occ = sh.select(
+      packDocPos(col("doc_id"), col("p").cast("long")).as("dp"), col("fp"))
+    val pairs = BucketPairs.pairs(
+        BucketPairs.buckets(occ, Seq("fp"), col("dp")), dfCap)
       .filter(shiftrightunsigned(col("a"), SizeBits) <
         shiftrightunsigned(col("b"), SizeBits))
       .select(shiftrightunsigned(col("a"), SizeBits).as("doc_a"),
@@ -945,52 +888,22 @@ object Dedup {
           s"WHEN $c THEN shiftright(s$c, " +
             s"cast(band % $perChunk as int) * $bitsPerBand)").mkString(" ") +
         " END").bitwiseAND(lit(mask))
-    val sorted = packed
+    val bandRows = packed
       .select((col("doc_id") +: chunkNames.map(col)) :+
         explode(sequence(lit(0), lit(bands - 1))).as("band"): _*)
       .withColumn("band_val", bandVal)
-      // slim-row exchange before the list aggregate (r16 session 3 —
-      // the sharedRareJaccard lesson): (band, band_val) keys are
-      // near-unique within a scan partition, so map-side partial
-      // collect_list ships per-key struct buffers for nothing
-      .repartition(col("band"), col("band_val"))
-      .groupBy(col("band"), col("band_val"))
-      .agg(collect_list(struct(col("doc_id") +: chunkNames.map(col): _*))
-        .as("ms"))
-      // bucketCap (r14, [[ScaleKnobs.hammingBucketCap]]): a bucket past
-      // the cap is a real duplicate family — its C(s, 2) pair list is
-      // O(family²) output whose mass belongs to exact fingerprint dedup,
-      // and the collect_list above is one O(family) array value per row
-      // (the last open-ended memory shape). Capped buckets are excluded
-      // here; [[bucketAudit]] is the census that reports them. The cap
-      // clears every measured bucket at ≤ sf1, so committed artifacts
-      // replay unchanged; the DuckDB oracles replay the same rule.
-      .filter(size(col("ms")) >= 2 && size(col("ms")) <= bucketCap)
-      .select(array_sort(col("ms")).as("ms"))
+    // bucketCap (r14, [[ScaleKnobs.hammingBucketCap]]): a bucket past
+    // the cap is a real duplicate family; [[bucketAudit]] is the census
+    // that reports them. The cap clears every measured bucket at ≤ sf1,
+    // so committed artifacts replay unchanged; the DuckDB oracles replay
+    // the same rule.
+    val buckets = BucketPairs.buckets(bandRows, Seq("band", "band_val"),
+      struct(col("doc_id") +: chunkNames.map(col): _*))
     def hamming(a: String, b: String): Column =
       chunkNames.map(n =>
         bit_count(col(s"$a$n").bitwiseXOR(col(s"$b$n"))))
         .reduce(_ + _).as("hamming")
-    // Pairs stream through a TWO-LEVEL explode — member i against the
-    // slice after i — at EVERY bucket size. The two shapes this
-    // replaces (r13, measured): (a) in-row expansion via
-    // [[localPairs]], which materializes C(s, 2) structs in ONE array
-    // value — ~36 MB per row for the sf10 corpus's 1,400–1,750-member
-    // near-dup families (GC-bimodal 45–150 s timings) and a guaranteed
-    // executor OOM for a 100k-member family (5e9 structs in one value)
-    // at crawl scale — and whose nested transform/flatten is itself a
-    // CodegenFallback lambda; (b) a per-bucket self-join for big
-    // buckets, whose inferred IsNotNull filters de-canonicalize the
-    // shared exchange so the whole signature build ran once PER SIDE
-    // (three corpus scans in the physical plan). The explode keeps peak
-    // memory per generated row at O(bucket), produces the C(s, 2)
-    // output incrementally, and leaves ONE consumer chain over ONE
-    // exchange. mm_phash_pairs at sf10: 51.8 s → ~20 s.
-    val pairs = sorted
-      .select(col("ms"), posexplode(col("ms")).as(Seq("i", "a")))
-      .select(col("a"),
-        explode(slice(col("ms"), col("i") + lit(2),
-          greatest(size(col("ms")) - col("i") - 1, lit(0)))).as("b"))
+    val pairs = BucketPairs.pairs(buckets, bucketCap)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         hamming("a.", "b."))
     // threshold BEFORE the distinct: the dedup shuffle then carries only
@@ -1107,60 +1020,42 @@ object Dedup {
     * materialized (a no-op when warm), then turn the Observation's
     * completed metrics into the audit's 1-row table — row cost is the
     * stage lookup, not a second corpus scan. Falls back to the
-    * standalone pipeline only when no in-session census exists (durable
-    * stage cache short-circuiting the build across JVMs). Values are
+    * standalone pipeline when no in-session census exists (durable
+    * stage cache short-circuiting the build across JVMs) or when it does
+    * not arrive within [[ObservationWait]]. Values are
     * bit-identical on both paths — same distinct (doc_id, sh_h) grain,
     * same derived cap, integer aggregates only — which the oracle's
     * from-scratch DuckDB replay verifies every round.
     */
   def shingleAudit(spark: SparkSession, dir: String): DataFrame = {
     ngramPairsT0(spark, dir)
+    def standalone: DataFrame = shingleAudit(documents(spark, dir),
+      nDocs = ScaleKnobs.documentCount(spark, dir))
     Option(shingleCensus.get(censusKey(spark, dir))) match {
       case Some((obs, cap)) =>
-        val m = obs.get
-        def l(name: String): java.lang.Long = m.get(name) match {
-          case Some(v: java.lang.Long) => v
-          case Some(v: java.lang.Integer) => java.lang.Long.valueOf(v.longValue())
-          case _ => null
-        }
-        val row = org.apache.spark.sql.Row(
-          l("n_shingles"), l("n_buckets"), l("max_df"),
-          java.lang.Long.valueOf(cap), l("n_over_cap"),
-          l("excluded_pair_mass"), l("kept_pair_mass"))
-        import org.apache.spark.sql.types.{LongType, StructField, StructType}
-        val schema = StructType(Seq(
-          StructField("n_shingles", LongType, nullable = false),
-          StructField("n_buckets", LongType, nullable = true),
-          StructField("max_df", LongType, nullable = true),
-          StructField("df_cap", LongType, nullable = false),
-          StructField("n_over_cap", LongType, nullable = true),
-          StructField("excluded_pair_mass", LongType, nullable = true),
-          StructField("kept_pair_mass", LongType, nullable = true)))
-        spark.createDataFrame(
-          java.util.Collections.singletonList(row), schema)
-      case None =>
-        val nd = ScaleKnobs.documentCount(spark, dir)
-        shingleAudit(documents(spark, dir), nDocs = nd)
+        awaitObserved(obs) { m =>
+          auditRow(spark.createDataFrame(java.util.List.of(m), m.schema), cap)
+        }(standalone)
+      case None => standalone
     }
   }
 
   def shingleAudit(docs: DataFrame, n: Int = 3, nDocs: Long = -1L): DataFrame = {
     val nd = if (nDocs >= 0L) nDocs else docs.count()
     val cap = ScaleKnobs.shingleDfCap(nd).toLong
-    shingleSets(docs, n).select(explode(col("shs")).as("sh_h"))
+    auditRow(shingleSets(docs, n).select(explode(col("shs")).as("sh_h"))
       .groupBy(col("sh_h")).agg(count(lit(1)).as("df"))
       .agg(count(lit(1)).as("n_shingles"),
-        sum(when(col("df") >= 2, 1L).otherwise(0L)).as("n_buckets"),
-        max(col("df")).as("max_df"),
-        sum(when(col("df") > cap, 1L).otherwise(0L)).as("n_over_cap"),
-        sum(when(col("df") > cap, expr("df * (df - 1) div 2"))
-          .otherwise(0L)).as("excluded_pair_mass"),
-        sum(when(col("df").between(2L, cap), expr("df * (df - 1) div 2"))
-          .otherwise(0L)).as("kept_pair_mass"))
-      .select(col("n_shingles"), col("n_buckets"), col("max_df"),
-        lit(cap).as("df_cap"), col("n_over_cap"),
-        col("excluded_pair_mass"), col("kept_pair_mass"))
+        (sum(when(col("df") >= 2, 1L).otherwise(0L)).as("n_buckets") +:
+          max(col("df")).as("max_df") +:
+          BucketPairs.capCensus(col("df"), cap)): _*), cap)
   }
+
+  /** The audit's column order, with the cap the census was taken under. */
+  private def auditRow(census: DataFrame, cap: Long): DataFrame =
+    census.select(col("n_shingles"), col("n_buckets"), col("max_df"),
+      lit(cap).as("df_cap"), col("n_over_cap"),
+      col("excluded_pair_mass"), col("kept_pair_mass"))
 
   /** Integer-exact PageRank over the SimHash near-dup graph: rank
     * documents by centrality in the similarity graph — the principled way
@@ -1393,6 +1288,23 @@ object Dedup {
     ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
   }
 
+  /** Upper bound on waiting for an [[org.apache.spark.sql.Observation]]'s
+    * metrics after the action that carries them has run. Spark reports
+    * them as the action completes, so the wait normally returns at
+    * once; the bound only keeps a lost report from hanging the caller.
+    */
+  private[graft] val ObservationWait: scala.concurrent.duration.FiniteDuration =
+    scala.concurrent.duration.Duration(10, java.util.concurrent.TimeUnit.SECONDS)
+
+  /** `read` of the observed metrics row, or `fallback` — a computation of
+    * the same values without the observation — when the row has not
+    * arrived within [[ObservationWait]].
+    */
+  private[graft] def awaitObserved[T](obs: org.apache.spark.sql.Observation)(
+      read: org.apache.spark.sql.Row => T)(fallback: => T): T =
+    try read(scala.concurrent.Await.result(obs.future, ObservationWait))
+    catch { case _: java.util.concurrent.TimeoutException => fallback }
+
   /** Connected components over near-dup pair edges: every document gets a
     * cluster_id = the minimum doc_id reachable through pairs (singletons
     * keep their own id) — the step that turns pair lists into an actual
@@ -1424,21 +1336,17 @@ object Dedup {
     // runs ONE job). The hash is reduced mod a ~2^20 prime so the ANSI
     // sum can't overflow below ~10^12 edges; a fingerprint match still
     // triggers ONE exact set-equality check (equal counts + empty
-    // except), so a modular collision can never end the loop early.
-    def observedFp(d: DataFrame): (DataFrame, () => (Long, Long)) = {
-      val obs = org.apache.spark.sql.Observation()
-      val withObs = d.observe(obs, count(lit(1)).as("n"),
-        sum(pmod(xxhash64(col("u"), col("v")), lit(1048573L))).as("h"))
-      (withObs, () => {
-        val m = obs.get
-        (m("n").asInstanceOf[Long],
-          Option(m("h")).map(_.asInstanceOf[Long]).getOrElse(0L))
-      })
-    }
+    // except), so a modular collision can never end the loop early. If
+    // the metrics do not arrive within [[ObservationWait]], the same
+    // fingerprint is aggregated over the checkpointed round instead.
     def checkpointWithFp(d: DataFrame): (DataFrame, (Long, Long)) = {
-      val (withObs, get) = observedFp(d)
-      val ck = checkpointFresh(withObs)
-      (ck, get())
+      val obs = org.apache.spark.sql.Observation()
+      val fp = Seq(count(lit(1)).as("n"),
+        sum(pmod(xxhash64(col("u"), col("v")), lit(1048573L))).as("h"))
+      val ck = checkpointFresh(d.observe(obs, fp.head, fp.tail: _*))
+      def read(m: org.apache.spark.sql.Row): (Long, Long) =
+        (m.getAs[Long]("n"), Option(m.getAs[Any]("h")).fold(0L)(_.asInstanceOf[Long]))
+      (ck, awaitObserved(obs)(read)(read(ck.agg(fp.head, fp.tail: _*).first())))
     }
 
     // Canonical orientation (big, small): every emitted pair keeps it, so
@@ -1824,26 +1732,19 @@ object Dedup {
   /** [[minhashPairs]] over a pre-built (doc_id, shingle) table — see
     * [[ngramJaccardPairsFromShingles]].
     *
-    * Pair generation shares the r13 Hamming-path architecture
-    * ([[bandedHammingPairs]]) — the LAST two in-row scale hazards were
-    * removed here in r14:
+    * Candidates come from [[BucketPairs]], like the Hamming path. MinHash
+    * band buckets are NOT df-capped by nature (a real dup family agrees
+    * on every band signature), so the streamed expansion and the family
+    * cap are what bound a 100k-member crawl family.
     *
-    *  - candidates STREAM through a two-level explode (member i against
-    *    the slice after i), never [[localPairs]]: MinHash band buckets
-    *    are NOT df-capped (a real dup family agrees on every band
-    *    signature), so the in-row C(s, 2) expansion materialized one
-    *    O(s²) array VALUE per bucket — ~5e9 structs in a single row for
-    *    a 100k-member crawl family, a guaranteed executor OOM. The
-    *    explode keeps peak memory per generated row at O(bucket) and
-    *    emits the C(s, 2) candidates incrementally.
-    *  - the signature agreement count is a FIXED-WIDTH codegen'd sum of
-    *    `numHashes` element equality checks (numHashes is a build
-    *    constant), not `aggregate(zip_with(...))`: higher-order
-    *    functions are CodegenFallback, so every candidate pair paid an
-    *    INTERPRETED two-lambda eval — the corpus_clean lesson at pair
-    *    scale, and exactly what r13 measured on the Hamming path (the
-    *    chunk-packed codegen distance was worth ~2× at sf10 on top of
-    *    the derived geometry).
+    * The signature agreement count is a FIXED-WIDTH codegen'd sum of
+    * `numHashes` element equality checks (numHashes is a build
+    * constant), not `aggregate(zip_with(...))`: higher-order functions
+    * are CodegenFallback, so every candidate pair paid an INTERPRETED
+    * two-lambda eval — the corpus_clean lesson at pair scale, and
+    * exactly what r13 measured on the Hamming path (the chunk-packed
+    * codegen distance was worth ~2× at sf10 on top of the derived
+    * geometry).
     *
     * The MinHash values are 61-bit (mod 2^61−1), so unlike the ≤ 30-bit
     * Hamming bands they cannot chunk-pack several-per-long; the struct
@@ -1898,31 +1799,22 @@ object Dedup {
       when(col(s"a.mh_$i") === col(s"b.mh_$i"), 1L).otherwise(0L))
       .reduce(_ + _)
 
-    sig.select(sig.columns.map(col) :+
+    val bandRows = sig.select(sig.columns.map(col) :+
         explode(sequence(lit(0), lit(bands - 1))).as("band"): _*)
       .select(col("band"), bucketByBand.as("bucket"), member.as("m"))
-      // slim-row exchange before the list aggregate — see
-      // bandedHammingPairs (same near-unique-key partial-agg waste)
-      .repartition(col("band"), col("bucket"))
-      .groupBy(col("band"), col("bucket"))
-      .agg(collect_list(col("m")).as("ms"))
-      // family cap (r14, [[ScaleKnobs.hammingBucketCap]] via the
-      // callers): a MinHash band bucket past the cap is an
-      // exact-duplicate family (all `perBand` permutation minima
-      // agree) — its pair mass belongs to [[exact]], like the Hamming
-      // chains. Measured max bucket 23 at sf10: crawl-scale insurance.
-      .filter(size(col("ms")) >= 2 && size(col("ms")) <= bucketCap)
-      .select(array_sort(col("ms")).as("ms"))
-      .select(col("ms"), posexplode(col("ms")).as(Seq("i", "a")))
-      .select(col("a"),
-        explode(slice(col("ms"), col("i") + lit(2),
-          greatest(size(col("ms")) - col("i") - 1, lit(0)))).as("b"))
+    // family cap (r14, [[ScaleKnobs.hammingBucketCap]] via the callers):
+    // a MinHash band bucket past the cap is an exact-duplicate family
+    // (all `perBand` permutation minima agree) — its pair mass belongs
+    // to [[exact]], like the Hamming chains. Measured max bucket 23 at
+    // sf10: crawl-scale insurance.
+    BucketPairs.pairs(
+        BucketPairs.buckets(bandRows, Seq("band", "bucket"), col("m")),
+        bucketCap)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         (agree * lit(1000000L) / numHashes)
           .cast("long").as("est_jaccard_ppm"))
-      // threshold BEFORE the distinct (the bandedHammingPairs rule): the
-      // dedup shuffle then carries only matching pairs, not every
-      // band-collision candidate
+      // threshold BEFORE the distinct: the dedup shuffle then carries
+      // only matching pairs, not every band-collision candidate
       .filter(col("est_jaccard_ppm") >= minEstPpm)
       .distinct()
       .orderBy(col("doc_a"), col("doc_b"))
@@ -2024,11 +1916,12 @@ object Dedup {
       .groupBy(col("sh_h"))
       .agg(expr("bit_or(shiftleft(1L, cast(idx AS int)))").as("mask"))
       .groupBy(col("mask")).agg(count(lit(1)).as("cnt"))
-    val pairs = census
-      .select(col("cnt"), explode(localPairs(
-        expr("filter(sequence(0L, 62L), i -> (shiftright(mask, cast(i AS int)) % 2) = 1)")))
-        .as("p"))
-      .groupBy(col("p.a").as("idx_a"), col("p.b").as("idx_b"))
+    // each mask row is a bucket whose members are its set bits, ascending
+    val masks = census.select(col("cnt"),
+      expr("filter(sequence(0L, 62L), i -> (shiftright(mask, cast(i AS int)) % 2) = 1)")
+        .as("ms"))
+    val pairs = BucketPairs.pairs(masks, 63L, "cnt")
+      .groupBy(col("a").as("idx_a"), col("b").as("idx_b"))
       .agg(sum(col("cnt")).as("shared_shingles"))
     pairs
       .join(broadcast(perSource.select(col("idx").as("idx_a"),

@@ -253,13 +253,12 @@ object Multimodal {
     * bucket join as text SimHash (4 bands at the corpus-derived band
     * width — [[ScaleKnobs.sigBitsPerBand]], 15 bits through 65k items,
     * +1 bit per corpus doubling after), candidate pairs generated
-    * locally per bucket — image/audio dedup at corpus scale without an
-    * all-pairs comparison. `maxHamming = -1` (default) derives the
+    * locally per bucket ([[BucketPairs]]) — image/audio dedup at corpus
+    * scale without an all-pairs comparison. `maxHamming = -1` (default) derives the
     * fraction-preserving threshold ([[ScaleKnobs.sigMaxHamming]] — the
     * historical 8-of-60 differing-bit fraction, exactly 8 at the
     * default geometry); pass explicit values to pin either knob. A
-    * geometry change is an index rebuild
-    * ([[Dedup.bandedHammingPairs]]).
+    * geometry change is an index rebuild.
     */
   def phashPairs(spark: SparkSession, dir: String, maxHamming: Int = -1,
                  bands: Int = 4, bitsPerBand: Int = 0,

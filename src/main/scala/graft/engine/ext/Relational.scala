@@ -1064,12 +1064,10 @@ object Relational {
     * (r15 verdict ask #5 — that shape shuffled lineitem TWICE, ran a
     * sort-merge join, and then paid a countDistinct expand to dedup the
     * multi-line-same-part case; measured 8.6×/decade at sf10): baskets
-    * are built by one groupBy(l_orderkey) collect_list, parts
-    * de-duplicated and sorted IN the basket array, and pairs stream out
-    * of the same posexplode+slice two-level explode every df-capped
-    * dedup pair generator here uses — each order then emits each
-    * unordered pair at most once, so a plain count(*) equals the old
-    * countDistinct(orderkey) by construction.
+    * and their pairs come from [[BucketPairs]], whose bucket arrays hold
+    * distinct parts — each order then emits each unordered pair at most
+    * once, so a plain count(*) equals the old countDistinct(orderkey) by
+    * construction.
     *
     * Baskets larger than the derived [[ScaleKnobs.basketCap]] are
     * excluded from pair expansion — the pair blow-up is C(size, 2) and a
@@ -1084,17 +1082,11 @@ object Relational {
   def basketPairs(spark: SparkSession, dir: String, k: Int = 20): DataFrame = {
     val cap = ScaleKnobs.basketCap(
       ScaleKnobs.tableCount(spark, dir, "orders"))
-    spark.read.parquet(s"$dir/lineitem.parquet")
+    val lines = spark.read.parquet(s"$dir/lineitem.parquet")
       .select(col("l_orderkey"), col("l_partkey"))
-      .groupBy(col("l_orderkey"))
-      .agg(array_sort(array_distinct(collect_list(col("l_partkey"))))
-        .as("parts"))
-      .filter(size(col("parts")).between(2, cap))
-      .select(col("parts"), posexplode(col("parts")).as(Seq("i", "part_a")))
-      .select(col("part_a"),
-        explode(slice(col("parts"), col("i") + lit(2),
-          greatest(size(col("parts")) - col("i") - 1, lit(0)))).as("part_b"))
-      .groupBy(col("part_a"), col("part_b"))
+    BucketPairs.pairs(
+        BucketPairs.buckets(lines, Seq("l_orderkey"), col("l_partkey")), cap)
+      .groupBy(col("a").as("part_a"), col("b").as("part_b"))
       .agg(count(lit(1)).as("n_orders"))
       .orderBy(desc("n_orders"), col("part_a"), col("part_b"))
       .limit(k)
@@ -1116,13 +1108,9 @@ object Relational {
       .groupBy(col("l_orderkey"))
       .agg(countDistinct(col("l_partkey")).as("sz"))
       .agg(count(lit(1)).as("n_baskets"),
-        sum(when(col("sz") >= 2, 1L).otherwise(0L)).as("n_pair_baskets"),
-        max(col("sz")).as("max_basket"),
-        sum(when(col("sz") > cap, 1L).otherwise(0L)).as("n_over_cap"),
-        sum(when(col("sz") > cap, expr("sz * (sz - 1) div 2"))
-          .otherwise(0L)).as("excluded_pair_mass"),
-        sum(when(col("sz").between(2L, cap), expr("sz * (sz - 1) div 2"))
-          .otherwise(0L)).as("kept_pair_mass"))
+        (sum(when(col("sz") >= 2, 1L).otherwise(0L)).as("n_pair_baskets") +:
+          max(col("sz")).as("max_basket") +:
+          BucketPairs.capCensus(col("sz"), cap)): _*)
       .select(col("n_baskets"), col("n_pair_baskets"), col("max_basket"),
         lit(cap).as("basket_cap"), col("n_over_cap"),
         col("excluded_pair_mass"), col("kept_pair_mass"))

@@ -11,7 +11,8 @@ import scala.concurrent.duration._
   * `Observation` riding the round's eager `localCheckpoint` job, and
   * `Observation.get` blocks until the listener reports it. This pins that
   * the checkpoint action does report it — with a bounded wait, so a Spark
-  * that stops reporting fails here instead of hanging the CC loop.
+  * that stops reporting fails here instead of hanging the CC loop — and
+  * that the engine's own bounded wait falls back when it never comes.
   */
 class CheckpointObservationSpec extends SparkTestBase {
   import spark.implicits._
@@ -29,5 +30,23 @@ class CheckpointObservationSpec extends SparkTestBase {
       .first().getLong(0)
     assert(m("h") === want)
     assert(ck.count() === 2L)
+  }
+
+  test("awaitObserved reads a filled Observation and falls back, within " +
+    "the bound, on one that is never filled") {
+    import graft.engine.ext.Dedup.{ObservationWait, awaitObserved}
+    val filled = Observation()
+    Seq(1L, 2L, 3L).toDF("x").observe(filled, count(lit(1)).as("n")).collect()
+    assert(awaitObserved(filled)(_.getAs[Long]("n"))(fail("filled: no fallback")) === 3L)
+
+    val never = Observation()
+    Seq(1L).toDF("x").observe(never, count(lit(1)).as("n")) // no action runs
+    val t0 = System.nanoTime()
+    val got = awaitObserved(never)(_ => fail("never filled"))(
+      Seq(4L, 5L).toDF("x").agg(count(lit(1))).first().getLong(0))
+    val waited = (System.nanoTime() - t0).nanos
+    assert(got === 2L)
+    assert(waited >= ObservationWait && waited < ObservationWait + 30.seconds,
+      s"waited $waited")
   }
 }

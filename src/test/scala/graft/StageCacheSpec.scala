@@ -287,18 +287,26 @@ class StageCacheSpec extends SparkTestBase {
         case f: org.apache.spark.sql.execution.FileSourceScanExec => f
       }
       assert(scan.nonEmpty, "PARQUET pin must read back as a file scan")
+      // written through the durable path: a finalized stage dir named
+      // after the stage, under the session's temp root
       val pinDir = scan.get.relation.location.rootPaths.head
-      assert(pinDir.toString.contains("graft-stage-spec.parquet"))
+      val local = new java.io.File(new java.net.URI(pinDir.toString).getPath)
+      val root = local.getParentFile
+      assert(local.getName.startsWith("spec.parquet-"), local)
+      assert(root.getName.startsWith("graft-stage-"), root)
+      assert(new java.io.File(local, "_SUCCESS").isFile, local)
+      assert(local.listFiles().exists(_.getName.endsWith(".parquet")), local)
       assert(d1.collect().map(_.getLong(0)).sorted === (0L until 9L).toArray)
       // cached: the thunk must not re-run
       StageCache.materialized(spark, dir, "spec.parquet") {
         fail("thunk must not re-run for a cached key"); d1
       }
       assert(StageCache.builds === before + 1)
-      // clear deletes the temp files — session lifetime, unlike durable
+      // clear deletes the files and the session root — session lifetime,
+      // unlike durable
       StageCache.clear(spark)
-      val local = new java.io.File(new java.net.URI(pinDir.toString).getPath)
       assert(!local.exists(), s"parquet pin $local must be deleted on clear")
+      assert(!root.exists(), s"session pin root $root must be deleted on clear")
     } finally {
       spark.conf.unset(StageCache.StorageLevelConf)
       StageCache.clear(spark)
