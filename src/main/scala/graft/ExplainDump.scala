@@ -13,6 +13,14 @@ package graft
   * artifacts; not part of the library surface.
   */
 object ExplainDump {
+  /** Control characters other than tab and newline (a plan prints string
+    * literals verbatim, e.g. `PyParity.InvalidJson`'s leading NUL) as
+    * `\uXXXX`, so every dumped plan is plain text. */
+  def plainText(plan: String): String =
+    plan.map(c =>
+      if (c < ' ' && c != '\n' && c != '\t') f"\\u${c.toInt}%04x" else c.toString)
+      .mkString
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 4, "usage: ExplainDump <sfDir> <outDir> <suffix> <name> [name...]")
     val sfDir = args(0)
@@ -38,8 +46,8 @@ object ExplainDump {
           // the cache would otherwise eagerly materialize
           spark.conf.set(graft.engine.StageCache.PassthroughConf,
             name.startsWith("_stage_").toString)
-          val plan = f0(spark, sfDir).queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
+          val plan = plainText(f0(spark, sfDir).queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode))
           val f = new java.io.File(outDir, s"${name}_$suffix.txt")
           val w = new java.io.PrintWriter(f, "UTF-8")
           try w.print(plan) finally w.close()

@@ -4,12 +4,8 @@ import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonToken}
 import com.fasterxml.jackson.core.exc.InputCoercionException
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.engine.schemas.Schemas
@@ -170,8 +166,8 @@ object MongoJson {
       case _ => c.hit = true; p.skipChildren(); Skip
     }
 
-  /** Kernel — called as a static forwarder from generated code. Returns
-    * null where from_json returns a NULL struct. */
+  /** The kernel of `mongo_line_parse` (contract: the object doc).
+    * Returns null where from_json returns a NULL struct. */
   def parseLine(u: UTF8String): InternalRow = {
     val row = new GenericInternalRow(8)
     val c = new Corrupt
@@ -210,33 +206,13 @@ object MongoJson {
     row
   }
 
-  /** Expression form; dataType is exactly [[Schemas.MongodLine]] so the
-    * consumer dataflow (`j.msg`, `j.attr.error`, …) is unchanged. */
-  case class MongoLineParse(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = Schemas.MongodLine
-    override def nullable: Boolean = true
-    override def checkInputDataTypes(): TypeCheckResult =
-      if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(
-        s"$MongoLineParseName expects string, got ${child.dataType.sql}")
-
-    override def eval(input: InternalRow): Any = {
-      val v = child.eval(input)
-      if (v == null) null else parseLine(v.asInstanceOf[UTF8String])
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val c = child.genCode(ctx)
-      ev.copy(code = code"""
-        ${c.code}
-        boolean ${ev.isNull} = true;
-        org.apache.spark.sql.catalyst.InternalRow ${ev.value} = null;
-        if (!${c.isNull}) {
-          ${ev.value} = graft.engine.expr.MongoJson.parseLine(${c.value});
-          ${ev.isNull} = (${ev.value} == null);
-        }""")
-    }
-
+  /** `mongo_line_parse(line)`: see [[parseLine]]; the result type is
+    * exactly [[Schemas.MongodLine]] so the consumer dataflow (`j.msg`,
+    * `j.attr.error`, …) is unchanged. */
+  case class MongoLineParse(child: Expression)
+      extends UnaryExpression with NativeFunctions.Kernel {
+    override lazy val replacement: Expression = invoke(MongoJson,
+      "parseLine", Schemas.MongodLine, Seq(child), nullable = true)
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
     override def prettyName: String = MongoLineParseName

@@ -2,97 +2,116 @@ package graft.engine.expr
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo, Literal, RuntimeReplaceable, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, MathUtils}
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 
-/** Native Catalyst expressions for hot-path vector math.
+/** graft's table functions and their kernels.
   *
-  * The declarative form `aggregate(zip_with(a, b, multiply), sum)` is
-  * semantically right but executes via interpreted lambda dispatch per
-  * element — measurably slow when every candidate pair in an ANN/near-dup
-  * query computes a 64-dim dot product. This BinaryExpression generates a
-  * tight Java loop inside whole-stage codegen (SURVEY.md §4.3's "custom
-  * Expression only where built-ins can't express it efficiently" case —
-  * preference (b) before any UDF).
+  * Every kernel has ONE shape: a case-class front
+  * (`X(child, consts…) extends UnaryExpression with Kernel`) and one
+  * static run method holding the kernel's only evaluation body. The front
+  * carries what analysis needs — argument types ([[Kernel]]'s
+  * `inputTypes`), the SQL name, the constants folded by the builder — and
+  * nothing else: the optimizer's `ReplaceExpressions` swaps it for its
+  * `replacement`, a Spark `StaticInvoke` of the run method, before any
+  * evaluation. Whole-stage codegen then emits a direct call to that
+  * method and interpreted evaluation reflects into the same method, so
+  * the two modes cannot drift apart. Prepared constants (word masks, word
+  * sets, the SRP matrix) reach the method as object literals; a NULL
+  * argument yields NULL without a call.
+  *
+  * Each kernel's VALUE CONTRACT — what built-in chain it equals and on
+  * which edges — is documented on its run method (`qdotRun`, `srpRun`,
+  * `mysqlFieldsRun`, …; `MongoJson.parseLine`, `PyParity.check` /
+  * `errorBranch` for the mongod kernels), next to the code it describes.
+  * Kernels exist only where the built-in chain is semantically right but
+  * measurably slow (SURVEY.md §4.3: a custom expression before any UDF).
+  * [[OpaqueBarrier]] is not a kernel: its whole job is
+  * `deterministic = false`, so it remains a hand-written expression.
   */
 object NativeFunctions {
 
-  /** Exact BIGINT dot product of two array<bigint> columns (positions past
+  /** The one kernel shape (see the object doc). `inputTypes` defaults to
+    * one string argument; `nullable = true` in [[invoke]] marks a run
+    * method that may return null for a non-null input. */
+  trait Kernel extends RuntimeReplaceable with ExpectsInputTypes {
+    override def inputTypes: Seq[DataType] = Seq(StringType)
+
+    protected def invoke(owner: AnyRef, method: String, dataType: DataType,
+                         args: Seq[Expression],
+                         nullable: Boolean = false): Expression =
+      StaticInvoke(owner.getClass, dataType, method, args,
+        returnNullable = nullable)
+  }
+
+  /** `qdot_native(a, b)`: see [[qdotRun]]; the builder fixes `failOnError`
+    * from the session's ANSI setting. */
+  case class LongArrayDot(left: Expression, right: Expression,
+      failOnError: Boolean = false)
+      extends BinaryExpression with Kernel {
+    override def inputTypes: Seq[DataType] =
+      Seq(ArrayType(LongType), ArrayType(LongType))
+    override lazy val replacement: Expression = invoke(NativeFunctions,
+      "qdotRun", LongType, Seq(left, right, Literal(failOnError)))
+    override protected def withNewChildrenInternal(
+        newLeft: Expression, newRight: Expression): Expression =
+      copy(left = newLeft, right = newRight)
+    override def prettyName: String = QdotName
+  }
+
+  /** Exact BIGINT dot product of two array<bigint> values (positions past
     * the shorter array ignored; inputs here are always equal-length).
+    *
+    * The declarative form `aggregate(zip_with(a, b, multiply), sum)` is
+    * semantically right but executes via interpreted lambda dispatch per
+    * element — measurably slow when every candidate pair in an
+    * ANN/near-dup query computes a 64-dim dot product.
     *
     * Overflow behavior follows `failOnError`, mirroring Spark's own
     * BinaryArithmetic: `false` wraps (LEGACY `*`/`+` semantics — safe for
     * the engine's quantized data, |q| <= ~2000 per component), `true`
     * raises Spark's ARITHMETIC_OVERFLOW (ANSI semantics) via
-    * `MathUtils.multiplyExact`/`addExact`, so the expression is a faithful
+    * `MathUtils.multiplyExact`/`addExact`, so the kernel is a faithful
     * substitute for the declarative HOF form in ANSI sessions too.
     */
-  case class LongArrayDot(left: Expression, right: Expression,
-      failOnError: Boolean = false)
-      extends BinaryExpression {
-    override def dataType: DataType = LongType
-    override def checkInputDataTypes()
-        : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-      val ok = Seq(left, right).forall(_.dataType match {
-        case ArrayType(LongType, _) => true
-        case _ => false
-      })
-      if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"qdot_native expects (array<bigint>, array<bigint>), " +
-          s"got (${left.dataType.sql}, ${right.dataType.sql})")
-    }
-
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
-      val n = math.min(x.numElements(), y.numElements())
-      var acc = 0L
-      var i = 0
-      if (failOnError) {
-        while (i < n) {
-          acc = MathUtils.addExact(acc,
-            MathUtils.multiplyExact(x.getLong(i), y.getLong(i)))
-          i += 1
-        }
-      } else {
-        while (i < n) { acc += x.getLong(i) * y.getLong(i); i += 1 }
+  def qdotRun(x: ArrayData, y: ArrayData, failOnError: Boolean): Long = {
+    val n = math.min(x.numElements(), y.numElements())
+    var acc = 0L
+    var i = 0
+    if (failOnError) {
+      while (i < n) {
+        acc = MathUtils.addExact(acc,
+          MathUtils.multiplyExact(x.getLong(i), y.getLong(i)))
+        i += 1
       }
-      acc
+    } else {
+      while (i < n) { acc += x.getLong(i) * y.getLong(i); i += 1 }
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val n = ctx.freshName("n")
-        val i = ctx.freshName("i")
-        val acc = ctx.freshName("acc")
-        val mu = "org.apache.spark.sql.catalyst.util.MathUtils"
-        val step =
-          if (failOnError)
-            s"$acc = $mu.addExact($acc, $mu.multiplyExact($a.getLong($i), $b.getLong($i)));"
-          else
-            s"$acc += $a.getLong($i) * $b.getLong($i);"
-        s"""
-           |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-           |long $acc = 0L;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  $step
-           |}
-           |${ev.value} = $acc;
-           |""".stripMargin
-      })
-
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): Expression =
-      copy(left = newLeft, right = newRight)
+    acc
   }
 
-  /** The FULL SRP signature in one expression: bit p of the result is 1
-    * iff Σ_i q(i) · coefs(p)(i) > 0 — `coefs.length` hyperplane dots in
-    * one constant-size nested loop over a reference-object matrix.
+  /** `srp_signature(q, coefs)`: see [[srpRun]]. The coefficient matrix
+    * arrives as a FOLDABLE array<array<bigint>> literal, evaluated once
+    * by the builder. */
+  case class SrpSignature(child: Expression, coefs: Array[Array[Long]])
+      extends UnaryExpression with Kernel {
+    require(coefs.nonEmpty && coefs.length <= 63,
+      s"srp_signature supports 1..63 planes, got ${coefs.length}")
+    override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
+    override lazy val replacement: Expression = invoke(NativeFunctions,
+      "srpRun", LongType, Seq(child, Literal.fromObject(coefs)))
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+    override def prettyName: String = SrpSignatureName
+  }
+
+  /** The FULL SRP signature in one call: bit p of the result is 1 iff
+    * Σ_i q(i) · coefs(p)(i) > 0 — `coefs.length` hyperplane dots in one
+    * constant-size nested loop.
     *
     * Exists because the declarative form — one chained
     * `CASE WHEN qdot(q, <64-literal array>) > 0 THEN 2^p` term per plane
@@ -100,74 +119,23 @@ object NativeFunctions {
     * 44 planes the stage blows past Janino/JIT limits and silently falls
     * back to fully INTERPRETED evaluation (measured: the SRP occupancy
     * census, a linear projection+rollup, ran 43× sf1's time on 10× data;
-    * with this expression the code size is constant at ANY plane count).
+    * with this kernel the generated code is one call at ANY plane count).
     * Overflow-free by construction: |dot| ≤ dims · 1000 ≪ 2^63.
-    *
-    * The coefficient matrix arrives as a FOLDABLE array<array<bigint>>
-    * literal (builder evals it once at resolution); the expression
-    * itself carries the primitive long[][] into codegen via a reference
-    * object.
     */
-  case class SrpSignature(child: Expression, coefs: Array[Array[Long]])
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-    require(coefs.nonEmpty && coefs.length <= 63,
-      s"srp_signature supports 1..63 planes, got ${coefs.length}")
-    override def dataType: DataType = LongType
-    override def checkInputDataTypes()
-        : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case ArrayType(LongType, _) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case other =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"srp_signature expects array<bigint>, got ${other.sql}")
-      }
-
-    override def nullSafeEval(a: Any): Any = {
-      val q = a.asInstanceOf[ArrayData]
-      val n = q.numElements()
-      var sig = 0L
-      var p = 0
-      while (p < coefs.length) {
-        val row = coefs(p)
-        val lim = math.min(n, row.length)
-        var dot = 0L
-        var i = 0
-        while (i < lim) { dot += q.getLong(i) * row(i); i += 1 }
-        if (dot > 0) sig |= (1L << p)
-        p += 1
-      }
-      sig
+  def srpRun(q: ArrayData, coefs: Array[Array[Long]]): Long = {
+    val n = q.numElements()
+    var sig = 0L
+    var p = 0
+    while (p < coefs.length) {
+      val row = coefs(p)
+      val lim = math.min(n, row.length)
+      var dot = 0L
+      var i = 0
+      while (i < lim) { dot += q.getLong(i) * row(i); i += 1 }
+      if (dot > 0) sig |= (1L << p)
+      p += 1
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val m = ctx.addReferenceObj("srpCoefs", coefs, "long[][]")
-        val sig = ctx.freshName("sig")
-        val n = ctx.freshName("n")
-        val p = ctx.freshName("p")
-        val i = ctx.freshName("i")
-        val dot = ctx.freshName("dot")
-        val row = ctx.freshName("row")
-        val lim = ctx.freshName("lim")
-        s"""
-           |long $sig = 0L;
-           |int $n = $a.numElements();
-           |for (int $p = 0; $p < ${coefs.length}; $p++) {
-           |  long[] $row = $m[$p];
-           |  int $lim = java.lang.Math.min($n, $row.length);
-           |  long $dot = 0L;
-           |  for (int $i = 0; $i < $lim; $i++) {
-           |    $dot += $a.getLong($i) * $row[$i];
-           |  }
-           |  if ($dot > 0) $sig |= (1L << $p);
-           |}
-           |${ev.value} = $sig;
-           |""".stripMargin
-      })
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
+    sig
   }
 
   /** Identity wrapper the optimizer cannot see through: evaluates exactly
@@ -199,67 +167,11 @@ object NativeFunctions {
       copy(child = newChild)
   }
 
-  /** All seven MySQL slow-log field captures in ONE compiled pass — the
-    * fused successor of running rlike + regexp_extract per pattern
-    * (r16's `_stage_mysql_parsed` spent its build almost entirely in the
-    * regex battery: 7 × `Matcher.find()` backtracking scans and 7 ×
-    * `UTF8String.toString` copies of the same multi-hundred-byte entry).
-    *
-    * The seven patterns ([[graft.engine.mysql.MySqlLogPipeline]]) are
-    * literal-anchored with a single capture each, so each is equivalent
-    * to a deterministic `indexOf` scan. This expression reproduces
-    * `java.util.regex` `find()` semantics EXACTLY (the pinned contract;
-    * MySqlFieldsKernelSpec holds it against the live regexes on
-    * adversarial entries):
-    *  - default-flag `.` excludes the five Java line terminators
-    *    (\n \r U+0085 U+2028 U+2029), so a non-DOTALL capture cannot
-    *    cross one — a start position whose suffix lies past a terminator
-    *    FAILS and find() retries from the next prefix occurrence;
-    *  - greedy `(.*)` takes the maximal non-terminator run; non-greedy
-    *    `(.*?)` stops at the EARLIEST suffix/lookahead position;
-    *  - the DOTALL query pattern's `.*?;\n` is the first ";\n" after
-    *    "SET timestamp="; its `(?=\n# Time:|\z)` lookahead is the first
-    *    "\n# Time:" after that, else end-of-input.
-    *
-    * The downstream per-entry regex work is fused in as well (it was 7
-    * more regex executions per entry): elements 0/1/3/4/5/6 come back
-    * PRE-STRIPPED (≡ `regexp_replace(c, "^PY_WS+|PY_WS+$", "")` over
-    * [[graft.engine.expr.Normalizers.PyWhitespaceClass]] — a linear scan,
-    * nullness preserved), element 2 is the RAW Query_time capture (the
-    * warning message embeds it unstripped), and element 7 is the
-    * normalized query (≡ `upper(regexp_replace(stripped_query,
-    * "(\b\d+\b)|('[^']*')", "?"))` — the replace as a scan over Java's
-    * ASCII \b/\d/\w classes, the upper via the same
-    * `UTF8String.toUpperCase` Spark's `upper()` calls).
-    *
-    * Result: array<string> of 8 nullable elements
-    * [time*, user_host*, query_time_raw, lock_time*, rows_sent*,
-    * rows_examined*, query*, normalized_query*] (* = stripped) — NULL =
-    * pattern did not match (≡ !rlike), never "" for a miss (group 1
-    * always participates in these patterns). One toString per entry,
-    * zero regex executions.
-    */
+  /** `mysql_entry_fields(entry)`: see [[mysqlFieldsRun]]. */
   case class MySqlEntryFields(child: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    import org.apache.spark.sql.types.StringType
-
-    override def dataType: DataType = ArrayType(StringType, containsNull = true)
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case StringType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"$MySqlFieldsName expects a string, got ${other.sql}")
-      }
-
-    override def nullSafeEval(a: Any): Any =
-      NativeFunctions.mysqlFieldsRun(
-        a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.engine.expr.NativeFunctions.mysqlFieldsRun($c);")
-
+      extends UnaryExpression with Kernel {
+    override lazy val replacement: Expression = invoke(NativeFunctions,
+      "mysqlFieldsRun", ArrayType(StringType, containsNull = true), Seq(child))
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
     override def prettyName: String = MySqlFieldsName
@@ -425,8 +337,46 @@ object NativeFunctions {
     utf8(sb.toString).toUpperCase
   }
 
-  /** Kernel of [[MySqlEntryFields]] — called as a static forwarder from
-    * generated code. */
+  /** All seven MySQL slow-log field captures in ONE pass — the
+    * fused successor of running rlike + regexp_extract per pattern
+    * (r16's `_stage_mysql_parsed` spent its build almost entirely in the
+    * regex battery: 7 × `Matcher.find()` backtracking scans and 7 ×
+    * `UTF8String.toString` copies of the same multi-hundred-byte entry).
+    *
+    * The seven patterns ([[graft.engine.mysql.MySqlLogPipeline]]) are
+    * literal-anchored with a single capture each, so each is equivalent
+    * to a deterministic `indexOf` scan. This kernel reproduces
+    * `java.util.regex` `find()` semantics EXACTLY (the pinned contract;
+    * MySqlFieldsKernelSpec holds it against the live regexes on
+    * adversarial entries):
+    *  - default-flag `.` excludes the five Java line terminators
+    *    (\n \r U+0085 U+2028 U+2029), so a non-DOTALL capture cannot
+    *    cross one — a start position whose suffix lies past a terminator
+    *    FAILS and find() retries from the next prefix occurrence;
+    *  - greedy `(.*)` takes the maximal non-terminator run; non-greedy
+    *    `(.*?)` stops at the EARLIEST suffix/lookahead position;
+    *  - the DOTALL query pattern's `.*?;\n` is the first ";\n" after
+    *    "SET timestamp="; its `(?=\n# Time:|\z)` lookahead is the first
+    *    "\n# Time:" after that, else end-of-input.
+    *
+    * The downstream per-entry regex work is fused in as well (it was 7
+    * more regex executions per entry): elements 0/1/3/4/5/6 come back
+    * PRE-STRIPPED (≡ `regexp_replace(c, "^PY_WS+|PY_WS+$", "")` over
+    * [[graft.engine.expr.Normalizers.PyWhitespaceClass]] — a linear scan,
+    * nullness preserved), element 2 is the RAW Query_time capture (the
+    * warning message embeds it unstripped), and element 7 is the
+    * normalized query (≡ `upper(regexp_replace(stripped_query,
+    * "(\b\d+\b)|('[^']*')", "?"))` — the replace as a scan over Java's
+    * ASCII \b/\d/\w classes, the upper via the same
+    * `UTF8String.toUpperCase` Spark's `upper()` calls).
+    *
+    * Result: array<string> of 8 nullable elements
+    * [time*, user_host*, query_time_raw, lock_time*, rows_sent*,
+    * rows_examined*, query*, normalized_query*] (* = stripped) — NULL =
+    * pattern did not match (≡ !rlike), never "" for a miss (group 1
+    * always participates in these patterns). One toString per entry,
+    * zero regex executions.
+    */
   def mysqlFieldsRun(u: org.apache.spark.unsafe.types.UTF8String)
       : ArrayData = {
     val s = u.toString
@@ -444,6 +394,30 @@ object NativeFunctions {
       stripped(captureUntilLf(s, "Rows_examined: ")),
       qs,
       if (qs == null) null else normalizeSqlStr(qs.toString)))
+  }
+
+  /** `lang_signal_counts(text, sets)`: see [[langSignalRun]]. The
+    * word → set-bitmask lookup is built once per expression. */
+  case class LangSignalCounts(child: Expression, sets: Seq[Seq[String]])
+      extends UnaryExpression with Kernel {
+    require(sets.nonEmpty && sets.length <= 62,
+      s"$LangSignalName supports 1..62 word sets, got ${sets.length}")
+    override lazy val replacement: Expression = {
+      val mask = new java.util.HashMap[String, java.lang.Long]()
+      for (k <- sets.indices; w <- sets(k)) {
+        val lw = w.toLowerCase(java.util.Locale.ROOT)
+        val prev = mask.get(lw)
+        mask.put(lw, java.lang.Long.valueOf(
+          (if (prev == null) 0L else prev.longValue()) | (1L << k)))
+      }
+      invoke(NativeFunctions, "langSignalRun",
+        ArrayType(LongType, containsNull = false),
+        Seq(child, Literal.fromObject(mask), Literal(sets.length),
+          Literal(sets.iterator.flatten.map(_.length).max)))
+    }
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+    override def prettyName: String = LangSignalName
   }
 
   /** Fused language-signal counter: ONE linear scan of the text replaces
@@ -480,58 +454,6 @@ object NativeFunctions {
     * sets containing it, so words shared across languages (la/de/que/un
     * appear in both the es and fr inventories) count into every set
     * exactly as the independent regex passes did.
-    */
-  case class LangSignalCounts(child: Expression, sets: Seq[Seq[String]])
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    import org.apache.spark.sql.types.StringType
-
-    require(sets.nonEmpty && sets.length <= 62,
-      s"$LangSignalName supports 1..62 word sets, got ${sets.length}")
-
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case StringType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"$LangSignalName expects a string, got ${other.sql}")
-      }
-
-    // word → bitmask of the sets containing it; compiled once per
-    // expression instance, shared with codegen via a reference object
-    @transient private lazy val wordMask: java.util.HashMap[String, java.lang.Long] = {
-      val m = new java.util.HashMap[String, java.lang.Long]()
-      for (k <- sets.indices; w <- sets(k)) {
-        val lw = w.toLowerCase(java.util.Locale.ROOT)
-        val prev = m.get(lw)
-        m.put(lw, java.lang.Long.valueOf(
-          (if (prev == null) 0L else prev.longValue()) | (1L << k)))
-      }
-      m
-    }
-    @transient private lazy val maxLen: Int =
-      sets.iterator.flatten.map(_.length).max
-
-    override def nullSafeEval(s: Any): Any =
-      NativeFunctions.langSignalRun(
-        s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-        wordMask, sets.length, maxLen)
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c => {
-        val m = ctx.addReferenceObj("langWordMask", wordMask,
-          "java.util.HashMap")
-        s"${ev.value} = graft.engine.expr.NativeFunctions.langSignalRun(" +
-          s"$c, $m, ${sets.length}, $maxLen);"
-      })
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** The per-row kernel of [[LangSignalCounts]] — a plain compiled method
-    * so generated code calls ONE static forwarder instead of inlining the
-    * scan (constant generated-code size, the SrpSignature lesson).
     */
   def langSignalRun(s: org.apache.spark.unsafe.types.UTF8String,
                     mask: java.util.HashMap[String, java.lang.Long],
@@ -582,9 +504,26 @@ object NativeFunctions {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(counts)
   }
 
+  /** `text_stat_counts(text, words)`: see [[textStatRun]]. The
+    * lowercase word set is built once per expression. */
+  case class TextStatCounts(child: Expression, words: Seq[String])
+      extends UnaryExpression with Kernel {
+    override lazy val replacement: Expression = {
+      val set = new java.util.HashSet[String]()
+      words.foreach(w => set.add(w.toLowerCase(java.util.Locale.ROOT)))
+      invoke(NativeFunctions, "textStatRun",
+        ArrayType(LongType, containsNull = false),
+        Seq(child, Literal.fromObject(set),
+          Literal(if (words.isEmpty) 0 else words.iterator.map(_.length).max)))
+    }
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+    override def prettyName: String = TextStatName
+  }
+
   /** Fused per-document text statistics: ONE linear scan replaces the
     * FIVE independent regex/split passes of the analyze projection
-    * (r14; the same treatment [[LangSignalCounts]] gave the language-ID
+    * (r14; the same treatment [[langSignalRun]] gave the language-ID
     * battery — `text_analyze` was the #2 absolute sf10 row at 101.5 s).
     *
     * Result: `array<bigint>` of
@@ -605,49 +544,8 @@ object NativeFunctions {
     *  - `stopword_hits` = maximal ASCII-`\w` runs whose lowercase form
     *    is in the set — the ASCII-boundary `\b` of RE2/the oracle,
     *    deliberately NOT Java's Unicode-aware `\b`; see the
-    *    [[LangSignalCounts]] word-boundary contract (the one place the
+    *    [[langSignalRun]] word-boundary contract (the one place the
     *    fused scans diverge from the Java-regex battery they replaced).
-    */
-  case class TextStatCounts(child: Expression, words: Seq[String])
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    import org.apache.spark.sql.types.StringType
-
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case StringType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"$TextStatName expects a string, got ${other.sql}")
-      }
-
-    @transient private lazy val wordSet: java.util.HashSet[String] = {
-      val s = new java.util.HashSet[String]()
-      words.foreach(w => s.add(w.toLowerCase(java.util.Locale.ROOT)))
-      s
-    }
-    @transient private lazy val maxLen: Int =
-      if (words.isEmpty) 0 else words.iterator.map(_.length).max
-
-    override def nullSafeEval(s: Any): Any =
-      NativeFunctions.textStatRun(
-        s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-        wordSet, maxLen)
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c => {
-        val m = ctx.addReferenceObj("textStatWords", wordSet,
-          "java.util.HashSet")
-        s"${ev.value} = graft.engine.expr.NativeFunctions.textStatRun(" +
-          s"$c, $m, $maxLen);"
-      })
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  /** The per-row kernel of [[TextStatCounts]] — one compiled code-point
-    * scan, called as a static forwarder from generated code.
     */
   def textStatRun(s: org.apache.spark.unsafe.types.UTF8String,
                   words: java.util.HashSet[String],
@@ -698,94 +596,22 @@ object NativeFunctions {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(counts)
   }
 
-  /** Karp-Rabin winnowing fingerprint: the min and distinct count of the
-    * polynomial rolling hash of every `w`-code-point window of the text,
-    * in ONE scan — `struct<fingerprint_h: bigint, n_distinct_windows:
-    * int>`.
-    *
-    * Replaces the md5-per-window form (r14 verdict ask #3: one md5 per
-    * CHARACTER made `text_winnow` the worst decade ratio in the suite,
-    * 9.9×/39.4 s at sf10 — ~100× the per-byte cost of any other scan).
-    * The hash is the textbook Karp-Rabin polynomial over Unicode CODE
-    * POINTS,
-    *
-    *   H(c₀…c_{w−1}) = Σ cᵢ · B^{w−1−i}  mod  M,
-    *   B = 257, M = 2⁶¹ − 1 (Mersenne),
-    *
-    * advanced in O(1) per window by the classic subtract-leading /
-    * multiply / add-trailing update — exact modular arithmetic, so the
-    * rolling form is VALUE-IDENTICAL to hashing each window
-    * independently (WinnowSpec asserts it against a naive fold). M fits
-    * HUGEINT arithmetic, so DuckDB replays the identical values with
-    * `(h::HUGEINT * 257 + c) % M` folds — the fingerprint stays
-    * oracle-exact, like the md5 form was. 61-bit hashes keep cross-doc
-    * min-fingerprint collisions (the clustering key of
-    * `dedup_winnow_clusters`) as improbable as the 60-bit md5 prefixes
-    * they replace; a narrower word (e.g. 31-bit) would manufacture
-    * ~n²·nWin/2³¹ false clusters at crawl scale because MIN-selection
-    * concentrates the fingerprint distribution near 0.
-    *
-    * Window rule (replicated from the md5 form): texts of at least `w`
-    * code points hash every full window (n − w + 1 of them); shorter
-    * texts — including empty — hash ONCE over all their code points
-    * (the old `substr(i, w)` truncation), with H(empty) = 0.
-    *
-    * SWITCHING COST: fingerprint VALUES are incomparable with the md5
-    * build — recluster, don't mix (an index REBUILD, exactly like a
-    * SimHash width change).
-    */
-  /** Single-pass Gopher-repetition counters over a token array (r16 —
-    * the [[TextStatCounts]] treatment applied to `text_repetition`):
-    * [n_words, n_distinct_words, top_word_cnt, n2, d2, n3, d3] in ONE
-    * compiled scan of the tokens. The previous shape paid TWO shuffles
-    * (explode → (doc, word) agg → doc agg) for the word stats and two
-    * interpreted higher-order transforms building 2/3-gram STRINGS plus
-    * array_distinct over them for the gram stats — all of it per-doc
-    * local work that never needed an exchange.
-    *
-    * Exactness contract (the oracle counts distinct gram STRINGS
-    * `t[i] || ' ' || t[i+1]`): tokens are whitespace-split, so the
-    * joined gram string is injective in the token tuple, and the kernel
-    * counts distinct tuples via DENSE WORD IDS — a 2-gram is the long
-    * (idA << 32 | idB), a 3-gram is (dense 2-gram id << 32 | idC) —
-    * never a lossy hash, so the counts are bit-identical to the string
-    * form at any input. Empty/null tokens are skipped, which makes
-    * `word_rep_counts(split(lower(text), '\\s+'))` equal to the
-    * filtered wsTokens form without the interpreted filter() HOF.
-    */
+  /** `word_rep_counts(tokens | text)`: see [[wordRepRun]]; a string
+    * argument runs [[wordRepRunText]] instead. */
   case class WordRepCounts(child: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    import org.apache.spark.sql.types.StringType
-
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case ArrayType(StringType, _) | StringType =>
-          TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"$WordRepName expects array<string> or string, got ${other.sql}")
-      }
+      extends UnaryExpression with Kernel {
     private def fromText: Boolean = child.dataType == StringType
-
-    override def nullSafeEval(a: Any): Any =
-      if (fromText)
-        NativeFunctions.wordRepRunText(
-          a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-      else NativeFunctions.wordRepRun(a.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        if (fromText)
-          s"${ev.value} = graft.engine.expr.NativeFunctions.wordRepRunText($c);"
-        else s"${ev.value} = graft.engine.expr.NativeFunctions.wordRepRun($c);")
-
+    override def inputTypes: Seq[DataType] =
+      Seq(if (fromText) StringType else ArrayType(StringType))
+    override lazy val replacement: Expression = invoke(NativeFunctions,
+      if (fromText) "wordRepRunText" else "wordRepRun",
+      ArrayType(LongType, containsNull = false), Seq(child))
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
     override def prettyName: String = WordRepName
   }
 
-  /** Shared counting core of [[WordRepCounts]]: tokens stream in as
+  /** Shared counting core of [[wordRepRun]] and [[wordRepRunText]]: tokens stream in as
     * dense ids, grams are dense-id composites — every distinct count is
     * exact (no hashing of content into a fixed width anywhere).
     */
@@ -840,9 +666,24 @@ object NativeFunctions {
     }
   }
 
-  /** Array-input kernel of [[WordRepCounts]] — called as a static
-    * forwarder from generated code. Empty/null elements are skipped
-    * (the wsTokens filter contract).
+  /** Single-pass Gopher-repetition counters over a token array (r16 —
+    * the [[textStatRun]] treatment applied to `text_repetition`):
+    * [n_words, n_distinct_words, top_word_cnt, n2, d2, n3, d3] in ONE
+    * compiled scan of the tokens. The previous shape paid TWO shuffles
+    * (explode → (doc, word) agg → doc agg) for the word stats and two
+    * interpreted higher-order transforms building 2/3-gram STRINGS plus
+    * array_distinct over them for the gram stats — all of it per-doc
+    * local work that never needed an exchange.
+    *
+    * Exactness contract (the oracle counts distinct gram STRINGS
+    * `t[i] || ' ' || t[i+1]`): tokens are whitespace-split, so the
+    * joined gram string is injective in the token tuple, and the kernel
+    * counts distinct tuples via DENSE WORD IDS — a 2-gram is the long
+    * (idA << 32 | idB), a 3-gram is (dense 2-gram id << 32 | idC) —
+    * never a lossy hash, so the counts are bit-identical to the string
+    * form at any input. Empty/null tokens are skipped, which makes
+    * `word_rep_counts(split(lower(text), '\\s+'))` equal to the
+    * filtered wsTokens form without the interpreted filter() HOF.
     */
   def wordRepRun(arr: ArrayData): ArrayData = {
     val total = arr.numElements()
@@ -856,7 +697,7 @@ object NativeFunctions {
     acc.result()
   }
 
-  /** Text-input kernel of [[WordRepCounts]]: lowercases via the SAME
+  /** Text-input form of [[wordRepRun]]: lowercases via the SAME
     * UTF8String.toLowerCase Spark's `lower()` calls, then splits on runs
     * of Java-regex `\s` (space, tab, LF, VT, FF, CR — ASCII bytes, which in
     * UTF-8 never occur inside a multi-byte character, so byte-position
@@ -890,33 +731,35 @@ object NativeFunctions {
     acc.result()
   }
 
+  /** `winnow_karp_rabin(text, w)`: see [[winnowRun]]. */
   case class WinnowKarpRabin(child: Expression, w: Int)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
-
+      extends UnaryExpression with Kernel {
     require(w >= 1 && w <= 4096, s"$WinnowName: window must be 1..4096, got $w")
-
-    override def dataType: DataType = StructType(Seq(
-      StructField("fingerprint_h", LongType, nullable = false),
-      StructField("n_distinct_windows", IntegerType, nullable = false)))
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case StringType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"$WinnowName expects a string, got ${other.sql}")
-      }
-
-    override def nullSafeEval(s: Any): Any =
-      NativeFunctions.winnowRun(
-        s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], w)
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.engine.expr.NativeFunctions.winnowRun($c, $w);")
-
+    override lazy val replacement: Expression = invoke(NativeFunctions,
+      "winnowRun", StructType(Seq(
+        StructField("fingerprint_h", LongType, nullable = false),
+        StructField("n_distinct_windows", IntegerType, nullable = false))),
+      Seq(child, Literal(w)))
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
+    override def prettyName: String = WinnowName
+  }
+
+  /** `md5_prefix_long(text, hexChars)`: see [[md5PrefixRun]]. */
+  case class Md5PrefixLong(child: Expression, hexChars: Int)
+      extends UnaryExpression with Kernel {
+    require(hexChars >= 1 && hexChars <= 15,
+      s"$Md5PrefixName: hexChars must be 1..15 (a BIGINT holds < 16), got $hexChars")
+    override lazy val replacement: Expression = invoke(NativeFunctions,
+      "md5PrefixRun", LongType, Seq(child, Literal(hexChars)))
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+    override def prettyName: String = Md5PrefixName
+  }
+
+  private val md5Digest = new ThreadLocal[java.security.MessageDigest] {
+    override def initialValue(): java.security.MessageDigest =
+      java.security.MessageDigest.getInstance("MD5")
   }
 
   /** First `hexChars` hex digits of md5 as a BIGINT — VALUE-IDENTICAL to
@@ -932,44 +775,9 @@ object NativeFunctions {
     * big-endian — the md5 VALUE is unchanged, so every DuckDB oracle
     * replays `('0x' || substring(md5(s), 1, N))::BIGINT` exactly as
     * before.
-    */
-  case class Md5PrefixLong(child: Expression, hexChars: Int)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    import org.apache.spark.sql.types.StringType
-
-    require(hexChars >= 1 && hexChars <= 15,
-      s"$Md5PrefixName: hexChars must be 1..15 (a BIGINT holds < 16), got $hexChars")
-
-    override def dataType: DataType = LongType
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case StringType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"$Md5PrefixName expects a string, got ${other.sql}")
-      }
-
-    override def nullSafeEval(s: Any): Any =
-      NativeFunctions.md5PrefixRun(
-        s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], hexChars)
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.engine.expr.NativeFunctions.md5PrefixRun(" +
-          s"$c, $hexChars);")
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
-  private val md5Digest = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-
-  /** The per-row kernel of [[Md5PrefixLong]]: digest the UTF-8 bytes and
-    * take the top 4·hexChars bits of the big-endian digest — the value of
-    * `substring(md5hex, 1, hexChars)` parsed base-16, bit-for-bit.
+    * Digests the UTF-8 bytes and takes the top 4·hexChars bits of the
+    * big-endian digest — the value of `substring(md5hex, 1, hexChars)`
+    * parsed base-16, bit-for-bit.
     */
   def md5PrefixRun(s: org.apache.spark.unsafe.types.UTF8String,
                    hexChars: Int): Long = {
@@ -990,7 +798,7 @@ object NativeFunctions {
     override def initialValue(): Array[Byte] = new Array[Byte](16)
   }
 
-  /** Byte-scan tokenizer shared by [[ShingleHashes]] and [[SimhashSig]]:
+  /** Byte-scan tokenizer shared by the shingle and SimHash kernels:
     * lowercase via `UTF8String.toLowerCase` (exactly Spark's `lower()`
     * under the default UTF8_BINARY collation), then token = maximal run
     * of non-`\s` BYTES, where `\s` is Java regex's ASCII class
@@ -1035,7 +843,7 @@ object NativeFunctions {
     override def initialValue(): TokenRanges = new TokenRanges
   }
 
-  /** Kernel of [[ShingleHashes]]: every positional n-token shingle's
+  /** `shingle_hashes(text, n, hexChars)`: every positional n-token shingle's
     * md5 prefix (`hexChars` hex digits as BIGINT) in ONE scan —
     * element i = `md5_prefix_long(concat_ws(' ', tok_i..tok_{i+n-1}),
     * hexChars)` over the [[TokenRanges]] tokens of `lower(text)`. The
@@ -1082,7 +890,7 @@ object NativeFunctions {
     out
   }
 
-  /** Kernel of [[ShingleHashSet]]: the DISTINCT shingle hashes of one
+  /** `shingle_hash_set(text, n, hexChars)`: the DISTINCT shingle hashes of one
     * document, ascending. Computes the same positional values as
     * [[shingleHashRun]], then sorts and compacts in place — a per-doc
     * dedup at the scan. Exactness: a downstream global
@@ -1110,7 +918,7 @@ object NativeFunctions {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(a)
   }
 
-  /** Kernel of [[SimhashSig]]: the whole per-document SimHash signature
+  /** `simhash_sig(text, bands, bitsPerBand)`: the whole per-document SimHash signature
     * in ONE scan — one md5 digest per token (BOTH 60-bit halves read
     * from the same digest; the legacy column form ran the digest twice
     * per token), ±1 votes accumulated locally, band-packed exactly as
@@ -1171,114 +979,45 @@ object NativeFunctions {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(sig)
   }
 
-  /** All positional n-token shingle md5-prefix hashes of `lower(text)`
-    * as `array<bigint>` — see [[shingleHashRun]] for the value contract
-    * (bit-identical to the legacy tokens/element_at/concat_ws/
-    * md5_prefix_long column chain, shingle string never materialized).
-    */
+  /** `shingle_hashes(text, n, hexChars)`: see [[shingleHashRun]]. */
   case class ShingleHashes(child: Expression, n: Int, hexChars: Int)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    import org.apache.spark.sql.types.StringType
-
+      extends UnaryExpression with Kernel {
     require(n >= 1, s"$ShingleHashName: n must be >= 1, got $n")
     require(hexChars >= 1 && hexChars <= 15,
       s"$ShingleHashName: hexChars must be 1..15, got $hexChars")
-
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case StringType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"$ShingleHashName expects a string, got ${other.sql}")
-      }
-
-    override def nullSafeEval(s: Any): Any =
-      NativeFunctions.shingleHashRun(
-        s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n, hexChars)
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.engine.expr.NativeFunctions.shingleHashRun(" +
-          s"$c, $n, $hexChars);")
-
+    override lazy val replacement: Expression = invoke(NativeFunctions,
+      "shingleHashRun", ArrayType(LongType, containsNull = false),
+      Seq(child, Literal(n), Literal(hexChars)))
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
     override def prettyName: String = ShingleHashName
   }
 
-  /** DISTINCT n-token shingle md5-prefix hashes of `lower(text)` as a
-    * sorted `array<bigint>` — the per-document dedup of
-    * [[ShingleHashes]]' positional output (see [[shingleHashSetRun]]).
-    */
+  /** `shingle_hash_set(text, n, hexChars)`: see [[shingleHashSetRun]]. */
   case class ShingleHashSet(child: Expression, n: Int, hexChars: Int)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    import org.apache.spark.sql.types.StringType
-
+      extends UnaryExpression with Kernel {
     require(n >= 1, s"$ShingleHashSetName: n must be >= 1, got $n")
     require(hexChars >= 1 && hexChars <= 15,
       s"$ShingleHashSetName: hexChars must be 1..15, got $hexChars")
-
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case StringType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"$ShingleHashSetName expects a string, got ${other.sql}")
-      }
-
-    override def nullSafeEval(s: Any): Any =
-      NativeFunctions.shingleHashSetRun(
-        s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n, hexChars)
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.engine.expr.NativeFunctions.shingleHashSetRun(" +
-          s"$c, $n, $hexChars);")
-
+    override lazy val replacement: Expression = invoke(NativeFunctions,
+      "shingleHashSetRun", ArrayType(LongType, containsNull = false),
+      Seq(child, Literal(n), Literal(hexChars)))
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
     override def prettyName: String = ShingleHashSetName
   }
 
-  /** Per-document SimHash signature as `array<bigint>` of `bands`
-    * band-packed vote words — see [[simhashSigRun]] for the value
-    * contract (null for zero-token docs; callers filter).
-    */
+  /** `simhash_sig(text, bands, bitsPerBand)`: see [[simhashSigRun]]
+    * (NULL for zero-token docs; callers filter). */
   case class SimhashSig(child: Expression, bands: Int, bitsPerBand: Int)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    import org.apache.spark.sql.types.StringType
-
+      extends UnaryExpression with Kernel {
     require(bands >= 1 && bitsPerBand >= 1 && bitsPerBand <= 60 &&
       bands * bitsPerBand <= 120,
       s"$SimhashSigName: need 1 <= bitsPerBand <= 60 and bands * " +
         s"bitsPerBand <= 120 (two md5 halves); got $bands x $bitsPerBand")
-
-    override def nullable: Boolean = true
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case StringType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"$SimhashSigName expects a string, got ${other.sql}")
-      }
-
-    override def nullSafeEval(s: Any): Any =
-      NativeFunctions.simhashSigRun(
-        s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-        bands, bitsPerBand)
-
-    // the kernel returns null for zero-token docs, so the generated code
-    // must re-derive isNull from the call result (plain nullSafeCodeGen
-    // would leave isNull=false around a null value)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.engine.expr.NativeFunctions.simhashSigRun(" +
-          s"$c, $bands, $bitsPerBand);\n" +
-          s"${ev.isNull} = ${ev.value} == null;")
-
+    override lazy val replacement: Expression = invoke(NativeFunctions,
+      "simhashSigRun", ArrayType(LongType, containsNull = false),
+      Seq(child, Literal(bands), Literal(bitsPerBand)), nullable = true)
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
     override def prettyName: String = SimhashSigName
@@ -1305,8 +1044,42 @@ object NativeFunctions {
     r
   }
 
-  /** The per-row kernel of [[WinnowKarpRabin]] — compiled once, called as
-    * a static forwarder from generated code (the langSignalRun pattern).
+  /** Karp-Rabin winnowing fingerprint: the min and distinct count of the
+    * polynomial rolling hash of every `w`-code-point window of the text,
+    * in ONE scan — `struct<fingerprint_h: bigint, n_distinct_windows:
+    * int>`.
+    *
+    * Replaces the md5-per-window form (r14 verdict ask #3: one md5 per
+    * CHARACTER made `text_winnow` the worst decade ratio in the suite,
+    * 9.9×/39.4 s at sf10 — ~100× the per-byte cost of any other scan).
+    * The hash is the textbook Karp-Rabin polynomial over Unicode CODE
+    * POINTS,
+    *
+    *   H(c₀…c_{w−1}) = Σ cᵢ · B^{w−1−i}  mod  M,
+    *   B = 257, M = 2⁶¹ − 1 (Mersenne),
+    *
+    * advanced in O(1) per window by the classic subtract-leading /
+    * multiply / add-trailing update — exact modular arithmetic, so the
+    * rolling form is VALUE-IDENTICAL to hashing each window
+    * independently (WinnowSpec asserts it against a naive fold). M fits
+    * HUGEINT arithmetic, so DuckDB replays the identical values with
+    * `(h::HUGEINT * 257 + c) % M` folds — the fingerprint stays
+    * oracle-exact, like the md5 form was. 61-bit hashes keep cross-doc
+    * min-fingerprint collisions (the clustering key of
+    * `dedup_winnow_clusters`) as improbable as the 60-bit md5 prefixes
+    * they replace; a narrower word (e.g. 31-bit) would manufacture
+    * ~n²·nWin/2³¹ false clusters at crawl scale because MIN-selection
+    * concentrates the fingerprint distribution near 0.
+    *
+    * Window rule (replicated from the md5 form): texts of at least `w`
+    * code points hash every full window (n − w + 1 of them); shorter
+    * texts — including empty — hash ONCE over all their code points
+    * (the old `substr(i, w)` truncation), with H(empty) = 0.
+    *
+    * SWITCHING COST: fingerprint VALUES are incomparable with the md5
+    * build — recluster, don't mix (an index REBUILD, exactly like a
+    * SimHash width change).
+    *
     * Min and distinct count come from one in-place sort of the window
     * hashes: primitive longs, no boxing, no per-window string or hash-set
     * allocation.
@@ -1409,7 +1182,7 @@ object NativeFunctions {
       case s: Short => s.toInt
       case b: Byte => b.toInt
       case other => throw new IllegalArgumentException(
-        s"$fn: integral $what expected, got $other")
+        s"$fn: $what must be integral, got $other")
     }
   }
 
@@ -1425,15 +1198,8 @@ object NativeFunctions {
     */
   def buildWinnow(exprs: Seq[Expression]): Expression = {
     checkArity(WinnowName, 2, exprs)
-    require(exprs(1).foldable, s"$WinnowName: the window width must be foldable")
-    val w = exprs(1).eval() match {
-      case i: java.lang.Integer => i.intValue()
-      case l: java.lang.Long => l.intValue()
-      case s: java.lang.Short => s.intValue()
-      case other => throw new IllegalArgumentException(
-        s"$WinnowName: integral window width expected, got $other")
-    }
-    WinnowKarpRabin(exprs(0), w)
+    WinnowKarpRabin(exprs(0),
+      foldableInt(WinnowName, "the window width", exprs(1)))
   }
 
   /** `text_stat_counts(text, words)` builder: the stopword set must be a
@@ -1606,10 +1372,11 @@ object NativeFunctions {
     }
   }
 
-  /** Codegen'd exact dot product; caller must have ensureRegistered. */
+  /** Exact dot product (see [[qdotRun]]); caller must have
+    * ensureRegistered. */
   def qdotNative(a: Column, b: Column): Column = call_function(QdotName, a, b)
 
-  /** Codegen'd full SRP signature (see [[SrpSignature]]); `coefs` becomes
+  /** Full SRP signature (see [[srpRun]]); `coefs` becomes
     * a foldable nested-array literal folded at resolution. Caller must
     * have ensureRegistered.
     */
@@ -1619,7 +1386,7 @@ object NativeFunctions {
       array(coefs.map(row => array(row.map(lit): _*)): _*))
   }
 
-  /** Fused word-set + Han-char counter (see [[LangSignalCounts]]); the
+  /** Fused word-set + Han-char counter (see [[langSignalRun]]); the
     * set matrix becomes a foldable nested-array literal. Caller must
     * have ensureRegistered.
     */
@@ -1629,7 +1396,7 @@ object NativeFunctions {
       array(sets.map(row => array(row.map(lit): _*)): _*))
   }
 
-  /** Fused text-statistics counter (see [[TextStatCounts]]); the word
+  /** Fused text-statistics counter (see [[textStatRun]]); the word
     * set becomes a foldable array literal. Caller must have
     * ensureRegistered.
     */
@@ -1639,33 +1406,33 @@ object NativeFunctions {
   }
 
   /** Single-pass repetition counters over a token array (see
-    * [[WordRepCounts]]); caller must have ensureRegistered.
+    * [[wordRepRun]]); caller must have ensureRegistered.
     */
   def wordRepCounts(tokens: Column): Column =
     call_function(WordRepName, tokens)
 
-  /** Positional n-token shingle md5-prefix hashes (see [[ShingleHashes]]);
+  /** Positional n-token shingle md5-prefix hashes (see [[shingleHashRun]]);
     * caller must have ensureRegistered. */
   def shingleHashes(text: Column, n: Int, hexChars: Int): Column = {
     import org.apache.spark.sql.functions.lit
     call_function(ShingleHashName, text, lit(n), lit(hexChars))
   }
 
-  /** Distinct sorted shingle hashes per document (see [[ShingleHashSet]]);
+  /** Distinct sorted shingle hashes per document (see [[shingleHashSetRun]]);
     * caller must have ensureRegistered. */
   def shingleHashSet(text: Column, n: Int, hexChars: Int): Column = {
     import org.apache.spark.sql.functions.lit
     call_function(ShingleHashSetName, text, lit(n), lit(hexChars))
   }
 
-  /** Per-document SimHash signature (see [[SimhashSig]]); caller must
+  /** Per-document SimHash signature (see [[simhashSigRun]]); caller must
     * have ensureRegistered. */
   def simhashSig(text: Column, bands: Int, bitsPerBand: Int): Column = {
     import org.apache.spark.sql.functions.lit
     call_function(SimhashSigName, text, lit(bands), lit(bitsPerBand))
   }
 
-  /** Karp-Rabin winnowing fingerprint (see [[WinnowKarpRabin]]); caller
+  /** Karp-Rabin winnowing fingerprint (see [[winnowRun]]); caller
     * must have ensureRegistered.
     */
   def winnowKarpRabin(text: Column, w: Int): Column = {
@@ -1673,7 +1440,7 @@ object NativeFunctions {
     call_function(WinnowName, text, lit(w))
   }
 
-  /** Allocation-free md5 hex-prefix long (see [[Md5PrefixLong]]); caller
+  /** Allocation-free md5 hex-prefix long (see [[md5PrefixRun]]); caller
     * must have ensureRegistered (every engine session does — the
     * extension installs it, ensureRegistered is the embedded fallback).
     */
@@ -1696,7 +1463,7 @@ object NativeFunctions {
   def pyErrorBranch(line: Column): Column = call_function(PyErrorBranchName, line)
 
   /** All seven MySQL slow-log captures in one compiled pass (see
-    * [[MySqlEntryFields]]); caller must have ensureRegistered.
+    * [[mysqlFieldsRun]]); caller must have ensureRegistered.
     */
   def mysqlEntryFields(entry: Column): Column =
     call_function(MySqlFieldsName, entry)

@@ -68,7 +68,7 @@ object Dedup {
     * 60 bits keeps the value positive in signed 64-bit space.
     *
     * r15: computed by the native [[graft.engine.expr.NativeFunctions
-    * .Md5PrefixLong]] expression — the VALUE is unchanged (oracles still
+    * .md5PrefixRun]] kernel — the VALUE is unchanged (oracles still
     * replay `('0x' || substring(md5(s), 1, 15))::BIGINT`), but the
     * hex-string + substring + conv allocation chain is gone; the churn
     * it generated, not the md5 arithmetic, dominated the shingle
@@ -1590,7 +1590,7 @@ object Dedup {
     * `planes` md5-derived hyperplanes, pack the sign bits, split into
     * `bands` bucket keys. Pure projection — no shuffle until a consumer
     * groups or joins on (band, bv). The signature is ONE native
-    * expression ([[graft.engine.expr.NativeFunctions.SrpSignature]]):
+    * kernel ([[graft.engine.expr.NativeFunctions.srpRun]]):
     * the per-plane CASE-chain form generated code linear in the plane
     * count and fell out of codegen entirely at the sf10-derived 44
     * planes (whole stage interpreted — measured 43× on the occupancy

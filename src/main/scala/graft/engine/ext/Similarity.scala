@@ -40,7 +40,7 @@ object Similarity {
 
   /** Exact BIGINT dot product of two quantized vectors — declarative form,
     * kept as the portable spec of the semantics. Hot paths use the
-    * codegen'd [[graft.engine.expr.NativeFunctions.LongArrayDot]] via
+    * native [[graft.engine.expr.NativeFunctions.qdotRun]] kernel via
     * [[qdot]], which is ~an order of magnitude faster per pair (tight Java
     * loop vs interpreted lambda dispatch per element).
     */

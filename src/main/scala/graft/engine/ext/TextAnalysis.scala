@@ -87,7 +87,7 @@ object TextAnalysis {
     // the document AND materialized its match array — 4 regex executions
     // + 4 allocations per row on the suite's biggest absolute query.
     // lang_signal_counts is semantically bit-identical (ASCII-\b word
-    // sets + \p{IsHan} char count — see LangSignalCounts scaladoc), so
+    // sets + \p{IsHan} char count — see NativeFunctions.langSignalRun), so
     // every committed artifact replays. Counts stay INT in the output
     // schema, as size() produced.
     val sig = graft.engine.expr.NativeFunctions.langSignalCounts(
@@ -164,7 +164,7 @@ object TextAnalysis {
     * — the winnowing selection rule, one projection per doc.
     *
     * r15 REBUILD: the window hash is the native rolling Karp-Rabin
-    * expression ([[graft.engine.expr.NativeFunctions.WinnowKarpRabin]] —
+    * kernel ([[graft.engine.expr.NativeFunctions.winnowRun]] —
     * one multiply-add per code point) instead of one md5 per window
     * position (one md5 per CHARACTER — ~100× the per-byte cost of any
     * other scan and the suite's worst decade ratio at sf10). Fingerprint
@@ -315,7 +315,7 @@ object TextAnalysis {
     // per-doc local, so the old shape's two shuffles (explode →
     // (doc, word) agg → doc agg) and two interpreted gram-building
     // transforms + array_distinct were pure overhead —
-    // [[graft.engine.expr.NativeFunctions.WordRepCounts]] computes all
+    // [[graft.engine.expr.NativeFunctions.wordRepRun]] computes all
     // seven counters in a single scan of the raw split output (it skips
     // empties itself, so the interpreted wsTokens filter() HOF drops out
     // too), with distinct counts over DENSE WORD IDS — exact, never a

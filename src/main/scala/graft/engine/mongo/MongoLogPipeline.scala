@@ -1,6 +1,6 @@
 package graft.engine.mongo
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.engine.expr.{NativeFunctions, Normalizers, PyParity}
@@ -106,6 +106,19 @@ object MongoLogPipeline {
             .otherwise(NativeFunctions.pyErrorBranch(col("line"))))
   }
 
+  // The four branch gates over a parsedScan, each defined once: the
+  // branch filters below and the observed census both read them.
+  /** R1 detailed slow queries. */
+  val SlowGate: Column = col("valid") && col("is_slow")
+  /** R2 error rollup. */
+  val ErrorGate: Column = col("is_error")
+  /** R3 non-slow residual. */
+  val NonSlowGate: Column = !col("invalid") && col("pyerr").isNull &&
+    !col("is_slow") && !col("is_error")
+  /** E1 bad-record channel. */
+  val ParseErrorGate: Column = col("invalid") || col("pyerr").isNotNull ||
+    (!col("schema_ok") && col("is_slow") && !col("is_error"))
+
   /** R1 + P3-P7: one row per slow-query line, reference's 11 columns plus
     * line_no provenance.
     */
@@ -115,7 +128,7 @@ object MongoLogPipeline {
     // 1 full-line JSON parse instead of 4. Materialized as a projection:
     // get_json_object is non-cheap, so CollapseProject won't re-inline it
     // into the consumers.
-    val withCmd = scan.filter(col("valid") && col("is_slow"))
+    val withCmd = scan.filter(SlowGate)
       .withColumn("cmd_raw", get_json_object(col("line"), "$.attr.command"))
     // P4 asymmetric defaults: missing ns splits to [""] → AppName "",
     // Collection "N/A" (mongo_parser.py:35-37).
@@ -147,43 +160,54 @@ object MongoLogPipeline {
       coalesce(col("j.t.`$date`"), lit("")).as("timestamp"))
   }
 
+  /** A1's group key: the F1-normalized command. */
+  val QueryPattern: Column =
+    Normalizers.normalizeMongoQuery(col("Command")).as("Query Pattern")
+
+  /** A1's five per-pattern aggregates, the one definition batch and
+    * stream share; `sampleOrder` picks the sample command (file order
+    * here, event time in [[graft.engine.streaming.MongoStream]]). */
+  def queryStatsAgg(patterns: RelationalGroupedDataset,
+                    sampleOrder: Column): DataFrame =
+    patterns.agg(
+      count(lit(1)).as("Executions"),
+      min(col("Duration(ms)")).as("Min Duration(ms)"),
+      max(col("Duration(ms)")).as("Max Duration(ms)"),
+      round(avg(col("Duration(ms)")), 2).as("Avg Duration(ms)"),
+      min_by(col("Command"), sampleOrder).as("Sample Full Query"))
+
   /** A1 + O1: stats per F1-normalized pattern, sorted by Executions desc
     * then Avg desc (mongo_parser.py:113-129).
     */
   def queryStats(detailedDf: DataFrame): DataFrame =
-    detailedDf
-      .groupBy(Normalizers.normalizeMongoQuery(col("Command")).as("Query Pattern"))
-      .agg(
-        count(lit(1)).as("Executions"),
-        min(col("Duration(ms)")).as("Min Duration(ms)"),
-        max(col("Duration(ms)")).as("Max Duration(ms)"),
-        round(avg(col("Duration(ms)")), 2).as("Avg Duration(ms)"),
-        min_by(col("Command"), col("line_no")).as("Sample Full Query"))
+    queryStatsAgg(detailedDf.groupBy(QueryPattern), col("line_no"))
       .orderBy(desc("Executions"), desc("Avg Duration(ms)"))
+
+  /** A2's three group keys over [[ErrorGate]] rows, shared by batch and
+    * stream. Corrupt-salvaged rows (is_error via the raw probe) may lack
+    * parsed fields — the raw extraction fills them in. */
+  val ErrorKeys: Seq[Column] = Seq(
+    coalesce(col("j.msg"), get_json_object(col("line"), "$.msg")).as("msg"),
+    coalesce(col("j.attr.error.codeName"),
+      get_json_object(col("line"), "$.attr.error.codeName"),
+      lit("N/A")).as("error"),
+    coalesce(col("j.attr.error.errmsg"),
+      get_json_object(col("line"), "$.attr.error.errmsg"),
+      lit("N/A")).as("errmsg"))
 
   /** A2: error rollup grouped on (msg, codeName, errmsg) — equivalent to the
     * reference's "msg|codeName|errmsg" composite key (F4) but skew- and
     * collision-safe. First-seen line number and sample via min/min_by.
     */
-  def errors(scan: DataFrame): DataFrame = {
-    scan.filter(col("is_error"))
-      .groupBy(
-        // corrupt-salvaged rows (is_error via raw probes) have a null
-        // parsed struct — fall back to the raw extraction for them.
-        coalesce(col("j.msg"), get_json_object(col("line"), "$.msg")).as("msg"),
-        coalesce(col("j.attr.error.codeName"),
-          get_json_object(col("line"), "$.attr.error.codeName"),
-          lit("N/A")).as("error"),
-        coalesce(col("j.attr.error.errmsg"),
-          get_json_object(col("line"), "$.attr.error.errmsg"),
-          lit("N/A")).as("errmsg"))
+  def errors(scan: DataFrame): DataFrame =
+    scan.filter(ErrorGate)
+      .groupBy(ErrorKeys: _*)
       .agg(
         min(col("line_no")).as("OriginalLineNumber"),
         count(lit(1)).as("totalCount"),
         min_by(Normalizers.pyStrip(col("line")), col("line_no")).as("SampleLine"))
       .select("OriginalLineNumber", "msg", "error", "errmsg", "totalCount", "SampleLine")
       .orderBy(col("OriginalLineNumber")) // == reference insertion order
-  }
 
   /** R3: parseable, not slow, not claimed by the error branch, and no
     * generic exception (the reference's elif at mongo_parser.py:88).
@@ -191,8 +215,7 @@ object MongoLogPipeline {
     * the malformed field on the non-slow path.
     */
   def nonSlow(scan: DataFrame): DataFrame =
-    scan.filter(!col("invalid") && col("pyerr").isNull &&
-        !col("is_slow") && !col("is_error"))
+    scan.filter(NonSlowGate)
       .select(col("line_no"), Normalizers.pyStrip(col("line")).as("LogLine"))
 
   /** E1: bad-record channel with the reference's two message forms
@@ -203,9 +226,7 @@ object MongoLogPipeline {
     * cannot emit) fall back to the first form.
     */
   def parseErrors(scan: DataFrame): DataFrame =
-    scan
-      .filter(col("invalid") || col("pyerr").isNotNull ||
-        (!col("schema_ok") && col("is_slow") && !col("is_error")))
+    scan.filter(ParseErrorGate)
       .select(col("line_no"),
         when(col("pyerr").isNotNull,
           concat(lit("Line "), col("line_no"), lit(": Error parsing line: "),
@@ -225,18 +246,15 @@ object MongoLogPipeline {
     * QueryExecutionListener (batch) or the progress events (streaming);
     * see ObservabilitySpec.
     */
-  def observed(scan: DataFrame): DataFrame =
+  def observed(scan: DataFrame): DataFrame = {
+    def census(gate: Column) = sum(when(gate, 1L).otherwise(0L))
     scan.observe(RoutingMetric,
-      // each census term is the EXACT predicate of its branch filter
-      // (detailed / errors / nonSlow / parseErrors above)
       count(lit(1)).as("lines"),
-      sum(when(col("valid") && col("is_slow"), 1L).otherwise(0L)).as("slow"),
-      sum(when(col("is_error"), 1L).otherwise(0L)).as("errors"),
-      sum(when(!col("invalid") && col("pyerr").isNull &&
-        !col("is_slow") && !col("is_error"), 1L).otherwise(0L)).as("non_slow"),
-      sum(when(col("invalid") || col("pyerr").isNotNull ||
-        (!col("schema_ok") && col("is_slow") && !col("is_error")), 1L)
-        .otherwise(0L)).as("parse_errors"))
+      census(SlowGate).as("slow"),
+      census(ErrorGate).as("errors"),
+      census(NonSlowGate).as("non_slow"),
+      census(ParseErrorGate).as("parse_errors"))
+  }
 
   /** Full run: one persisted scan, four branches + bad-record channel.
     * Caller unpersists via [[Result]] usage lifetime (or spark context end).

@@ -1,6 +1,6 @@
 package graft.engine.mysql
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.functions._
 
 /** MySQL/Percona slow-query-log analyzer, re-expressed as a declarative
@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * (P11) + empty-query placeholder (P12) + fingerprint (F2) → detailed
   * table + per-pattern aggregate (A3) + warnings channel (E2).
   *
-  * Everything is Catalyst expressions — the codegen'd
-  * [[graft.engine.expr.NativeFunctions.MySqlEntryFields]] kernel (all
+  * Everything is Catalyst expressions — the
+  * [[graft.engine.expr.NativeFunctions.mysqlFieldsRun]] kernel (all
   * seven captures, their pyStrip and the query fingerprint in ONE scan
   * per entry, value-identical to the seven regex patterns below),
   * try_cast, min_by — so the whole parse is one WholeStageCodegen span
@@ -77,7 +77,7 @@ object MySqlLogPipeline {
     NativeFunctions.ensureRegistered(entries.sparkSession)
     // Fused battery (r17): ONE compiled pass per entry yields all seven
     // captures AND the per-field post-processing —
-    // [[NativeFunctions.MySqlEntryFields]] reproduces each pattern's
+    // [[NativeFunctions.mysqlFieldsRun]] reproduces each pattern's
     // find() semantics with literal-anchored scans (NULL on no-match ≡
     // !rlike; the capture on a match), returns elements 0/1/3/4/5/6
     // pre-pyStripped (nullness preserved) and element 7 as the
@@ -137,6 +137,18 @@ object MySqlLogPipeline {
     projected
   }
 
+  /** A3's five per-pattern aggregates, the one definition batch and
+    * stream share; `sampleOrder` picks the sample query (file order
+    * here, event time in [[graft.engine.streaming.MySqlStream]]). */
+  def aggregateStats(patterns: RelationalGroupedDataset,
+                     sampleOrder: Column): DataFrame =
+    patterns.agg(
+      count(lit(1)).as("Executions"),
+      min(col("Query_time (ms)")).as("Min_Query_time_ms"),
+      max(col("Query_time (ms)")).as("Max_Query_time_ms"),
+      round(avg(col("Query_time (ms)")), 2).as("Avg_Query_time_ms"),
+      min_by(col("Query"), sampleOrder).as("Sample_Query"))
+
   /** The three reference outputs as cheap derivations of the
     * [[projectedOf]] table (filters, one aggregate, one array-explode —
     * no regex anywhere).
@@ -150,15 +162,9 @@ object MySqlLogPipeline {
     // A3 + O2: per-pattern stats, keys ascending (pandas groupby default
     // sort, verified by execution — SURVEY.md §2.4/§2.5). "First in file"
     // sample via min_by on the explicit order key, never first().
-    val aggregate = detailed
-      .groupBy(col("Normalized_Query"))
-      .agg(
-        count(lit(1)).as("Executions"),
-        min(col("Query_time (ms)")).as("Min_Query_time_ms"),
-        max(col("Query_time (ms)")).as("Max_Query_time_ms"),
-        round(avg(col("Query_time (ms)")), 2).as("Avg_Query_time_ms"),
-        min_by(col("Query"), col("ord")).as("Sample_Query"))
-      .orderBy(col("Normalized_Query"))
+    val aggregate =
+      aggregateStats(detailed.groupBy(col("Normalized_Query")), col("ord"))
+        .orderBy(col("Normalized_Query"))
 
     // Warning channel, single pass: each entry emits 0..1 of the three
     // diagnostics — P10/R4 skip (which patterns matched, Python-bool

@@ -9,7 +9,7 @@ import graft.engine.expr.NativeFunctions.LongArrayDot
 
 /** Optimizer rule: recognize the declarative BIGINT dot product
   * `aggregate(zip_with(a, b, (x,y) -> x*y), 0L, (acc,v) -> acc+v)` and
-  * rewrite it to the codegen'd [[LongArrayDot]].
+  * rewrite it to the native [[LongArrayDot]] kernel.
   *
   * The declarative form is the portable spec users naturally write
   * (Similarity.qdotDeclarative), but it executes as interpreted lambda
@@ -23,6 +23,11 @@ import graft.engine.expr.NativeFunctions.LongArrayDot
   * the rewrite emits `if (size(a) = size(b)) dot(a, b) else NULL`, which
   * also yields NULL when either array is NULL (null comparison → else
   * branch, and the O(1) guard keeps everything in one codegen span).
+  *
+  * The rule runs in the optimizer, after `ReplaceExpressions` has
+  * swapped every kernel front for its `StaticInvoke`; a front emitted
+  * here would never be replaced and could not evaluate, so the rule
+  * emits the kernel's `replacement` directly.
   *
   * Arithmetic mode: the rule is installed cluster-wide, so it must
   * preserve the overflow semantics of WHATEVER session it fires in, not
@@ -80,7 +85,7 @@ object RewriteDeclarativeDot extends Rule[LogicalPlan] {
             nativeFailOnError(mulCtx, addCtx).isDefined =>
         If(EqualTo(Size(a, legacySizeOfNull = false),
             Size(b, legacySizeOfNull = false)),
-          LongArrayDot(a, b, nativeFailOnError(mulCtx, addCtx).get),
+          LongArrayDot(a, b, nativeFailOnError(mulCtx, addCtx).get).replacement,
           Literal(null, LongType))
     }
 }

@@ -45,31 +45,25 @@ object MongoStream {
   def windowedQueryStats(scan: DataFrame,
                          windowLen: String = "1 minute",
                          watermarkDelay: String = "5 minutes"): DataFrame =
-    detailed(scan)
-      .filter(col("event_time").isNotNull)
-      .withWatermark("event_time", watermarkDelay)
-      .groupBy(
-        window(col("event_time"), windowLen),
-        Normalizers.normalizeMongoQuery(col("Command")).as("Query Pattern"))
-      .agg(
-        count(lit(1)).as("Executions"),
-        min(col("Duration(ms)")).as("Min Duration(ms)"),
-        max(col("Duration(ms)")).as("Max Duration(ms)"),
-        round(avg(col("Duration(ms)")), 2).as("Avg Duration(ms)"),
-        min_by(col("Command"), col("event_time")).as("Sample Full Query"))
+    MongoLogPipeline.queryStatsAgg(
+      detailed(scan)
+        .filter(col("event_time").isNotNull)
+        .withWatermark("event_time", watermarkDelay)
+        .groupBy(window(col("event_time"), windowLen),
+          MongoLogPipeline.QueryPattern),
+      col("event_time"))
 
-  /** R2 error rollup, windowed like A1. */
+  /** R2 error rollup, windowed like A1: the batch rollup's gate and keys
+    * ([[MongoLogPipeline.ErrorGate]], [[MongoLogPipeline.ErrorKeys]]), so
+    * a line the batch report counts is counted here too. */
   def windowedErrors(scan: DataFrame,
                      windowLen: String = "1 minute",
                      watermarkDelay: String = "5 minutes"): DataFrame =
-    scan.filter(col("valid") && col("is_error"))
+    scan.filter(MongoLogPipeline.ErrorGate)
       .filter(col("event_time").isNotNull)
       .withWatermark("event_time", watermarkDelay)
-      .groupBy(
-        window(col("event_time"), windowLen),
-        col("j.msg").as("msg"),
-        coalesce(col("j.attr.error.codeName"), lit("N/A")).as("error"),
-        coalesce(col("j.attr.error.errmsg"), lit("N/A")).as("errmsg"))
+      .groupBy(window(col("event_time"), windowLen) +:
+        MongoLogPipeline.ErrorKeys: _*)
       .agg(count(lit(1)).as("totalCount"),
         min_by(Normalizers.pyStrip(col("line")), col("event_time")).as("SampleLine"))
 }

@@ -88,16 +88,10 @@ object MySqlStream {
   def windowedAggregate(entries: DataFrame,
                         windowLen: String = "1 minute",
                         watermarkDelay: String = "5 minutes"): DataFrame =
-    detailed(entries)
-      .filter(col("event_time").isNotNull)
-      .withWatermark("event_time", watermarkDelay)
-      .groupBy(
-        window(col("event_time"), windowLen),
-        col("Normalized_Query"))
-      .agg(
-        count(lit(1)).as("Executions"),
-        min(col("Query_time (ms)")).as("Min_Query_time_ms"),
-        max(col("Query_time (ms)")).as("Max_Query_time_ms"),
-        round(avg(col("Query_time (ms)")), 2).as("Avg_Query_time_ms"),
-        min_by(col("Query"), col("event_time")).as("Sample_Query"))
+    MySqlLogPipeline.aggregateStats(
+      detailed(entries)
+        .filter(col("event_time").isNotNull)
+        .withWatermark("event_time", watermarkDelay)
+        .groupBy(window(col("event_time"), windowLen), col("Normalized_Query")),
+      col("event_time"))
 }

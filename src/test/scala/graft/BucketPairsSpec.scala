@@ -123,12 +123,6 @@ class BucketPairsSpec extends SparkTestBase {
     assert(sizes.contains(1) && sizes.contains(Cap.toInt + 1), sizes)
   }
 
-  private def scalaSources(dir: java.io.File): Seq[java.io.File] =
-    Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
-      if (f.isDirectory) scalaSources(f)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    }
-
   test("src/main expands bucket pairs only in BucketPairs") {
     val pairSlice = """slice\([^,]+,[^,]*\+\s*lit\(2\)""".r
     val sources = scalaSources(new java.io.File("src/main"))

@@ -12,12 +12,6 @@ import graft.engine.expr.NativeFunctions
   */
 class GraftSessionSpec extends SparkTestBase {
 
-  private def scalaSources(dir: java.io.File): Seq[java.io.File] =
-    Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
-      if (f.isDirectory) scalaSources(f)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    }
-
   test("src/ builds sessions only in GraftSession") {
     val needle = "SparkSession" + ".builder" // split so this file is clean
     val hits = scalaSources(new java.io.File("src")).flatMap { f =>

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import graft.engine.expr.NativeFunctions.LongArrayDot
 import graft.engine.ext.Similarity
 
@@ -24,9 +26,7 @@ class RewriteDotSpec extends SparkTestBase {
   private def vecs(rows: Row*): DataFrame =
     spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
 
-  private def hasNativeDot(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan.expressions.exists(
-      _.exists(_.isInstanceOf[LongArrayDot]))
+  private def hasNativeDot(df: DataFrame): Boolean = nativeDots(df).nonEmpty
 
   test("declarative dot product rewrites to LongArrayDot") {
     val df = vecs(Row(Array(1L, 2L, 3L), Array(4L, 5L, 6L)))
@@ -58,9 +58,14 @@ class RewriteDotSpec extends SparkTestBase {
     try body finally spark.conf.set("spark.sql.ansi.enabled", prev)
   }
 
+  /** The rewrite emits the kernel's replacement: a StaticInvoke of
+    * `qdotRun(a, b, failOnError)`, read back as its LongArrayDot front. */
   private def nativeDots(df: DataFrame): Seq[LongArrayDot] =
-    df.queryExecution.optimizedPlan.expressions.flatMap(
-      _.collect { case d: LongArrayDot => d })
+    df.queryExecution.optimizedPlan.expressions.flatMap(_.collect {
+      case s: StaticInvoke if s.functionName == "qdotRun" =>
+        val Seq(a, b, Literal(failOnError: Boolean, _)) = s.arguments
+        LongArrayDot(a, b, failOnError)
+    })
 
   test("LEGACY mode rewrites to the wrapping loop (overflow wraps)") {
     withAnsi(false) {

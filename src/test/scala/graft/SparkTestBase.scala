@@ -21,6 +21,13 @@ trait SparkTestBase extends AnyFunSuite {
     SparkTestBase.spark
   }
 
+  /** Every `.scala` file under `dir`, recursively — for source guards. */
+  def scalaSources(dir: java.io.File): Seq[java.io.File] =
+    Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
+      if (f.isDirectory) scalaSources(f)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    }
+
   /** Every node of a physical plan, piercing the AQE wrapper —
     * `AdaptiveSparkPlanExec` is a LeafExecNode, so a plain `collect`
     * stops at it and plan-shape assertions pass vacuously. */

@@ -673,4 +673,32 @@ class StreamingSpec extends SparkTestBase {
       assert(rows(0).getAs[Long]("totalCount") === 2L)
     } finally q.stop()
   }
+
+  test("windowed error rollup counts every line the batch rollup counts") {
+    import graft.engine.ingest.Sources
+    import graft.engine.mongo.MongoLogPipeline
+    implicit val sqlCtx = spark.sqlContext
+    val err = """"error":{"code":1,"codeName":"IndexBuildAborted","errmsg":"x"}"""
+    val lines = Seq(
+      s"""{"t":{"$$date":"2023-10-25T10:00:01.000Z"},"s":"E","c":"S","id":1,"ctx":"c","msg":"Index build failed","attr":{$err}}""",
+      // good t.$date, the only defect a mistyped non-error field: the
+      // parse keeps its fields and marks it corrupt (valid = false), but
+      // the reference, and the batch rollup, still count it as an error
+      s"""{"t":{"$$date":"2023-10-25T10:00:30.000Z"},"s":"E","c":"S","id":1,"ctx":"c","msg":"Index build failed","attr":{"durationMillis":"x",$err}}""")
+    def keyed(df: org.apache.spark.sql.DataFrame) =
+      df.select("msg", "error", "errmsg", "totalCount").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3))).toSet
+    val batch = keyed(MongoLogPipeline.errors(
+      MongoLogPipeline.parsedScan(Sources.fromLines(spark, lines))))
+    assert(batch === Set(("Index build failed", "IndexBuildAborted", "x", 2L)))
+    val mem = MemoryStream[String]
+    val q = MongoStream.windowedErrors(MongoStream.parsedScan(mem.toDF()))
+      .writeStream.format("memory")
+      .queryName("stream_errs_vs_batch").outputMode("complete").start()
+    try {
+      mem.addData(lines: _*)
+      q.processAllAvailable()
+      assert(keyed(spark.table("stream_errs_vs_batch")) === batch)
+    } finally q.stop()
+  }
 }
