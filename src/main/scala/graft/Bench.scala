@@ -1,294 +1,104 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Host-state instrumentation shared by [[Bench]] and [[BenchOne]]:
-  * the fixed-cost canary workload (BASELINE.md §"Host canary") and the
-  * run-identity git sha, factored so a BenchOne artifact carries the
-  * same self-describing fields as a full-suite jsonl — steady-state
-  * claims then cite committed artifacts with host state attached
-  * (r15 verdict ask #1a), not prose.
+/** The full-suite benchmark: `runMain graft.Bench [name...]` at
+  * `SPARK_GRAFT_SF_DIR` (default sf0.1). No names times every
+  * [[BenchStages]] row cold, then every registry query; names time only
+  * that subset — `_stage_*` names cold before the subset prewarm,
+  * registry names at steady state. The protocol is [[BenchRun]]'s.
   */
-object BenchHost {
-  val canaryPath = "/root/testdata/sf0.01/lineitem.parquet"
-  def canaryAvailable: Boolean = new java.io.File(canaryPath).exists()
-
-  def canaryDf(spark: SparkSession): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{xxhash64, lit, expr}
-    val base = spark.read.parquet(canaryPath)
-    val h0 = xxhash64(base.columns.map(base.col): _*)
-    val h = (1 to 16).foldLeft(h0)((e, i) => xxhash64(e, lit(i)))
-    // bit_xor, not sum: summing 64-bit hashes overflows under ANSI mode.
-    Seq.fill(16)(base.select(h.as("h"))).reduce(_ union _).agg(expr("bit_xor(h)"))
-  }
-
-  /** Canary protocol version, stamped into every artifact line (r16
-    * verdict "what's wrong" #1): protocol 2 = canary samples sync
-    * untimed first (r16 session 3 on), so they report EXTERNAL host
-    * state only. Protocol 1 (pre-r16s3) canaries absorbed the run's own
-    * pending writeback — `total_canary_norm` comparisons are valid only
-    * WITHIN a protocol version (BASELINE.md §"Host canary").
-    */
-  val CanaryProto = 2
-
-  def canarySample(spark: SparkSession,
-                   consume: org.apache.spark.sql.DataFrame => Unit): Option[Double] =
-    if (!canaryAvailable) None
-    else {
-      // untimed sync first: the canary reports EXTERNAL host state, so
-      // drain our own pending writeback before sampling (see syncDisks)
-      syncDisks()
-      val t0 = System.nanoTime()
-      consume(canaryDf(spark))
-      Some((System.nanoTime() - t0) / 1e9)
-    }
-
-  /** `git rev-parse HEAD` (see Bench's run_meta comment for why the
-    * subprocess, not hand-parsed .git files). */
-  def gitSha: String =
-    try {
-      val p = new ProcessBuilder("git", "rev-parse", "HEAD")
-        .redirectErrorStream(true).start()
-      val out = new String(p.getInputStream.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      if (p.waitFor() == 0 && out.matches("[0-9a-f]{40}")) out
-      else "unknown"
-    } catch { case _: Throwable => "unknown" }
-
-  /** `s` as a JSON string literal: backslash, quote and ALL control
-    * chars (< 0x20) escaped — a tab or CR in a name or in builder-authored
-    * SQL would otherwise make a reader's json.load fail. */
-  def jsonString(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
-  /** -Xmx actually in effect, as a self-description field. */
-  def heapDesc: String = {
-    val mb = Runtime.getRuntime.maxMemory() / (1024L * 1024L)
-    s"${mb}m"
-  }
-
-  /** Flush the page cache to disk (`sync(1)`), bounded at two minutes.
-    *
-    * Why the bench needs it (r16 session 3, measured): a stage build
-    * writes a multi-GB DISK_ONLY pin plus shuffle files through the
-    * page cache, and the kernel flushes them ASYNCHRONOUSLY — so on a
-    * host with modest disk bandwidth the writeback of row N lands in
-    * row N+1's wall clock (PSI `io full` held 3-7% for MINUTES after a
-    * T0 build exited, and a canary sampled in that window read 8.5 s
-    * vs the 0.7 s quiet-host value). Timing `sync` INSIDE each stage
-    * row charges every build the flush of its own writes, making rows
-    * self-contained and reproducible regardless of what ran before;
-    * syncing (untimed) before each canary sample makes the canary
-    * report EXTERNAL host state, not our own residue. No-op (logged
-    * nowhere, swallowed) where `sync` is unavailable.
-    */
-  def syncDisks(): Unit =
-    try {
-      val p = new ProcessBuilder("sync").start()
-      p.waitFor(120, java.util.concurrent.TimeUnit.SECONDS)
-      ()
-    } catch { case _: Throwable => () }
-}
-
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // optional trailing query names: time only that subset (scaling
-    // studies — the driver passes no args and times the full registry).
-    // Fail fast on typos: a misspelled name would otherwise benchmark
-    // nothing, exit 0, and quietly record a vacuous run.
-    val subset = args.toSet
-    val unknown = subset.diff(SparkEntry.queries.keySet)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val spark = GraftSession.local("graft-bench")
-    // Force FULL evaluation of every output column via the no-op v2 sink.
-    // The earlier `.count()` consumer let Catalyst prune the measured work:
-    // a projection-only query (text_winnow, corpus_clean, mm_features, …)
-    // collapses under count() to a metadata row count, so its recorded
-    // time measured parquet footer reads, not the operator. The noop sink
-    // executes the exact plan the query returns (sorts included) without
-    // collecting rows to the driver. Recorded totals from rounds ≤ 8 are
-    // therefore NOT comparable for projection-only queries (see
-    // BASELINE.md §"Bench protocol").
-    def consume(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    // ---- Host canary ------------------------------------------------------
-    // A fixed-cost workload measured FIRST and LAST (never in the total):
-    // scan-and-hash of a constant parquet file (sf0.01 lineitem — the same
-    // bytes at every benched SF) widened by an 8-way self-union and a
-    // 16-round xxhash64 chain so the sample reflects both IO and sustained
-    // CPU throughput. Identical code ⇒ identical expected cost, so
-    //   host_shift = canary_r{N} / canary_r{M}
-    // turns "is this round's total a plan regression or a loaded host?"
-    // into arithmetic (BASELINE.md §"Bench protocol"). Single sample, no
-    // retry-min: the canary's JOB is to capture host state, and retries
-    // would launder exactly the stalls it exists to expose. Two samples
-    // (pre/post) also bound drift across the run.
-    // Canary workload + guard live in [[BenchHost]] (shared with
-    // BenchOne since r16). Guarded like warmDir (r12 ADVICE): on a
-    // machine without the sf0.01 fixture the canary is SKIPPED —
-    // samples return None and every canary field is absent from the
-    // output — instead of crashing the whole bench before any query
-    // runs.
-    val canaryAvailable = BenchHost.canaryAvailable
-    def canaryDf(): org.apache.spark.sql.DataFrame = BenchHost.canaryDf(spark)
-    def canarySample(): Option[Double] = BenchHost.canarySample(spark, consume)
-    // Run-identity stamp (r12 verdict ask #6): sf, git commit, and the
-    // query list in scope — printed FIRST so any committed jsonl is
-    // self-describing and a post-fix subset re-run mechanically
-    // supersedes the rows of an earlier run with the same stamp shape.
-    // `git rev-parse HEAD`, not hand-parsed .git files: the loose-ref
-    // read silently degraded to "unknown" after pack-refs/gc, in
-    // worktrees (.git is a file), or when run from another cwd (r13
-    // ADVICE). The subprocess handles every ref layout; same
-    // catch-to-unknown guard.
-    val gitSha = BenchHost.gitSha
-    val scopeNames = SparkEntry.queries.keysIterator
-      .filter(n => subset.isEmpty || subset(n)).toSeq.sorted
-    val scopeJson = scopeNames.map(BenchHost.jsonString).mkString("[", ",", "]")
+    val subset = BenchRun.resolve(args.toSeq).map(_._1).toSet
+    val stages = BenchStages.rows.filter(r => subset.isEmpty || subset(r._1))
+    val queries = BenchRun.registry.filter(r => subset.isEmpty || subset(r._1))
     val mode =
-      if (subset.isEmpty) "full"
-      else if (sys.env.get("SPARK_GRAFT_STAGES").contains("1")) "subset+stages"
-      else "subset"
-    val stageLevel = spark.conf
-      .getOption(graft.engine.StageCache.StorageLevelConf)
-      .getOrElse(graft.engine.StageCache.autoModeDesc(spark))
-    val rddCompress = spark.conf.get("spark.rdd.compress", "false")
-    println(s"""{"metric":"run_meta","sf":"$sfDir","git_sha":"$gitSha","mode":"$mode","stage_level":"$stageLevel","rdd_compress":"$rddCompress","canary_proto":${BenchHost.CanaryProto},"n_queries":${scopeNames.size},"queries":$scopeJson}""")
-    // Untimed warmup at the smallest SF: first execution of each plan pays
-    // Janino codegen compilation + JIT, which at sf0.1 can exceed the
-    // actual query time. One pass over tiny data warms those caches so the
-    // timed loop below measures steady-state execution, not compilation.
-    val warmDir = "/root/testdata/sf0.001"
-    if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (n, _) => subset.isEmpty || subset(n) }
-        .foreach { case (_, fn) =>
-        try consume(fn(spark, warmDir)) catch { case _: Throwable => () }
-      }
-    // Fixture setup (generated log files) happens outside the timed loop.
-    try SparkEntry.prepare(spark, sfDir) catch { case _: Throwable => () }
-    // Warm the canary plan (codegen/JIT) so both samples measure execution;
-    // two passes — one leaves measurable JIT residue in the first sample.
-    if (canaryAvailable)
-      try { consume(canaryDf()); consume(canaryDf()) } catch { case _: Throwable => () }
-    val canaryPre = canarySample()
+      if (subset.isEmpty) "full" else if (stages.nonEmpty) "subset+stages" else "subset"
+    val timed = stages.map(_._1)
+    val spark = GraftSession.local("graft-bench")
+    println(runMeta(sfDir, mode, queries.map(_._1), BenchRun.stamp(spark),
+      if (mode == "subset+stages") Some(timed) else None))
+    // A named stage that rides trainings not named itself: those are
+    // built untimed first, so its row times only its own increment, as
+    // in a full run.
+    val ridden = BenchStages.rows.filter { case (n, _) =>
+      !timed.contains(n) && timed.exists(BenchStages.rides(_).contains(n))
+    }
     var errors = List.empty[(String, String)]
-    // Shared materialized stages (StageCache) are timed HERE, once, as
-    // explicit "_stage_*" rows included in the total. The family queries
-    // below then measure steady-state consumption — the production shape
-    // (build a corpus snapshot's cluster table once, run every policy
-    // against it). Without these rows the min-of-retries policy would
-    // silently erase the one-time build cost from the artifact: the
-    // build-bearing query's retry hits the warm cache and the min wins.
-    // The warmup above populated the cache for sf0.001 only; clear it so
-    // the build at sfDir is measured from cold.
-    graft.engine.StageCache.clear(spark)
-    // The stage list lives in BenchStages (one definition, spec-checked
-    // bijective with the stages the registry actually consumes).
-    // Subset runs skip stage rows by default (steady-state scaling
-    // studies) — SPARK_GRAFT_STAGES=1 overrides, timing EVERY stage
-    // build cold before the subset prewarm, so a big-SF subset run can
-    // still price the one-time builds (r13 verdict: no `_stage_*` sf10
-    // number existed because only subsets ever ran at sf10). The
-    // run_meta `mode` field records the override.
-    val timeStages = subset.isEmpty || mode == "subset+stages"
-    val stageRows: Seq[(String, Double)] =
-      if (!timeStages) Seq.empty
-      else BenchStages.rows.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        // build + TIMED sync: each row pays the writeback of its own
-        // multi-GB pin instead of leaking it into the next row's wall
-        // clock (BenchHost.syncDisks — the r16 session-3 protocol fix)
-        try {
-          fn(spark, sfDir).queryExecution.toRdd.count()
-          BenchHost.syncDisks()
-        } catch {
-          case e: Throwable => errors ::= name ->
-            Option(e.getMessage).getOrElse(e.getClass.getName)
-              .replaceAll("[\"\\\\\n\r\t]", " ").take(160)
+    val (rows, canaries) = BenchRun.bracket(spark, sfDir, (stages ++ queries).map(_._2)) {
+      // Shared materialized stages (StageCache) are timed as explicit
+      // "_stage_*" rows, once, in BenchStages order (a composed stage
+      // rides the trainings before it). Without them the min-of-retries
+      // policy below would erase the one-time build cost: the
+      // build-bearing query's retry hits the warm cache and the min wins.
+      ridden.foreach { case (n, f) => BenchRun.time(spark, sfDir, n, f) } // untimed
+      val stageRows = stages.map { case (name, fn) =>
+        val (t, e) = BenchRun.time(spark, sfDir, name, fn)
+        e.foreach(m => errors ::= name -> m)
+        name -> t
+      }
+      // Subset runs report STEADY-STATE consumer cost: prewarm the subset
+      // untimed at the measured SF so cache-backed stages build here, not
+      // in a first sample the retry-min would then silently discard.
+      if (subset.nonEmpty) BenchRun.warm(spark, sfDir, queries.map(_._2))
+      stageRows ++ queries.map { case (name, fn) =>
+        val (t1, e1) = BenchRun.time(spark, sfDir, name, fn)
+        e1.foreach(m => errors ::= name -> m)
+        // This host shows intermittent multi-second stalls (r5: one stall
+        // window hit BOTH samples of a 2.7 s plan, 19.9 s). A sample over
+        // 2 s re-measures — up to two retries, reporting the min. A retry
+        // that FAILS after a clean first run is discarded.
+        var best = t1
+        var tries = 1
+        while (e1.isEmpty && best > 2.0 && tries < 3) {
+          BenchRun.time(spark, sfDir, name, fn) match {
+            case (t2, None) => best = math.min(best, t2)
+            case _ => ()
+          }
+          tries += 1
         }
-        name -> (System.nanoTime() - t0) / 1e9
+        name -> best
       }
-    // (seconds, error): an error from any single run stays local to that
-    // run so a flaky retry can't erase a valid first measurement.
-    def timeOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Option[String]) = {
-      val t0 = System.nanoTime()
-      val err = try { consume(fn(spark, sfDir)); None } catch {
-        case e: Throwable =>
-          Some(Option(e.getMessage).getOrElse(e.getClass.getName)
-            .replaceAll("[\"\\\\\n\r\t]", " ").take(160))
-      }
-      ((System.nanoTime() - t0) / 1e9, err)
     }
-    // Subset runs are scaling studies and report STEADY-STATE cost: no
-    // _stage_ rows are emitted, so instead of letting the first timed
-    // sample pay a one-time materialized-stage build (which the
-    // retry-min would then silently discard — the same laundering the
-    // stage rows exist to prevent), prewarm the subset untimed at the
-    // measured SF; cache-backed stages build here, outside the timings.
-    if (subset.nonEmpty)
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (n, _) => subset(n) }
-        .foreach { case (_, fn) =>
-          try consume(fn(spark, sfDir)) catch { case _: Throwable => () }
-        }
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => subset.isEmpty || subset(n) }
-      .map { case (name, fn) =>
-      val (t1, e1) = timeOne(fn)
-      e1.foreach(m => errors ::= name -> m)
-      // This host shows intermittent multi-second stalls (measured 9x on
-      // identical back-to-back runs of an unchanged query; r5 recorded a
-      // stall window long enough to hit BOTH samples of one query, 19.9 s
-      // for a 2.7 s steady-state plan). A single sample over the
-      // threshold is as likely a host stall as a real cost, so slow-
-      // looking queries re-measure — up to two retries, reporting the
-      // min — to estimate steady-state execution, not scheduler luck.
-      // Bounded overhead: only queries still over threshold repeat. A
-      // retry that FAILS after a clean first run is discarded (the first
-      // timing stands and the query is not marked errored — it
-      // demonstrably ran).
-      var best = t1
-      var tries = 1
-      while (e1.isEmpty && best > 2.0 && tries < 3) {
-        timeOne(fn) match {
-          case (t2, None) => best = math.min(best, t2)
-          case _ => ()
-        }
-        tries += 1
-      }
-      name -> best
-    }
-    val canaryPost = canarySample()
-    // A failed query must not masquerade as a timing: report it in "errors"
-    // and exclude it from the per-query map and the total.
+    report(sfDir, rows, errors, canaries).foreach(println)
+    spark.stop()
+  }
+
+  /** Run identity, printed FIRST (r12 verdict ask #6): sf, git commit and
+    * the registry names in scope, so a committed jsonl is self-describing
+    * and a later subset re-run mechanically supersedes its rows. */
+  def runMeta(sfDir: String, mode: String, scope: Seq[String],
+              stamp: BenchRun.Stamp, stages: Option[Seq[String]] = None): String = {
+    def names(ns: Seq[String]) = ns.map(BenchHost.jsonString).mkString("[", ",", "]")
+    // a subset run lists the stage rows it timed; a full run times them all
+    val stagesJson = stages.fold("")(ns => s""","stages":${names(ns)}""")
+    s"""{"metric":"run_meta","sf":"$sfDir","git_sha":"${stamp.gitSha}","mode":"$mode","stage_level":"${stamp.stageLevel}","rdd_compress":"${stamp.rddCompress}","canary_proto":${stamp.canaryProto},"n_queries":${scope.size},"queries":${names(scope)}$stagesJson}"""
+  }
+
+  /** The result lines, after run_meta: `rows` are every timed row,
+    * `errors` (already sanitized) name the rows that failed. */
+  def report(sfDir: String, rows: Seq[(String, Double)],
+             errors: Seq[(String, String)], canaries: BenchRun.Canaries): Seq[String] = {
+    import BenchRun.ms
+    // A failed row must not masquerade as a timing: it is reported in
+    // "errors" and left out of the map and the total.
     val failed = errors.map(_._1).toSet
-    def ms(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val ok = (stageRows ++ results).filterNot { case (n, _) => failed(n) }
-    // Canary rows ride the per-query map (prefixed, like _stage_) so every
-    // committed jsonl self-documents its host state — but NEVER the total:
-    // the total must stay comparable to pre-canary rounds.
+    val ok = rows.filterNot { case (n, _) => failed(n) }
+    // Canary rows ride the map (prefixed, like _stage_) so every jsonl
+    // self-documents its host state — but NEVER the total, which must
+    // stay comparable to pre-canary rounds.
     val withCanary = ok ++
-      canaryPre.map("_canary_pre" -> _).toSeq ++
-      canaryPost.map("_canary_post" -> _).toSeq
-    def row(k: String, v: Double): String = BenchHost.jsonString(k) + ":" + ms(v)
-    val qs = withCanary.map { case (k, v) => row(k, v) }.mkString("{", ",", "}")
+      canaries.pre.map("_canary_pre" -> _).toSeq ++
+      canaries.post.map("_canary_post" -> _).toSeq
+    def obj(rs: Seq[(String, Double)]): String =
+      rs.map { case (k, v) => BenchHost.jsonString(k) + ":" + ms(v) }.mkString("{", ",", "}")
     val es = errors.map { case (k, v) => BenchHost.jsonString(k) + ":\"" + v + "\"" }
       .mkString("{", ",", "}")
     val totalSec = ok.map(_._2).sum
     val total = ms(totalSec)
-    // canary_mean / total_canary_norm (r12 verdict ask #7): the
-    // BASELINE.md protocol — divide a run's total by its mean canary
-    // before cross-run comparison — computed in the artifact itself, so
-    // normalized totals compare directly without hand arithmetic.
-    val canaries = (canaryPre, canaryPost) match {
+    // canary_mean / total_canary_norm (r12 verdict ask #7): the run's
+    // total over its mean canary, for cross-run comparison.
+    val canaryFields = (canaries.pre, canaries.post) match {
       case (Some(pre), Some(post)) =>
         val mean = (pre + post) / 2.0
         s""""canary_pre":${ms(pre)},"canary_post":${ms(post)},""" +
@@ -296,26 +106,26 @@ object Bench {
           s""""total_canary_norm":${ms(totalSec / mean)},"""
       case _ => "" // no canary fixture on this machine (guarded skip)
     }
-    // Compact headline FIRST and LAST: the full per-query line has outrun
+    // Compact headline FIRST and LAST: the full map line has outrun
     // capture windows in both directions (r6 lost its tail total; r11's
-    // driver artifact truncated the map head-side). Totals + canaries must
-    // survive either truncation.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${ok.size},"n_errors":${errors.size},$canaries"sf":"$sfDir"}""")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$es,"sf":"$sfDir"}""")
-    // Chunked re-emission of the SAME map (additions-only; the contract
-    // lines above and below are byte-identical to r16): the full 215-row
-    // map is one ~7 KB line, and a bounded stdout tail (the driver keeps
-    // ~2.6 KB) cuts INTO it, leaving unparseable half-JSON — two rounds
-    // of PERF `per_query` came back empty that way (r16 verdict "what's
-    // wrong" #2). Sorted ≤20-row chunks keep every line under ~700 B, so
-    // any truncation window still contains complete, parseable chunk
-    // lines (plus the final headline, printed last).
+    // artifact truncated the map head-side).
+    val headline = s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${ok.size},"n_errors":${errors.size},${canaryFields}"sf":"$sfDir"}"""
+    // The same map again in sorted ≤20-row chunks (~700 B a line), so a
+    // bounded stdout tail (~2.6 KB kept by the bench runner's caller)
+    // still holds complete, parseable lines instead of half of one ~7 KB
+    // line (r16 verdict #2).
     val chunks = withCanary.sortBy(_._1).grouped(20).toSeq
-    chunks.zipWithIndex.foreach { case (chunk, i) =>
-      val rows = chunk.map { case (k, v) => row(k, v) }.mkString("{", ",", "}")
-      println(s"""{"metric":"queries_chunk","i":$i,"n_chunks":${chunks.size},"rows":$rows}""")
+    val chunkLines = chunks.zipWithIndex.map { case (chunk, i) =>
+      s"""{"metric":"queries_chunk","i":$i,"n_chunks":${chunks.size},"rows":${obj(chunk)}}"""
     }
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${ok.size},"n_errors":${errors.size},$canaries"sf":"$sfDir"}""")
-    spark.stop()
+    // Last before the closing headline, so the tail holds it: the 25
+    // slowest rows plus every stage row not among them.
+    val slowest = ok.sortBy(-_._2).take(25)
+    val slowNames = slowest.map(_._1).toSet
+    val keep = slowest ++ ok.filter(r => BenchRun.isStage(r._1) && !slowNames(r._1))
+    Seq(headline,
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${obj(withCanary)},"errors":$es,"sf":"$sfDir"}""") ++
+      chunkLines ++
+      Seq(s"""{"metric":"queries_slowest","n":${keep.size},"rows":${obj(keep)}}""", headline)
   }
 }

@@ -29,13 +29,9 @@ object ExplainDump {
     val names = args.drop(3).toSeq
     outDir.mkdirs()
     val spark = GraftSession.local("graft-explain")
-    try SparkEntry.prepare(spark, sfDir) catch { case _: Throwable => () }
+    BenchRun.prepare(spark, sfDir)
     names.foreach { name =>
-      val fn =
-        if (name.startsWith("_stage_"))
-          BenchStages.rows.collectFirst { case (`name`, f) => f }
-        else SparkEntry.queries.get(name)
-      fn match {
+      BenchRun.lookup(name) match {
         case None =>
           // tolerated, not fatal: the same name list is replayed against
           // older shas where a row may not exist yet (its "before" is the
@@ -45,7 +41,7 @@ object ExplainDump {
           // `_stage_*` rows: show the BUILD plan, not a scan of the pin
           // the cache would otherwise eagerly materialize
           spark.conf.set(graft.engine.StageCache.PassthroughConf,
-            name.startsWith("_stage_").toString)
+            BenchRun.isStage(name).toString)
           val plan = plainText(f0(spark, sfDir).queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode))
           val f = new java.io.File(outDir, s"${name}_$suffix.txt")

@@ -100,4 +100,12 @@ object BenchStages {
     "_stage_chunk_tf" -> Set("text.chunk_tf"),
     "_stage_mysql_parsed" -> Set("logs.mysql_parsed"),
     "_stage_mongo_scan" -> Set("logs.mongo_scan"))
+
+  /** bench row → the earlier rows whose pins its cold build also makes.
+    * A subset bench that names such a row without them builds them
+    * untimed first, so the row still times only its own increment. */
+  val rides: Map[String, Seq[String]] = Map(
+    "_stage_simhash_clusters" -> Seq("_stage_simhash_pairs"),
+    "_stage_ivfpq_topk" -> Seq("_stage_kmeans", "_stage_pq"),
+    "_stage_pq_rerank_topk" -> Seq("_stage_pq")).withDefaultValue(Nil)
 }

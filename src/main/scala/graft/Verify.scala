@@ -9,13 +9,12 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional trailing query names: dump only that subset (dev loop —
     // the driver always passes exactly two args and gets the full dump)
-    val subset = args.drop(2).toSet
+    val rows =
+      if (args.length == 2) BenchRun.registry else BenchRun.resolve(args.drop(2).toSeq)
     val spark = GraftSession.local("graft-verify", logLevel = "WARN")
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    SparkEntry.queries
-      .filter { case (name, _) => subset.isEmpty || subset(name) }
-      .foreach { case (name, fn) =>
+    rows.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -72,13 +72,13 @@ object WindowAudit {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val limit = if (args.length > 1) args(1).toLong else 4096L
     val spark = GraftSession.local("graft-window-audit")
-    try SparkEntry.prepare(spark, sfDir) catch { case _: Throwable => () }
+    BenchRun.prepare(spark, sfDir)
 
     var worstQuery = ""
     var worstRows = 0L
     var failures = 0
     val results = scala.collection.mutable.LinkedHashMap.empty[String, Seq[(String, Long)]]
-    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
+    for ((name, fn) <- BenchRun.registry) {
       try {
         val detail = auditQuery(fn(spark, sfDir))
         if (detail.nonEmpty) {

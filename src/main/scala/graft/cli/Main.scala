@@ -111,15 +111,8 @@ object Main {
               // fixture files; prepare writes them exactly as Bench does
               try graft.SparkEntry.prepare(spark, args.input)
               catch { case _: Throwable => () }
-              val df = fn(spark, args.input)
-              df.write.mode("overwrite").parquet(s"${args.output}/result")
-              if (args.csv)
-                // CSV from the result just written — never re-execute
-                // the (possibly expensive) query lineage a second time
-                spark.read.parquet(s"${args.output}/result")
-                  .coalesce(1).write.mode("overwrite")
-                  .option("header", "true").csv(s"${args.output}/result_csv")
-              (true, "")
+              ReportSink.writeSheets(args.output,
+                Seq("result" -> fn(spark, args.input)), args.csv)
             } catch {
               case e: Exception => (false, s"Query failed: ${e.getMessage}")
             }

@@ -113,7 +113,7 @@ object StageCache {
     */
   val PassthroughConf = "spark.graft.stageCache.passthrough"
 
-  /** Mode-1 pin default. Measured decision (StageFootprint + BenchOne
+  /** Mode-1 pin default. Measured decision (r16 pin-level runs + BenchOne
     * A/Bs; full numbers in QUERIES.md §"Stage pin storage"): Spark's
     * localCheckpoint default pins DESERIALIZED row objects — 2,971 MB
     * of block-manager heap with all 16 stages resident at sf1 (≈30 GB

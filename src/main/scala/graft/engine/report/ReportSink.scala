@@ -21,16 +21,22 @@ object ReportSink {
   /** Write sheets under `outDir/<sheet name>/` as parquet (+ CSV with
     * header when `csv` is set — small reports only; CSV of a 100 TB result
     * is not a thing). Parquet goes first so the machine-readable artifact
-    * exists even if the CSV render of an exotic type fails.
+    * exists even if the CSV render of an exotic type fails. With `csv` the
+    * sheet is persisted for the two writes: the CSV is the same
+    * computation as the parquet, in the same part order, and the lineage
+    * runs once.
     */
   def writeSheets(outDir: String, sheets: Seq[(String, DataFrame)],
                   csv: Boolean = false): (Boolean, String) =
     try {
       sheets.foreach { case (name, df) =>
-        df.write.mode("overwrite").parquet(s"$outDir/$name")
-        if (csv)
-          df.write.mode("overwrite").option("header", "true")
-            .csv(s"$outDir/${name}_csv")
+        if (csv) df.persist()
+        try {
+          df.write.mode("overwrite").parquet(s"$outDir/$name")
+          if (csv)
+            df.write.mode("overwrite").option("header", "true")
+              .csv(s"$outDir/${name}_csv")
+        } finally if (csv) df.unpersist()
       }
       (true, "")
     } catch {

@@ -47,4 +47,21 @@ class QueryMetaSpec extends SparkTestBase {
     assert(BenchStages.rows.map(_._1).toSet === BenchStages.cacheKeys.keySet)
     StageCache.clear(spark)
   }
+
+  test("a _stage_ row's cold build makes its own pins and those of the rows it rides") {
+    val dir = "/root/testdata/sf0.001"
+    SparkEntry.prepare(spark, dir)
+    val names = BenchStages.rows.map(_._1)
+    val built = BenchStages.rows.map { case (name, fn) =>
+      StageCache.clear(spark)
+      fn(spark, dir)
+      name -> StageCache.stageNames(spark)
+    }
+    val declared = names.map(n => n ->
+      (BenchStages.rides(n) :+ n).flatMap(BenchStages.cacheKeys).toSet)
+    assert(built.filterNot(declared.contains) === Nil)
+    for (n <- names; r <- BenchStages.rides(n))
+      assert(names.indexOf(r) < names.indexOf(n), s"$n rides the later row $r")
+    StageCache.clear(spark)
+  }
 }

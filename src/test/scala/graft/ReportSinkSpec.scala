@@ -86,4 +86,34 @@ class ReportSinkSpec extends SparkTestBase {
     assert(spark.read.option("header", "true")
       .csv(s"${out.getAbsolutePath}/result_csv").count() === 2L)
   }
+
+  test("query CLI --csv keeps a multi-part sorted result in ORDER BY order") {
+    spark
+    val dir = java.nio.file.Files.createTempDirectory("cliorder").toFile
+    import spark.implicits._
+    // the last quarter of doc ids has varied texts, so its result part is
+    // the largest file — a size-ordered read-back would start there
+    (1L to 20000L).map { i =>
+      val text =
+        if (i <= 15000L) "the and that" else Seq.fill((i % 97).toInt + 1)(s"w$i").mkString(" ")
+      (i, text, "en", "web", text.length.toLong)
+    }.toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    val out = new java.io.File(dir, "res")
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(coalesce, "false") // keep the 4 sorted shuffle parts
+    try Main.main(Array("--mode", "query", "--query", "text_gopher_rules",
+      "--input", dir.getAbsolutePath, "--output", out.getAbsolutePath, "--csv"))
+    finally spark.conf.unset(coalesce)
+    assert(new java.io.File(out, "result").listFiles().count(_.getName.endsWith(".parquet")) > 1)
+    val parts = new java.io.File(out, "result_csv").listFiles()
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+    val ids = parts.toSeq.flatMap { f =>
+      val lines = java.nio.file.Files.readString(f.toPath).split("\n").toSeq
+      val col = lines.head.split(",").indexOf("doc_id")
+      lines.tail.map(_.split(",")(col).toLong)
+    }
+    assert(ids.size === 20000 && ids.indices.forall(i => ids(i) == i + 1L),
+      s"CSV starts at doc ${ids.headOption}")
+  }
 }
