@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.window.WindowExec
+
+import graft.engine.plans.PlanWalk
 
 /** Registry-wide UNPARTITIONED-WINDOW audit: executes every query and
   * measures — from the executed plan's own SQL metrics — how many rows
@@ -28,15 +28,6 @@ import org.apache.spark.sql.execution.window.WindowExec
   */
 object WindowAudit {
 
-  private def flatten(p: SparkPlan): Seq[SparkPlan] = {
-    val kids = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case s: QueryStageExec => Seq(s.plan)
-      case other => other.children
-    }
-    p +: kids.flatMap(flatten)
-  }
-
   /** Execute ONE query and measure every unpartitioned window's input
     * rows from the executed plan's own SQL metrics. Returns one
     * (orderBy columns, measured rows) per global window — empty when the
@@ -48,7 +39,7 @@ object WindowAudit {
     // execute df's OWN queryExecution: a noop-sink write (or count)
     // would plan a NEW execution and leave this plan's metrics at 0
     df.queryExecution.toRdd.foreach(_ => ())
-    val windows = flatten(df.queryExecution.executedPlan).collect {
+    val windows = PlanWalk.nodes(df.queryExecution.executedPlan).collect {
       case w: WindowExec if w.partitionSpec.isEmpty => w
     }
     windows.map { w =>
@@ -59,7 +50,7 @@ object WindowAudit {
       // task owns (else the aggregate below it, same number).
       val rowKeys = Seq("shuffleRecordsWritten", "recordsRead",
         "numOutputRows")
-      val rows = flatten(w).drop(1).iterator
+      val rows = PlanWalk.nodes(w).drop(1).iterator
         .flatMap(n => rowKeys.flatMap(n.metrics.get).headOption)
         .map(_.value).find(_ >= 0L).getOrElse(-1L)
       val order = w.orderSpec.flatMap(_.references.map(_.name)).distinct

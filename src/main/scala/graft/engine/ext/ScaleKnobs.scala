@@ -231,61 +231,6 @@ object ScaleKnobs {
   def kmeansTrainMod(n: Long, nCells: Int): Int =
     math.max(1L, n / (64L * nCells)).toInt
 
-  /** The SAME rules as in-plan Column expressions (for
-    * [[Similarity.knobReport]] and anything else that wants the derived
-    * value computed inside the query instead of on the driver):
-    * ceil(log2 n) = `length(bin(n − 1))` — the integer bit length, exact
-    * where a floating `log2` could round differently across engines.
-    * ScaleKnobsSpec sweeps these against the Scala functions so the two
-    * forms (and the DuckDB replays, via the oracle gate) cannot drift.
-    */
-  def srpBitsCol(n: String): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.expr(
-      s"""CASE WHEN $n <= 1 THEN 4L
-         |ELSE least(15L, greatest(4L, length(bin($n - 1)) - 7L)) END"""
-        .stripMargin)
-
-  def panelModCol(n: String): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.expr(s"greatest(50L, ($n + 99) div 100)")
-
-  def sigBitsCol(n: String): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.expr(
-      s"""CASE WHEN $n <= 1 THEN 15L
-         |ELSE least(30L, greatest(15L, length(bin($n - 1)) - 1L)) END"""
-        .stripMargin)
-
-  def triangleCapCol(n: String): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.expr(
-      s"""CASE WHEN $n <= 1 THEN 32L
-         |ELSE 32L * greatest(1L, length(bin($n - 1))) END""".stripMargin)
-
-  def bucketCapCol(n: String): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.expr(
-      s"""CASE WHEN $n <= 1 THEN 64L
-         |ELSE 64L * greatest(1L, length(bin($n - 1))) END""".stripMargin)
-
-  def ivfCellsCol(n: String): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.expr(
-      s"""CASE WHEN $n <= 1 THEN 16L
-         |ELSE greatest(16L, shiftleft(1L,
-         |  cast((length(bin($n - 1)) + 1) div 2 AS int))) END""".stripMargin)
-
-  def shingleDfCapCol(n: String): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.expr(
-      s"""CASE WHEN $n <= 1 THEN 8L
-         |ELSE 8L * greatest(1L, length(bin($n - 1))) END""".stripMargin)
-
-  def basketCapCol(n: String): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.expr(
-      s"""CASE WHEN $n <= 1 THEN 8L
-         |ELSE 8L * greatest(1L, length(bin($n - 1))) END""".stripMargin)
-
-  def kmeansTrainModCol(n: String): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.expr(
-      s"""greatest(1L, $n div (64L * (CASE WHEN $n <= 1 THEN 16L
-         |ELSE greatest(16L, shiftleft(1L,
-         |  cast((length(bin($n - 1)) + 1) div 2 AS int))) END)))""".stripMargin)
-
   private val counts = new ConcurrentHashMap[String, java.lang.Long]()
 
   /** Row count of `dir/table.parquet`, memoized per (path, CONTENT

@@ -19,6 +19,10 @@ import org.apache.spark.sql.functions._
   *    centroid once, probe only the best nprobe cells per query. At 100 TB
   *    the corpus side stays partitioned by cell (bucket join), and recall
   *    is tunable via nprobe.
+  *
+  * Every search composes its cell assignment, probe list, centroid
+  * recompute, query panel and per-query top-k from [[Ivf]], so each of
+  * those decisions — and its tie-break — exists once.
   */
 object Similarity {
 
@@ -26,14 +30,14 @@ object Similarity {
     *
     * INPUT CONTRACT: components in [-1, 1] (unit-normalized embeddings —
     * the testdata's shape and the overwhelmingly common one), i.e.
-    * |q_i| ≤ 1000. The packed argmin/argmax forms ([[argmaxDotCell]],
-    * kmeansLoop) rely on quantized dots staying under 2²⁸, which holds
-    * with 2 000× headroom at 64 dims under this contract; quantize does
-    * NOT clamp (a silent clamp would corrupt magnitudes invisibly).
-    * Out-of-contract magnitudes are caught, not mis-assigned: the packed
-    * assignment raises on the dot > 2²⁸ window that would otherwise
-    * yield a negative packed key (r12 ADVICE), and larger excursions
-    * overflow loudly under ANSI arithmetic.
+    * |q_i| ≤ 1000. The packed argmin of [[Ivf.nearest]] relies on
+    * quantized dots staying under 2²⁸, which holds with 2 000× headroom
+    * at 64 dims under this contract; quantize does NOT clamp (a silent
+    * clamp would corrupt magnitudes invisibly). Out-of-contract
+    * magnitudes are caught, not mis-assigned: the packed assignment
+    * raises on the dot > 2²⁸ window that would otherwise yield a
+    * negative packed key (r12 ADVICE), and larger excursions overflow
+    * loudly under ANSI arithmetic.
     */
   def quantize(v: Column): Column =
     transform(v, x => floor(x.cast("double") * 1000).cast("long"))
@@ -111,19 +115,55 @@ object Similarity {
       }
     else bruteForceTopK(vectors(spark, dir), k, resolveQm(spark, dir, queryMod))
 
-  def bruteForceTopK(vs: DataFrame, k: Int, queryMod: Int): DataFrame = {
-    val queries = vs.filter(col("vec_id") % queryMod === 0)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(desc("dot"), col("neighbor_id"))
-    vs.join(broadcast(queries), col("vec_id") =!= col("query_id"))
+  def bruteForceTopK(vs: DataFrame, k: Int, queryMod: Int): DataFrame =
+    ranked(vs.join(broadcast(Ivf.panel(vs, queryMod)), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("label"), qdot(col("qq"), col("q")).as("dot"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("dot"))
+        qdot(col("qq"), col("q")).as("dot")), k)
+
+  /** Per-query top-k by `score` ([[Ivf.topK]]) as (query_id, rank,
+    * neighbor_id, the candidates' other columns), ordered. */
+  private def ranked(candidates: DataFrame, k: Int, score: String = "dot"): DataFrame = {
+    val rest = candidates.columns.toSeq.filterNot(Set("query_id", "neighbor_id"))
+    Ivf.topK(candidates, k, score)
+      .select((Seq("query_id", "rank", "neighbor_id") ++ rest).map(col): _*)
       .orderBy(col("query_id"), col("rank"))
   }
+
+  /** Every member of a probed cell against each query probing it (the
+    * probe list is broadcast, so the corpus never shuffles for it), self
+    * excluded, scored by exact dot: (query_id, neighbor_id, cell_id, dot,
+    * keep...). `index` carries (vec_id, cell_id, q), `probes` carry
+    * (query_id, qq, cell_id). */
+  private def probed(index: DataFrame, probes: DataFrame, keep: String*): DataFrame =
+    index.join(broadcast(probes), Seq("cell_id"))
+      .filter(col("vec_id") =!= col("query_id"))
+      .select(Seq(col("query_id"), col("vec_id").as("neighbor_id"), col("cell_id"),
+        qdot(col("qq"), col("q")).as("dot")) ++ keep.map(col): _*)
+
+  /** Exact dots for a candidate list: (query_id, neighbor_id, dot, the
+    * list's other columns). Vectors re-join per candidate by neighbor id
+    * (fan-out = list size, never the corpus); the query panel is
+    * broadcast. */
+  private def rescore(cand: DataFrame, vs: DataFrame, queries: DataFrame): DataFrame = {
+    val rest = cand.columns.toSeq.filterNot(Set("query_id", "neighbor_id")).map(col)
+    cand
+      .join(vs.select(col("vec_id").as("neighbor_id"), col("q")), "neighbor_id")
+      .join(broadcast(queries), "query_id")
+      .select(Seq(col("query_id"), col("neighbor_id"),
+        qdot(col("qq"), col("q")).as("dot")) ++ rest: _*)
+  }
+
+  /** The untrained coarse centroids: the first nCells vectors (a
+    * deterministic stand-in for a k-means pass) as (cell_id, cq) — also
+    * the k-means init. */
+  private def firstCells(vs: DataFrame, nCells: Int): DataFrame =
+    vs.filter(col("vec_id") < nCells)
+      .select(col("vec_id").cast("int").as("cell_id"), col("q").as("cq"))
+
+  /** (vec_id, cell_id): every vector's best untrained cell by inner
+    * product ([[Ivf.nearest]], ties → lowest cell id). */
+  private def untrainedAssigned(vs: DataFrame, nCells: Int): DataFrame =
+    Ivf.nearest(vs, firstCells(vs, nCells), Seq("vec_id"), Ivf.Dot, nCells)
 
   /** IVF-bucketed ANN: coarse centroids are the first nCells vectors
     * (deterministic stand-in for a k-means pass, which at scale would be
@@ -134,12 +174,12 @@ object Similarity {
     */
   def ivfTopK(spark: SparkSession, dir: String, k: Int = 10,
               queryMod: Int = 0, nCells: Int = 0, nprobe: Int = 4): DataFrame =
-    if (nCells == 0)
-      ivfTopKFromAssigned(vectors(spark, dir), ivfAssignedT(spark, dir),
-        resolveCells(spark, dir, 0), k, resolveQm(spark, dir, queryMod),
-        nprobe)
-    else ivfTopK(vectors(spark, dir), k, resolveQm(spark, dir, queryMod),
-      resolveCells(spark, dir, nCells), nprobe)
+    ranked(untrainedCandidates(spark, dir, queryMod, nCells, nprobe), k)
+
+  def ivfTopK(vs: DataFrame, k: Int, queryMod: Int, nCells: Int,
+              nprobe: Int): DataFrame =
+    ranked(untrainedCandidates(vs, untrainedAssigned(vs, nCells), nCells,
+      queryMod, nprobe), k)
 
   /** Default-geometry UNTRAINED cell assignment — (vec_id, cell_id) by
     * argmax inner product against the first-nCells centroids —
@@ -149,97 +189,37 @@ object Similarity {
     * corpus_cell_quality alone paid 15.7 s / 9.3×-decade at sf10 for an
     * assignment the family already computes). In production this table
     * IS the flat IVF index: built once per corpus snapshot, served to
-    * every probe/audit. Consumers re-attach label/q per VECTOR from the
-    * vectors scan (n rows, never n × nCells).
+    * every probe/audit. Consumers re-attach q per VECTOR from the
+    * vectors scan (n rows, never n × nCells). The bench's
+    * `_stage_ivf_assigned` row times exactly this build.
     */
-  /** Public handle on the materialized untrained assignment — the bench's
-    * `_stage_ivf_assigned` row times exactly this build. */
   def ivfAssigned(spark: SparkSession, dir: String): DataFrame =
     ivfAssignedT(spark, dir)
 
   private def ivfAssignedT(spark: SparkSession, dir: String): DataFrame =
     graft.engine.StageCache.materialized(spark, dir, "ann.ivf_assigned") {
-      val nc = resolveCells(spark, dir, 0)
-      val vs = vectors(spark, dir)
-      val centroids = vs.filter(col("vec_id") < nc)
-        .select(col("vec_id").cast("int").as("cell_id"), col("q").as("cq"))
-      argmaxDotCell(vs, centroids, nc)
+      untrainedAssigned(vectors(spark, dir), resolveCells(spark, dir, 0))
     }
 
-  /** Cell assignment by argmax inner product, ties → lowest cell id, as
-    * a PACKED codegen'd aggregate: the n × nCells broadcast expansion
-    * carries (vec_id, one packed long) and min() picks the winner —
-    * pk = (2²⁸ − dot) · 2²⁰ + cell_id, exact because |dot| ≤
-    * dims · 1000² = 64e6 < 2²⁷ (a quantization bound, corpus-
-    * independent) and the √n rule keeps nCells < 2²⁰ until n = 2⁴⁰.
-    * The old max_by-over-struct form (with q riding the group key) hit
-    * BOTH non-codegen demotions at the r12 derived cell count: an array
-    * grouping key hashes 512 B per candidate row, and a struct in
-    * max_by's ordering demotes to ObjectHashAggregate — measured 19 s
-    * vs 1.5 s at sf1 when 16 cells became 256. Returns (vec_id,
-    * cell_id); callers re-attach label/q per VECTOR (n rows, not
-    * n × nCells) — deterministic, vec_id is unique.
-    */
-  private def argmaxDotCell(vs: DataFrame, centroids: DataFrame,
-                            nCells: Int): DataFrame = {
-    require(nCells < (1 << 20),
-      s"packed cell assignment supports < 2^20 cells, got $nCells")
-    val pk = (lit(1L << 28) - qdot(col("q"), col("cq"))) * lit(1L << 20) +
-      col("cell_id")
-    vs.join(broadcast(centroids))
-      // pk < 0 ⟺ dot > 2²⁸, the one window where an out-of-contract
-      // magnitude (see [[quantize]]: inputs in [-1, 1]) would silently
-      // mis-assign via a NEGATIVE pk % 2^20; raise instead — one branch
-      // per candidate row next to a 64-multiply dot, and still
-      // whole-stage-codegen'd. Larger excursions overflow loudly (ANSI).
-      .select(col("vec_id"),
-        when(pk >= 0, pk).otherwise(raise_error(concat(
-          lit("quantized dot exceeds 2^28 for vec_id="), col("vec_id"),
-          lit(" — embeddings must be unit-normalized (components in" +
-            " [-1, 1]); see Similarity.quantize")))).as("pk"))
-      .groupBy(col("vec_id"))
-      .agg(min(col("pk")).as("pk"))
-      .select(col("vec_id"), (col("pk") % lit(1L << 20)).cast("int").as("cell_id"))
+  /** The registry form's candidates: the default geometry rides the
+    * materialized assignment, a pinned cell count re-derives it. */
+  private def untrainedCandidates(spark: SparkSession, dir: String, queryMod: Int,
+                                  nCells: Int, nprobe: Int): DataFrame = {
+    val vs = vectors(spark, dir)
+    val nc = resolveCells(spark, dir, nCells)
+    untrainedCandidates(vs,
+      if (nCells == 0) ivfAssignedT(spark, dir) else untrainedAssigned(vs, nc),
+      nc, resolveQm(spark, dir, queryMod), nprobe)
   }
 
-  def ivfTopK(vs: DataFrame, k: Int, queryMod: Int, nCells: Int,
-              nprobe: Int): DataFrame = {
-    val centroids = vs.filter(col("vec_id") < nCells)
-      .select(col("vec_id").cast("int").as("cell_id"), col("q").as("cq"))
-    ivfTopKFromAssigned(vs, argmaxDotCell(vs, centroids, nCells), nCells,
-      k, queryMod, nprobe)
-  }
-
-  private def ivfTopKFromAssigned(vs: DataFrame, assignedIds: DataFrame,
-                                  nCells: Int, k: Int, queryMod: Int,
+  /** (query_id, neighbor_id, cell_id, dot) for every candidate in the
+    * nprobe best untrained cells of each panel query, by inner product. */
+  private def untrainedCandidates(vs: DataFrame, assignedIds: DataFrame,
+                                  nCells: Int, queryMod: Int,
                                   nprobe: Int): DataFrame = {
-    val centroids = vs.filter(col("vec_id") < nCells)
-      .select(col("vec_id").cast("int").as("cell_id"), col("q").as("cq"))
-    val assigned = assignedIds
-      .join(vs.select(col("vec_id"), col("label"), col("q")), "vec_id")
-    val queries = assigned.filter(col("vec_id") % queryMod === 0)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"))
-
-    // probe list: nprobe best cells per query
-    val probes = queries.join(broadcast(centroids))
-      .select(col("query_id"), col("qq"), col("cell_id"),
-        qdot(col("qq"), col("cq")).as("cdot"))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(desc("cdot"), col("cell_id"))))
-      .filter(col("crank") <= nprobe)
-      .select(col("query_id"), col("qq"), col("cell_id"))
-
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(desc("dot"), col("neighbor_id"))
-    assigned.join(broadcast(probes), Seq("cell_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cell_id"),
-        qdot(col("qq"), col("q")).as("dot"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("cell_id"), col("dot"))
-      .orderBy(col("query_id"), col("rank"))
+    val assigned = assignedIds.join(vs.select(col("vec_id"), col("q")), "vec_id")
+    probed(assigned, Ivf.probes(Ivf.panel(assigned, queryMod),
+      firstCells(vs, nCells), nprobe, Ivf.Dot, "qq"))
   }
 
   /** RANGE search on the IVF index: every candidate within the probed
@@ -258,44 +238,16 @@ object Similarity {
   def ivfRangeSearch(spark: SparkSession, dir: String, minDot: Long = 250000L,
                      queryMod: Int = 0, nCells: Int = 0,
                      nprobe: Int = 4): DataFrame =
-    if (nCells == 0)
-      ivfRangeFromAssigned(vectors(spark, dir), ivfAssignedT(spark, dir),
-        resolveCells(spark, dir, 0), minDot,
-        resolveQm(spark, dir, queryMod), nprobe)
-    else ivfRangeSearch(vectors(spark, dir), minDot,
-      resolveQm(spark, dir, queryMod), resolveCells(spark, dir, nCells), nprobe)
+    inRange(untrainedCandidates(spark, dir, queryMod, nCells, nprobe), minDot)
 
   def ivfRangeSearch(vs: DataFrame, minDot: Long, queryMod: Int, nCells: Int,
-                     nprobe: Int): DataFrame = {
-    val centroids = vs.filter(col("vec_id") < nCells)
-      .select(col("vec_id").cast("int").as("cell_id"), col("q").as("cq"))
-    ivfRangeFromAssigned(vs, argmaxDotCell(vs, centroids, nCells), nCells,
-      minDot, queryMod, nprobe)
-  }
+                     nprobe: Int): DataFrame =
+    inRange(untrainedCandidates(vs, untrainedAssigned(vs, nCells), nCells,
+      queryMod, nprobe), minDot)
 
-  private def ivfRangeFromAssigned(vs: DataFrame, assignedIds: DataFrame,
-                                   nCells: Int, minDot: Long, queryMod: Int,
-                                   nprobe: Int): DataFrame = {
-    val centroids = vs.filter(col("vec_id") < nCells)
-      .select(col("vec_id").cast("int").as("cell_id"), col("q").as("cq"))
-    val assigned = assignedIds
-      .join(vs.select(col("vec_id"), col("label"), col("q")), "vec_id")
-    val queries = assigned.filter(col("vec_id") % queryMod === 0)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"))
-    val probes = queries.join(broadcast(centroids))
-      .select(col("query_id"), col("qq"), col("cell_id"),
-        qdot(col("qq"), col("cq")).as("cdot"))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(desc("cdot"), col("cell_id"))))
-      .filter(col("crank") <= nprobe)
-      .select(col("query_id"), col("qq"), col("cell_id"))
-    assigned.join(broadcast(probes), Seq("cell_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cell_id"),
-        qdot(col("qq"), col("q")).as("dot"))
-      .filter(col("dot") >= minDot)
+  private def inRange(candidates: DataFrame, minDot: Long): DataFrame =
+    candidates.filter(col("dot") >= minDot)
       .orderBy(col("query_id"), col("neighbor_id"))
-  }
 
   /** FILTERED vector search: label-constrained top-k on the trained IVF
     * index — the "metadata filter" axis every production vector store
@@ -311,65 +263,43 @@ object Similarity {
     * on vec_id, co-partitionable with the index at scale), so the label
     * constraint applies as a cheap predicate DURING the probe join —
     * candidate rows of the wrong label never materialize, and no
-    * candidate-grain (query × neighbor) join ever runs. Same probe/rank
-    * shape — and the same exact integer arithmetic — as
-    * [[ivfTrainedTopK]], so the oracle replays training, probing,
-    * filtering and ranking end to end.
+    * candidate-grain (query × neighbor) join ever runs. Probing and
+    * ranking are [[Ivf.probes]] and [[Ivf.topK]], the same exact integer
+    * arithmetic as [[ivfTrainedTopK]], so the oracle replays training,
+    * probing, filtering and ranking end to end.
     */
   def filteredTopK(spark: SparkSession, dir: String, k: Int = 10,
                    queryMod: Int = 0, nprobe: Int = 4): DataFrame = {
     val qm = resolveQm(spark, dir, queryMod)
     val (assigned, centroids) = kmeansT(spark, dir)
     val labels = vectors(spark, dir).select(col("vec_id"), col("label"))
-    val queries = assigned.filter(col("vec_id") % qm === 0)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"))
+    val queries = Ivf.panel(assigned, qm)
       .join(broadcast(labels.select(col("vec_id").as("query_id"),
         col("label").as("qlabel"))), "query_id")
-    val cdist = qdot(col("qq"), col("qq")) -
-      lit(2L) * qdot(col("qq"), col("cq")) + qdot(col("cq"), col("cq"))
-    val probes = queries.join(broadcast(centroids))
-      .select(col("query_id"), col("qq"), col("qlabel"), col("cell_id"),
-        cdist.as("cdist"))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cdist"), col("cell_id"))))
-      .filter(col("crank") <= nprobe)
-      .select(col("query_id"), col("qq"), col("qlabel"), col("cell_id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(desc("dot"), col("neighbor_id"))
-    assigned.join(labels, Seq("vec_id"))
-      .join(broadcast(probes), Seq("cell_id"))
-      .filter(col("vec_id") =!= col("query_id") &&
-        col("label") === col("qlabel"))
-      .select(col("query_id"), col("label"),
-        col("vec_id").as("neighbor_id"), qdot(col("qq"), col("q")).as("dot"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val probes = Ivf.probes(queries, centroids, nprobe, Ivf.L2, "qq", "qlabel")
+    Ivf.topK(probed(assigned.join(labels, Seq("vec_id")), probes, "label", "qlabel")
+        .filter(col("label") === col("qlabel")), k, "dot")
       .select(col("query_id"), col("label"), col("rank"),
         col("neighbor_id"), col("dot"))
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** Label-centroid similarity: mean quantized vector per label (integer
-    * sums + count, exact), then pairwise centroid inner products — the
-    * "are these classes separable" diagnostic.
-    */
   /** Deterministic k-means (Lloyd) cell training over the quantized
-    * vectors: `iters` rounds of assign-to-nearest (exact squared-L2 via
-    * three codegen'd dots, ties → lowest cell) then floor-mean centroid
-    * recompute. Returns the final assignment (vec_id, cell_id, dist) —
-    * the trained upgrade of [[ivfTopK]]'s pick-first-N init, and the
-    * piece of an IVF build that actually needs a cluster: everything
-    * else is a broadcast.
+    * vectors: `iters` rounds of assign-to-nearest (exact squared-L2,
+    * ties → lowest cell — [[Ivf.nearest]]) then floor-mean centroid
+    * recompute ([[Ivf.recenter]]). Returns the final assignment
+    * (vec_id, cell_id, dist) — the trained upgrade of [[ivfTopK]]'s
+    * pick-first-N init, and the piece of an IVF build that actually
+    * needs a cluster: everything else is a broadcast.
     *
     * Scale shape per iteration: one broadcast join against ≤nCells
-    * centroids with map-side min_by partial aggregation (the 16×
-    * candidate expansion collapses to one row per vector before the
-    * exchange), plus a posexplode re-aggregation whose groupBy key
-    * space is nCells × dim — constant-size shuffles after partial agg.
-    * Empty cells drop out (deterministically) exactly as in the oracle.
-    * All arithmetic is exact BIGINT / exact-in-double floor-means, so
-    * DuckDB replays the whole training bit-for-bit.
+    * centroids with a map-side partial argmin (the nCells× candidate
+    * expansion collapses to one row per vector before the exchange),
+    * plus a posexplode re-aggregation whose groupBy key space is
+    * nCells × dim — constant-size shuffles after partial agg. Empty
+    * cells drop out (deterministically) exactly as in the oracle. All
+    * arithmetic is exact BIGINT / exact-in-double floor-means, so DuckDB
+    * replays the whole training bit-for-bit.
     */
   def kmeansCells(spark: SparkSession, dir: String, nCells: Int = 0,
                   iters: Int = 2): DataFrame =
@@ -482,73 +412,23 @@ object Similarity {
     */
   private def kmeansLoop(vs: DataFrame, nCells: Int,
                          iters: Int, trainMod: Int = 1): (DataFrame, DataFrame) = {
-    // Precompute each side's self-dot ONCE: dist(v,c) = v·v − 2·v·c + c·c,
-    // so the n × nCells candidate expansion pays one qdot per pair, not
-    // three (v·v was recomputed nCells times per vector — a 3× multiply
-    // tax the r12 derived cell count made visible at 16 → 256 cells).
-    val vss = vs.select(col("vec_id"), col("q"),
-      qdot(col("q"), col("q")).as("qq"))
-    // training slice: only the recompute iterations read it; the final
-    // assignment always scans the full vss
-    val vssTrain =
-      if (trainMod > 1) vss.filter(col("vec_id") % trainMod === 0) else vss
-    var centroids = vs.filter(col("vec_id") < nCells)
-      .select(col("vec_id").cast("int").as("cell_id"), col("q").as("cq"))
+    val train = if (trainMod > 1) vs.filter(col("vec_id") % trainMod === 0) else vs
+    var centroids = firstCells(vs, nCells)
     var assigned: DataFrame = null
     for (it <- 1 to iters) {
-      val cents = centroids.select(col("cell_id"), col("cq"),
-        qdot(col("cq"), col("cq")).as("cc"))
-      val dist = col("qq") - lit(2L) * qdot(col("q"), col("cq")) +
-        col("cc") // == Σ(q−c)², exact in BIGINT
-      // The argmin aggregate must stay PRIMITIVE on key and buffer: an
-      // array in the grouping key hashes 512 bytes per candidate row, and
-      // a struct anywhere in min_by (payload OR buffer) demotes the whole
-      // aggregate to non-codegen ObjectHashAggregate — either way the
-      // n × nCells expansion pays interpreted/array work per pair
-      // (measured 15 s and 10 s vs 2.8 s at sf1 when the derived count
-      // hit 256 cells). So (dist, cell_id) packs into ONE long —
-      // dist · 2²⁰ + cell_id, exact because dist ≤ dims · (2 · 1000)² <
-      // 2²⁸ (a quantization bound, corpus-independent) and the √n rule
-      // keeps nCells < 2²⁰ until n = 2⁴⁰ vectors — min() of it is the
-      // same (dist, then cell_id) tie-break as the min_by struct, and
-      // the whole argmin stays inside whole-stage codegen. q is joined
-      // back per VECTOR (n rows, not n × nCells) — deterministic, vec_id
-      // is unique in vss.
-      require(nCells < (1 << 20), s"packed argmin supports < 2^20 cells, got $nCells")
-      val vssIt = if (it < iters) vssTrain else vss
-      val argmin = vssIt.join(broadcast(cents))
-        .select(col("vec_id"),
-          (dist * lit(1L << 20) + col("cell_id")).as("pk"))
-        .groupBy(col("vec_id"))
-        .agg(min(col("pk")).as("pk"))
-        .select(col("vec_id"),
-          (col("pk") % lit(1L << 20)).cast("int").as("cell_id"),
-          expr(s"pk div ${1L << 20}").as("dist"))
-      assigned = argmin.join(vss.select(col("vec_id"), col("q")), "vec_id")
+      assigned = Ivf.nearest(if (it < iters) train else vs, centroids,
+          Seq("vec_id"), Ivf.L2, nCells)
+        .join(vs.select(col("vec_id"), col("q")), "vec_id")
         .select(col("vec_id"), col("q"), col("cell_id"), col("dist"))
-      if (it < iters) {
-        centroids = assigned
-          .select(col("cell_id"), posexplode(col("q")).as(Seq("pos", "v")))
-          .groupBy(col("cell_id"), col("pos"))
-          .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
-          // floor-mean, exact: |s| ≤ 64·2000·N and s/n magnitudes stay
-          // far inside double's 2^53 integer range
-          .withColumn("m", floor(col("s").cast("double") / col("n")).cast("long"))
-          .groupBy(col("cell_id"))
-          .agg(transform(
-            array_sort(collect_list(struct(col("pos"), col("m")))),
-            x => x.getField("m")).as("cq"))
-          // cut the loop-carried lineage (nCells rows) — see pqLoop.
-          .localCheckpoint(true)
-      }
+      if (it < iters) centroids = Ivf.recenter(assigned, Seq("cell_id"), "q")
     }
     (assigned.localCheckpoint(true), centroids)
   }
 
   /** IVF search over TRAINED cells: [[kmeansCells]]' final assignment is
-    * the index, queries probe their nprobe nearest centroids (same exact
-    * squared-L2 + tie-break as training), and candidates rank by inner
-    * product like every other ANN query here. Composes the two proven
+    * the index, queries probe their nprobe nearest centroids (the same
+    * exact squared-L2 + tie-break as training), and candidates rank by
+    * inner product like every other ANN query here. Composes the two proven
     * pieces — trained cells upgrade recall over [[ivfTopK]]'s
     * pick-first-N init at identical probe cost, and the whole pipeline
     * stays deterministic integer math, so the oracle replays training,
@@ -580,40 +460,17 @@ object Similarity {
 
   private def ivfTrainedFromIndex(assigned: DataFrame, centroids: DataFrame,
                                   k: Int, queryMod: Int,
-                                  nprobe: Int): DataFrame = {
-    val queries = assigned.filter(col("vec_id") % queryMod === 0)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"))
-
-    val cdist = qdot(col("qq"), col("qq")) -
-      lit(2L) * qdot(col("qq"), col("cq")) + qdot(col("cq"), col("cq"))
-    val probes = queries.join(broadcast(centroids))
-      .select(col("query_id"), col("qq"), col("cell_id"), cdist.as("cdist"))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cdist"), col("cell_id"))))
-      .filter(col("crank") <= nprobe)
-      .select(col("query_id"), col("qq"), col("cell_id"))
-
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(desc("dot"), col("neighbor_id"))
-    assigned.join(broadcast(probes), Seq("cell_id"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("cell_id"),
-        qdot(col("qq"), col("q")).as("dot"))
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("cell_id"), col("dot"))
-      .orderBy(col("query_id"), col("rank"))
-  }
+                                  nprobe: Int): DataFrame =
+    ranked(probed(assigned, Ivf.probes(Ivf.panel(assigned, queryMod),
+      centroids, nprobe, Ivf.L2, "qq")), k)
 
   /** nprobe TUNING CURVE — recall@k of the trained IVF index at several
     * probe widths in one pass: the table an index operator reads to set
     * nprobe (the recall/latency knob). Training runs ONCE
     * ([[kmeansLoop]] checkpoints), the exact baseline runs once
     * (checkpointed), and each sweep point reuses the widest probe
-    * ranking filtered down — so the sweep costs little more than the
-    * single widest search, not |probes| retrainings.
+    * list filtered down by its `probe` rank — so the sweep costs little
+    * more than the single widest search, not |probes| retrainings.
     */
   def nprobeSweep(spark: SparkSession, dir: String, k: Int = 10,
                   queryMod: Int = 0, nCells: Int = 0, iters: Int = 2,
@@ -633,29 +490,11 @@ object Similarity {
     val totals = exact.agg(
       countDistinct(col("query_id")).as("n_queries"),
       count(lit(1)).as("n_true"))
-    val queries = assigned.filter(col("vec_id") % qm === 0)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"))
-    val cdist = qdot(col("qq"), col("qq")) -
-      lit(2L) * qdot(col("qq"), col("cq")) + qdot(col("cq"), col("cq"))
-    val probesAll = queries.join(broadcast(centroids))
-      .select(col("query_id"), col("qq"), col("cell_id"), cdist.as("cdist"))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cdist"), col("cell_id"))))
-      .filter(col("crank") <= probesList.max)
-      .localCheckpoint(true)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(desc("dot"), col("neighbor_id"))
+    val probesAll = Ivf.probes(Ivf.panel(assigned, qm), centroids,
+      probesList.max, Ivf.L2, "qq", "probe").localCheckpoint(true)
     probesList.sorted.map { p =>
-      val approx = assigned.join(
-          broadcast(probesAll.filter(col("crank") <= p)
-            .select(col("query_id"), col("qq"), col("cell_id"))),
-          Seq("cell_id"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          qdot(col("qq"), col("q")).as("dot"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
+      val approx = Ivf.topK(
+          probed(assigned, probesAll.filter(col("probe") <= p)), k, "dot")
         .select(col("query_id"), col("neighbor_id"))
       exact.join(approx, Seq("query_id", "neighbor_id"))
         .agg(count(lit(1)).as("n_overlap"))
@@ -679,9 +518,9 @@ object Similarity {
     * in the base: vec_id < nCells, plus 4 of every 5 remaining ids).
     *
     * Scale shape: training touches only the base (same checkpointed
-    * [[kmeansLoop]]); the batch assignment is one broadcast join against
-    * nCells centroid rows — the batch never shuffles; both censuses are
-    * map-side-combined counts at cell grain (nCells rows).
+    * [[kmeansLoop]]); the batch assignment is the same [[Ivf.nearest]]
+    * against nCells centroid rows — the batch never shuffles; both
+    * censuses are map-side-combined counts at cell grain (nCells rows).
     */
   def ivfIndexUpdate(spark: SparkSession, dir: String, nCells: Int = 0,
                      iters: Int = 2): DataFrame = {
@@ -694,21 +533,8 @@ object Similarity {
     // band); the oracle replays the same full-count rule
     val (assignedBase, centroids) = kmeansLoop(vs.filter(isBase), nc, iters,
       resolveTrainMod(spark, dir, nc))
-    // same packed codegen'd argmin as kmeansLoop (dist ≥ 0, < 2²⁸ by the
-    // quantization bound; cell_id < 2²⁰ by the require in kmeansLoop)
-    val cents = centroids.select(col("cell_id"), col("cq"),
-      qdot(col("cq"), col("cq")).as("cc"))
-    val batch = vs.filter(!isBase)
-      .select(col("vec_id"), col("q"), qdot(col("q"), col("q")).as("qq"))
-    val dist = col("qq") - lit(2L) * qdot(col("q"), col("cq")) + col("cc")
-    val assignedNew = batch.join(broadcast(cents))
-      .select(col("vec_id"),
-        (dist * lit(1L << 20) + col("cell_id")).as("pk"))
-      .groupBy(col("vec_id"))
-      .agg(min(col("pk")).as("pk"))
-      .select(col("vec_id"),
-        (col("pk") % lit(1L << 20)).cast("int").as("cell_id"),
-        expr(s"pk div ${1L << 20}").as("dist"))
+    val assignedNew = Ivf.nearest(vs.filter(!isBase), centroids, Seq("vec_id"),
+      Ivf.L2, nc)
     val baseC = assignedBase.groupBy(col("cell_id"))
       .agg(count(lit(1)).as("n_base"), max(col("dist")).as("max_base_dist"))
     val newC = assignedNew.groupBy(col("cell_id"))
@@ -740,8 +566,8 @@ object Similarity {
     * corpus partition lives — each pair's ADC score is M lookups into
     * the query's broadcast M·K LUT map, no per-code row explosion and no
     * (query, neighbor) aggregation exchange. The only post-index shuffle
-    * is the shortlist top-k, and that window is WindowGroupLimit-eligible
-    * (each map task ships at most `shortlist` rows per query). vs the
+    * is the shortlist top-k ([[Ivf.topK]], map-side pre-pruned to
+    * `shortlist` rows per query). vs the
     * flat [[pqSearchTopK]], the ADC touches nprobe/nCells of the corpus;
     * vs [[ivfTrainedTopK]], scoring reads M-byte codes, not 64-dim
     * vectors. The ADC sum is wrapped in the opaque barrier so the
@@ -778,19 +604,9 @@ object Similarity {
       if (M == 8 && subDim == 8 && pqK == 16 && pqIters == 2) pqT(spark, dir)
       else pqLoop(vs, M, subDim, pqK, pqIters)
 
-    // probe list: nprobe nearest TRAINED centroids per query (identical
-    // distance + tie-break to ivfTrainedTopK)
-    val queries = cellAssigned.filter(col("vec_id") % qm === 0)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"))
-    val cdist = qdot(col("qq"), col("qq")) -
-      lit(2L) * qdot(col("qq"), col("cq")) + qdot(col("cq"), col("cq"))
-    val probes = queries.join(broadcast(centroids))
-      .select(col("query_id"), col("cell_id"), cdist.as("cdist"))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cdist"), col("cell_id"))))
-      .filter(col("crank") <= nprobe)
-      .select(col("query_id"), col("cell_id"))
+    // probe list: nprobe nearest TRAINED centroids per query
+    val queries = Ivf.panel(cellAssigned, qm)
+    val probes = Ivf.probes(queries, centroids, nprobe, Ivf.L2)
 
     // index build: ONE corpus-keyed shuffle co-locates each vector's
     // cell with its M codes packed into a single array row — at 100 TB
@@ -805,12 +621,11 @@ object Similarity {
 
     // per-query ADC lookup table (exact query subvectors × trained
     // codebook), flattened to a broadcastable m·K→dot map per query
-    val qsubs = pqAssigned.filter(col("vec_id") % qm === 0)
-      .select(col("vec_id").as("query_id"), col("m"), col("sq"))
+    val qsubs = Ivf.panel(pqAssigned.withColumnRenamed("sq", "q"), qm, col("m"))
     val lut = qsubs.join(cb, Seq("m"))
       .select(col("query_id"),
         (col("m") * pqK + col("code")).cast("int").as("slot"),
-        qdot(col("sq"), col("cq")).as("d"))
+        qdot(col("qq"), col("cq")).as("d"))
     val lutMap = lut.groupBy(col("query_id"))
       .agg(map_from_entries(collect_list(struct(col("slot"), col("d"))))
         .as("lutmap"))
@@ -829,27 +644,10 @@ object Similarity {
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         graft.engine.expr.NativeFunctions.opaque(adcSum).as("adc_dot"))
 
-    // shortlist: the one post-index exchange; rank<=N over row_number
-    // plans a WindowGroupLimit, so map tasks pre-prune to `shortlist`
-    // rows per query before the shuffle
-    val ws = Window.partitionBy(col("query_id"))
-      .orderBy(desc("adc_dot"), col("neighbor_id"))
-    val short = adc.withColumn("srank", row_number().over(ws))
-      .filter(col("srank") <= shortlist)
+    // shortlist: the one post-index exchange, then the exact re-rank
+    val short = Ivf.topK(adc, shortlist, "adc_dot")
       .select(col("query_id"), col("neighbor_id"), col("adc_dot"))
-
-    val wr = Window.partitionBy(col("query_id"))
-      .orderBy(desc("dot"), col("neighbor_id"))
-    short
-      .join(vs.select(col("vec_id").as("neighbor_id"), col("q")), "neighbor_id")
-      .join(broadcast(queries), "query_id")
-      .select(col("query_id"), col("neighbor_id"), col("adc_dot"),
-        qdot(col("qq"), col("q")).as("dot"))
-      .withColumn("rank", row_number().over(wr).cast("int"))
-      .filter(col("rank") <= topK)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("dot"), col("adc_dot"))
-      .orderBy(col("query_id"), col("rank"))
+    ranked(rescore(short, vs, queries), topK)
   }
 
   /** Hybrid retrieval: reciprocal-rank fusion (RRF) of the dense
@@ -890,18 +688,15 @@ object Similarity {
         TextAnalysis.docTermTf(spark, dir), queryMod = qm)
       .select(col("query_id"), col("neighbor_id"),
         col("rank").as("lex_rank"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(desc("rrf_score"), col("neighbor_id"))
-    dense.join(lex, Seq("query_id", "neighbor_id"), "full_outer")
+    val fused = dense.join(lex, Seq("query_id", "neighbor_id"), "full_outer")
       .select(col("query_id"), col("neighbor_id"),
         col("dense_rank"), col("lex_rank"),
         (coalesce(expr(s"1000000 div ($rrfK + dense_rank)"), lit(0L)) +
           coalesce(expr(s"1000000 div ($rrfK + lex_rank)"), lit(0L)))
           .as("rrf_score"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("rrf_score"), col("dense_rank"), col("lex_rank"))
+    Ivf.topK(fused, k, "rrf_score")
+      .select(col("query_id"), col("rank").cast("long").as("rank"),
+        col("neighbor_id"), col("rrf_score"), col("dense_rank"), col("lex_rank"))
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -914,7 +709,7 @@ object Similarity {
     * representation that lets a 100 TB ANN index live in RAM.
     *
     * Scale shape: every iteration is one broadcast join against the
-    * M·K-row codebook with map-side min_by partial agg, then a
+    * M·K-row codebook with a map-side partial argmin, then a
     * constant-size (M·K·subDim keys) re-aggregation — identical budget
     * to [[kmeansCells]], M times over, with no extra corpus shuffles.
     */
@@ -949,6 +744,22 @@ object Similarity {
       (assigned, cb)
     }
 
+  /** Each vector as M contiguous subDim-dim subvectors: (vec_id, m, sq). */
+  private def subvectors(vs: DataFrame, M: Int, subDim: Int): DataFrame =
+    vs
+      .select(col("vec_id"),
+        explode(sequence(lit(0), lit(M - 1))).as("m"), col("q"))
+      .select(col("vec_id"), col("m"),
+        slice(col("q"), (col("m") * subDim + 1).cast("int"), lit(subDim))
+          .as("sq"))
+
+  /** The nearest codebook entry of each subvector in its own subspace
+    * ([[Ivf.nearest]] joined on `m`): keys + code + dist. Code ids lie
+    * in [0, nCodes). */
+  private def nearestCode(subs: DataFrame, cb: DataFrame, nCodes: Int,
+                          keys: String*): DataFrame =
+    Ivf.nearest(subs, cb, keys, Ivf.L2, nCodes, vec = "sq", id = "code")
+
   /** PQ codebook STALENESS audit — the index-maintenance question "has
     * the corpus drifted past the codebook?". Train the product-quantizer
     * codebook on the EVEN-id half only (same per-subspace k-means as
@@ -970,38 +781,16 @@ object Similarity {
 
   def pqDriftAudit(vs: DataFrame, M: Int, subDim: Int, k: Int,
                    iters: Int): DataFrame = {
-    val subs = vs
-      .select(col("vec_id"),
-        explode(sequence(lit(0), lit(M - 1))).as("m"), col("q"))
-      .select(col("vec_id"), col("m"),
-        slice(col("q"), (col("m") * subDim + 1).cast("int"), lit(subDim))
-          .as("sq"))
+    val subs = subvectors(vs, M, subDim)
     val train = subs.filter(col("vec_id") % 2 === 0)
+    // codes are the even ids below 2k
     var cb = train.filter(col("vec_id") < 2L * k)
       .select(col("m"), col("vec_id").cast("int").as("code"),
         col("sq").as("cq"))
-    val dist = qdot(col("sq"), col("sq")) -
-      lit(2L) * qdot(col("sq"), col("cq")) + qdot(col("cq"), col("cq"))
-    for (_ <- 1 until iters) {
-      val assignedT = train.join(broadcast(cb), Seq("m"))
-        .select(col("vec_id"), col("m"), col("sq"), col("code"),
-          dist.as("dist"))
-        .groupBy(col("vec_id"), col("m"), col("sq"))
-        .agg(min_by(col("code"), struct(col("dist"), col("code"))).as("code"))
-      cb = assignedT
-        .select(col("m"), col("code"), posexplode(col("sq")).as(Seq("j", "v")))
-        .groupBy(col("m"), col("code"), col("j"))
-        .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
-        .withColumn("c", floor(col("s").cast("double") / col("n")).cast("long"))
-        .groupBy(col("m"), col("code"))
-        .agg(transform(array_sort(collect_list(struct(col("j"), col("c")))),
-          x => x.getField("c")).as("cq"))
-        .localCheckpoint(true)
-    }
-    subs.join(broadcast(cb), Seq("m"))
-      .select(col("vec_id"), col("m"), dist.as("dist"))
-      .groupBy(col("vec_id"), col("m"))
-      .agg(min(col("dist")).as("dist"))
+    for (_ <- 1 until iters)
+      cb = Ivf.recenter(nearestCode(train, cb, 2 * k, "vec_id", "m", "sq"),
+        Seq("m", "code"), "sq")
+    nearestCode(subs, cb, 2 * k, "vec_id", "m")
       .select((col("vec_id") % 2).as("half"), col("m").cast("long").as("m"),
         col("dist"))
       .groupBy(col("half"), col("m"))
@@ -1011,50 +800,22 @@ object Similarity {
       .orderBy(col("half"), col("m"))
   }
 
-  /** The per-subspace training loop: (final (vec_id, m, code, sq),
-    * codebook (m, code, cq)).
+  /** The per-subspace training loop: (final (vec_id, m, sq, code),
+    * codebook (m, code, cq)). sq rides the argmin's grouping key
+    * (functionally dependent on (vec_id, m)) — deterministic where
+    * first(sq) is plan-order-dependent.
     */
   private def pqLoop(vs: DataFrame, M: Int, subDim: Int, k: Int,
                      iters: Int): (DataFrame, DataFrame) = {
-    val subs = vs
-      .select(col("vec_id"),
-        explode(sequence(lit(0), lit(M - 1))).as("m"), col("q"))
-      .select(col("vec_id"), col("m"),
-        slice(col("q"), (col("m") * subDim + 1).cast("int"), lit(subDim))
-          .as("sq"))
+    val subs = subvectors(vs, M, subDim)
     var cb = subs.filter(col("vec_id") < k)
       .select(col("m"), col("vec_id").cast("int").as("code"),
         col("sq").as("cq"))
     var assigned: DataFrame = null
     for (it <- 1 to iters) {
-      val dist = qdot(col("sq"), col("sq")) -
-        lit(2L) * qdot(col("sq"), col("cq")) + qdot(col("cq"), col("cq"))
-      // sq rides in the group key (functionally dependent on (vec_id, m))
-      // — deterministic where first(sq) is plan-order-dependent.
-      assigned = subs.join(broadcast(cb), Seq("m"))
-        .select(col("vec_id"), col("m"), col("sq"), col("code"),
-          dist.as("dist"))
-        .groupBy(col("vec_id"), col("m"), col("sq"))
-        .agg(
-          min_by(col("code"), struct(col("dist"), col("code"))).as("code"))
-      if (it < iters) {
-        cb = assigned
-          .select(col("m"), col("code"),
-            posexplode(col("sq")).as(Seq("j", "v")))
-          .groupBy(col("m"), col("code"), col("j"))
-          .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
-          .withColumn("c",
-            floor(col("s").cast("double") / col("n")).cast("long"))
-          .groupBy(col("m"), col("code"))
-          .agg(transform(
-            array_sort(collect_list(struct(col("j"), col("c")))),
-            x => x.getField("c")).as("cq"))
-          // cut the loop-carried lineage (tiny M·K-row table): without
-          // this, every downstream reference to the final assignment
-          // replays all earlier training rounds — the pagerank lesson
-          // (README "Checkpointed iteration").
-          .localCheckpoint(true)
-      }
+      assigned = nearestCode(subs, cb, k, "vec_id", "m", "sq")
+        .select(col("vec_id"), col("m"), col("sq"), col("code"))
+      if (it < iters) cb = Ivf.recenter(assigned, Seq("m", "code"), "sq")
     }
     // consumers (codes dump, LUT build, ADC join) reference the encoded
     // corpus several times in one plan: materialize it once.
@@ -1083,23 +844,16 @@ object Similarity {
     val (assigned, cb) =
       if (M == 8 && subDim == 8 && k == 16 && iters == 2) pqT(spark, dir)
       else pqLoop(vs, M, subDim, k, iters)
-    val qsubs = assigned.filter(col("vec_id") % qm === 0)
-      .select(col("vec_id").as("query_id"), col("m"), col("sq").as("qq"))
+    val qsubs = Ivf.panel(assigned.withColumnRenamed("sq", "q"), qm, col("m"))
     val lut = qsubs.join(cb, Seq("m"))
       .select(col("query_id"), col("m"), col("code"),
         qdot(col("qq"), col("cq")).as("d"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(desc("adc_dot"), col("neighbor_id"))
-    assigned.join(broadcast(lut), Seq("m", "code"))
+    ranked(assigned.join(broadcast(lut), Seq("m", "code"))
       .filter(col("vec_id") =!= col("query_id"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(sum(col("d")).as("adc_dot"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("adc_dot"))
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= topK)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("adc_dot"))
-      .orderBy(col("query_id"), col("rank"))
+        col("adc_dot")), topK, "adc_dot")
   }
 
   /** Two-stage retrieval: PQ-ADC shortlist → EXACT inner-product re-rank —
@@ -1120,38 +874,12 @@ object Similarity {
 
   private def pqRerankCompute(spark: SparkSession, dir: String, topK: Int,
                               shortlist: Int, queryMod: Int): DataFrame = {
-    val qm = resolveQm(spark, dir, queryMod)
     val vs = vectors(spark, dir)
     val cand = pqSearchTopK(spark, dir, topK = shortlist, queryMod = queryMod)
       .select(col("query_id"), col("neighbor_id"), col("adc_dot"))
-    val queries = vs.filter(col("vec_id") % qm === 0)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(desc("dot"), col("neighbor_id"))
-    cand
-      .join(vs.select(col("vec_id").as("neighbor_id"), col("q")), "neighbor_id")
-      .join(broadcast(queries), "query_id")
-      .select(col("query_id"), col("neighbor_id"), col("adc_dot"),
-        qdot(col("qq"), col("q")).as("dot"))
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= topK)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("dot"), col("adc_dot"))
-      .orderBy(col("query_id"), col("rank"))
+    ranked(rescore(cand, vs, Ivf.panel(vs, resolveQm(spark, dir, queryMod))), topK)
   }
 
-  /** Int8 compression diagnostics: per-vector symmetric quantization of
-    * the milli-quantized components to 8-bit codes (`code = q·127 div s`,
-    * s = max |component|), reporting the scale and the reconstruction
-    * error in ppm of total magnitude — the go/no-go metric for shrinking
-    * a 100 TB ANN index 8× before the recall-sensitive stages.
-    *
-    * All arithmetic is BIGINT with truncating division (`div` here,
-    * `//` in DuckDB — verified identical on negatives), so the oracle
-    * reproduces every code and error bit-for-bit. One shuffle: the
-    * window partial aggregates and the final groupBy share the vec_id
-    * hash partitioning, so Catalyst plans a single exchange.
-    */
   /** Per-DIMENSION census of the quantized corpus — the calibration
     * pass every quantizer (int8 scale choice, PQ sub-space ranges, SRP
     * plane scaling) runs before committing to a layout: for each of the
@@ -1178,6 +906,18 @@ object Similarity {
         expr("sum_q div n_vecs").as("mean_q"))
       .orderBy(col("dim"))
 
+  /** Int8 compression diagnostics: per-vector symmetric quantization of
+    * the milli-quantized components to 8-bit codes (`code = q·127 div s`,
+    * s = max |component|), reporting the scale and the reconstruction
+    * error in ppm of total magnitude — the go/no-go metric for shrinking
+    * a 100 TB ANN index 8× before the recall-sensitive stages.
+    *
+    * All arithmetic is BIGINT with truncating division (`div` here,
+    * `//` in DuckDB — verified identical on negatives), so the oracle
+    * reproduces every code and error bit-for-bit. One shuffle: the
+    * window partial aggregates and the final groupBy share the vec_id
+    * hash partitioning, so Catalyst plans a single exchange.
+    */
   def quantizeInt8(spark: SparkSession, dir: String): DataFrame =
     quantizeInt8(vectors(spark, dir))
 
@@ -1239,35 +979,23 @@ object Similarity {
       .srpSignature(col("q"), Dedup.srpCoefMatrix(nPlanes, dims))
     val sig = vs.select(col("vec_id"), col("q")).withColumn("sig", sigCol)
 
-    def bandRows(df: DataFrame): DataFrame = df
-      .select(col("vec_id"), col("sig"),
+    def bandRows(df: DataFrame, id: String): DataFrame = df
+      .select(col(id), col("sig"),
         explode(sequence(lit(0), lit(bands - 1))).as("band"))
-      .select(col("vec_id"), col("band"),
+      .select(col(id), col("band"),
         expr(s"shiftright(sig, cast(band as int) * $bitsPerBand)")
           .bitwiseAND(lit(mask)).as("band_val"))
 
-    val corpusBands = bandRows(sig)
+    val corpusBands = bandRows(sig, "vec_id")
       .withColumnRenamed("vec_id", "neighbor_id")
-    val queryBands = bandRows(sig.filter(col("vec_id") % queryMod === 0))
-      .withColumnRenamed("vec_id", "query_id")
+    val queries = Ivf.panel(sig, queryMod, col("sig"))
+    val queryBands = bandRows(queries, "query_id")
 
     val cand = corpusBands.join(broadcast(queryBands), Seq("band", "band_val"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id")).distinct()
 
-    val queries = sig.filter(col("vec_id") % queryMod === 0)
-      .select(col("vec_id").as("query_id"), col("q").as("qq"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(desc("dot"), col("neighbor_id"))
-    cand
-      .join(vs.select(col("vec_id").as("neighbor_id"), col("q")), "neighbor_id")
-      .join(broadcast(queries), "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        qdot(col("qq"), col("q")).as("dot"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("dot"))
-      .orderBy(col("query_id"), col("rank"))
+    ranked(rescore(cand, vs, queries.select(col("query_id"), col("qq"))), k)
   }
 
   /** In-engine index QA: recall@k of the SRP-LSH index against the exact
@@ -1341,13 +1069,7 @@ object Similarity {
     // pinned cell count re-derives inline
     val assigned =
       if (nCells == 0) ivfAssignedT(spark, dir)
-      else {
-        val nc = resolveCells(spark, dir, nCells)
-        val vs = vectors(spark, dir)
-        val centroids = vs.filter(col("vec_id") < nc)
-          .select(col("vec_id").cast("int").as("cell_id"), col("q").as("cq"))
-        argmaxDotCell(vs, centroids, nc)
-      }
+      else untrainedAssigned(vectors(spark, dir), resolveCells(spark, dir, nCells))
     val verdicts = Corpus.qualitySignals(spark, dir)
       .select(col("doc_id"), col("keep"))
     assigned.join(verdicts, col("vec_id") === col("doc_id"))
@@ -1362,40 +1084,42 @@ object Similarity {
 
   /** The scale-derived configuration as a QUERYABLE one-row report —
     * what [[ScaleKnobs]] derives for THIS corpus (SRP band width / plane
-    * count, embedding- and document-side query-panel moduli), computed
-    * inside the plan from the live counts (two scalar aggregates +
-    * broadcast cross join — no driver-side count), in the same
-    * integer-exact arithmetic the DuckDB oracle replays: ceil(log2 n) =
-    * `length(bin(n-1))` (bit length — exact, no floating log). The
-    * operational "what will my deployment actually do" view of the
-    * deployment-rules table in QUERIES.md.
+    * count, embedding- and document-side query-panel moduli, IVF cell
+    * count and training modulus, Hamming signature width and threshold,
+    * the triangle, bucket and shingle caps), computed by the very
+    * functions the operators call on the same memoized counts, so the
+    * report cannot disagree with what a query ran. The DuckDB oracle
+    * replays every rule from its own count(*). The operational "what
+    * will my deployment actually do" view of the deployment-rules table
+    * in QUERIES.md.
     */
   def knobReport(spark: SparkSession, dir: String): DataFrame = {
-    val ne = spark.read.parquet(s"$dir/embeddings.parquet")
-      .agg(count(lit(1)).as("n_embeddings"))
-    val nd = spark.read.parquet(s"$dir/documents.parquet")
-      .agg(count(lit(1)).as("n_documents"))
-    ne.crossJoin(broadcast(nd))
-      .select(col("n_embeddings"), col("n_documents"),
-        ScaleKnobs.srpBitsCol("n_embeddings").as("srp_bits"),
-        ScaleKnobs.panelModCol("n_embeddings").as("embed_query_mod"),
-        ScaleKnobs.panelModCol("n_documents").as("doc_query_mod"),
-        ScaleKnobs.ivfCellsCol("n_embeddings").as("ivf_cells"),
-        ScaleKnobs.kmeansTrainModCol("n_embeddings").as("kmeans_train_mod"),
-        ScaleKnobs.sigBitsCol("n_documents").as("sig_bits"),
-        ScaleKnobs.triangleCapCol("n_documents").as("triangle_cap"),
-        ScaleKnobs.bucketCapCol("n_documents").as("bucket_cap"),
-        ScaleKnobs.shingleDfCapCol("n_documents").as("shingle_df_cap"))
-      .withColumn("srp_planes", col("srp_bits") * lit(4L))
-      .withColumn("sig_max_hamming",
-        expr("(8 * 4 * sig_bits) div 60").cast("long"))
-      .select(col("n_embeddings"), col("n_documents"), col("srp_bits"),
-        col("srp_planes"), col("embed_query_mod"), col("doc_query_mod"),
-        col("ivf_cells"), col("kmeans_train_mod"), col("sig_bits"),
-        col("sig_max_hamming"), col("triangle_cap"), col("bucket_cap"),
-        col("shingle_df_cap"))
+    import ScaleKnobs._
+    val ne = embeddingCount(spark, dir)
+    val nd = documentCount(spark, dir)
+    val cells = ivfCells(ne)
+    val sigBits = sigBitsPerBand(nd)
+    val row = Seq[(String, Long)](
+      "n_embeddings" -> ne, "n_documents" -> nd,
+      "srp_bits" -> srpBitsPerBand(ne), "srp_planes" -> srpPlanes(ne),
+      "embed_query_mod" -> panelMod(ne), "doc_query_mod" -> panelMod(nd),
+      "ivf_cells" -> cells, "kmeans_train_mod" -> kmeansTrainMod(ne, cells),
+      "sig_bits" -> sigBits, "sig_max_hamming" -> sigMaxHamming(4, sigBits),
+      "triangle_cap" -> triangleDegreeCap(nd),
+      "bucket_cap" -> hammingBucketCap(nd),
+      "shingle_df_cap" -> shingleDfCap(nd))
+    spark.createDataFrame(
+      java.util.List.of(org.apache.spark.sql.Row.fromSeq(row.map(_._2))),
+      org.apache.spark.sql.types.StructType(row.map { case (name, _) =>
+        org.apache.spark.sql.types.StructField(name,
+          org.apache.spark.sql.types.LongType, nullable = false)
+      }))
   }
 
+  /** Label-centroid similarity: mean quantized vector per label (integer
+    * sums + count, exact), then pairwise centroid inner products — the
+    * "are these classes separable" diagnostic.
+    */
   def labelCentroidSim(spark: SparkSession, dir: String): DataFrame =
     labelCentroidSim(vectors(spark, dir))
 

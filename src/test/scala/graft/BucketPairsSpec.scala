@@ -6,6 +6,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.engine.ext.BucketPairs
+import graft.engine.plans.PlanWalk
 
 /** [[BucketPairs]] against its definition: for every key, each pair of
   * distinct members a < b of a bucket whose distinct size is in
@@ -115,7 +116,7 @@ class BucketPairsSpec extends SparkTestBase {
     val b = bucketsOf(rows.toDF("k", "m"), "m")
     val p = BucketPairs.pairs(b, Cap, "k")
     p.collect()
-    val exchanges = flattenPlan(p.queryExecution.executedPlan).collect {
+    val exchanges = PlanWalk.nodes(p.queryExecution.executedPlan).collect {
       case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
     }
     assert(exchanges.size === 1, p.queryExecution.executedPlan)

@@ -7,6 +7,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.engine.expr.NativeFunctions
+import graft.engine.plans.PlanWalk
 
 /** The one kernel shape. Every table function in
   * [[NativeFunctions.Functions]] is evaluated on generated adversarial
@@ -169,7 +170,7 @@ class KernelShapeSpec extends SparkTestBase {
       def run(mode: String, wholeStage: Boolean): Seq[Row] =
         underMode(mode, wholeStage) {
           val d = df
-          val codegen = flattenPlan(d.queryExecution.executedPlan).exists(
+          val codegen = PlanWalk.nodes(d.queryExecution.executedPlan).exists(
             _.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec])
           assert(codegen === wholeStage, d.queryExecution.executedPlan)
           d.collect().toSeq.sortBy(_.getLong(0))

@@ -1,6 +1,7 @@
 package graft
 
 import graft.engine.ext.Relational
+import graft.engine.plans.PlanWalk
 
 /** Physical-plan shape assertions: the 100 TB design properties the
   * VERDICT audits by hand become test failures. A plan regression (a
@@ -462,7 +463,7 @@ class PlanSpec extends SparkTestBase {
       val p = df.queryExecution.executedPlan
       assert(p.toString.contains("Exchange rangepartitioning"),
         s"$name lost the range-partitioned sort: ${p.toString.take(600)}")
-      val globalWindows = flattenPlan(p).collect {
+      val globalWindows = PlanWalk.nodes(p).collect {
         case w: WindowExec if w.partitionSpec.isEmpty => w
       }
       assert(globalWindows.nonEmpty,

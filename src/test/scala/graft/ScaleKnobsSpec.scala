@@ -10,48 +10,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ScaleKnobsSpec extends AnyFunSuite {
 
-  test("the in-plan Column forms agree with the Scala functions on a sweep") {
-    // the rules exist in three forms (Scala, Spark-SQL via bin(), DuckDB
-    // via the min-power-of-two scan); the oracle gate pins Spark↔DuckDB,
-    // this pins Spark-SQL↔Scala — covering boundaries (powers of two,
-    // the ±1 neighborhoods, the floor and cap saturation points)
-    val spark = SparkTestBase.spark
-    import org.apache.spark.sql.functions.col
-    val ns = (Seq(1L, 2L, 3L, 49L, 50L, 51L, 99L, 100L, 101L) ++
-      (10 to 24).flatMap(e => Seq((1L << e) - 1, 1L << e, (1L << e) + 1)) ++
-      Seq(500L, 2000L, 5000L, 5001L, 20000L, 50000L)).distinct
-    val rows = spark.createDataFrame(
-        spark.sparkContext.parallelize(ns.map(org.apache.spark.sql.Row(_))),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("n",
-            org.apache.spark.sql.types.LongType))))
-      .select(col("n"),
-        graft.engine.ext.ScaleKnobs.srpBitsCol("n").as("bits"),
-        graft.engine.ext.ScaleKnobs.panelModCol("n").as("qm"),
-        graft.engine.ext.ScaleKnobs.ivfCellsCol("n").as("nc"),
-        graft.engine.ext.ScaleKnobs.sigBitsCol("n").as("sb"),
-        graft.engine.ext.ScaleKnobs.triangleCapCol("n").as("cap"),
-        graft.engine.ext.ScaleKnobs.bucketCapCol("n").as("bcap"),
-        graft.engine.ext.ScaleKnobs.shingleDfCapCol("n").as("sdc"),
-        graft.engine.ext.ScaleKnobs.kmeansTrainModCol("n").as("tm"),
-        graft.engine.ext.ScaleKnobs.basketCapCol("n").as("bkc"))
-      .collect()
-    rows.foreach { r =>
-      val n = r.getLong(0)
-      assert(r.getLong(1) === ScaleKnobs.srpBitsPerBand(n).toLong, s"bits at n=$n")
-      assert(r.getLong(2) === ScaleKnobs.panelMod(n).toLong, s"qm at n=$n")
-      assert(r.getLong(3) === ScaleKnobs.ivfCells(n).toLong, s"nc at n=$n")
-      assert(r.getLong(4) === ScaleKnobs.sigBitsPerBand(n).toLong, s"sb at n=$n")
-      assert(r.getLong(5) === ScaleKnobs.triangleDegreeCap(n), s"cap at n=$n")
-      assert(r.getLong(6) === ScaleKnobs.hammingBucketCap(n), s"bcap at n=$n")
-      assert(r.getLong(7) === ScaleKnobs.shingleDfCap(n).toLong, s"sdc at n=$n")
-      assert(r.getLong(8) ===
-        ScaleKnobs.kmeansTrainMod(n, ScaleKnobs.ivfCells(n)).toLong,
-        s"tm at n=$n")
-      assert(r.getLong(9) === ScaleKnobs.basketCap(n).toLong, s"bkc at n=$n")
-    }
-  }
-
   test("basketCap: clears the TPC-H <= 7-line basket maximum at every " +
     "scale, so committed artifacts replay under either form") {
     assert(ScaleKnobs.basketCap(1L) === 8)          // floor > 7

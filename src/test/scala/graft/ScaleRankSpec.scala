@@ -1,6 +1,7 @@
 package graft
 
 import graft.engine.ext.ScaleRank
+import graft.engine.plans.PlanWalk
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -97,7 +98,7 @@ class ScaleRankSpec extends SparkTestBase {
       p.toString.take(600))
     // NO unpartitioned window anywhere, and every window (the census
     // offset/total) is partitioned by the group, never by the data order
-    val wins = flattenPlan(p).collect { case w: WindowExec => w }
+    val wins = PlanWalk.nodes(p).collect { case w: WindowExec => w }
     assert(wins.nonEmpty, "census windows missing")
     wins.foreach { w =>
       assert(w.partitionSpec.nonEmpty, "unpartitioned window in grouped rank")
@@ -138,7 +139,7 @@ class ScaleRankSpec extends SparkTestBase {
     import org.apache.spark.sql.execution.adaptive.ShuffleQueryStageExec
     val q = ScaleRank.withGlobalRank(df, "rk", desc("metric"), col("id"))
     q.queryExecution.toRdd.count() // execute THIS plan (AQE finalizes it)
-    val nodes = flattenPlan(q.queryExecution.executedPlan)
+    val nodes = PlanWalk.nodes(q.queryExecution.executedPlan)
     // NOTE: a reused exchange still gets its OWN query-stage id — the
     // reuse is visible as a ShuffleQueryStageExec wrapping
     // ReusedExchangeExec, not as a repeated stage id. Count the real
@@ -182,7 +183,7 @@ class ScaleRankSpec extends SparkTestBase {
       p.toString.take(600))
     // the only unpartitioned windows left must order by the census key,
     // never by the data columns
-    val globalWindows = flattenPlan(p).collect {
+    val globalWindows = PlanWalk.nodes(p).collect {
       case w: WindowExec if w.partitionSpec.isEmpty => w
     }
     assert(globalWindows.nonEmpty, "census offset window missing")

@@ -27,18 +27,4 @@ trait SparkTestBase extends AnyFunSuite {
       if (f.isDirectory) scalaSources(f)
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
     }
-
-  /** Every node of a physical plan, piercing the AQE wrapper —
-    * `AdaptiveSparkPlanExec` is a LeafExecNode, so a plain `collect`
-    * stops at it and plan-shape assertions pass vacuously. */
-  def flattenPlan(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    val kids = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case s: QueryStageExec => Seq(s.plan)
-      case other => other.children
-    }
-    p +: kids.flatMap(flattenPlan)
-  }
 }
