@@ -6,6 +6,7 @@ import graft.engine.mongo.MongoLogPipeline
 import graft.engine.mysql.MySqlLogPipeline
 import graft.engine.report.{HtmlWriter, ReportSink, XlsxWriter}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
 /** CLI entry point — the Spark-native equivalent of the reference's
   * argparse mains (mongo_parser.py:196-251, mysqlLogParser.py:199-251).
@@ -118,18 +119,22 @@ object Main {
             }
         }
       case "mongo" =>
-        val lines = Sources.readLines(spark, args.input)
-        val res = MongoLogPipeline.analyze(lines)
-        // S4 empty-input guard: the reference checks the RAW line list
-        // (mongo_parser.py:218-222), not the parsed outputs — an input of
-        // only error lines must NOT warn.
-        if (lines.isEmpty) println("Warning: Input file is empty.")
-        val nErr = res.parseErrors.count()
-        if (nErr > 0) println(s"Encountered $nErr parse warning(s).")
-        ReportSink.writeWarnings(args.output, res.parseErrors, "message")
-        writeReport(args.output, ReportSink.MongoSheets.zip(Seq(
-          res.detailed, res.queryStats, res.nonSlow, res.errors)),
-          args.csv, args.xlsx, args.html)
+        val res = MongoLogPipeline.analyze(Sources.readLines(spark, args.input))
+        try {
+          // The first action builds the whole persisted scan in parallel;
+          // the empty-input check then reads the cache, not the input.
+          val nErr = res.parseErrors.count()
+          // S4 empty-input guard: the reference checks the RAW line list
+          // (mongo_parser.py:218-222), not the parsed outputs — an input of
+          // only error lines must NOT warn. The scan keeps one row per raw
+          // line, blank ones included.
+          if (res.scan.isEmpty) println("Warning: Input file is empty.")
+          if (nErr > 0) println(s"Encountered $nErr parse warning(s).")
+          ReportSink.writeWarnings(args.output, res.parseErrors, "message")
+          writeReport(args.output, ReportSink.MongoSheets.zip(Seq(
+            res.detailed, res.queryStats, res.nonSlow, res.errors)),
+            args.csv, args.xlsx, args.html)
+        } finally res.scan.unpersist(blocking = true)
       case "mysql" =>
         val entries =
           if (args.scale) Sources.readDelimited(spark, args.input)
@@ -137,15 +142,24 @@ object Main {
               "entry_no as ord", "entry")
           else MySqlLogPipeline.entriesFromFiles(
             Sources.readWholeFile(spark, args.input))
-        val res = MySqlLogPipeline.parseEntries(entries)
-        if (res.detailed.isEmpty)
-          println("Warning: No valid log entries found in the input.")
-        val nWarn = res.warnings.count()
-        if (nWarn > 0) println(s"Encountered $nWarn parse warning(s).")
-        ReportSink.writeWarnings(args.output, res.warnings)
-        writeReport(args.output, ReportSink.MySqlSheets.zip(Seq(
-          MySqlLogPipeline.referenceDetailed(res.detailed), res.aggregate)),
-          args.csv, args.xlsx, args.html)
+        // One parse per report: the emptiness check, the warning count,
+        // the warnings file, the sheets and the workbook all read this
+        // table, which lives exactly as long as the report.
+        val projected = MySqlLogPipeline.projectedOf(entries)
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        try {
+          val res = MySqlLogPipeline.resultFromProjected(projected)
+          // the count builds the whole table in parallel before the
+          // emptiness check's partition-at-a-time limit reads it
+          val nWarn = res.warnings.count()
+          if (res.detailed.isEmpty)
+            println("Warning: No valid log entries found in the input.")
+          if (nWarn > 0) println(s"Encountered $nWarn parse warning(s).")
+          ReportSink.writeWarnings(args.output, res.warnings)
+          writeReport(args.output, ReportSink.MySqlSheets.zip(Seq(
+            MySqlLogPipeline.referenceDetailed(res.detailed), res.aggregate)),
+            args.csv, args.xlsx, args.html)
+        } finally projected.unpersist(blocking = true)
     }
     if (ok) println(s"Report written to ${args.output}")
     else { System.err.println(err); sys.exit(1) }

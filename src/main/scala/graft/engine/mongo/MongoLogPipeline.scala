@@ -31,9 +31,12 @@ object MongoLogPipeline {
 
   val ComplexPipelineSentinel = """{"pipeline_info":"Complex pipeline, see full command"}"""
 
+  /** The four branches and the bad-record channel, plus the persisted
+    * [[parsedScan]] they all read (one row per raw line); its holder
+    * unpersists it when the report is written. */
   final case class Result(detailed: DataFrame, queryStats: DataFrame,
                           nonSlow: DataFrame, errors: DataFrame,
-                          parseErrors: DataFrame)
+                          parseErrors: DataFrame, scan: DataFrame)
 
   /** Parse lines (line: String, line_no: Long) into the shared scan with
     * routing flags. Exposed for streaming reuse.
@@ -257,12 +260,12 @@ object MongoLogPipeline {
   }
 
   /** Full run: one persisted scan, four branches + bad-record channel.
-    * Caller unpersists via [[Result]] usage lifetime (or spark context end).
+    * The caller unpersists `Result.scan` once it has written the report.
     */
   def analyze(lines: DataFrame): Result = {
     val scan = parsedScan(lines).persist(StorageLevel.MEMORY_AND_DISK)
     val det = detailed(scan)
-    Result(det, queryStats(det), nonSlow(scan), errors(scan), parseErrors(scan))
+    Result(det, queryStats(det), nonSlow(scan), errors(scan), parseErrors(scan), scan)
   }
 
   /** Whole-report census in ONE pipeline run: [[analyze]]'s persisted scan

@@ -20,6 +20,12 @@ import org.apache.spark.sql.functions._
   * input arrives pre-split as entry records
   * ([[graft.engine.ingest.Sources.readDelimited]]) rather than
   * whole-file strings.
+  *
+  * A report parses once: `graft.cli.Main` persists [[projectedOf]] for
+  * the report's lifetime and derives all three outputs from it with
+  * [[resultFromProjected]] (the registry pins the same table through
+  * StageCache). [[parseEntries]] stays unpersisted, for streaming
+  * callers, which cannot persist.
   */
 object MySqlLogPipeline {
 
@@ -107,16 +113,16 @@ object MySqlLogPipeline {
     // P11: float(qt) * 1000 with 0.0 + warning on unparsable values.
     val qtMs = expr("try_cast(trim(coalesce(qt_m, '')) as double)") * 1.0e3
 
-    // Only the first 200 chars of the raw entry survive the projection:
-    // the single downstream consumer of entry text is the skip-warning's
-    // "Content snippet" (reference parity, mysqlLogParser.py:95-96) —
-    // carrying the full multi-line entry would make this table's
-    // materialization (StageCache pins it per session, to DISK by
-    // default) pay for bytes nothing reads (r16: the stage build was
-    // the suite's costliest disk write).
+    // Only the first 200 chars of a SKIPPED entry survive the
+    // projection: the single downstream consumer of entry text is the
+    // skip-warning's "Content snippet" (reference parity,
+    // mysqlLogParser.py:95-96), which fires only when !all_ok. Every
+    // other entry carries NULL, so this table's materializations (the
+    // report's persist, StageCache's per-session pin) hold no bytes
+    // nothing reads.
     val projected = found.select(
       col("file_id"), col("entry_no"), col("ord"),
-      substring(col("entry"), 1, 200).as("entry_snippet"),
+      when(!allOk, substring(col("entry"), 1, 200)).as("entry_snippet"),
       coalesce(col("qt_m"), lit("")).as("qt_raw"),
       allOk.as("all_ok"),
       col("time_s").isNotNull.as("t_ok"), col("uh_s").isNotNull.as("uh_ok"),
