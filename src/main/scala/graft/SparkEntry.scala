@@ -154,10 +154,7 @@ object SparkEntry {
     // record-delimited parallel reader instead of wholetext content rows.
     "mysql_scale_agg" -> ((s, dir) =>
       MySqlLogPipeline.parseEntries(
-        Sources.readDelimited(s, logFileDir(s, dir, "mysql"))
-          .select(lit(0L).as("file_id"), col("entry_no"),
-            col("entry_no").as("ord"), col("entry")))
-        .aggregate),
+        Sources.readDelimited(s, logFileDir(s, dir, "mysql"))).aggregate),
     // Whole-report census: one persisted parse feeding all five branches —
     // the shape a real report run uses (and what Bench should charge for
     // "the full mongo report": one scan, not five).

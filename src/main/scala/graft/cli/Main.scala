@@ -138,8 +138,6 @@ object Main {
       case "mysql" =>
         val entries =
           if (args.scale) Sources.readDelimited(spark, args.input)
-            .selectExpr("cast(0 as long) as file_id", "entry_no",
-              "entry_no as ord", "entry")
           else MySqlLogPipeline.entriesFromFiles(
             Sources.readWholeFile(spark, args.input))
         // One parse per report: the emptiness check, the warning count,

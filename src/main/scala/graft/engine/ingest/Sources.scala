@@ -1,21 +1,30 @@
 package graft.engine.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.net.URI
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.{LongWritable, Text}
-import org.apache.hadoop.mapreduce.lib.input.TextInputFormat
+import org.apache.hadoop.mapreduce.Job
+import org.apache.hadoop.mapreduce.lib.input.{FileInputFormat, TextInputFormat}
 
 /** Log ingestion sources (SURVEY.md §2.1 S1-S3).
   *
-  * Line numbering: the reference consumes files sequentially and numbers
-  * lines 1-based in file order (mongo_parser.py:28). Spark has no global row
-  * order, so we materialize an explicit `line_no` at ingest via
-  * zipWithIndex — deterministic for a single file read as a whole, and per
-  * partition-stable for splittable reads. Downstream operators never rely on
-  * implicit order; they use `line_no` (e.g. `min_by(x, line_no)` for
-  * "first in file order" samples), which is the design that survives a
-  * 1000-executor scale-out.
+  * Record numbering: the reference consumes files sequentially and
+  * numbers lines (and slow-log entries) 1-based in file order
+  * (mongo_parser.py:28, mysqlLogParser.py:52). Spark has no global row
+  * order, so the file readers materialize an explicit `line_no` /
+  * `entry_no` at ingest with `RDD.zipWithIndex`, which numbers in
+  * partition order. Partition order is file order because the records
+  * come from a Hadoop RDD over one URI-sorted file listing, whose splits
+  * keep the listing's order and, within a file, offset order. A
+  * `spark.read` scan must never feed a numbering: it bin-packs splits by
+  * size, so a multi-file directory (or one file large enough to split)
+  * enumerates out of file order. Downstream operators never rely on
+  * implicit order; they use the explicit number (e.g. `min_by(x,
+  * line_no)` for "first in file order" samples).
   */
 object Sources {
 
@@ -87,80 +96,66 @@ object Sources {
     raw.withColumn("ts_us", tsUs)
   }
 
-  /** Records of a Hadoop text scan tagged with their (file path, byte
-    * offset WITHIN that file) — the two coordinates that define the
-    * reference's sequential read order without depending on Spark's
-    * split scheduling. `zipWithIndex` scan order is NOT that order:
-    * Spark sorts splits by size descending for bin-packing, so a
-    * multi-file directory (and even a single file large enough to
-    * split) enumerates out of file order. Offsets are per-file and
-    * strictly increasing, so (file, off) is a total order per file.
-    */
-  private def taggedRecords(spark: SparkSession, path: String,
-                            conf: Configuration): DataFrame = {
-    import spark.implicits._
-    spark.sparkContext
-      .newAPIHadoopFile(path, classOf[TextInputFormat],
-        classOf[LongWritable], classOf[Text], conf)
-      .asInstanceOf[org.apache.spark.rdd.NewHadoopRDD[LongWritable, Text]]
-      .mapPartitionsWithInputSplit { (split, it) =>
-        val fs = split
-          .asInstanceOf[org.apache.hadoop.mapreduce.lib.input.FileSplit]
-        val file = fs.getPath.toString
-        val splitOff = fs.getStart
-        var idx = -1L
-        // Text/LongWritable are reused by the record reader — copy out
-        // before the iterator advances.
-        it.map { case (off, t) =>
-          idx += 1
-          (file, splitOff, idx, off.get(), t.toString)
-        }
-      }
-      .toDF("file", "split_off", "idx", "off", "rec")
-  }
-
-  /** Global 1-based record numbering in (file NAME, in-file offset)
-    * order, for a `taggedRecords` scan, WITHOUT shuffling the record
-    * data: each record already carries its (file, split offset, index
-    * within split) coordinates from the scan, a census of ONE ROW PER
-    * SPLIT (count of records) is aggregated, the running sum over
-    * (file, split_off) order — a tiny global window, ≪ the 4096-row
-    * audit gate — yields each split's global base, and a broadcast join
-    * adds base + idx + 1 back in the scan stage. File names define the
+  /** The one file listing every reader numbers by: the files a
+    * `spark.read` text scan resolves `path` to (globs expanded, hidden
+    * `_`/`.` files skipped), sorted by URI. File names define the
     * sequence — the writer's contract (part-00000 < part-00001, log
-    * rotation timestamps, …); within a file, split offsets and
-    * record-reader order define the rest. Costs one extra pass of the
-    * scan for the census and zero record-data shuffles — the numbering
-    * that survives a 1000-executor multi-file scan.
+    * rotation timestamps, ...).
     */
-  private def withGlobalOrder(tagged: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val census = tagged.groupBy(col("file"), col("split_off"))
-      .agg(count(lit(1)).as("n"))
-    val bases = census
-      .withColumn("base",
-        coalesce(sum(col("n")).over(Window.orderBy(col("file"), col("split_off"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("file"), col("split_off"), col("base"))
-    tagged.join(broadcast(bases), Seq("file", "split_off"))
-      .withColumn("seq", col("base") + col("idx") + 1L)
+  private def sortedFiles(scan: DataFrame): Array[String] =
+    scan.inputFiles.sorted
+
+  /** (byte offset within its file, record) per line or per
+    * `delimiter`-split record, in [[sortedFiles]] order and, within a
+    * file, in offset order: `getSplits` keeps the listing's order and cuts
+    * each file into offset-ordered splits. The paths go in as `Path`s (a
+    * comma in a file name stays in it) with Hadoop's glob characters
+    * escaped, and are listed on one thread (the multi-threaded listing
+    * returns files in completion order).
+    */
+  private def records(spark: SparkSession, path: String,
+                      delimiter: Option[String]): RDD[(Long, String)] = {
+    val files = sortedFiles(spark.read.text(path))
+    if (files.isEmpty) spark.sparkContext.emptyRDD[(Long, String)]
+    else {
+      val job = Job.getInstance(spark.sparkContext.hadoopConfiguration)
+      val conf = job.getConfiguration
+      delimiter.foreach(conf.set("textinputformat.record.delimiter", _))
+      conf.setInt(FileInputFormat.LIST_STATUS_NUM_THREADS, 1)
+      FileInputFormat.setInputPaths(job, files.toIndexedSeq.map { f =>
+        val u = new URI(f)
+        new Path(u.getScheme, u.getAuthority,
+          u.getPath.replaceAll("""([\\\[\]{}*?])""", """\\$1"""))
+      }: _*)
+      spark.sparkContext
+        .newAPIHadoopRDD(conf, classOf[TextInputFormat],
+          classOf[LongWritable], classOf[Text])
+        // the record reader reuses its Writables: copy out per record
+        .map { case (off, t) => (off.get(), t.toString) }
+    }
   }
 
   /** S1: line-oriented text scan with 1-based line numbers
-    * (mongo_parser.py:215-216 readlines + enumerate). Numbering is
-    * global across a multi-file directory in (file name, in-file
-    * offset) order — see [[withGlobalOrder]] — so the single-file and
-    * N-file layouts of the same log produce identical line numbers.
-    * The trailing repartition round-robins the numbered lines so the
-    * (CPU-heavy) downstream parse uses every core regardless of file
-    * count; `line_no` is explicit, so nothing downstream depends on
-    * physical order.
+    * (mongo_parser.py:215-216 readlines + enumerate), global across a
+    * multi-file directory in (file name, in-file offset) order, so the
+    * single-file and N-file layouts of the same log number alike.
+    *
+    * `zipWithIndex` counts the first n−1 partitions of [[records]] in a
+    * job of its own (Spark 4.1.2's `ZippedWithIndexRDD` constructor, as
+    * its bytecode reads): an input of one split (a file under one block)
+    * runs no such job and is read once, a multi-split input reads n−1
+    * splits twice, and the job runs when this reader is called, not when
+    * the DataFrame is first used. The trailing repartition round-robins the numbered lines so
+    * the (CPU-heavy) downstream parse uses every core regardless of file
+    * count.
     */
-  def readLines(spark: SparkSession, path: String): DataFrame =
-    withGlobalOrder(taggedRecords(spark, path,
-      new Configuration(spark.sparkContext.hadoopConfiguration)))
-      .select(col("rec").as("line"), col("seq").as("line_no"))
+  def readLines(spark: SparkSession, path: String): DataFrame = {
+    import spark.implicits._
+    records(spark, path, None).zipWithIndex()
+      .map { case ((_, line), i) => (line, i + 1) }
+      .toDF("line", "line_no")
       .repartition(spark.sparkContext.defaultParallelism)
+  }
 
   /** S3: in-memory lines (mongo_parser.py:157-158 upload path). */
   def fromLines(spark: SparkSession, lines: Seq[String]): DataFrame = {
@@ -174,15 +169,16 @@ object Sources {
     * scale path is [[readDelimited]].
     *
     * `file_id` is dense and 0-based in file-name order — the order
-    * [[readLines]] and [[readDelimited]] number in — taken from the
-    * driver's sorted file listing and looked up by each row's file path,
-    * so no file content moves. (A partition-derived id such as
+    * [[readLines]] and [[readDelimited]] number in — taken from
+    * [[sortedFiles]] of this reader's own scan (so a file landing between
+    * two listings cannot get a null id) and looked up by each row's file
+    * path, so no file content moves. (A partition-derived id such as
     * `monotonically_increasing_id` jumps by 2^33 per partition, and the
     * entry order key `file_id * 2^32 + entry_no` overflows.)
     */
   def readWholeFile(spark: SparkSession, path: String): DataFrame = {
     val files = spark.read.option("wholetext", "true").text(path)
-    val ids = typedLit(files.inputFiles.sorted.zipWithIndex
+    val ids = typedLit(sortedFiles(files).zipWithIndex
       .map { case (f, i) => f -> i.toLong }.toMap)
     // input_file_name, not _metadata.file_path: it renders the path the
     // way inputFiles does ("file:///x", not "file:/x")
@@ -199,40 +195,41 @@ object Sources {
   /** S2 scale path: record-delimited read via Hadoop's configurable record
     * delimiter. Splits a MySQL slow log into one record per `# Time: ` entry
     * WITHOUT loading whole files into single rows, so a 100 TB log dir scans
-    * in parallel with normal HDFS/S3 splits.
+    * in parallel with normal HDFS/S3 splits. Returns the pipeline's entries
+    * shape (file_id, entry_no, ord, entry) with `file_id` 0 and `ord` =
+    * `entry_no`.
     *
-    * Each record is one entry body (delimiter stripped); we re-prepend the
-    * marker exactly like the reference reconstructs entries
-    * (mysqlLogParser.py:52-53). `entry_no` is the 1-based record index in
-    * scan order (per-file stable: TextInputFormat splits preserve in-file
-    * record order and zipWithIndex numbers them by split index).
+    * Offset 0 marks each file's first record, which keeps its own content
+    * verbatim: either a full first entry or a preamble (the
+    * `mysqld ... started with:` header). Preambles are dropped BEFORE
+    * numbering, so `entry_no` is the 1-based entry index in (file name,
+    * offset) order — what the whole-file path gives a single file
+    * (mysqlLogParser.py:52). Numbered as in [[readLines]], counting job
+    * included.
     */
   def readDelimited(spark: SparkSession, path: String,
                     delimiter: String = "\n# Time: "): DataFrame = {
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    conf.set("textinputformat.record.delimiter", delimiter)
-    // The record key is the record's byte offset WITHIN ITS FILE: offset 0
-    // marks each file's first record, which keeps its own content verbatim
-    // (either a preamble, dropped below, or a full first entry). Every
-    // later record lost its leading "# Time: " to the delimiter —
-    // reconstruct it. Keying on offset (not global index) makes this
-    // correct for multi-file directories, where every file restarts the
-    // preamble/header cycle. Numbering is global in (file name, offset)
-    // order via withGlobalOrder — identical for the single-file and
-    // N-file layouts of the same log, and stable when a multi-hundred-MB
-    // file splits across many tasks.
-    withGlobalOrder(taggedRecords(spark, path, conf)
-      .select(col("file"), col("split_off"), col("idx"),
-        when(col("off") === 0L, col("rec"))
-          .otherwise(concat(lit("# Time: "), col("rec"))).as("rec0"))
-      .select(col("file"), col("split_off"), col("idx"),
-        when(col("rec0").endsWith("\n"), col("rec0"))
-          // the delimiter match consumed the entry's trailing newline; the
-          // whole-file split keeps it, and the query-capture regex requires
-          // a newline-terminated "SET timestamp=...;" line. Restore it.
-          .otherwise(concat(col("rec0"), lit("\n"))).as("rec")))
-      .select(col("seq").as("entry_no"), col("rec").as("entry"))
-      .filter(col("entry").startsWith("# Time: "))
+    import spark.implicits._
+    records(spark, path, Some(delimiter))
+      .filter { case (off, rec) => off != 0L || rec.startsWith("# Time: ") }
+      .zipWithIndex()
+      .map { case ((off, rec), i) => (i + 1, off, rec) }
+      .toDF("entry_no", "off", "rec")
+      .select(lit(0L).as("file_id"), col("entry_no"), col("entry_no").as("ord"),
+        delimitedEntry(col("rec"), col("off") === 0L).as("entry"))
       .repartition(spark.sparkContext.defaultParallelism)
+  }
+
+  /** A `"\n# Time: "`-split slow-log record → its entry text; the one
+    * restoration rule of the batch ([[readDelimited]]) and streaming
+    * (`MySqlStream`) readers. The delimiter consumed every later
+    * record's marker and the trailing newline of the record before it;
+    * a file's first record (`fileFirst`) kept its own. The query-capture
+    * regex needs a newline-terminated `SET timestamp=...;` line, so the
+    * newline is restored wherever it is missing.
+    */
+  def delimitedEntry(rec: Column, fileFirst: Column): Column = {
+    val marked = when(fileFirst, rec).otherwise(concat(lit("# Time: "), rec))
+    when(marked.endsWith("\n"), marked).otherwise(concat(marked, lit("\n")))
   }
 }

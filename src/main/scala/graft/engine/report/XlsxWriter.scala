@@ -23,6 +23,7 @@ import org.apache.spark.sql.DataFrame
   * directories; this is the parity surface for a reference user's
   * download. `maxRowsPerSheet` caps the collect so a mistakenly huge
   * sheet degrades to a truncated workbook instead of a driver OOM.
+  * A cut is printed as a warning, never silent.
   */
 object XlsxWriter {
 
@@ -116,13 +117,18 @@ object XlsxWriter {
     } finally zos.close()
   }
 
-  /** Collect each sheet's DataFrame and assemble the workbook. */
+  /** Collect each sheet's DataFrame and assemble the workbook; a sheet
+    * cut at the cap is named in a printed warning. */
   def write(path: String, sheets: Seq[(String, DataFrame)],
             maxRowsPerSheet: Int = 1000000): Unit =
     writeRaw(path, sheets.map { case (name, df) =>
       val header = df.columns.toSeq
-      val rows = df.limit(maxRowsPerSheet).collect()
+      // limit+1 so truncation is detectable without a separate count
+      val rows = df.limit(maxRowsPerSheet + 1).collect()
         .map(r => (0 until r.length).map(i => r.get(i)): Seq[Any]).toSeq
-      (name, header, rows)
+      if (rows.length > maxRowsPerSheet)
+        println(s"Warning: sheet '$name' truncated at $maxRowsPerSheet rows " +
+          s"in $path.")
+      (name, header, rows.take(maxRowsPerSheet))
     })
 }

@@ -2,6 +2,7 @@ package graft.engine.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.ingest.Sources
 import graft.engine.mysql.MySqlLogPipeline
 
 /** Structured Streaming variant of the MySQL slow-log pipeline
@@ -13,8 +14,9 @@ import graft.engine.mysql.MySqlLogPipeline
   * which has no streaming hook — but the text DATASOURCE's `lineSep`
   * option produces the same record shape and works under `readStream`:
   * each record is one slow-log entry body, split at `"\n# Time: "`, and
-  * new files landing in the directory stream in incrementally. The
-  * record-restoration rules mirror `readDelimited` exactly, with one
+  * new files landing in the directory stream in incrementally. Records
+  * become entries through the batch reader's one restoration rule
+  * ([[graft.engine.ingest.Sources.delimitedEntry]]), with one
   * difference: streaming records carry no byte offset, so "first record
   * of its file" is recognized by its verbatim `# Time: ` prefix instead
   * of offset 0. A non-entry file preamble therefore gets the marker
@@ -43,18 +45,12 @@ object MySqlStream {
     * are constants; the streaming aggregate samples by EVENT time instead
     * (see [[windowedAggregate]]), exactly like [[MongoStream]].
     */
-  def restoreEntries(records: DataFrame): DataFrame = {
-    // A file-first record kept its own "# Time: " header; every split-off
-    // record lost the delimiter and needs marker + trailing \n restored
-    // (the query-capture regex wants a newline-terminated last line).
-    val restored = when(col("value").startsWith("# Time: "), col("value"))
-      .otherwise(concat(lit("# Time: "), col("value")))
+  def restoreEntries(records: DataFrame): DataFrame =
     records.select(
       lit(0L).as("file_id"), lit(0L).as("entry_no"), lit(0L).as("ord"),
-      when(restored.endsWith("\n"), restored)
-        .otherwise(concat(restored, lit("\n"))).as("entry"))
+      Sources.delimitedEntry(col("value"), col("value").startsWith("# Time: "))
+        .as("entry"))
       .filter(col("entry") =!= "# Time: \n") // file began with the delimiter
-  }
 
   /** Slow-log `# Time:` values in the wild are either the legacy
     * `yymmdd hh:mm:ss` form or ISO-8601 (5.7+, log_timestamps=UTC/SYSTEM);

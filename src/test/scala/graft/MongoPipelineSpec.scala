@@ -57,6 +57,27 @@ class MongoPipelineSpec extends SparkTestBase {
     }
   }
 
+  test("readLines: file names with commas or glob characters are read as " +
+    "themselves; an empty directory reads as no lines") {
+    val dir = java.nio.file.Files.createTempDirectory("mongo-names").toFile
+    // as globs, "a,b[1].log" would match only "a,b1.log" and "b{c}.log"
+    // only "bc.log"; joined with commas, the first would split in two
+    java.nio.file.Files.writeString(new java.io.File(dir, "a,b[1].log").toPath,
+      "l1\nl2\n")
+    java.nio.file.Files.writeString(new java.io.File(dir, "b{c}.log").toPath,
+      "l3\n")
+    val empty = java.nio.file.Files.createTempDirectory("mongo-empty").toFile
+    try {
+      val got = Sources.readLines(spark, dir.getAbsolutePath)
+        .orderBy("line_no").collect()
+        .map(r => (r.getAs[Long]("line_no"), r.getAs[String]("line")))
+      assert(got.toSeq === Seq(1L -> "l1", 2L -> "l2", 3L -> "l3"))
+      assert(Sources.readLines(spark, empty.getAbsolutePath).count() === 0L)
+    } finally {
+      dir.listFiles().foreach(_.delete()); dir.delete(); empty.delete()
+    }
+  }
+
   test("R1: slow rows = lines containing 'Slow query' that parse as JSON") {
     assert(det.map(_.getAs[Long]("line_no")).toSeq === Seq(1L, 2L, 7L, 8L, 9L, 10L))
   }

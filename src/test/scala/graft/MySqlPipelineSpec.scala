@@ -146,9 +146,7 @@ class MySqlPipelineSpec extends SparkTestBase {
     java.nio.file.Files.writeString(f.toPath, log)
     try {
       val viaDelim = MySqlLogPipeline.parseEntries(
-        Sources.readDelimited(spark, f.getAbsolutePath)
-          .selectExpr("cast(0 as long) as file_id", "entry_no",
-            "entry_no as ord", "entry"))
+        Sources.readDelimited(spark, f.getAbsolutePath))
         .detailed.orderBy("entry_no")
         .drop("file_id", "entry_no", "ord").collect()
       val viaWhole = result.detailed.orderBy("entry_no")

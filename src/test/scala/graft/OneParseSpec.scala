@@ -96,23 +96,41 @@ class OneParseSpec extends SparkTestBase {
   test("mysql --scale report reads its delimited records once") {
     val in = mysqlInputs._1
     val parsePass = bytesRead(noop(MySqlLogPipeline.projectedOf(
-      Sources.readDelimited(spark, in).selectExpr("cast(0 as long) as file_id",
-        "entry_no", "entry_no as ord", "entry"))))
+      Sources.readDelimited(spark, in))))
     val (reportBytes, _) = report("mysql", in, "--scale")
     assert(parsePass > 0)
     assert(reportBytes === parsePass)
   }
 
-  test("mongo report reads its log once and unpersists its scan") {
+  /** The sf0.001 mongod log as one file. */
+  private lazy val mongoInput: File = {
     val lines = LogGen.mongoLines(spark, sf).orderBy(col("line_no"))
       .collect().map(_.getAs[String]("line"))
     val in = new File(Files.createTempDirectory("oneparse-mongo").toFile, "mongod.log")
     Files.writeString(in.toPath, lines.mkString("", "\n", "\n"))
+    in
+  }
+
+  test("mongo report reads its log once and unpersists its scan") {
+    val in = mongoInput
     val parsePass = bytesRead(noop(MongoLogPipeline.parsedScan(
       Sources.readLines(spark, in.getAbsolutePath))))
     val (reportBytes, out) = report("mongo", in.getAbsolutePath)
     assert(parsePass > 0)
     assert(reportBytes === parsePass)
     assert(warningsText(out).nonEmpty)
+  }
+
+  // A file under one block is one split: zipWithIndex runs no counting
+  // pass over it, so the report reads each byte exactly once.
+  test("single-split mongo report reads exactly the file's bytes") {
+    val (reportBytes, _) = report("mongo", mongoInput.getAbsolutePath)
+    assert(reportBytes === mongoInput.length())
+  }
+
+  test("single-split mysql --scale report reads exactly the file's bytes") {
+    val in = new File(mysqlInputs._1)
+    val (reportBytes, _) = report("mysql", in.getAbsolutePath, "--scale")
+    assert(reportBytes === in.length())
   }
 }

@@ -512,6 +512,27 @@ class PlanSpec extends SparkTestBase {
     assert(!tv.contains("CartesianProduct"), tv.take(800))
   }
 
+  test("log readers number records without a window or a broadcast") {
+    import org.apache.spark.sql.execution.ExternalRDDScanExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import graft.engine.ingest.Sources
+    val f = java.nio.file.Files.createTempFile("readers", ".log")
+    java.nio.file.Files.writeString(f, "# Time: 1\nSELECT 1;\n")
+    for ((name, df) <- Seq(
+        "readLines" -> Sources.readLines(spark, f.toString),
+        "readDelimited" -> Sources.readDelimited(spark, f.toString))) {
+      val nodes = PlanWalk.nodes(df.queryExecution.executedPlan)
+      assert(nodes.exists(_.isInstanceOf[ExternalRDDScanExec[_]]),
+        s"$name: the walk never reached the record scan")
+      assert(!nodes.exists {
+        case _: WindowExec | _: BroadcastExchangeExec => true
+        case _ => false
+      }, s"$name: ${df.queryExecution.executedPlan}")
+    }
+    java.nio.file.Files.delete(f)
+  }
+
   test("the sweep rejects a deliberately-injected naked cross join") {
     import org.apache.spark.sql.functions.{broadcast, col, count, lit}
     val l = spark.read.parquet(s"$dir/nation.parquet")

@@ -49,6 +49,26 @@ class ReportSinkSpec extends SparkTestBase {
     assert(d.count() === 1L)
     assert(d.head().getAs[String]("Normalized_Query") ===
       "SELECT * FROM T WHERE ID = ?;")
+
+    // a real slow log opens with the server's preamble; both readers drop
+    // it before numbering, so the incomplete 5th entry warns as entry 5
+    val preambled = new java.io.File(dir, "preambled.log")
+    java.nio.file.Files.writeString(preambled.toPath,
+      """/usr/sbin/mysqld, Version: 8.0.35 (MySQL Community Server - GPL). started with:
+        |Tcp port: 3306  Unix socket: /var/run/mysqld/mysqld.sock
+        |Time                 Id Command    Argument
+        |""".stripMargin + log * 4 + log.replace("# Query_time", "# Qt"))
+    def warnings(extra: String*): String = {
+      val o = new java.io.File(dir, s"report${extra.mkString}")
+      Main.main(Array("--mode", "mysql", "--input", preambled.getAbsolutePath,
+        "--output", o.getAbsolutePath) ++ extra)
+      new java.io.File(o, "warnings").listFiles()
+        .filter(_.getName.startsWith("part-"))
+        .map(f => java.nio.file.Files.readString(f.toPath)).mkString
+    }
+    val whole = warnings()
+    assert(whole.startsWith("Skipped log entry 5 due to missing fields."), whole)
+    assert(warnings("--scale") === whole)
   }
 
   test("mongo CLI writes the four reference sheets") {

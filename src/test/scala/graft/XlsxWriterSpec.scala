@@ -47,6 +47,25 @@ class XlsxWriterSpec extends SparkTestBase {
       .contains("""<c r="A2" t="b"><v>1</v></c>"""))
   }
 
+  test("write warns when it cuts a sheet at the row cap") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("xlsxcap").toFile
+    val path = new java.io.File(dir, "wb.xlsx").getAbsolutePath
+    val out = new java.io.ByteArrayOutputStream
+    Console.withOut(out) {
+      XlsxWriter.write(path, Seq("Long" -> Seq(1, 2, 3).toDF("n"),
+        "AtCap" -> Seq(1, 2).toDF("n")), maxRowsPerSheet = 2)
+    }
+    assert(out.toString.linesIterator.toSeq ===
+      Seq(s"Warning: sheet 'Long' truncated at 2 rows in $path."))
+    val parts = readZip(path)
+    // header + the first two rows; the at-cap sheet is whole
+    for (sheet <- Seq("sheet1", "sheet2")) {
+      val xml = parts(s"xl/worksheets/$sheet.xml")
+      assert(xml.contains("""<row r="3">""") && !xml.contains("""<row r="4">"""), sheet)
+    }
+  }
+
   test("mongo CLI --xlsx emits a workbook with the four reference sheets") {
     spark
     val dir = java.nio.file.Files.createTempDirectory("clix").toFile
