@@ -29,8 +29,13 @@ object GraftSession {
 
   /** Worker threads of a local session: `SPARK_GRAFT_CPUS`, else every
     * core this JVM sees. */
-  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(parseCpus)
     .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** A `SPARK_GRAFT_CPUS` value: a positive integer, else a failure that
+    * names the variable and the value. */
+  def parseCpus(v: String): Int = v.trim.toIntOption.filter(_ > 0).getOrElse(
+    throw new IllegalArgumentException(s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
 
   /** The engine profile: confs every graft session needs. */
   val EngineConf: Map[String, String] = Map(

@@ -251,6 +251,14 @@ object StageCache {
     dead.foreach { s => sessions.remove(s); sessionRoots.remove(s) }
   }
 
+  /** A DataFrame a stage build reads several times, checkpointed —
+    * but left a plan under [[PassthroughConf]], so the stage's dump shows
+    * what built it. Not for loop state: a plan kept per round would grow
+    * with every round. */
+  def checkpointed(df: DataFrame): DataFrame =
+    if (df.sparkSession.conf.getOption(PassthroughConf).contains("true")) df
+    else df.localCheckpoint(true)
+
   /** Return the materialized stage, building it on first use for this
     * (session, dir, name) — checkpoint-pinned, or written durable when
     * [[DurableDirConf]] is set.

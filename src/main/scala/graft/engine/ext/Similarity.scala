@@ -422,7 +422,7 @@ object Similarity {
         .select(col("vec_id"), col("q"), col("cell_id"), col("dist"))
       if (it < iters) centroids = Ivf.recenter(assigned, Seq("cell_id"), "q")
     }
-    (assigned.localCheckpoint(true), centroids)
+    (graft.engine.StageCache.checkpointed(assigned), centroids)
   }
 
   /** IVF search over TRAINED cells: [[kmeansCells]]' final assignment is
@@ -819,7 +819,7 @@ object Similarity {
     }
     // consumers (codes dump, LUT build, ADC join) reference the encoded
     // corpus several times in one plan: materialize it once.
-    (assigned.localCheckpoint(true), cb)
+    (graft.engine.StageCache.checkpointed(assigned), cb)
   }
 
   /** PQ asymmetric-distance (ADC) search: queries keep their EXACT

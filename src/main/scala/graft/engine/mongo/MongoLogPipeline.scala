@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.engine.expr.{NativeFunctions, Normalizers, PyParity}
+import graft.engine.report.ReportSink
 import graft.engine.schemas.Schemas
 
 /** MongoDB slow-query/error log analyzer as a declarative Spark dataflow
@@ -53,13 +54,9 @@ object MongoLogPipeline {
   def parsedScan(lines: DataFrame): DataFrame = {
     NativeFunctions.ensureRegistered(lines.sparkSession)
     lines
-      // r17: the schema parse is the native single-pass
-      // [[graft.engine.expr.MongoJson.MongoLineParse]] — observably
-      // identical to `from_json(line, Schemas.MongodLine, PERMISSIVE +
-      // _corrupt)` (MongoJsonKernelSpec pins the equivalence on
-      // adversarial inputs and every generated line class) without
-      // JacksonParser's generic converter machinery; the struct shape
-      // and every downstream reference are unchanged.
+      // The schema parse is the native single-pass mongo_line_parse,
+      // observably identical to `from_json(line, Schemas.MongodLine,
+      // PERMISSIVE + _corrupt)` (MongoJsonKernelSpec pins the equivalence).
       // OpaqueBarrier: the parse must evaluate ONCE per row in this
       // projection. Without it, every routing-flag filter conjunct that
       // the optimizer substitutes and pushes re-derives the parse inside
@@ -85,9 +82,6 @@ object MongoLogPipeline {
       // BARRIER: OpaqueBarrier keeps this projection opaque to
       // PushDownPredicate/CollapseProject so consumer filters stay
       // simple attribute tests and the parse runs exactly once per row.
-      // (The previous `when(rand() < 0, …)` trick is constant-folded
-      // away by Spark 4.1's rand-range simplification — this custom
-      // expression is the reliable form, and streaming-safe.)
       .withColumn("pyraw", NativeFunctions.opaque(
         when(col("schema_ok") && !col("sus"), lit(null).cast("string"))
           .otherwise(NativeFunctions.pyParityCheck(col("line")))))
@@ -110,7 +104,7 @@ object MongoLogPipeline {
   }
 
   // The four branch gates over a parsedScan, each defined once: the
-  // branch filters below and the observed census both read them.
+  // branch filters below and the Census both read them.
   /** R1 detailed slow queries. */
   val SlowGate: Column = col("valid") && col("is_slow")
   /** R2 error rollup. */
@@ -241,23 +235,24 @@ object MongoLogPipeline {
   /** Name of the routing observation attached by [[observed]]. */
   val RoutingMetric = "graft_mongo_routing"
 
-  /** Attach single-pass routing metrics to a parsed scan: per-branch row
-    * counts ride the SAME job as accumulator-style aggregates (Spark's
-    * `observe`), so a 100 TB run reports its routing census without one
-    * extra action per branch — re-counting five branches would be five
-    * more full scans. Read the values from `qe.observedMetrics` in a
-    * QueryExecutionListener (batch) or the progress events (streaming);
-    * see ObservabilitySpec.
+  /** The routing census over a parsed scan, defined once: raw lines and
+    * the rows each branch gate routes, all Long. [[observed]] attaches it
+    * to a scan's job and [[report]] aggregates it; counts, not sums, so
+    * an empty scan reads 0, not NULL. */
+  val Census: Seq[Column] = Seq(
+    count(lit(1)).as("lines"),
+    count_if(SlowGate).as("slow"),
+    count_if(ErrorGate).as("errors"),
+    count_if(NonSlowGate).as("non_slow"),
+    count_if(ParseErrorGate).as("parse_errors"))
+
+  /** Attach the [[Census]] to a parsed scan's job (Spark's `observe`),
+    * so a run reports its routing without one extra scan per branch.
+    * Read it from `qe.observedMetrics` in a QueryExecutionListener
+    * (batch) or the progress events (streaming); see ObservabilitySpec.
     */
-  def observed(scan: DataFrame): DataFrame = {
-    def census(gate: Column) = sum(when(gate, 1L).otherwise(0L))
-    scan.observe(RoutingMetric,
-      count(lit(1)).as("lines"),
-      census(SlowGate).as("slow"),
-      census(ErrorGate).as("errors"),
-      census(NonSlowGate).as("non_slow"),
-      census(ParseErrorGate).as("parse_errors"))
-  }
+  def observed(scan: DataFrame): DataFrame =
+    scan.observe(RoutingMetric, Census.head, Census.tail: _*)
 
   /** Full run: one persisted scan, four branches + bad-record channel.
     * The caller unpersists `Result.scan` once it has written the report.
@@ -266,6 +261,19 @@ object MongoLogPipeline {
     val scan = parsedScan(lines).persist(StorageLevel.MEMORY_AND_DISK)
     val det = detailed(scan)
     Result(det, queryStats(det), nonSlow(scan), errors(scan), parseErrors(scan), scan)
+  }
+
+  /** The `cli.Main` report over raw lines: [[analyze]]'s scan, its
+    * [[Census]], the bad-record channel as warnings and the four sheets.
+    * S4 reads the RAW line count, blank lines included, as the reference
+    * does: an input of only invalid lines does not warn. */
+  def report(lines: DataFrame): ReportSink.LogReport = {
+    val res = analyze(lines)
+    ReportSink.LogReport(res.scan, Census,
+      empty = col("lines") === 0, emptyNotice = "Warning: Input file is empty.",
+      warningCount = col("parse_errors"), warnings = res.parseErrors,
+      warningCol = "message", sheets = ReportSink.MongoSheets.zip(Seq(
+        res.detailed, res.queryStats, res.nonSlow, res.errors)))
   }
 
   /** Whole-report census in ONE pipeline run: [[analyze]]'s persisted scan
@@ -279,10 +287,6 @@ object MongoLogPipeline {
     */
   def reportAll(lines: DataFrame): DataFrame = {
     val scan = parsedScan(lines).persist(StorageLevel.MEMORY_AND_DISK)
-    // Materialize the cache with ONE action up front: the five summary
-    // subtrees below are independent stages of a single union job, and
-    // without this they race to build the same cache partitions
-    // concurrently (correct but duplicated parse work).
     scan.count()
     val det = detailed(scan)
     def row(name: String, df: DataFrame, checksum: Column): DataFrame =

@@ -2,6 +2,8 @@ package graft.engine.mysql
 
 import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import graft.engine.report.ReportSink
 
 /** MySQL/Percona slow-query-log analyzer, re-expressed as a declarative
   * Spark dataflow (reference behavior: /root/reference/MySql/mysqlLogParser.py:16-134).
@@ -21,8 +23,8 @@ import org.apache.spark.sql.functions._
   * ([[graft.engine.ingest.Sources.readDelimited]]) rather than
   * whole-file strings.
   *
-  * A report parses once: `graft.cli.Main` persists [[projectedOf]] for
-  * the report's lifetime and derives all three outputs from it with
+  * A report parses once: [[report]] persists [[projectedOf]] for the
+  * report's lifetime and derives all three outputs from it with
   * [[resultFromProjected]] (the registry pins the same table through
   * StageCache). [[parseEntries]] stays unpersisted, for streaming
   * callers, which cannot persist.
@@ -70,28 +72,19 @@ object MySqlLogPipeline {
     resultFromProjected(projectedOf(entries))
 
   /** The parse's one expensive pass — the fused field kernel + field
-    * projection over every entry — separated (r16) so the registry can
-    * materialize it ONCE per (session, corpus) and serve all three
-    * outputs from it ([[resultFromProjected]]): detailed, aggregate and
-    * warnings are cheap derivations of this table, and re-running the
-    * battery per output was the mysql family's whole steady-state cost
-    * (the reference parses once and writes all sheets from memory —
-    * mysqlLogParser.py's single pass; this is that shape distributed).
+    * projection over every entry. A report or a registry pin
+    * materializes it once and derives all three outputs from it
+    * ([[resultFromProjected]]), as the reference parses once and writes
+    * every sheet from memory.
     */
   def projectedOf(entries: DataFrame): DataFrame = {
     import graft.engine.expr.NativeFunctions
     NativeFunctions.ensureRegistered(entries.sparkSession)
-    // Fused battery (r17): ONE compiled pass per entry yields all seven
-    // captures AND the per-field post-processing —
-    // [[NativeFunctions.mysqlFieldsRun]] reproduces each pattern's
-    // find() semantics with literal-anchored scans (NULL on no-match ≡
-    // !rlike; the capture on a match), returns elements 0/1/3/4/5/6
-    // pre-pyStripped (nullness preserved) and element 7 as the
-    // normalized query. This replaces FOURTEEN regex executions per
-    // entry (the r16 7-regex battery + 6 pyStrip regexp_replaces + the
-    // fingerprint regexp_replace) and 7 UTF8String.toString copies with
-    // one scan and one copy (MySqlFieldsKernelSpec pins every element
-    // against the live regex chain it replaces, adversarial + generated).
+    // ONE kernel pass per entry ([[NativeFunctions.mysqlFieldsRun]])
+    // yields the seven captures with each pattern's find() semantics
+    // (NULL on no-match), elements 0/1/3/4/5/6 pre-pyStripped and element
+    // 7 as the normalized query (MySqlFieldsKernelSpec pins every element
+    // against the regex chain it replaces).
     // The opaque barrier keeps the kernel evaluating ONCE: without it,
     // pushing the all_ok filter below this projection would substitute
     // the aliases and re-run the kernel inside the filter per conjunct.
@@ -120,7 +113,7 @@ object MySqlLogPipeline {
     // other entry carries NULL, so this table's materializations (the
     // report's persist, StageCache's per-session pin) hold no bytes
     // nothing reads.
-    val projected = found.select(
+    found.select(
       col("file_id"), col("entry_no"), col("ord"),
       when(!allOk, substring(col("entry"), 1, 200)).as("entry_snippet"),
       coalesce(col("qt_m"), lit("")).as("qt_raw"),
@@ -140,7 +133,6 @@ object MySqlLogPipeline {
         .otherwise(col("q_s")).as("Query"),
       when(coalesce(col("q_s"), lit("")) === "", EmptyQueryPlaceholder)
         .otherwise(col("q_norm")).as("Normalized_Query"))
-    projected
   }
 
   /** A3's five per-pattern aggregates, the one definition batch and
@@ -154,6 +146,21 @@ object MySqlLogPipeline {
       max(col("Query_time (ms)")).as("Max_Query_time_ms"),
       round(avg(col("Query_time (ms)")), 2).as("Avg_Query_time_ms"),
       min_by(col("Query"), sampleOrder).as("Sample_Query"))
+
+  // The three warning gates over a projectedOf table, each defined once:
+  // the warnings channel and the report's Census both read them.
+  /** P10/R4: an entry missing a field is skipped. */
+  val SkipGate: Column = !col("all_ok")
+  /** P11: a complete entry whose Query_time does not parse. */
+  val BadQueryTimeGate: Column = col("all_ok") && col("qt_bad")
+  /** P12: a complete entry with an empty query. */
+  val EmptyQueryGate: Column = col("all_ok") && col("Query") === EmptyQueryPlaceholder
+
+  /** The report census over a projectedOf table: complete entries and
+    * the three gates' warnings, Long counts (an empty input reads 0). */
+  val Census: Seq[Column] = Seq(count_if(col("all_ok")).as("valid"),
+    (count_if(SkipGate) + count_if(BadQueryTimeGate) + count_if(EmptyQueryGate))
+      .as("warnings"))
 
   /** The three reference outputs as cheap derivations of the
     * [[projectedOf]] table (filters, one aggregate, one array-explode —
@@ -172,12 +179,13 @@ object MySqlLogPipeline {
       aggregateStats(detailed.groupBy(col("Normalized_Query")), col("ord"))
         .orderBy(col("Normalized_Query"))
 
-    // Warning channel, single pass: each entry emits 0..1 of the three
-    // diagnostics — P10/R4 skip (which patterns matched, Python-bool
-    // rendering, first 200 chars — mysqlLogParser.py:95-96), P11 cast
-    // failure (embeds the UNstripped capture, :72-74), P12 empty query
-    // (:83-87) — via a compact array-filter-explode instead of a 3-leg
-    // union that would re-run the regex battery per leg.
+    // Warning channel, single pass: a skipped entry emits the skip alone;
+    // a complete one emits 0..2 (its Query_time, its empty query) — P10/R4
+    // skip (which patterns matched, Python-bool rendering, first 200
+    // chars — mysqlLogParser.py:95-96), P11 cast failure (embeds the
+    // UNstripped capture, :72-74), P12 empty query (:83-87) — via a
+    // compact array-filter-explode instead of a 3-leg union that would
+    // re-run the regex battery per leg.
     def pyBool(c: Column): Column = when(c, "True").otherwise("False")
     val skipMsg = concat(
       lit("Skipped log entry "), col("entry_no"),
@@ -194,16 +202,27 @@ object MySqlLogPipeline {
     val warnings = projected
       .select(col("file_id"), col("entry_no"), col("ord"),
         explode(filter(array(
-          when(!col("all_ok"), struct(lit(0).as("warn_rank"), skipMsg.as("warning"))),
-          when(col("all_ok") && col("qt_bad"),
-            struct(lit(1).as("warn_rank"), qtMsg.as("warning"))),
-          when(col("all_ok") && col("Query") === EmptyQueryPlaceholder,
-            struct(lit(2).as("warn_rank"), emptyMsg.as("warning")))),
+          when(SkipGate, struct(lit(0).as("warn_rank"), skipMsg.as("warning"))),
+          when(BadQueryTimeGate, struct(lit(1).as("warn_rank"), qtMsg.as("warning"))),
+          when(EmptyQueryGate, struct(lit(2).as("warn_rank"), emptyMsg.as("warning")))),
           w => w.isNotNull)).as("w"))
       .orderBy(col("ord"), col("w.warn_rank"))
       .select(col("file_id"), col("entry_no"), col("w.warning").as("warning"))
 
     Result(detailed, aggregate, warnings)
+  }
+
+  /** The `cli.Main` report over entry records: [[projectedOf]] persisted
+    * for the report, its [[Census]] (empty: no complete entry), the
+    * warnings and the two reference sheets. */
+  def report(entries: DataFrame): ReportSink.LogReport = {
+    val projected = projectedOf(entries).persist(StorageLevel.MEMORY_AND_DISK)
+    val res = resultFromProjected(projected)
+    ReportSink.LogReport(projected, Census, empty = col("valid") === 0,
+      emptyNotice = "Warning: No valid log entries found in the input.",
+      warningCount = col("warnings"),
+      warnings = res.warnings, warningCol = "warning",
+      sheets = ReportSink.MySqlSheets.zip(Seq(referenceDetailed(res.detailed), res.aggregate)))
   }
 
   /** Reference-equivalent entry point: whole-log content rows in,

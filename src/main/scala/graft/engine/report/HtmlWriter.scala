@@ -14,12 +14,8 @@ import org.apache.spark.sql.DataFrame
   * with a client-side nav, inline CSS, zero external fetches — open it
   * from disk and the whole report is there.
   *
-  * DRIVER-SIDE BY DESIGN, same bounded path as [[XlsxWriter]]: a report
-  * page is a human artifact assembled from collected rows; the
-  * distributed artifacts remain [[ReportSink.writeSheets]]'s directories.
-  * `maxRowsPerSheet` caps the collect so a mistakenly huge sheet degrades
-  * to a truncated page instead of a driver OOM (the cap is stamped into
-  * the page so truncation is visible, never silent).
+  * DRIVER-SIDE BY DESIGN, the same capped collect as [[XlsxWriter]]; the
+  * cap is stamped into the page, so truncation is never silent.
   */
 object HtmlWriter {
 
@@ -87,13 +83,8 @@ object HtmlWriter {
   def write(path: String, title: String, sheets: Seq[(String, DataFrame)],
             maxRowsPerSheet: Int = 100000): Unit = {
     val collected = sheets.map { case (name, df) =>
-      val header = df.columns.toSeq
-      // limit+1 so truncation is detectable without a separate count
-      val rows = df.limit(maxRowsPerSheet + 1).collect()
-        .map(r => (0 until r.length).map(i => r.get(i)): Seq[Any]).toSeq
-      val truncated = rows.length > maxRowsPerSheet
-      (name, header, if (truncated) rows.take(maxRowsPerSheet) else rows,
-        truncated)
+      val (header, rows, cut) = ReportSink.collectCapped(df, maxRowsPerSheet)
+      (name, header, rows, cut)
     }
     Files.write(Paths.get(path), renderRaw(title, collected).getBytes(UTF_8))
   }

@@ -1,6 +1,6 @@
 package graft.engine.report
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** Report sink (SURVEY.md §2.8 K1/K2): the reference writes one multi-sheet
   * Excel workbook (mongo_parser.py:134-143, mysqlLogParser.py:137-144); the
@@ -18,30 +18,65 @@ object ReportSink {
   /** MySQL sheet names, mysqlLogParser.py:139-142. */
   val MySqlSheets = Seq("Detailed Metrics", "Aggregate Results")
 
-  /** Write sheets under `outDir/<sheet name>/` as parquet (+ CSV with
-    * header when `csv` is set — small reports only; CSV of a 100 TB result
-    * is not a thing). Parquet goes first so the machine-readable artifact
-    * exists even if the CSV render of an exotic type fails. With `csv` the
-    * sheet is persisted for the two writes: the CSV is the same
-    * computation as the parquet, in the same part order, and the lineage
-    * runs once.
+  /** One log report, described once by its pipeline
+    * (`MongoLogPipeline.report`, `MySqlLogPipeline.report`) and run by
+    * [[write]]. Everything in it reads `pinned`, the table the pipeline
+    * persisted for the report's lifetime; `empty` (the S4 rule, printing
+    * `emptyNotice`) and `warningCount` read the `census` columns.
+    */
+  final case class LogReport(pinned: DataFrame, census: Seq[Column],
+                             empty: Column, emptyNotice: String,
+                             warningCount: Column, warnings: DataFrame,
+                             warningCol: String,
+                             sheets: Seq[(String, DataFrame)])
+
+  /** Run a log report as the reference's CLI does (mongo_parser.py:218-222):
+    * the two notices, then the warnings file, the sheets and, on request,
+    * the workbook and the page; `pinned` is unpersisted after. The notices
+    * read ONE census aggregate: the report's first action, it builds
+    * `pinned` in parallel.
+    */
+  def write(report: LogReport, outDir: String, csv: Boolean = false,
+            xlsx: Boolean = false, html: Boolean = false): (Boolean, String) =
+    try {
+      val census = report.pinned.agg(report.census.head, report.census.tail: _*)
+        .select(report.empty, report.warningCount).head()
+      if (census.getBoolean(0)) println(report.emptyNotice)
+      val nWarn = census.getLong(1)
+      if (nWarn > 0) println(s"Encountered $nWarn parse warning(s).")
+      attempt {
+        writeWarnings(outDir, report.warnings, report.warningCol)
+        report.sheets.foreach { case (name, df) => writeSheet(outDir, name, df, csv) }
+        if (xlsx) XlsxWriter.write(s"$outDir/report.xlsx", report.sheets)
+        if (html) HtmlWriter.write(s"$outDir/report.html", "Log Report", report.sheets)
+      }
+    } finally report.pinned.unpersist(blocking = true)
+
+  /** The one error convention of every artifact write. */
+  private def attempt(body: => Unit): (Boolean, String) =
+    try { body; (true, "") }
+    catch { case e: Exception => (false, s"Error writing report: ${e.getMessage}") }
+
+  /** Write sheets under `outDir/<sheet name>/` as parquet, plus CSV with
+    * a header when `csv` is set (small reports only). Parquet goes first,
+    * so it exists even if the CSV render of an exotic type fails; with
+    * `csv` the sheet is persisted for both writes, so its lineage runs
+    * once and both keep one part order.
     */
   def writeSheets(outDir: String, sheets: Seq[(String, DataFrame)],
                   csv: Boolean = false): (Boolean, String) =
+    attempt(sheets.foreach { case (name, df) => writeSheet(outDir, name, df, csv) })
+
+  private def writeSheet(outDir: String, name: String, df: DataFrame,
+                         csv: Boolean): Unit = {
+    if (csv) df.persist()
     try {
-      sheets.foreach { case (name, df) =>
-        if (csv) df.persist()
-        try {
-          df.write.mode("overwrite").parquet(s"$outDir/$name")
-          if (csv)
-            df.write.mode("overwrite").option("header", "true")
-              .csv(s"$outDir/${name}_csv")
-        } finally if (csv) df.unpersist()
-      }
-      (true, "")
-    } catch {
-      case e: Exception => (false, s"Error writing report: ${e.getMessage}")
-    }
+      df.write.mode("overwrite").parquet(s"$outDir/$name")
+      if (csv)
+        df.write.mode("overwrite").option("header", "true")
+          .csv(s"$outDir/${name}_csv")
+    } finally if (csv) df.unpersist()
+  }
 
   /** K4 warnings channel: one text line per warning row (single file —
     * warnings are a driver-facing diagnostic, not a data artifact).
@@ -50,4 +85,13 @@ object ReportSink {
                     messageCol: String = "warning"): Unit =
     warnings.select(messageCol).coalesce(1)
       .write.mode("overwrite").text(s"$outDir/warnings")
+
+  /** A sheet's header, its first `cap` rows on the driver, and whether
+    * it had more: `cap + 1` rows are collected, so a cut needs no separate
+    * count. The workbook and the page both collect through this. */
+  private[report] def collectCapped(df: DataFrame, cap: Int)
+      : (Seq[String], Seq[Seq[Any]], Boolean) = {
+    val rows = df.limit(cap + 1).collect().toSeq.map(_.toSeq)
+    (df.columns.toSeq, rows.take(cap), rows.length > cap)
+  }
 }

@@ -1,6 +1,5 @@
 package graft.engine.report
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.engine.mongo.MongoLogPipeline
 import graft.engine.mysql.MySqlLogPipeline
 
@@ -29,15 +28,4 @@ object Views {
     res.aggregate.createOrReplaceTempView(s"${prefix}_aggregate")
     res.warnings.createOrReplaceTempView(s"${prefix}_warnings")
   }
-
-  /** Register the raw testdata tables so ad-hoc SQL joins logs against
-    * them (the extension queries' tables: region/nation/customer/...).
-    */
-  def registerTables(spark: SparkSession, dir: String,
-                     tables: Seq[String] = Seq("region", "nation", "customer",
-                       "supplier", "part", "orders", "lineitem", "documents",
-                       "embeddings")): Unit =
-    tables.foreach { t =>
-      spark.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(t)
-    }
 }

@@ -16,14 +16,12 @@ import org.apache.spark.sql.DataFrame
   * inline (`t="inlineStr"`), numbers native — no sharedStrings table
   * needed.
   *
-  * DRIVER-SIDE BY DESIGN, exactly like the reference: a report workbook
-  * is a human artifact assembled from collected result rows (the
-  * reference materializes the same rows into pandas frames first). The
-  * distributed artifacts remain [[ReportSink.writeSheets]]'s parquet/CSV
-  * directories; this is the parity surface for a reference user's
-  * download. `maxRowsPerSheet` caps the collect so a mistakenly huge
-  * sheet degrades to a truncated workbook instead of a driver OOM.
-  * A cut is printed as a warning, never silent.
+  * DRIVER-SIDE BY DESIGN, exactly like the reference's pandas frames: a
+  * workbook is a human artifact of collected rows; the distributed
+  * artifacts remain [[ReportSink.writeSheets]]'s directories.
+  * `maxRowsPerSheet` caps the collect ([[ReportSink.collectCapped]]) so
+  * a huge sheet degrades to a truncated workbook, never a driver OOM;
+  * a cut is printed as a warning, never silent.
   */
 object XlsxWriter {
 
@@ -122,13 +120,10 @@ object XlsxWriter {
   def write(path: String, sheets: Seq[(String, DataFrame)],
             maxRowsPerSheet: Int = 1000000): Unit =
     writeRaw(path, sheets.map { case (name, df) =>
-      val header = df.columns.toSeq
-      // limit+1 so truncation is detectable without a separate count
-      val rows = df.limit(maxRowsPerSheet + 1).collect()
-        .map(r => (0 until r.length).map(i => r.get(i)): Seq[Any]).toSeq
-      if (rows.length > maxRowsPerSheet)
+      val (header, rows, cut) = ReportSink.collectCapped(df, maxRowsPerSheet)
+      if (cut)
         println(s"Warning: sheet '$name' truncated at $maxRowsPerSheet rows " +
           s"in $path.")
-      (name, header, rows.take(maxRowsPerSheet))
+      (name, header, rows)
     })
 }

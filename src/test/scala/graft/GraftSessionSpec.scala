@@ -57,6 +57,15 @@ class GraftSessionSpec extends SparkTestBase {
     NativeFunctions.ensureRegistered(bare) // idempotent
   }
 
+  test("SPARK_GRAFT_CPUS is a positive thread count, else fails naming itself") {
+    assert(GraftSession.parseCpus(" 6 ") === 6)
+    for (bad <- Seq("four", "2.5", "", "0", "-3", "99999999999")) {
+      val e = intercept[IllegalArgumentException](GraftSession.parseCpus(bad))
+      assert(!e.isInstanceOf[NumberFormatException], bad)
+      assert(e.getMessage === s"SPARK_GRAFT_CPUS must be a positive integer, got '$bad'")
+    }
+  }
+
   test("cli.Main applies the engine profile and no shuffle or scan sizing") {
     val sizing = Seq("spark.sql.shuffle.partitions",
       "spark.sql.files.openCostInBytes")

@@ -52,6 +52,29 @@ class ObservabilitySpec extends SparkTestBase {
     } finally spark.listenerManager.unregister(listener)
   }
 
+  test("observe() reports a census of zeros on an empty log") {
+    val got = new ConcurrentLinkedQueue[Row]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        qe.observedMetrics.get(MongoLogPipeline.RoutingMetric)
+          .foreach(got.add)
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val in = java.nio.file.Files.createTempFile("empty-mongod", ".log")
+      val lines = graft.engine.ingest.Sources.readLines(spark, in.toString)
+      assert(MongoLogPipeline.observed(MongoLogPipeline.parsedScan(lines)).count() === 0L)
+      val deadline = System.nanoTime() + 10_000_000_000L
+      while (got.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(!got.isEmpty, "no observed metrics delivered")
+      // zeros, not NULLs: a sum over no rows is NULL, a count is 0
+      assert(got.poll().toSeq === Seq.fill(5)(0L))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("reportAll census agrees with the observe() routing metrics") {
     // two independent implementations of the same census — the oracle-
     // checked report query and the in-job observed metrics — must agree.

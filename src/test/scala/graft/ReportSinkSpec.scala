@@ -88,6 +88,23 @@ class ReportSinkSpec extends SparkTestBase {
     assert(spark.read.text(s"${out.getAbsolutePath}/warnings").count() === 1L)
   }
 
+  test("a failing warnings write reads as a report error and unpersists the table") {
+    val dir = java.nio.file.Files.createTempDirectory("clifail").toFile
+    val in = new java.io.File(dir, "slow.log")
+    java.nio.file.Files.writeString(in.toPath, log)
+    val blocker = new java.io.File(dir, "not-a-dir")
+    java.nio.file.Files.writeString(blocker.toPath, "")
+    val report = graft.engine.mysql.MySqlLogPipeline.report(
+      graft.engine.mysql.MySqlLogPipeline.entriesFromFiles(
+        graft.engine.ingest.Sources.readWholeFile(spark, in.getAbsolutePath)))
+    val (ok, err) = Console.withOut(new java.io.ByteArrayOutputStream) {
+      ReportSink.write(report, s"${blocker.getAbsolutePath}/report", xlsx = true)
+    }
+    assert(!ok)
+    assert(err.startsWith("Error writing report: "), err)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("query CLI runs a registry operator against a table dir") {
     spark // force session init so Main's getOrCreate reuses it
     val dir = java.nio.file.Files.createTempDirectory("cliq").toFile
