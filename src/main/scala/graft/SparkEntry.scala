@@ -150,8 +150,8 @@ object SparkEntry {
       MongoLogPipeline.nonSlow(mongoScan(s, dir)).orderBy(col("line_no"))),
     "mongo_parse_errors" -> ((s, dir) =>
       MongoLogPipeline.parseErrors(mongoScan(s, dir)).orderBy(col("line_no"))),
-    // S2 scale path: the SAME aggregate through real files + the
-    // record-delimited parallel reader instead of wholetext content rows.
+    // S2 file path: the SAME aggregate through real files and cli.Main's
+    // entry-record reader instead of wholetext content rows.
     "mysql_scale_agg" -> ((s, dir) =>
       MySqlLogPipeline.parseEntries(
         Sources.readDelimited(s, logFileDir(s, dir, "mysql"))).aggregate),

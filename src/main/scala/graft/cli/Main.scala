@@ -11,18 +11,19 @@ import graft.engine.report.ReportSink
   *
   * Usage:
   *   graft.cli.Main --mode mongo|mysql --input <log path/glob>
-  *                  --output <report dir> [--csv] [--scale] [--xlsx]
-  *                  [--html]
+  *                  --output <report dir> [--csv] [--xlsx] [--html]
   *   graft.cli.Main --mode query --query <registry name>
   *                  --input <sf table dir> --output <result dir> [--csv]
+  *                  [--stage-cache-dir <dir>]
   *
   * --mode mongo|mysql runs the pipeline's one report
   * ([[graft.engine.report.ReportSink.write]]): its notices, the
   * warnings file and the per-sheet dirs; --xlsx adds
   * `<output>/report.xlsx` (the reference's workbook, mongo_parser.py:136-141)
   * and --html `<output>/report.html` (the K3 page analog,
-  * mongo_parser.py:146-192). --scale reads MySQL entries record-delimited
-  * in parallel instead of whole files.
+  * mongo_parser.py:146-192). Mongo reads lines
+  * ([[graft.engine.ingest.Sources.readLines]]), MySQL `# Time: ` entry
+  * records ([[graft.engine.ingest.Sources.readDelimited]]).
   * --mode query runs any registered operator from [[graft.SparkEntry]]
   * against a table dir and writes its result (`--query list` lists them).
   */
@@ -30,9 +31,8 @@ object Main {
 
   private case class Args(mode: String = "", input: String = "",
                           output: String = "", csv: Boolean = false,
-                          scale: Boolean = false, xlsx: Boolean = false,
-                          html: Boolean = false, query: String = "",
-                          stageCacheDir: String = "")
+                          xlsx: Boolean = false, html: Boolean = false,
+                          query: String = "", stageCacheDir: String = "")
 
   private def parseArgs(argv: List[String], a: Args = Args()): Args = argv match {
     case "--mode" :: v :: rest   => parseArgs(rest, a.copy(mode = v))
@@ -40,7 +40,6 @@ object Main {
     case "--output" :: v :: rest => parseArgs(rest, a.copy(output = v))
     case "--query" :: v :: rest  => parseArgs(rest, a.copy(query = v))
     case "--csv" :: rest         => parseArgs(rest, a.copy(csv = true))
-    case "--scale" :: rest       => parseArgs(rest, a.copy(scale = true))
     case "--xlsx" :: rest        => parseArgs(rest, a.copy(xlsx = true))
     case "--html" :: rest        => parseArgs(rest, a.copy(html = true))
     // durable StageCache (spark.graft.stageCache.dir): shared-stage
@@ -94,10 +93,7 @@ object Main {
         val report =
           if (args.mode == "mongo")
             MongoLogPipeline.report(Sources.readLines(spark, args.input))
-          else MySqlLogPipeline.report(
-            if (args.scale) Sources.readDelimited(spark, args.input)
-            else MySqlLogPipeline.entriesFromFiles(
-              Sources.readWholeFile(spark, args.input)))
+          else MySqlLogPipeline.report(Sources.readDelimited(spark, args.input))
         ReportSink.write(report, args.output, args.csv, args.xlsx, args.html)
     }
     if (ok) println(s"Report written to ${args.output}")

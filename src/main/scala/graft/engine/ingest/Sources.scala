@@ -2,13 +2,16 @@ package graft.engine.ingest
 
 import java.net.URI
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.reflect.ClassTag
+
+import org.apache.spark.rdd.{NewHadoopRDD, RDD}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.{LongWritable, Text}
 import org.apache.hadoop.mapreduce.Job
-import org.apache.hadoop.mapreduce.lib.input.{FileInputFormat, TextInputFormat}
+import org.apache.hadoop.mapreduce.lib.input.{FileInputFormat, FileSplit, TextInputFormat}
+import graft.engine.mysql.MySqlLogPipeline
 
 /** Log ingestion sources (SURVEY.md §2.1 S1-S3).
   *
@@ -16,15 +19,15 @@ import org.apache.hadoop.mapreduce.lib.input.{FileInputFormat, TextInputFormat}
   * numbers lines (and slow-log entries) 1-based in file order
   * (mongo_parser.py:28, mysqlLogParser.py:52). Spark has no global row
   * order, so the file readers materialize an explicit `line_no` /
-  * `entry_no` at ingest with `RDD.zipWithIndex`, which numbers in
-  * partition order. Partition order is file order because the records
-  * come from a Hadoop RDD over one URI-sorted file listing, whose splits
-  * keep the listing's order and, within a file, offset order. A
-  * `spark.read` scan must never feed a numbering: it bin-packs splits by
-  * size, so a multi-file directory (or one file large enough to split)
-  * enumerates out of file order. Downstream operators never rely on
-  * implicit order; they use the explicit number (e.g. `min_by(x,
-  * line_no)` for "first in file order" samples).
+  * `entry_no` at ingest, in the order of a Hadoop RDD over one
+  * URI-sorted file listing, one partition per file: [[readLines]] with
+  * `RDD.zipWithIndex`, which numbers in partition order, [[readDelimited]]
+  * within each file as it reads. A `spark.read` scan must never feed a
+  * numbering: it bin-packs splits by size, so a multi-file directory (or
+  * one file large enough to split) enumerates out of file order.
+  * Downstream operators never rely on implicit order; they use the
+  * explicit number (e.g. `min_by(x, line_no)` for "first in file order"
+  * samples).
   */
 object Sources {
 
@@ -105,33 +108,38 @@ object Sources {
   private def sortedFiles(scan: DataFrame): Array[String] =
     scan.inputFiles.sorted
 
-  /** (byte offset within its file, record) per line or per
-    * `delimiter`-split record, in [[sortedFiles]] order and, within a
-    * file, in offset order: `getSplits` keeps the listing's order and cuts
-    * each file into offset-ordered splits. The paths go in as `Path`s (a
+  /** `perFile(file_id, file length, records)` over each file's lines or
+    * `delimiter`-split records, keyed by byte offset (the reader reuses
+    * its Writables: copy out). Every file is one partition (`SPLIT_MINSIZE`
+    * is `Long.MaxValue`), read once, as a stream, by one task, in
+    * [[sortedFiles]] order; `file_id` is the file's index in that listing
+    * (an empty file gets no partition). The paths go in as `Path`s (a
     * comma in a file name stays in it) with Hadoop's glob characters
-    * escaped, and are listed on one thread (the multi-threaded listing
-    * returns files in completion order).
+    * escaped, listed on one thread (more return files in completion order).
     */
-  private def records(spark: SparkSession, path: String,
-                      delimiter: Option[String]): RDD[(Long, String)] = {
+  private def records[T: ClassTag](spark: SparkSession, path: String, delimiter: Option[String])(
+      perFile: (Long, Long, Iterator[(LongWritable, Text)]) => Iterator[T]): RDD[T] = {
     val files = sortedFiles(spark.read.text(path))
-    if (files.isEmpty) spark.sparkContext.emptyRDD[(Long, String)]
+    if (files.isEmpty) spark.sparkContext.emptyRDD[T]
     else {
       val job = Job.getInstance(spark.sparkContext.hadoopConfiguration)
       val conf = job.getConfiguration
       delimiter.foreach(conf.set("textinputformat.record.delimiter", _))
+      conf.setLong(FileInputFormat.SPLIT_MINSIZE, Long.MaxValue)
       conf.setInt(FileInputFormat.LIST_STATUS_NUM_THREADS, 1)
-      FileInputFormat.setInputPaths(job, files.toIndexedSeq.map { f =>
-        val u = new URI(f)
+      val uris = files.map(new URI(_))
+      FileInputFormat.setInputPaths(job, uris.toIndexedSeq.map { u =>
         new Path(u.getScheme, u.getAuthority,
           u.getPath.replaceAll("""([\\\[\]{}*?])""", """\\$1"""))
       }: _*)
+      val ids = uris.map(_.getPath).zipWithIndex.map { case (p, i) => p -> i.toLong }.toMap
       spark.sparkContext
-        .newAPIHadoopRDD(conf, classOf[TextInputFormat],
-          classOf[LongWritable], classOf[Text])
-        // the record reader reuses its Writables: copy out per record
-        .map { case (off, t) => (off.get(), t.toString) }
+        .newAPIHadoopRDD(conf, classOf[TextInputFormat], classOf[LongWritable], classOf[Text])
+        .asInstanceOf[NewHadoopRDD[LongWritable, Text]]
+        .mapPartitionsWithInputSplit { (split, recs) =>
+          val file = split.asInstanceOf[FileSplit]
+          perFile(ids(file.getPath.toUri.getPath), file.getLength, recs)
+        }
     }
   }
 
@@ -142,17 +150,17 @@ object Sources {
     *
     * `zipWithIndex` counts the first n−1 partitions of [[records]] in a
     * job of its own (Spark 4.1.2's `ZippedWithIndexRDD` constructor, as
-    * its bytecode reads): an input of one split (a file under one block)
-    * runs no such job and is read once, a multi-split input reads n−1
-    * splits twice, and the job runs when this reader is called, not when
-    * the DataFrame is first used. The trailing repartition round-robins the numbered lines so
-    * the (CPU-heavy) downstream parse uses every core regardless of file
-    * count.
+    * its bytecode reads): a single file, of any size, runs no such job and
+    * is read once, a directory of n files reads n−1 of them twice, and the
+    * job runs when this reader is called, not when the DataFrame is first
+    * used. The trailing repartition round-robins the numbered lines so the
+    * (CPU-heavy) downstream parse uses every core regardless of file count.
     */
   def readLines(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    records(spark, path, None).zipWithIndex()
-      .map { case ((_, line), i) => (line, i + 1) }
+    records(spark, path, None)((_, _, recs) => recs.map(_._2.toString))
+      .zipWithIndex()
+      .map { case (line, i) => (line, i + 1) }
       .toDF("line", "line_no")
       .repartition(spark.sparkContext.defaultParallelism)
   }
@@ -163,10 +171,9 @@ object Sources {
     lines.zipWithIndex.map { case (l, i) => (l, i + 1L) }.toDF("line", "line_no")
   }
 
-  /** S2 parity path: whole-file scan (mysqlLogParser.py:218-219).
-    * One row per file: (file_id, content). Only for small-file parity runs —
-    * a single 100 TB record is the scale-killer SURVEY.md §7.2 flags; the
-    * scale path is [[readDelimited]].
+  /** S2 reference path: whole-file scan (mysqlLogParser.py:218-219), one
+    * row per file: (file_id, content), the spec [[readDelimited]] is held
+    * to. A file is one string here (SURVEY.md §7.2's scale-killer).
     *
     * `file_id` is dense and 0-based in file-name order — the order
     * [[readLines]] and [[readDelimited]] number in — taken from
@@ -192,44 +199,34 @@ object Sources {
     Seq((0L, content)).toDF("file_id", "content")
   }
 
-  /** S2 scale path: record-delimited read via Hadoop's configurable record
-    * delimiter. Splits a MySQL slow log into one record per `# Time: ` entry
-    * WITHOUT loading whole files into single rows, so a 100 TB log dir scans
-    * in parallel with normal HDFS/S3 splits. Returns the pipeline's entries
-    * shape (file_id, entry_no, ord, entry) with `file_id` 0 and `ord` =
-    * `entry_no`.
-    *
-    * Offset 0 marks each file's first record, which keeps its own content
-    * verbatim: either a full first entry or a preamble (the
-    * `mysqld ... started with:` header). Preambles are dropped BEFORE
-    * numbering, so `entry_no` is the 1-based entry index in (file name,
-    * offset) order — what the whole-file path gives a single file
-    * (mysqlLogParser.py:52). Numbered as in [[readLines]], counting job
-    * included.
+  /** S2: a slow-log directory or file as entry records, the rows
+    * `entriesFromFiles(readWholeFile(path))` gives — (file_id, entry_no,
+    * ord = file_id·2^32 + entry_no, entry) — without loading a file into
+    * one string. Hadoop splits each file at the reference's marker
+    * `# Time: ` wherever it occurs (mysqlLogParser.py:44-53, P8), one
+    * partition per file: a single huge file is read by one task, as a
+    * stream. The offset-0 record is what precedes the first marker (the
+    * `mysqld ... started with:` preamble, or nothing) and is dropped;
+    * every later record gets its marker back. A file that ends in the
+    * marker ends in an empty entry, which `split` yields and Hadoop does
+    * not: it is added where the last record ends one marker short of the
+    * file's end. Entries are numbered within their file from 1 as they
+    * are read, and parsed in its partition: spread over 4 partitions, a
+    * 10.5 MB file's report peaked ~40% higher on the heap (perfbench).
     */
-  def readDelimited(spark: SparkSession, path: String,
-                    delimiter: String = "\n# Time: "): DataFrame = {
+  def readDelimited(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    records(spark, path, Some(delimiter))
-      .filter { case (off, rec) => off != 0L || rec.startsWith("# Time: ") }
-      .zipWithIndex()
-      .map { case ((off, rec), i) => (i + 1, off, rec) }
-      .toDF("entry_no", "off", "rec")
-      .select(lit(0L).as("file_id"), col("entry_no"), col("entry_no").as("ord"),
-        delimitedEntry(col("rec"), col("off") === 0L).as("entry"))
-      .repartition(spark.sparkContext.defaultParallelism)
-  }
-
-  /** A `"\n# Time: "`-split slow-log record → its entry text; the one
-    * restoration rule of the batch ([[readDelimited]]) and streaming
-    * (`MySqlStream`) readers. The delimiter consumed every later
-    * record's marker and the trailing newline of the record before it;
-    * a file's first record (`fileFirst`) kept its own. The query-capture
-    * regex needs a newline-terminated `SET timestamp=...;` line, so the
-    * newline is restored wherever it is missing.
-    */
-  def delimitedEntry(rec: Column, fileFirst: Column): Column = {
-    val marked = when(fileFirst, rec).otherwise(concat(lit("# Time: "), rec))
-    when(marked.endsWith("\n"), marked).otherwise(concat(marked, lit("\n")))
+    val marker = MySqlLogPipeline.EntryMarker // ASCII: length == bytes
+    records(spark, path, Some(marker)) { (fileId, length, recs) =>
+      var n = 0L
+      var end = 0L
+      def entry(body: String) = { n += 1; (fileId, n, (fileId << 32) + n, marker + body) }
+      val entries = recs.flatMap { case (off, rec) =>
+        end = off.get + rec.getLength
+        if (off.get == 0L) None else Some(entry(rec.toString))
+      }
+      // `++` takes its operand by name: it runs once `entries` is drained
+      entries ++ (if (end + marker.length == length) Iterator.single(entry("")) else Iterator.empty)
+    }.toDF("file_id", "entry_no", "ord", "entry")
   }
 }

@@ -18,10 +18,9 @@ import graft.engine.report.ReportSink
   * seven captures, their pyStrip and the query fingerprint in ONE scan
   * per entry, value-identical to the seven regex patterns below),
   * try_cast, min_by — so the whole parse is one WholeStageCodegen span
-  * per branch and the only shuffle is the aggregate's groupBy. At scale,
-  * input arrives pre-split as entry records
-  * ([[graft.engine.ingest.Sources.readDelimited]]) rather than
-  * whole-file strings.
+  * per branch and the only shuffle is the aggregate's groupBy. Files
+  * arrive as entry records ([[graft.engine.ingest.Sources.readDelimited]]),
+  * the rows [[entriesFromFiles]] cuts from whole-file strings.
   *
   * A report parses once: [[report]] persists [[projectedOf]] for the
   * report's lifetime and derives all three outputs from it with
@@ -45,6 +44,9 @@ object MySqlLogPipeline {
 
   val EmptyQueryPlaceholder = "N/A (Query not captured)"
 
+  /** P8: the marker every entry starts with (mysqlLogParser.py:44). */
+  val EntryMarker = "# Time: "
+
   final case class Result(detailed: DataFrame, aggregate: DataFrame,
                           warnings: DataFrame)
 
@@ -57,13 +59,13 @@ object MySqlLogPipeline {
   def entriesFromFiles(files: DataFrame): DataFrame =
     files
       .select(col("file_id"),
-        posexplode(split(col("content"), "# Time: ", -1)).as(Seq("pos", "body")))
-      .filter(col("pos") > 0) // element 0 is the pre-"# Time: " preamble
+        posexplode(split(col("content"), EntryMarker, -1)).as(Seq("pos", "body")))
+      .filter(col("pos") > 0) // element 0 is the pre-marker preamble
       .select(
         col("file_id"),
         col("pos").cast("long").as("entry_no"),
         (col("file_id") * lit(1L << 32) + col("pos")).as("ord"),
-        concat(lit("# Time: "), col("body")).as("entry"))
+        concat(lit(EntryMarker), col("body")).as("entry"))
 
   /** Entry records → detailed + aggregate + warnings.
     * Input: (file_id, entry_no, ord, entry).
@@ -214,7 +216,7 @@ object MySqlLogPipeline {
 
   /** The `cli.Main` report over entry records: [[projectedOf]] persisted
     * for the report, its [[Census]] (empty: no complete entry), the
-    * warnings and the two reference sheets. */
+    * warnings and the two reference sheets (Detailed in file order). */
   def report(entries: DataFrame): ReportSink.LogReport = {
     val projected = projectedOf(entries).persist(StorageLevel.MEMORY_AND_DISK)
     val res = resultFromProjected(projected)
@@ -222,7 +224,8 @@ object MySqlLogPipeline {
       emptyNotice = "Warning: No valid log entries found in the input.",
       warningCount = col("warnings"),
       warnings = res.warnings, warningCol = "warning",
-      sheets = ReportSink.MySqlSheets.zip(Seq(referenceDetailed(res.detailed), res.aggregate)))
+      sheets = ReportSink.MySqlSheets.zip(Seq(
+        referenceDetailed(ReportSink.inFileOrder(res.detailed, "ord")), res.aggregate)))
   }
 
   /** Reference-equivalent entry point: whole-log content rows in,

@@ -30,6 +30,11 @@ object ReportSink {
                              warningCol: String,
                              sheets: Seq[(String, DataFrame)])
 
+  /** A sheet's rows in file order by `key`, as one sorted partition: a
+    * global `orderBy` would sample first, re-running the sheet's branch. */
+  def inFileOrder(df: DataFrame, key: String): DataFrame =
+    df.repartition(1).sortWithinPartitions(key)
+
   /** Run a log report as the reference's CLI does (mongo_parser.py:218-222):
     * the two notices, then the warnings file, the sheets and, on request,
     * the workbook and the page; `pinned` is unpersisted after. The notices

@@ -2,27 +2,25 @@ package graft.engine.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.ingest.Sources
 import graft.engine.mysql.MySqlLogPipeline
 
 /** Structured Streaming variant of the MySQL slow-log pipeline
   * (SURVEY.md §2.9 flagged this as the one non-streamable branch because
   * the parity path splits whole files; this closes it).
   *
-  * The batch scale reader ([[graft.engine.ingest.Sources.readDelimited]])
-  * gets entry records from Hadoop's `textinputformat.record.delimiter`,
-  * which has no streaming hook — but the text DATASOURCE's `lineSep`
-  * option produces the same record shape and works under `readStream`:
-  * each record is one slow-log entry body, split at `"\n# Time: "`, and
-  * new files landing in the directory stream in incrementally. Records
-  * become entries through the batch reader's one restoration rule
-  * ([[graft.engine.ingest.Sources.delimitedEntry]]), with one
-  * difference: streaming records carry no byte offset, so "first record
-  * of its file" is recognized by its verbatim `# Time: ` prefix instead
-  * of offset 0. A non-entry file preamble therefore gets the marker
-  * prepended and flows to the WARNINGS channel (P10 gate) instead of
-  * being silently dropped — at worst one diagnostic row per file, and
-  * arguably the more honest treatment for a tailing deployment.
+  * The batch reader ([[graft.engine.ingest.Sources.readDelimited]])
+  * splits files at `# Time: ` with Hadoop's
+  * `textinputformat.record.delimiter`, which has no streaming hook — but
+  * the text DATASOURCE's `lineSep` option cuts the same records and works
+  * under `readStream`, so new files landing in the directory stream in
+  * incrementally. Streaming records carry no byte offset, so a file's
+  * first record cannot be told from an entry: an empty one (the file began
+  * with the marker) is dropped, and a non-empty one gets the marker like
+  * every record. A file preamble therefore flows to the WARNINGS channel
+  * (P10 gate) instead of being silently dropped — at worst one diagnostic
+  * row per file, and arguably the more honest treatment for a tailing
+  * deployment. Dropping empty records also drops the empty entry that
+  * two consecutive markers give in batch.
   *
   * Everything downstream reuses [[MySqlLogPipeline.parseEntries]]
   * verbatim — the regex battery is a stateless projection, so the only
@@ -33,24 +31,22 @@ object MySqlStream {
   /** Streaming entry source over a log directory. */
   def entryStream(spark: SparkSession, path: String,
                   maxFilesPerTrigger: Int = 0): DataFrame = {
-    val r = spark.readStream.option("lineSep", "\n# Time: ")
+    val r = spark.readStream.option("lineSep", MySqlLogPipeline.EntryMarker)
     val r2 = if (maxFilesPerTrigger > 0)
       r.option("maxFilesPerTrigger", maxFilesPerTrigger) else r
     restoreEntries(r2.text(path))
   }
 
-  /** Delimiter-stripped records (`value: String`) → the
+  /** Marker-split records (`value: String`) → the
     * (file_id, entry_no, ord, entry) shape [[MySqlLogPipeline.parseEntries]]
     * expects. File order doesn't exist in a stream, so the provenance keys
     * are constants; the streaming aggregate samples by EVENT time instead
     * (see [[windowedAggregate]]), exactly like [[MongoStream]].
     */
   def restoreEntries(records: DataFrame): DataFrame =
-    records.select(
+    records.filter(col("value") =!= "").select(
       lit(0L).as("file_id"), lit(0L).as("entry_no"), lit(0L).as("ord"),
-      Sources.delimitedEntry(col("value"), col("value").startsWith("# Time: "))
-        .as("entry"))
-      .filter(col("entry") =!= "# Time: \n") // file began with the delimiter
+      concat(lit(MySqlLogPipeline.EntryMarker), col("value")).as("entry"))
 
   /** Slow-log `# Time:` values in the wild are either the legacy
     * `yymmdd hh:mm:ss` form or ISO-8601 (5.7+, log_timestamps=UTC/SYSTEM);

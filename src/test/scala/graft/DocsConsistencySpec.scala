@@ -11,9 +11,10 @@ import scala.jdk.CollectionConverters._
   * `oracleSql` entry or a documented rows-only rationale — is asserted
   * structurally too: the driver records a weaker check for missing
   * oracles, so an accidentally-dropped oracle would otherwise demote a
-  * query silently.)
+  * query silently.) `cli.Main`'s usage text is held to its argument
+  * parser the same way, so a deleted flag cannot linger in the docs.
   */
-class DocsConsistencySpec extends org.scalatest.funsuite.AnyFunSuite {
+class DocsConsistencySpec extends SparkTestBase {
 
   private lazy val docNames: Seq[String] = {
     val lines = java.nio.file.Files
@@ -36,6 +37,20 @@ class DocsConsistencySpec extends org.scalatest.funsuite.AnyFunSuite {
     val stale = docNames.toSet.diff(SparkEntry.queries.keySet)
     assert(stale.isEmpty,
       s"QUERIES.md rows with no registered query: ${stale.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("cli.Main's usage in its scaladoc and in README lists the flags parseArgs takes") {
+    def flags(text: String): Set[String] = "--[a-z][a-z-]*".r.findAllIn(text).toSet
+    val src = java.nio.file.Files.readString(scalaSources(new java.io.File("src/main"))
+      .find(_.getPath.endsWith("cli/Main.scala")).get.toPath)
+    val parsed = """case "(--[a-z-]+)"""".r.findAllMatchIn(src).map(_.group(1)).toSet
+    val usage = src.substring(src.indexOf("* Usage:"), src.indexOf("*\n", src.indexOf("* Usage:")))
+    val readme = java.nio.file.Files.readAllLines(java.nio.file.Paths.get("README.md")).asScala
+      .dropWhile(!_.startsWith("graft.cli.Main ")).zipWithIndex
+      .takeWhile { case (l, i) => i == 0 || !l.startsWith("graft.") }.map(_._1).mkString("\n")
+    assert(parsed.contains("--mode") && parsed.contains("--html"), parsed)
+    assert(flags(usage) === parsed, "cli.Main scaladoc usage")
+    assert(flags(readme) === parsed, "README cli.Main usage")
   }
 
   test("every registered query has an oracle (or is a documented rows-only case)") {

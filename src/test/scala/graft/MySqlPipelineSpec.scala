@@ -168,20 +168,21 @@ class MySqlPipelineSpec extends SparkTestBase {
          |SELECT $i; -- ${"x" * pad}
          |""".stripMargin
     // file a: 1 entry; file b: 3 much larger entries — size-descending
-    // scan order would visit b first and number its entries 1-3
+    // scan order would visit b first and give it file_id 0
     java.nio.file.Files.writeString(new java.io.File(dir, "a.log").toPath,
       entry(1, 1))
     java.nio.file.Files.writeString(new java.io.File(dir, "b.log").toPath,
       entry(2, 4000) + entry(3, 4000) + entry(4, 4000))
     try {
       val got = Sources.readDelimited(spark, dir.getAbsolutePath)
-        .orderBy("entry_no").collect()
-        .map(r => (r.getAs[Long]("entry_no"),
+        .orderBy("ord").collect()
+        .map(r => (r.getAs[Long]("file_id"), r.getAs[Long]("entry_no"),
           r.getAs[String]("entry").linesIterator
             .find(_.startsWith("SET timestamp=")).get))
+      // entries are numbered within their file, as the reference does
       assert(got.toSeq === Seq(
-        (1L, "SET timestamp=1;"), (2L, "SET timestamp=2;"),
-        (3L, "SET timestamp=3;"), (4L, "SET timestamp=4;")))
+        (0L, 1L, "SET timestamp=1;"), (1L, 1L, "SET timestamp=2;"),
+        (1L, 2L, "SET timestamp=3;"), (1L, 3L, "SET timestamp=4;")))
     } finally {
       dir.listFiles().foreach(_.delete()); dir.delete()
     }

@@ -42,11 +42,11 @@ class OneParseSpec extends SparkTestBase {
 
   /** Input bytes of one `cli.Main --xlsx` report; the report must leave
     * the session's cache as empty as it found it. */
-  private def report(mode: String, in: String, extra: String*): (Long, String) = {
+  private def report(mode: String, in: String): (Long, String) = {
     spark.catalog.clearCache()
     val out = Files.createTempDirectory(s"oneparse-$mode").toFile.getAbsolutePath
     val n = bytesRead(Main.main(Array("--mode", mode, "--input", in,
-      "--output", out, "--xlsx") ++ extra))
+      "--output", out, "--xlsx")))
     assert(spark.sharedState.cacheManager.isEmpty, s"$mode report left a cached table")
     (n, out)
   }
@@ -74,33 +74,29 @@ class OneParseSpec extends SparkTestBase {
     (single.getAbsolutePath, rotated.getAbsolutePath)
   }
 
-  private def mysqlWholeFile(in: String): Unit = {
+  private def mysqlReport(in: String): Unit = {
     val parsePass = bytesRead(noop(MySqlLogPipeline.projectedOf(
-      MySqlLogPipeline.entriesFromFiles(Sources.readWholeFile(spark, in)))))
+      Sources.readDelimited(spark, in))))
     val (reportBytes, out) = report("mysql", in)
     assert(parsePass > 0)
     assert(reportBytes === parsePass)
-    // the persisted table serves the same warnings as the unpersisted parse
+    // the persisted table serves the whole-file parse's warnings
     assert(warningsText(out) === MySqlLogPipeline.parse(Sources.readWholeFile(spark, in))
       .warnings.collect().map(_.getAs[String]("warning") + "\n").mkString)
   }
 
   test("mysql report reads a single slow log once") {
-    mysqlWholeFile(mysqlInputs._1)
+    mysqlReport(mysqlInputs._1)
   }
 
   test("mysql report reads a log rotated into four files once") {
-    mysqlWholeFile(mysqlInputs._2)
+    mysqlReport(mysqlInputs._2)
   }
 
-  test("mysql --scale report reads its delimited records once") {
-    val in = mysqlInputs._1
-    val parsePass = bytesRead(noop(MySqlLogPipeline.projectedOf(
-      Sources.readDelimited(spark, in))))
-    val (reportBytes, _) = report("mysql", in, "--scale")
-    assert(parsePass > 0)
-    assert(reportBytes === parsePass)
-  }
+  /** `body` with local files cut into 16 KB blocks (the uncached local
+    * file system reads the block size), so the sf0.001 logs span many. */
+  private def smallBlocks[T](body: => T): T =
+    withHadoopConf("fs.local.block.size" -> "16384", "fs.file.impl.disable.cache" -> "true")(body)
 
   /** The sf0.001 mongod log as one file. */
   private lazy val mongoInput: File = {
@@ -121,16 +117,25 @@ class OneParseSpec extends SparkTestBase {
     assert(warningsText(out).nonEmpty)
   }
 
-  // A file under one block is one split: zipWithIndex runs no counting
-  // pass over it, so the report reads each byte exactly once.
+  // Every file is one partition, and a single file runs no line-numbering
+  // count, so a report reads each byte exactly once.
   test("single-split mongo report reads exactly the file's bytes") {
     val (reportBytes, _) = report("mongo", mongoInput.getAbsolutePath)
     assert(reportBytes === mongoInput.length())
   }
 
-  test("single-split mysql --scale report reads exactly the file's bytes") {
-    val in = new File(mysqlInputs._1)
-    val (reportBytes, _) = report("mysql", in.getAbsolutePath, "--scale")
-    assert(reportBytes === in.length())
+  test("mongo report above one block reads exactly the file's bytes") {
+    assert(mongoInput.length() > 4 * 16384)
+    val (reportBytes, _) = smallBlocks(report("mongo", mongoInput.getAbsolutePath))
+    assert(reportBytes === mongoInput.length())
+  }
+
+  test("mysql report reads exactly the file bytes: single, rotated, above one block") {
+    val single = new File(mysqlInputs._1)
+    val rotated = new File(mysqlInputs._2).listFiles().map(_.length()).sum
+    assert(report("mysql", single.getAbsolutePath)._1 === single.length())
+    assert(report("mysql", mysqlInputs._2)._1 === rotated)
+    assert(single.length() > 4 * 16384)
+    assert(smallBlocks(report("mysql", single.getAbsolutePath))._1 === single.length())
   }
 }

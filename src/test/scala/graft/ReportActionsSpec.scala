@@ -45,10 +45,10 @@ class ReportActionsSpec extends SparkTestBase {
     } finally spark.listenerManager.unregister(listener)
   }
 
-  private def report(mode: String, in: File, extra: String*): Seq[String] = {
+  private def report(mode: String, in: File): Seq[String] = {
     val out = Files.createTempDirectory(s"actions-$mode").toFile.getAbsolutePath
     actions(Main.main(Array("--mode", mode, "--input", in.getAbsolutePath,
-      "--output", out, "--xlsx") ++ extra))
+      "--output", out, "--xlsx")))
   }
 
   private val entry =
@@ -80,13 +80,11 @@ class ReportActionsSpec extends SparkTestBase {
     assert(got.size === 10, got)
   }
 
-  test("a mysql report runs 6 actions on one file, rotated files and --scale") {
+  test("a mysql report runs 6 actions on one file and on rotated files") {
     spark
-    val single = new File(mysqlDir, "slow.log")
-    for ((in, extra) <- Seq(single -> Nil, new File(mysqlDir, "rotated") -> Nil,
-        single -> Seq("--scale"))) {
-      val got = report("mysql", in, extra: _*)
-      assert(got.size === 6, s"${in.getName} $extra: $got")
+    for (in <- Seq(new File(mysqlDir, "slow.log"), new File(mysqlDir, "rotated"))) {
+      val got = report("mysql", in)
+      assert(got.size === 6, s"${in.getName}: $got")
     }
   }
 }

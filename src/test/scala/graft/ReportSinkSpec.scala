@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.spark.sql.Row
+
 import graft.cli.Main
+import graft.engine.ingest.Sources
+import graft.engine.mysql.MySqlLogPipeline
 import graft.engine.report.ReportSink
 
 /** Report sink (K1/K2) + CLI (K4) end-to-end: run the mysql CLI over a tiny
@@ -37,20 +41,10 @@ class ReportSinkSpec extends SparkTestBase {
         "Lock_time", "Rows_sent", "Rows_examined", "Query", "Normalized_Query"))
   }
 
-  test("mysql CLI --scale (delimited reader) produces the same sheets") {
+  test("mysql CLI drops a preamble and warns as the whole-file parse does") {
     spark
     val dir = java.nio.file.Files.createTempDirectory("cli3").toFile
-    val in = new java.io.File(dir, "slow.log")
-    java.nio.file.Files.writeString(in.toPath, log)
-    val out = new java.io.File(dir, "report")
-    Main.main(Array("--mode", "mysql", "--input", in.getAbsolutePath,
-      "--output", out.getAbsolutePath, "--scale"))
-    val d = spark.read.parquet(s"${out.getAbsolutePath}/Detailed Metrics")
-    assert(d.count() === 1L)
-    assert(d.head().getAs[String]("Normalized_Query") ===
-      "SELECT * FROM T WHERE ID = ?;")
-
-    // a real slow log opens with the server's preamble; both readers drop
+    // a real slow log opens with the server's preamble; the reader drops
     // it before numbering, so the incomplete 5th entry warns as entry 5
     val preambled = new java.io.File(dir, "preambled.log")
     java.nio.file.Files.writeString(preambled.toPath,
@@ -58,17 +52,67 @@ class ReportSinkSpec extends SparkTestBase {
         |Tcp port: 3306  Unix socket: /var/run/mysqld/mysqld.sock
         |Time                 Id Command    Argument
         |""".stripMargin + log * 4 + log.replace("# Query_time", "# Qt"))
-    def warnings(extra: String*): String = {
-      val o = new java.io.File(dir, s"report${extra.mkString}")
-      Main.main(Array("--mode", "mysql", "--input", preambled.getAbsolutePath,
-        "--output", o.getAbsolutePath) ++ extra)
-      new java.io.File(o, "warnings").listFiles()
-        .filter(_.getName.startsWith("part-"))
-        .map(f => java.nio.file.Files.readString(f.toPath)).mkString
+    val out = new java.io.File(dir, "report")
+    Main.main(Array("--mode", "mysql", "--input", preambled.getAbsolutePath,
+      "--output", out.getAbsolutePath))
+    val d = spark.read.parquet(s"${out.getAbsolutePath}/Detailed Metrics")
+    assert(d.count() === 4L)
+    assert(d.head().getAs[String]("Normalized_Query") ===
+      "SELECT * FROM T WHERE ID = ?;")
+    val warnings = partFiles(out, "warnings")
+      .map(f => java.nio.file.Files.readString(f.toPath)).mkString
+    assert(warnings.startsWith("Skipped log entry 5 due to missing fields."), warnings)
+    assert(warnings === MySqlLogPipeline.parse(Sources.readWholeFile(spark, preambled.getAbsolutePath))
+      .warnings.collect().map(_.getAs[String]("warning") + "\n").mkString)
+  }
+
+  /** A report dir's part files, in name order. */
+  private def partFiles(out: java.io.File, name: String): Seq[java.io.File] =
+    new java.io.File(out, name).listFiles().filter(_.getName.startsWith("part-"))
+      .sortBy(_.getName).toSeq
+
+  /** A sheet's rows in part-file name order (a directory read orders
+    * parts by size), each part read alone. */
+  private def sheetInOrder(out: java.io.File, sheet: String): Seq[Row] =
+    partFiles(out, sheet).flatMap(f => spark.read.parquet(f.getAbsolutePath).collect())
+
+  test("report rows are in file order: Detailed Metrics, Non-Slow Queries, warnings") {
+    spark
+    val dir = java.nio.file.Files.createTempDirectory("cliorder").toFile
+    // MySQL: 40 entries rotated into four files of unequal size
+    val rotated = new java.io.File(dir, "rotated")
+    rotated.mkdir()
+    val entries = (1 to 40).map(i => log.replace("SELECT * FROM t WHERE id = 7;", s"SELECT $i;"))
+    Seq(0, 3, 15, 22, 40).sliding(2).zipWithIndex.foreach { case (Seq(a, b), i) =>
+      java.nio.file.Files.writeString(new java.io.File(rotated, s"slow-$i.log").toPath,
+        entries.slice(a, b).mkString)
     }
-    val whole = warnings()
-    assert(whole.startsWith("Skipped log entry 5 due to missing fields."), whole)
-    assert(warnings("--scale") === whole)
+    val mysqlOut = new java.io.File(dir, "mysql")
+    Main.main(Array("--mode", "mysql", "--input", rotated.getAbsolutePath,
+      "--output", mysqlOut.getAbsolutePath))
+    assert(sheetInOrder(mysqlOut, "Detailed Metrics").map(_.getAs[String]("Query")) ===
+      (1 to 40).map(i => s"SELECT $i;"))
+
+    // Mongo: slow, non-slow and invalid lines interleaved
+    val lines = (1 to 60).map { i =>
+      val attr = s""""ns":"db.users","command":{"find":"users","filter":{"a":$i}},"durationMillis":$i"""
+      i % 3 match {
+        case 0 => s"""{"t":{"$$date":"2023-10-25T10:00:00.000Z"},"s":"I","c":"COMMAND","id":1,"ctx":"c","msg":"Slow query","attr":{$attr}}"""
+        case 1 => s"""{"t":{"$$date":"2023-10-25T10:00:00.000Z"},"s":"I","c":"NETWORK","id":2,"ctx":"c","msg":"Connection $i","attr":{}}"""
+        case _ => s"bad json line $i"
+      }
+    }
+    val in = new java.io.File(dir, "mongod.log")
+    java.nio.file.Files.writeString(in.toPath, lines.mkString("", "\n", "\n"))
+    val mongoOut = new java.io.File(dir, "mongo")
+    Main.main(Array("--mode", "mongo", "--input", in.getAbsolutePath,
+      "--output", mongoOut.getAbsolutePath))
+    def lineNos(sheet: String) = sheetInOrder(mongoOut, sheet).map(_.getAs[Long]("line_no"))
+    assert(lineNos("Detailed Metrics") === (3L to 60L by 3L))
+    assert(lineNos("Non-Slow Queries") === (1L to 60L by 3L))
+    val warnings = partFiles(mongoOut, "warnings")
+      .flatMap(f => java.nio.file.Files.readString(f.toPath).linesIterator)
+    assert(warnings === (2 to 60 by 3).map(i => s"Line $i: Invalid JSON. Skipped."))
   }
 
   test("mongo CLI writes the four reference sheets") {
@@ -94,9 +138,7 @@ class ReportSinkSpec extends SparkTestBase {
     java.nio.file.Files.writeString(in.toPath, log)
     val blocker = new java.io.File(dir, "not-a-dir")
     java.nio.file.Files.writeString(blocker.toPath, "")
-    val report = graft.engine.mysql.MySqlLogPipeline.report(
-      graft.engine.mysql.MySqlLogPipeline.entriesFromFiles(
-        graft.engine.ingest.Sources.readWholeFile(spark, in.getAbsolutePath)))
+    val report = MySqlLogPipeline.report(Sources.readDelimited(spark, in.getAbsolutePath))
     val (ok, err) = Console.withOut(new java.io.ByteArrayOutputStream) {
       ReportSink.write(report, s"${blocker.getAbsolutePath}/report", xlsx = true)
     }

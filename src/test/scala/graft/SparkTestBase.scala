@@ -21,6 +21,18 @@ trait SparkTestBase extends AnyFunSuite {
     SparkTestBase.spark
   }
 
+  /** `body` with `kvs` set in the session's Hadoop conf, restored after. */
+  def withHadoopConf[T](kvs: (String, String)*)(body: => T): T = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val before = kvs.map { case (k, _) => k -> Option(conf.get(k)) }
+    kvs.foreach { case (k, v) => conf.set(k, v) }
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None)    => conf.unset(k)
+    }
+  }
+
   /** Every `.scala` file under `dir`, recursively — for source guards. */
   def scalaSources(dir: java.io.File): Seq[java.io.File] =
     Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
