@@ -21,9 +21,8 @@ import graft.engine.report.ReportSink
   * warnings file and the per-sheet dirs; --xlsx adds
   * `<output>/report.xlsx` (the reference's workbook, mongo_parser.py:136-141)
   * and --html `<output>/report.html` (the K3 page analog,
-  * mongo_parser.py:146-192). Mongo reads lines
-  * ([[graft.engine.ingest.Sources.readLines]]), MySQL `# Time: ` entry
-  * records ([[graft.engine.ingest.Sources.readDelimited]]).
+  * mongo_parser.py:146-192). Mongo reads lines (`Sources.readLines`),
+  * MySQL `# Time: ` entry records (`Sources.readDelimited`).
   * --mode query runs any registered operator from [[graft.SparkEntry]]
   * against a table dir and writes its result (`--query list` lists them).
   */

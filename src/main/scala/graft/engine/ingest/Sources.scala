@@ -11,7 +11,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.{LongWritable, Text}
 import org.apache.hadoop.mapreduce.Job
 import org.apache.hadoop.mapreduce.lib.input.{FileInputFormat, FileSplit, TextInputFormat}
-import graft.engine.mysql.MySqlLogPipeline
 
 /** Log ingestion sources (SURVEY.md §2.1 S1-S3).
   *
@@ -20,14 +19,15 @@ import graft.engine.mysql.MySqlLogPipeline
   * (mongo_parser.py:28, mysqlLogParser.py:52). Spark has no global row
   * order, so the file readers materialize an explicit `line_no` /
   * `entry_no` at ingest, in the order of a Hadoop RDD over one
-  * URI-sorted file listing, one partition per file: [[readLines]] with
-  * `RDD.zipWithIndex`, which numbers in partition order, [[readDelimited]]
-  * within each file as it reads. A `spark.read` scan must never feed a
-  * numbering: it bin-packs splits by size, so a multi-file directory (or
-  * one file large enough to split) enumerates out of file order.
-  * Downstream operators never rely on implicit order; they use the
-  * explicit number (e.g. `min_by(x, line_no)` for "first in file order"
-  * samples).
+  * URI-sorted file listing, whose splits keep the listing's order and,
+  * within a file, offset order: [[readLines]] with `RDD.zipWithIndex`,
+  * which numbers in partition order, and [[readDelimited]] within each
+  * file (one partition per file) as it reads. A `spark.read` scan must
+  * never feed a numbering: it bin-packs splits by size, so a multi-file
+  * directory (or one file large enough to split) enumerates out of file
+  * order. Downstream operators never rely on implicit order; they use
+  * the explicit number (e.g. `min_by(x, line_no)` for "first in file
+  * order" samples).
   */
 object Sources {
 
@@ -108,24 +108,24 @@ object Sources {
   private def sortedFiles(scan: DataFrame): Array[String] =
     scan.inputFiles.sorted
 
-  /** `perFile(file_id, file length, records)` over each file's lines or
-    * `delimiter`-split records, keyed by byte offset (the reader reuses
-    * its Writables: copy out). Every file is one partition (`SPLIT_MINSIZE`
-    * is `Long.MaxValue`), read once, as a stream, by one task, in
-    * [[sortedFiles]] order; `file_id` is the file's index in that listing
-    * (an empty file gets no partition). The paths go in as `Path`s (a
-    * comma in a file name stays in it) with Hadoop's glob characters
-    * escaped, listed on one thread (more return files in completion order).
+  /** `perSplit(file_id, split length, records)` over each split's lines
+    * or `delimiter`-split records by byte offset (Writables are reused:
+    * copy out), in [[sortedFiles]] order, then offset order; `file_id` is
+    * the file's index there. Files split at blocks, or with `wholeFiles`
+    * not at all. The paths go in as `Path`s (a comma in a file name stays
+    * in it) with Hadoop's glob characters escaped, listed on one thread
+    * (more return files in completion order).
     */
-  private def records[T: ClassTag](spark: SparkSession, path: String, delimiter: Option[String])(
-      perFile: (Long, Long, Iterator[(LongWritable, Text)]) => Iterator[T]): RDD[T] = {
+  private def records[T: ClassTag](spark: SparkSession, path: String, delimiter: Option[String],
+                                   wholeFiles: Boolean)(
+      perSplit: (Long, Long, Iterator[(LongWritable, Text)]) => Iterator[T]): RDD[T] = {
     val files = sortedFiles(spark.read.text(path))
     if (files.isEmpty) spark.sparkContext.emptyRDD[T]
     else {
       val job = Job.getInstance(spark.sparkContext.hadoopConfiguration)
       val conf = job.getConfiguration
       delimiter.foreach(conf.set("textinputformat.record.delimiter", _))
-      conf.setLong(FileInputFormat.SPLIT_MINSIZE, Long.MaxValue)
+      if (wholeFiles) conf.setLong(FileInputFormat.SPLIT_MINSIZE, Long.MaxValue)
       conf.setInt(FileInputFormat.LIST_STATUS_NUM_THREADS, 1)
       val uris = files.map(new URI(_))
       FileInputFormat.setInputPaths(job, uris.toIndexedSeq.map { u =>
@@ -138,7 +138,7 @@ object Sources {
         .asInstanceOf[NewHadoopRDD[LongWritable, Text]]
         .mapPartitionsWithInputSplit { (split, recs) =>
           val file = split.asInstanceOf[FileSplit]
-          perFile(ids(file.getPath.toUri.getPath), file.getLength, recs)
+          perSplit(ids(file.getPath.toUri.getPath), file.getLength, recs)
         }
     }
   }
@@ -150,17 +150,17 @@ object Sources {
     *
     * `zipWithIndex` counts the first n−1 partitions of [[records]] in a
     * job of its own (Spark 4.1.2's `ZippedWithIndexRDD` constructor, as
-    * its bytecode reads): a single file, of any size, runs no such job and
-    * is read once, a directory of n files reads n−1 of them twice, and the
-    * job runs when this reader is called, not when the DataFrame is first
-    * used. The trailing repartition round-robins the numbered lines so the
-    * (CPU-heavy) downstream parse uses every core regardless of file count.
+    * its bytecode reads): an input of one split (a file under one block)
+    * runs no such job and is read once, a multi-split input reads n−1
+    * splits twice, and the job runs when this reader is called, not when
+    * the DataFrame is first used. The trailing repartition round-robins
+    * the numbered lines so the (CPU-heavy) downstream parse uses every
+    * core regardless of file count.
     */
   def readLines(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    records(spark, path, None)((_, _, recs) => recs.map(_._2.toString))
-      .zipWithIndex()
-      .map { case (line, i) => (line, i + 1) }
+    records(spark, path, None, wholeFiles = false)((_, _, recs) => recs.map(_._2.toString))
+      .zipWithIndex().map { case (line, i) => (line, i + 1) }
       .toDF("line", "line_no")
       .repartition(spark.sparkContext.defaultParallelism)
   }
@@ -199,34 +199,35 @@ object Sources {
     Seq((0L, content)).toDF("file_id", "content")
   }
 
+  /** P8: the marker every slow-log entry starts with (mysqlLogParser.py:44); ASCII. */
+  val EntryMarker = "# Time: "
+
   /** S2: a slow-log directory or file as entry records, the rows
     * `entriesFromFiles(readWholeFile(path))` gives — (file_id, entry_no,
     * ord = file_id·2^32 + entry_no, entry) — without loading a file into
     * one string. Hadoop splits each file at the reference's marker
     * `# Time: ` wherever it occurs (mysqlLogParser.py:44-53, P8), one
     * partition per file: a single huge file is read by one task, as a
-    * stream. The offset-0 record is what precedes the first marker (the
-    * `mysqld ... started with:` preamble, or nothing) and is dropped;
-    * every later record gets its marker back. A file that ends in the
-    * marker ends in an empty entry, which `split` yields and Hadoop does
-    * not: it is added where the last record ends one marker short of the
-    * file's end. Entries are numbered within their file from 1 as they
-    * are read, and parsed in its partition: spread over 4 partitions, a
-    * 10.5 MB file's report peaked ~40% higher on the heap (perfbench).
+    * stream. The offset-0 record (a `mysqld ... started with:` preamble,
+    * or nothing) is dropped; every later record gets its marker back. A
+    * file ending in the marker ends in an empty entry, which `split`
+    * yields and Hadoop does not: it is added where the last record ends
+    * one marker short of the file's end. Entries are numbered within
+    * their file from 1 as they are read, and parsed in its partition:
+    * spread over 4 partitions, a 10.5 MB file's report peaked ~40% higher
+    * on the heap (perfbench).
     */
   def readDelimited(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val marker = MySqlLogPipeline.EntryMarker // ASCII: length == bytes
-    records(spark, path, Some(marker)) { (fileId, length, recs) =>
-      var n = 0L
-      var end = 0L
-      def entry(body: String) = { n += 1; (fileId, n, (fileId << 32) + n, marker + body) }
+    records(spark, path, Some(EntryMarker), wholeFiles = true) { (fileId, length, recs) =>
+      var (n, end) = (0L, 0L)
+      def entry(body: String) = { n += 1; (fileId, n, (fileId << 32) + n, EntryMarker + body) }
       val entries = recs.flatMap { case (off, rec) =>
         end = off.get + rec.getLength
         if (off.get == 0L) None else Some(entry(rec.toString))
       }
       // `++` takes its operand by name: it runs once `entries` is drained
-      entries ++ (if (end + marker.length == length) Iterator.single(entry("")) else Iterator.empty)
+      entries ++ (if (end + EntryMarker.length == length) Iterator.single(entry("")) else Iterator.empty)
     }.toDF("file_id", "entry_no", "ord", "entry")
   }
 }

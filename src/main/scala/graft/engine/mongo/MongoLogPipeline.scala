@@ -264,18 +264,18 @@ object MongoLogPipeline {
   }
 
   /** The `cli.Main` report over raw lines: [[analyze]]'s scan, its
-    * [[Census]], the bad-record channel as warnings and the four sheets,
-    * line-level rows in line order. S4 reads the RAW line count, blank
-    * lines included, as the reference does: an input of only invalid
-    * lines does not warn. */
+    * [[Census]], the bad-record channel as warnings (sorted in the one
+    * task that writes them) and the four sheets. S4 reads the RAW line
+    * count, blank lines included, as the reference does: an input of only
+    * invalid lines does not warn. */
   def report(lines: DataFrame): ReportSink.LogReport = {
     val res = analyze(lines)
-    def inOrder(df: DataFrame) = ReportSink.inFileOrder(df, "line_no")
     ReportSink.LogReport(res.scan, Census,
       empty = col("lines") === 0, emptyNotice = "Warning: Input file is empty.",
-      warningCount = col("parse_errors"), warnings = inOrder(res.parseErrors),
+      warningCount = col("parse_errors"),
+      warnings = res.parseErrors.repartition(1).sortWithinPartitions("line_no"),
       warningCol = "message", sheets = ReportSink.MongoSheets.zip(Seq(
-        inOrder(res.detailed), res.queryStats, inOrder(res.nonSlow), res.errors)))
+        res.detailed, res.queryStats, res.nonSlow, res.errors)))
   }
 
   /** Whole-report census in ONE pipeline run: [[analyze]]'s persisted scan

@@ -3,6 +3,7 @@ package graft.engine.mysql
 import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.engine.ingest.Sources.EntryMarker
 import graft.engine.report.ReportSink
 
 /** MySQL/Percona slow-query-log analyzer, re-expressed as a declarative
@@ -43,9 +44,6 @@ object MySqlLogPipeline {
   val QueryP = "(?s)SET timestamp=.*?;\n(.*?)(?=\n# Time:|\\z)"
 
   val EmptyQueryPlaceholder = "N/A (Query not captured)"
-
-  /** P8: the marker every entry starts with (mysqlLogParser.py:44). */
-  val EntryMarker = "# Time: "
 
   final case class Result(detailed: DataFrame, aggregate: DataFrame,
                           warnings: DataFrame)
@@ -216,7 +214,8 @@ object MySqlLogPipeline {
 
   /** The `cli.Main` report over entry records: [[projectedOf]] persisted
     * for the report, its [[Census]] (empty: no complete entry), the
-    * warnings and the two reference sheets (Detailed in file order). */
+    * warnings and the two reference sheets, Detailed in the order of
+    * `entries` (file order from `Sources.readDelimited`). */
   def report(entries: DataFrame): ReportSink.LogReport = {
     val projected = projectedOf(entries).persist(StorageLevel.MEMORY_AND_DISK)
     val res = resultFromProjected(projected)
@@ -224,8 +223,7 @@ object MySqlLogPipeline {
       emptyNotice = "Warning: No valid log entries found in the input.",
       warningCount = col("warnings"),
       warnings = res.warnings, warningCol = "warning",
-      sheets = ReportSink.MySqlSheets.zip(Seq(
-        referenceDetailed(ReportSink.inFileOrder(res.detailed, "ord")), res.aggregate)))
+      sheets = ReportSink.MySqlSheets.zip(Seq(referenceDetailed(res.detailed), res.aggregate)))
   }
 
   /** Reference-equivalent entry point: whole-log content rows in,

@@ -30,11 +30,6 @@ object ReportSink {
                              warningCol: String,
                              sheets: Seq[(String, DataFrame)])
 
-  /** A sheet's rows in file order by `key`, as one sorted partition: a
-    * global `orderBy` would sample first, re-running the sheet's branch. */
-  def inFileOrder(df: DataFrame, key: String): DataFrame =
-    df.repartition(1).sortWithinPartitions(key)
-
   /** Run a log report as the reference's CLI does (mongo_parser.py:218-222):
     * the two notices, then the warnings file, the sheets and, on request,
     * the workbook and the page; `pinned` is unpersisted after. The notices
@@ -93,10 +88,17 @@ object ReportSink {
 
   /** A sheet's header, its first `cap` rows on the driver, and whether
     * it had more: `cap + 1` rows are collected, so a cut needs no separate
-    * count. The workbook and the page both collect through this. */
+    * count. A sheet of lines (a `line_no` column: the line reader spreads
+    * them over the cores) shows its first `cap` in line order, sorted here
+    * when it fits, taken by a top-k only when it is cut. The workbook and
+    * the page both collect through this. */
   private[report] def collectCapped(df: DataFrame, cap: Int)
       : (Seq[String], Seq[Seq[Any]], Boolean) = {
-    val rows = df.limit(cap + 1).collect().toSeq.map(_.toSeq)
-    (df.columns.toSeq, rows.take(cap), rows.length > cap)
+    def take(d: DataFrame) = d.limit(cap + 1).collect().toSeq
+    val some = take(df)
+    val rows = if (!df.columns.contains("line_no")) some
+      else if (some.length > cap) take(df.orderBy("line_no"))
+      else some.sortBy(_.getAs[Long]("line_no"))
+    (df.columns.toSeq, rows.take(cap).map(_.toSeq), rows.length > cap)
   }
 }

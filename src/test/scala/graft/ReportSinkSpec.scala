@@ -76,7 +76,17 @@ class ReportSinkSpec extends SparkTestBase {
   private def sheetInOrder(out: java.io.File, sheet: String): Seq[Row] =
     partFiles(out, sheet).flatMap(f => spark.read.parquet(f.getAbsolutePath).collect())
 
-  test("report rows are in file order: Detailed Metrics, Non-Slow Queries, warnings") {
+  /** Column `letter` of the `n`th sheet of `out/report.xlsx`, below the
+    * header, in row order. */
+  private def xlsxColumn(out: java.io.File, n: Int, letter: String): Seq[String] = {
+    val zf = new java.util.zip.ZipFile(new java.io.File(out, "report.xlsx"))
+    val xml = try new String(zf.getInputStream(zf.getEntry(s"xl/worksheets/sheet$n.xml"))
+      .readAllBytes(), "UTF-8") finally zf.close()
+    s"""<c r="$letter(\\d+)"[^>]*>(?:<v>|<is><t xml:space="preserve">)([^<]*)<""".r
+      .findAllMatchIn(xml).filter(_.group(1) != "1").map(_.group(2)).toSeq
+  }
+
+  test("report rows are in file order: both Detailed sheets, Non-Slow Queries, warnings") {
     spark
     val dir = java.nio.file.Files.createTempDirectory("cliorder").toFile
     // MySQL: 40 entries rotated into four files of unequal size
@@ -89,11 +99,13 @@ class ReportSinkSpec extends SparkTestBase {
     }
     val mysqlOut = new java.io.File(dir, "mysql")
     Main.main(Array("--mode", "mysql", "--input", rotated.getAbsolutePath,
-      "--output", mysqlOut.getAbsolutePath))
-    assert(sheetInOrder(mysqlOut, "Detailed Metrics").map(_.getAs[String]("Query")) ===
-      (1 to 40).map(i => s"SELECT $i;"))
+      "--output", mysqlOut.getAbsolutePath, "--xlsx"))
+    val queries = (1 to 40).map(i => s"SELECT $i;")
+    assert(sheetInOrder(mysqlOut, "Detailed Metrics").map(_.getAs[String]("Query")) === queries)
+    assert(xlsxColumn(mysqlOut, 1, "G") === queries)
 
-    // Mongo: slow, non-slow and invalid lines interleaved
+    // Mongo: slow, non-slow and invalid lines interleaved, spread over the
+    // cores by the reader; the workbook shows them in line order
     val lines = (1 to 60).map { i =>
       val attr = s""""ns":"db.users","command":{"find":"users","filter":{"a":$i}},"durationMillis":$i"""
       i % 3 match {
@@ -106,10 +118,15 @@ class ReportSinkSpec extends SparkTestBase {
     java.nio.file.Files.writeString(in.toPath, lines.mkString("", "\n", "\n"))
     val mongoOut = new java.io.File(dir, "mongo")
     Main.main(Array("--mode", "mongo", "--input", in.getAbsolutePath,
-      "--output", mongoOut.getAbsolutePath))
-    def lineNos(sheet: String) = sheetInOrder(mongoOut, sheet).map(_.getAs[Long]("line_no"))
-    assert(lineNos("Detailed Metrics") === (3L to 60L by 3L))
-    assert(lineNos("Non-Slow Queries") === (1L to 60L by 3L))
+      "--output", mongoOut.getAbsolutePath, "--xlsx"))
+    val slow = (3 to 60 by 3).map(_.toString)
+    val nonSlow = (1 to 60 by 3).map(_.toString)
+    assert(xlsxColumn(mongoOut, 1, "A") === slow)
+    assert(xlsxColumn(mongoOut, 3, "A") === nonSlow)
+    // the datasets hold the same rows, written in parallel in any order
+    def lineNos(sheet: String) = sheetInOrder(mongoOut, sheet).map(_.getAs[Long]("line_no").toString)
+    assert(lineNos("Detailed Metrics").sortBy(_.toInt) === slow)
+    assert(lineNos("Non-Slow Queries").sortBy(_.toInt) === nonSlow)
     val warnings = partFiles(mongoOut, "warnings")
       .flatMap(f => java.nio.file.Files.readString(f.toPath).linesIterator)
     assert(warnings === (2 to 60 by 3).map(i => s"Line $i: Invalid JSON. Skipped."))

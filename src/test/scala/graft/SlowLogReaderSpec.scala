@@ -24,7 +24,7 @@ import graft.engine.mysql.MySqlLogPipeline
   */
 class SlowLogReaderSpec extends SparkTestBase {
 
-  private val Marker = MySqlLogPipeline.EntryMarker
+  private val Marker = Sources.EntryMarker
 
   private def samples[A](g: Gen[A], n: Int): Seq[A] =
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(0x5EEDL + i)))

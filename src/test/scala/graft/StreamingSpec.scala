@@ -528,7 +528,7 @@ class StreamingSpec extends SparkTestBase {
         mysqlEntry("231026 10:00:02", 2.0, "SELECT b FROM y WHERE k = 3;"))
     // same lineSep trick on a BATCH read — entry bytes must match readDelimited
     val streamShaped = MySqlStream.restoreEntries(
-      spark.read.option("lineSep", MySqlLogPipeline.EntryMarker).text(f.getAbsolutePath))
+      spark.read.option("lineSep", Sources.EntryMarker).text(f.getAbsolutePath))
     val batch = Sources.readDelimited(spark, f.getAbsolutePath)
     assert(streamShaped.select("entry").collect().map(_.getString(0)).sorted.toSeq ===
       batch.select("entry").collect().map(_.getString(0)).sorted.toSeq)

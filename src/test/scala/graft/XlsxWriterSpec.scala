@@ -66,6 +66,21 @@ class XlsxWriterSpec extends SparkTestBase {
     }
   }
 
+  test("a sheet of lines shows its first rows in line order, whole or cut") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("xlsxorder").toFile
+    val path = new java.io.File(dir, "wb.xlsx").getAbsolutePath
+    val sheet = Seq(5L, 3L, 1L, 4L, 2L).toDF("line_no").repartition(3)
+    for ((cap, want) <- Seq(5 -> (1 to 5), 2 -> (1 to 2))) {
+      Console.withOut(new java.io.ByteArrayOutputStream) {
+        XlsxWriter.write(path, Seq("S" -> sheet), maxRowsPerSheet = cap)
+      }
+      val shown = """<c r="A\d+"><v>(\d+)</v>""".r
+        .findAllMatchIn(readZip(path)("xl/worksheets/sheet1.xml")).map(_.group(1).toInt).toSeq
+      assert(shown === want, s"cap $cap")
+    }
+  }
+
   test("mongo CLI --xlsx emits a workbook with the four reference sheets") {
     spark
     val dir = java.nio.file.Files.createTempDirectory("clix").toFile
