@@ -216,6 +216,5 @@ object BenchRun {
   def stamp(spark: SparkSession): Stamp =
     Stamp(BenchHost.gitSha, BenchHost.heapDesc, GraftSession.cpus,
       BenchHost.CanaryProto, spark.conf.get("spark.rdd.compress", "false"),
-      spark.conf.getOption(StageCache.StorageLevelConf)
-        .getOrElse(StageCache.autoModeDesc(spark)))
+      StageCache.autoModeDesc(spark))
 }

@@ -22,8 +22,8 @@ import org.apache.spark.sql.SparkSession
   *    parquet = ONE partition); at warehouse scale splits are plentiful
   *    and the default is right.
   *
-  * Any other Spark conf (e.g. `spark.graft.stageCache.storageLevel` for a
-  * pin-mode A/B) is passed the Spark way, as a `-Dspark.*` JVM property.
+  * Any other Spark conf is passed the Spark way, as a `-Dspark.*` JVM
+  * property.
   */
 object GraftSession {
 

@@ -155,7 +155,7 @@ object SparkEntry {
     "mysql_scale_agg" -> ((s, dir) =>
       MySqlLogPipeline.parseEntries(
         Sources.readDelimited(s, logFileDir(s, dir, "mysql"))).aggregate),
-    // Whole-report census: one persisted parse feeding all five branches —
+    // Whole-report census: one checkpointed parse feeding all five branches —
     // the shape a real report run uses (and what Bench should charge for
     // "the full mongo report": one scan, not five).
     "mongo_report_all" -> ((s, dir) =>

@@ -1,6 +1,7 @@
 package graft.engine
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
@@ -20,9 +21,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Mode 1 — session-local (default): computed once per session, pinned
   * either as a `localCheckpoint(eager)` in the block manager or as
   * parquet under a session-lifetime temp dir (the mode-2 write path,
-  * rooted there), chosen size-adaptively (the AUTO rule on
-  * [[AutoParquetBytesConf]]) unless [[StorageLevelConf]] pins the
-  * mode. Zero-config, but the checkpoint form is
+  * rooted there). The pin follows from the corpus size alone: the
+  * parquet pin at or above [[AutoParquetBytes]] in a local session,
+  * the checkpoint pin otherwise. Zero-config, but the checkpoint form is
   * executor-LOSS-FRAGILE: local checkpoint blocks are not replicated,
   * so on a real cluster losing any executor silently invalidates the
   * cache mid-session. The right single-process / bench mode.
@@ -73,36 +74,11 @@ object StageCache {
     */
   val DurableDirConf = "spark.graft.stageCache.dir"
 
-  /** Pin mode for the session-local (mode 1) pin: `DISK_ONLY` (the
-    * [[DefaultLevel]] checkpoint pin) or `PARQUET` — a session-local
-    * columnar pin: the stage is written as parquet under a temp dir
-    * (deleted on [[clear]]) and read back, so consumers get a vectorized
-    * scan with column pruning and predicate pushdown into the pin. Unset
-    * = size-adaptive AUTO ([[AutoParquetBytesConf]]): PARQUET for large
-    * corpora, the checkpoint pin below the crossover. Any other value
-    * fails the stage build, naming the allowed values.
+  /** The key perfbench's harness stamps its pin mode under. Nothing in
+    * `src/` reads it: the session pin follows from the corpus size
+    * alone ([[AutoParquetBytes]]).
     */
   val StorageLevelConf = "spark.graft.stageCache.storageLevel"
-
-  /** AUTO pin-mode crossover, in bytes of the stage's INPUT dir listing
-    * (the one scale signal every stage has, corpus and log dirs alike).
-    * When [[StorageLevelConf]] is unset, a stage whose input dir totals
-    * at least this many bytes gets the columnar PARQUET pin; below it,
-    * the [[DefaultLevel]] checkpoint pin. The asymmetry is measured,
-    * not guessed (full-suite A/B pairs committed in
-    * `bench_logs/r16s4_*`): the parquet pin costs a fixed ~0.1-0.3 s
-    * file-commit per stage plus footer reads per consumer — at a 17 MB
-    * corpus (sf0.1, 16 stages) that fixed cost LOST 4.5 % of the suite
-    * total with no offsetting win; at a 2.3 GB corpus (sf10) the
-    * columnar pin halved the largest build (write.parquet streams
-    * encoded columns instead of Kryo-serializing whole rows) and cut
-    * single-pass consumers 20× (pruned vectorized scan vs whole-row
-    * lz4+Kryo decode: `dedup_ngram_pairs` 12.6 → 0.63 s median). The
-    * default sits at the log-midpoint of the measured bracket's
-    * endpoints — override per session when a deployment has measured
-    * its own crossover.
-    */
-  val AutoParquetBytesConf = "spark.graft.stageCache.autoParquetBytes"
 
   /** Explain-tooling escape hatch: when `true`, [[materialized]] returns
     * the build DataFrame UNPINNED and UNCACHED, so `explain` shows the
@@ -142,53 +118,36 @@ object StageCache {
     * the same consumers over DISK_ONLY pins ran at memory-like speed
     * (sequential reads through the OS page cache, heap left entirely to
     * execution). The pin's job is to be cheap to KEEP; the page cache
-    * already keeps hot blocks in RAM without owning heap. Pass
-    * [[StorageLevelConf]] to override per session.
+    * already keeps hot blocks in RAM without owning heap.
     */
   val DefaultLevel: org.apache.spark.storage.StorageLevel =
     org.apache.spark.storage.StorageLevel.DISK_ONLY
 
-  /** Default for [[AutoParquetBytesConf]] — see its doc for the
-    * measured bracket this sits inside.
+  /** Pin-mode crossover, in bytes of the stage's INPUT dir listing
+    * (the one scale signal every stage has, corpus and log dirs alike).
+    * A stage whose input dir totals at least this many bytes gets the
+    * columnar parquet pin; below it, the [[DefaultLevel]] checkpoint
+    * pin. The asymmetry is measured, not guessed (full-suite A/B pairs
+    * committed in `bench_logs/r16s4_*`): the parquet pin costs a fixed
+    * ~0.1-0.3 s file-commit per stage plus footer reads per consumer —
+    * at a 17 MB corpus (sf0.1, 16 stages) that fixed cost LOST 4.5 % of
+    * the suite total with no offsetting win; at a 2.3 GB corpus (sf10)
+    * the columnar pin halved the largest build (write.parquet streams
+    * encoded columns instead of Kryo-serializing whole rows) and cut
+    * single-pass consumers 20× (pruned vectorized scan vs whole-row
+    * lz4+Kryo decode: `dedup_ngram_pairs` 12.6 → 0.63 s median). The
+    * threshold sits at the log-midpoint of the measured bracket's
+    * endpoints.
     */
-  val AutoParquetBytesDefault: Long = 64L * 1024 * 1024
+  val AutoParquetBytes: Long = 64L * 1024 * 1024
 
-  /** run_meta self-description for the unset-conf pin mode. The
-    * compile-time default; prefer the session overload, which reads the
-    * EFFECTIVE threshold (r16 ADVICE: an [[AutoParquetBytesConf]]
-    * override would otherwise be mislabeled in A/B artifact lines).
-    */
-  def autoModeDesc: String = autoModeDescFor(AutoParquetBytesDefault)
-
-  /** run_meta self-description under this session's effective
-    * [[AutoParquetBytesConf]]. */
+  /** run_meta self-description of the session pin rule. It reads
+    * nothing from `spark`; perfbench's harness calls it in this form. */
   def autoModeDesc(spark: SparkSession): String =
-    autoModeDescFor(autoParquetBytes(spark))
-
-  /** The session's effective [[AutoParquetBytesConf]] threshold; a
-    * malformed value falls back to [[AutoParquetBytesDefault]] rather
-    * than failing a run over a tuning knob. */
-  def autoParquetBytes(spark: SparkSession): Long =
-    spark.conf.getOption(AutoParquetBytesConf)
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-      .getOrElse(AutoParquetBytesDefault)
-
-  /** The session's explicit [[StorageLevelConf]]: `Some(true)` for
-    * PARQUET, `Some(false)` for DISK_ONLY, `None` when unset (AUTO). */
-  private def explicitParquet(spark: SparkSession): Option[Boolean] =
-    spark.conf.getOption(StorageLevelConf).map(_.trim.toUpperCase(java.util.Locale.ROOT)) match {
-      case None => None
-      case Some("PARQUET") => Some(true)
-      case Some("DISK_ONLY") => Some(false)
-      case Some(other) => throw new IllegalArgumentException(
-        s"$StorageLevelConf must be PARQUET or DISK_ONLY (unset = AUTO), got '$other'")
-    }
-
-  private def autoModeDescFor(threshold: Long): String =
-    s"AUTO(parquet>=${threshold / (1024 * 1024)}MB," +
+    s"AUTO(parquet>=${AutoParquetBytes / (1024 * 1024)}MB," +
       s" else ${DefaultLevel.description})"
 
-  /** Total bytes under `dir` (recursive listing) — the AUTO pin-mode
+  /** Total bytes under `dir` (recursive listing) — the pin-mode
     * scale signal. NOT memoized (r16 ADVICE): a dir regenerated in
     * place at a different scale (exactly what the durable fingerprint
     * defends against) must not keep a stale pin-mode choice, and an
@@ -201,7 +160,7 @@ object StageCache {
       val p = new Path(canonical(dir))
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.getContentSummary(p).getLength
-    } catch { case _: Throwable => 0L } // unreadable dir: checkpoint pin
+    } catch { case NonFatal(_) => 0L } // unreadable dir: checkpoint pin
 
   /** df = what consumers get; persisted = the checkpoint RDD to free on
     * [[clear]] (None for parquet pins — files are the materialization:
@@ -300,24 +259,18 @@ object StageCache {
               val entry = spark.conf.getOption(DurableDirConf) match {
                 case Some(root) => parquetPin(root)
                 case None =>
-                  // Unset conf = size-adaptive AUTO: the parquet pin's
-                  // fixed per-file cost only pays for itself once the
-                  // corpus (and so the pin) is big — see
-                  // [[AutoParquetBytesConf]] for the measured crossover.
-                  // AUTO is additionally gated on sparkContext.isLocal
-                  // (r16 ADVICE): the session pin dir is a DRIVER-LOCAL
-                  // java.nio temp dir, so on a multi-executor-host
-                  // cluster tasks would write part files to their own
-                  // local filesystems and the read-back would see
-                  // missing data. Single-process mode (the documented
-                  // mode-1 deployment) gets the columnar pin; a cluster
-                  // session falls back to the checkpoint pin unless the
-                  // operator pins PARQUET explicitly (having pointed
-                  // the temp dir at shared storage) — the durable mode
+                  // The parquet pin's fixed per-file cost only pays for
+                  // itself once the corpus (and so the pin) is big — see
+                  // [[AutoParquetBytes]] for the measured crossover. It
+                  // is gated on sparkContext.isLocal: the session pin dir
+                  // is a DRIVER-LOCAL java.nio temp dir, so on a
+                  // multi-executor-host cluster tasks would write part
+                  // files to their own local filesystems and the
+                  // read-back would see missing data. A cluster session
+                  // gets the checkpoint pin; the durable mode
                   // ([[DurableDirConf]]) is the cluster-correct analog.
-                  val useParquet = explicitParquet(spark).getOrElse(
-                    spark.sparkContext.isLocal &&
-                      corpusBytes(spark, dir) >= autoParquetBytes(spark))
+                  val useParquet = spark.sparkContext.isLocal &&
+                    corpusBytes(spark, dir) >= AutoParquetBytes
                   // Session-local COLUMNAR pin: the durable path rooted at
                   // the session's temp dir. What the block-manager pin can
                   // never give consumers: a vectorized scan with column
@@ -483,7 +436,7 @@ object StageCache {
   def clear(spark: SparkSession): Unit = synchronized {
     Option(sessions.remove(spark)).foreach(_.valuesIterator.foreach { e =>
       try e.persisted.foreach(_.unpersist(blocking = true))
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     })
     Option(sessionRoots.remove(spark)).foreach { d =>
       deleteRecursively(d); exitSweep.remove(d)
@@ -522,8 +475,8 @@ object StageCache {
       java.nio.file.Files.walk(p).iterator().asScala.toSeq
         .sortBy(-_.getNameCount)
         .foreach(f => try java.nio.file.Files.deleteIfExists(f)
-          catch { case _: Throwable => () })
-    } catch { case _: Throwable => () }
+          catch { case NonFatal(_) => () })
+    } catch { case NonFatal(_) => () }
 
   def size(spark: SparkSession): Int = synchronized {
     Option(sessions.get(spark)).map(_.size).getOrElse(0)

@@ -780,14 +780,14 @@ object Corpus {
         // per-token hex-string/conv allocations on this corpus-wide scan
         (graft.engine.expr.NativeFunctions.md5PrefixLong(col("tok"), 8)
           % nBuckets).as("bucket"))
-    // Doc-grain bucket census, computed ONCE and persisted: both the
+    // Doc-grain bucket census, computed ONCE and checkpointed: both the
     // global weight table and the per-doc scores are diamonds over this
-    // subtree, and without the persist each would re-run the whole
-    // tokenize + hash pass. ≤ nBuckets rows per doc, spill-safe level.
-    val docBucket = tok
+    // subtree, and without the checkpoint each would re-run the whole
+    // tokenize + hash pass. ≤ nBuckets rows per doc. A checkpoint, not a
+    // persist: it leaves no session cache entry for a later call to match.
+    val docBucket = graft.engine.StageCache.checkpointed(tok
       .groupBy(col("doc_id"), col("keep"), col("bucket"))
-      .agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("n")))
     val census = docBucket.groupBy(col("bucket"))
       .agg(sum(col("n")).as("c_raw"),
         sum(when(col("keep"), col("n")).otherwise(0L)).as("c_tgt"))

@@ -3,6 +3,7 @@ package graft.engine.mongo
 import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.engine.StageCache
 import graft.engine.expr.{NativeFunctions, Normalizers, PyParity}
 import graft.engine.report.ReportSink
 import graft.engine.schemas.Schemas
@@ -278,18 +279,18 @@ object MongoLogPipeline {
         res.detailed, res.queryStats, res.nonSlow, res.errors)))
   }
 
-  /** Whole-report census in ONE pipeline run: [[analyze]]'s persisted scan
-    * feeds all five branch summaries (row count + an order-free checksum
-    * per branch), so producing the full report costs one parse of the log
-    * — not one parse per branch, which is what benching the five branch
-    * queries separately measures. The scan cache is materialized eagerly
-    * (one count) so the five summary subtrees all read it instead of
-    * racing to compute it; at 100 TB the same shape runs with the report
-    * branches sharing one persisted scan exactly as [[analyze]] documents.
+  /** Whole-report census in ONE pipeline run: one parsed scan, as in
+    * [[analyze]], feeds all five branch summaries (row count + an
+    * order-free checksum per branch), so producing the full report costs
+    * one parse of the log — not one parse per branch, which is what
+    * benching the five branch queries separately measures. The scan is checkpointed eagerly
+    * ([[StageCache.checkpointed]]) so the five summary subtrees all read
+    * it instead of racing to compute it. The checkpoint belongs to this
+    * call's plan: no later call matches it in the session's cache, and
+    * the ContextCleaner frees it with the plan.
     */
   def reportAll(lines: DataFrame): DataFrame = {
-    val scan = parsedScan(lines).persist(StorageLevel.MEMORY_AND_DISK)
-    scan.count()
+    val scan = StageCache.checkpointed(parsedScan(lines))
     val det = detailed(scan)
     def row(name: String, df: DataFrame, checksum: Column): DataFrame =
       df.agg(count(lit(1)).as("n_rows"),

@@ -12,7 +12,8 @@ import scala.jdk.CollectionConverters._
   * structurally too: the driver records a weaker check for missing
   * oracles, so an accidentally-dropped oracle would otherwise demote a
   * query silently.) `cli.Main`'s usage text is held to its argument
-  * parser the same way, so a deleted flag cannot linger in the docs.
+  * parser the same way, so a deleted flag cannot linger in the docs, and
+  * every `spark.graft.*` key the docs name must be one the engine reads.
   */
 class DocsConsistencySpec extends SparkTestBase {
 
@@ -63,5 +64,23 @@ class DocsConsistencySpec extends SparkTestBase {
     val staleOracles = SparkEntry.oracleSql.keySet.diff(SparkEntry.queries.keySet)
     assert(staleOracles.isEmpty,
       s"oracleSql entries with no query: ${staleOracles.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("every spark.graft.* key README and the verify skill name is one src/main reads") {
+    val src = scalaSources(new java.io.File("src/main"))
+      .map(f => java.nio.file.Files.readString(f.toPath)).mkString("\n")
+    // a key is read when its constant is passed to a session conf getter
+    val read = """val (\w+) = "(spark\.graft\.[\w.]+)"""".r.findAllMatchIn(src)
+      .filter(m => raw"\.conf\.get(Option)?\(${m.group(1)}\)".r.findFirstIn(src).nonEmpty)
+      .map(_.group(2)).toSet
+    assert(read.contains("spark.graft.checkpointDir"), read)
+    val docs = Seq("README.md", ".claude/skills/verify/SKILL.md")
+      .map(java.nio.file.Paths.get(_)).filter(java.nio.file.Files.exists(_))
+    assert(docs.nonEmpty)
+    for (doc <- docs) {
+      val named = """spark\.graft\.[\w.]*\w""".r
+        .findAllIn(java.nio.file.Files.readString(doc)).toSet
+      assert(named.diff(read).isEmpty, s"$doc names keys nothing reads: ${named.diff(read)}")
+    }
   }
 }

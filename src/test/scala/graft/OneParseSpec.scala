@@ -10,6 +10,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 import graft.cli.Main
+import graft.engine.ext.Corpus
 import graft.engine.gen.LogGen
 import graft.engine.ingest.Sources
 import graft.engine.mongo.MongoLogPipeline
@@ -19,6 +20,9 @@ import graft.engine.mysql.MySqlLogPipeline
   * exactly as many bytes as one forced pass of the pipeline's parse —
   * its emptiness check, warning count, warnings file, sheets and workbook
   * all read one persisted table — and leaves nothing cached behind.
+  * The registry operators that reuse a subtree within one call
+  * (`reportAll`, `dsirScore`) leave nothing cached behind either, so no
+  * later call is served from an earlier one.
   */
 class OneParseSpec extends SparkTestBase {
 
@@ -131,5 +135,20 @@ class OneParseSpec extends SparkTestBase {
     assert(report("mysql", mysqlInputs._2)._1 === rotated)
     assert(single.length() > 4 * 16384)
     assert(smallBlocks(report("mysql", single.getAbsolutePath))._1 === single.length())
+  }
+
+  test("mongo reportAll reads its log on every call and leaves nothing cached") {
+    val lines = LogGen.mongoLines(spark, sf)
+    spark.catalog.clearCache()
+    val reads = Seq.fill(2)(bytesRead(MongoLogPipeline.reportAll(lines).collect()))
+    assert(reads.head > 0)
+    assert(reads(1) === reads.head, "the second call was served from the first call's cache")
+    assert(spark.sharedState.cacheManager.isEmpty, "reportAll left a cached table")
+  }
+
+  test("dsirScore leaves nothing cached") {
+    spark.catalog.clearCache()
+    assert(Corpus.dsirScore(spark, sf).collect().nonEmpty)
+    assert(spark.sharedState.cacheManager.isEmpty, "dsirScore left a cached table")
   }
 }

@@ -492,13 +492,13 @@ class PlanSpec extends SparkTestBase {
     import graft.engine.ext.{Corpus, TextAnalysis}
     // dsir: the 256-row weight table must broadcast onto the token
     // stream (bucket-keyed BroadcastHashJoin), and the doc-grain census
-    // diamond rides the persisted subtree — every arm reads the cache
-    // (InMemoryTableScan), never a second tokenize+hash parquet pass
-    // (the InMemoryRelation printout inlines its stored plan, so "Scan
-    // parquet" occurrences are all within cache-definition blocks)
+    // diamond rides the checkpointed subtree — every arm reads the
+    // checkpoint (Scan ExistingRDD), never a second tokenize+hash
+    // parquet pass
     val dp = plan(Corpus.dsirScore(spark, dir))
     assert(dp.contains("BroadcastHashJoin"), dp.take(800))
-    assert("InMemoryTableScan".r.findAllIn(dp).length >= 2, dp.take(1200))
+    assert("Scan ExistingRDD".r.findAllIn(dp).length >= 2, dp.take(1200))
+    assert(!dp.contains("Scan parquet"), dp.take(1200))
     // bm25: postings join on term, index stats ride a 1-row broadcast;
     // the per-query top-k must prune map-side (WindowGroupLimit)
     val bm = plan(TextAnalysis.bm25ChunkTopK(spark, dir))

@@ -220,59 +220,48 @@ class StageCacheSpec extends SparkTestBase {
     assert(StageCache.builds === before + 1)
   }
 
-  test("AUTO mode picks the parquet pin at/above the size crossover") {
+  /** A one-doc corpus dir padded to exactly `bytes`, as the pin rule
+    * measures it, by a sparse file that takes no disk blocks. */
+  private def docsOfSize(bytes: Long): String = {
     val dir = tmpDocs(corpus.take(1))
-    StageCache.clear(spark)
-    // no StorageLevelConf: AUTO. Threshold 1 byte makes the tiny fixture
-    // dir count as "large", so AUTO must choose the columnar pin.
-    spark.conf.set(StageCache.AutoParquetBytesConf, "1")
-    try {
-      val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
-      val d = StageCache.materialized(spark, dir, "spec.auto.pq") {
-        spark.range(3).toDF("n")
-      }
-      assert(spark.sparkContext.getPersistentRDDs.keySet === pinnedBefore)
-      assert(d.queryExecution.executedPlan.collectFirst {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-      }.nonEmpty, "AUTO above threshold must yield a parquet file scan")
-    } finally {
-      spark.conf.unset(StageCache.AutoParquetBytesConf)
-      StageCache.clear(spark)
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val have = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getContentSummary(p).getLength
+    val pad = new java.io.RandomAccessFile(s"$dir/pad.bin", "rw")
+    try pad.setLength(bytes - have) finally pad.close()
+    dir
+  }
+
+  private def fileScan(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.executedPlan.collectFirst {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }
-    // same fixture below the (default, 64 MB) threshold: checkpoint pin
-    val dir2 = tmpDocs(corpus.take(1))
+
+  test("AUTO mode picks the parquet pin at/above the size crossover") {
+    StageCache.clear(spark)
+    // no conf: the input dir's size alone picks the pin
+    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val d = StageCache.materialized(spark, docsOfSize(StageCache.AutoParquetBytes),
+        "spec.auto.pq") {
+      spark.range(3).toDF("n")
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet === pinnedBefore)
+    assert(fileScan(d).nonEmpty, "at the threshold the pin must be a parquet file scan")
+    StageCache.clear(spark)
+    // one byte below the threshold: checkpoint pin
     val before2 = spark.sparkContext.getPersistentRDDs.keySet
-    StageCache.materialized(spark, dir2, "spec.auto.ckpt") {
+    StageCache.materialized(spark, docsOfSize(StageCache.AutoParquetBytes - 1),
+        "spec.auto.ckpt") {
       spark.range(3).toDF("n")
     }.count()
     assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before2).nonEmpty,
-      "AUTO below threshold must localCheckpoint (block-manager pin)")
+      "below the threshold the stage must localCheckpoint (block-manager pin)")
     StageCache.clear(spark)
-  }
-
-  test("explicit StorageLevelConf overrides the AUTO size rule") {
-    val dir = tmpDocs(corpus.take(1))
-    StageCache.clear(spark)
-    spark.conf.set(StageCache.AutoParquetBytesConf, "1") // would say parquet
-    spark.conf.set(StageCache.StorageLevelConf, "DISK_ONLY")
-    try {
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      StageCache.materialized(spark, dir, "spec.override") {
-        spark.range(3).toDF("n")
-      }.count()
-      assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).nonEmpty,
-        "explicit level must checkpoint even when AUTO would pick parquet")
-    } finally {
-      spark.conf.unset(StageCache.StorageLevelConf)
-      spark.conf.unset(StageCache.AutoParquetBytesConf)
-      StageCache.clear(spark)
-    }
   }
 
   test("PARQUET level pins the stage as session-local parquet files") {
-    val dir = tmpDocs(corpus.take(1))
+    val dir = docsOfSize(StageCache.AutoParquetBytes)
     StageCache.clear(spark)
-    spark.conf.set(StageCache.StorageLevelConf, "PARQUET")
     try {
       val before = StageCache.builds
       val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
@@ -283,10 +272,8 @@ class StageCacheSpec extends SparkTestBase {
       // a columnar pin, not a block-manager pin: no persistent RDD, and
       // the plan is a parquet file scan (column pruning / pushdown apply)
       assert(spark.sparkContext.getPersistentRDDs.keySet === pinnedBefore)
-      val scan = d1.queryExecution.executedPlan.collectFirst {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-      }
-      assert(scan.nonEmpty, "PARQUET pin must read back as a file scan")
+      val scan = fileScan(d1)
+      assert(scan.nonEmpty, "the parquet pin must read back as a file scan")
       // written through the durable path: a finalized stage dir named
       // after the stage, under the session's temp root
       val pinDir = scan.get.relation.location.rootPaths.head
@@ -307,57 +294,6 @@ class StageCacheSpec extends SparkTestBase {
       StageCache.clear(spark)
       assert(!local.exists(), s"parquet pin $local must be deleted on clear")
       assert(!root.exists(), s"session pin root $root must be deleted on clear")
-    } finally {
-      spark.conf.unset(StageCache.StorageLevelConf)
-      StageCache.clear(spark)
-    }
-  }
-
-  test("a StorageLevelConf other than PARQUET or DISK_ONLY fails the build, " +
-    "naming the allowed values") {
-    val dir = tmpDocs(corpus.take(1))
-    StageCache.clear(spark)
-    try {
-      for (bad <- Seq("MEMORY_AND_DISK", "parquett", "")) {
-        spark.conf.set(StageCache.StorageLevelConf, bad)
-        val e = intercept[IllegalArgumentException] {
-          StageCache.materialized(spark, dir, s"spec.bad.$bad") {
-            fail("thunk must not run under an invalid pin mode")
-          }
-        }
-        assert(e.getMessage.contains("PARQUET or DISK_ONLY"), bad)
-      }
-      // case and surrounding blanks are forgiven, not the value
-      spark.conf.set(StageCache.StorageLevelConf, " parquet ")
-      StageCache.materialized(spark, dir, "spec.lower")(spark.range(2).toDF("n"))
-    } finally {
-      spark.conf.unset(StageCache.StorageLevelConf)
-      StageCache.clear(spark)
-    }
-  }
-
-  test("a malformed AutoParquetBytesConf falls back to the default threshold") {
-    try {
-      for (bad <- Seq("64MB", "1e6", "")) {
-        spark.conf.set(StageCache.AutoParquetBytesConf, bad)
-        assert(StageCache.autoParquetBytes(spark) ===
-          StageCache.AutoParquetBytesDefault, bad)
-        assert(StageCache.autoModeDesc(spark) === StageCache.autoModeDesc, bad)
-      }
-      spark.conf.set(StageCache.AutoParquetBytesConf, " 1048576 ")
-      assert(StageCache.autoParquetBytes(spark) === 1048576L)
-      // and a build under the malformed value takes the default-threshold
-      // decision: the tiny fixture pins by checkpoint, no crash
-      spark.conf.set(StageCache.AutoParquetBytesConf, "lots")
-      val dir = tmpDocs(corpus.take(1))
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      StageCache.materialized(spark, dir, "spec.bad.threshold") {
-        spark.range(3).toDF("n")
-      }.count()
-      assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).nonEmpty)
-    } finally {
-      spark.conf.unset(StageCache.AutoParquetBytesConf)
-      StageCache.clear(spark)
-    }
+    } finally StageCache.clear(spark)
   }
 }
