@@ -1,5 +1,11 @@
 package graft
 
+import java.io.File
+import java.nio.file.Files
+import java.util.concurrent.TimeUnit
+
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.engine.StageCache
 
@@ -20,16 +26,34 @@ object BenchHost {
 
   /** `git rev-parse HEAD`, not hand-parsed .git files: the loose-ref read
     * silently degraded to "unknown" after pack-refs/gc, in worktrees
-    * (.git is a file), or when run from another cwd (r13 ADVICE). */
-  def gitSha: String =
-    try {
-      val p = new ProcessBuilder("git", "rev-parse", "HEAD")
-        .redirectErrorStream(true).start()
-      val out = new String(p.getInputStream.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim
-      if (p.waitFor() == 0 && out.matches("[0-9a-f]{40}")) out
-      else "unknown"
-    } catch { case _: Throwable => "unknown" }
+    * (.git is a file), or when run from another cwd (r13 ADVICE). A
+    * working tree with modified tracked files adds `-dirty`, so a run of
+    * uncommitted code does not carry its parent's sha. */
+  def gitSha: String = gitShaOf(new File("."))
+
+  /** [[gitSha]] of the checkout at `dir`. Each git call is bounded at
+    * 10 s; its output goes to a file, so no pipe can fill and stall it. */
+  private[graft] def gitShaOf(dir: File): String = {
+    def git(args: String*): Option[String] = {
+      val out = File.createTempFile("git", ".out")
+      try {
+        val p = new ProcessBuilder(("git" +: args): _*).directory(dir)
+          .redirectOutput(out).redirectError(ProcessBuilder.Redirect.DISCARD).start()
+        if (!p.waitFor(10, TimeUnit.SECONDS)) { p.destroyForcibly(); None }
+        else if (p.exitValue() == 0) Some(Files.readString(out.toPath).trim)
+        else None
+      } finally out.delete()
+    }
+    try git("rev-parse", "HEAD").filter(_.matches("[0-9a-f]{40}")) match {
+      case Some(sha) =>
+        git("status", "--porcelain", "--untracked-files=no") match {
+          case Some("") => sha
+          case Some(_) => s"$sha-dirty"
+          case None => "unknown"
+        }
+      case None => "unknown"
+    } catch { case NonFatal(_) => "unknown" }
+  }
 
   /** `s` as a JSON string literal: backslash, quote and ALL control
     * chars (< 0x20) escaped — a tab or CR in a name or in builder-authored

@@ -297,7 +297,7 @@ object StageCache {
     * `queryExecution.toRdd` — that re-plans into a fresh
     * MapPartitionsRDD whose unpersist is a no-op on the blocks.)
     */
-  private def checkpointRdd(df: DataFrame): Option[RDD[_]] =
+  private[graft] def checkpointRdd(df: DataFrame): Option[RDD[_]] =
     df.queryExecution.analyzed.collectFirst {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }

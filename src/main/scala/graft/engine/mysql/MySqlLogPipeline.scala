@@ -179,13 +179,20 @@ object MySqlLogPipeline {
       aggregateStats(detailed.groupBy(col("Normalized_Query")), col("ord"))
         .orderBy(col("Normalized_Query"))
 
-    // Warning channel, single pass: a skipped entry emits the skip alone;
-    // a complete one emits 0..2 (its Query_time, its empty query) — P10/R4
-    // skip (which patterns matched, Python-bool rendering, first 200
-    // chars — mysqlLogParser.py:95-96), P11 cast failure (embeds the
-    // UNstripped capture, :72-74), P12 empty query (:83-87) — via a
-    // compact array-filter-explode instead of a 3-leg union that would
-    // re-run the regex battery per leg.
+    val warnings = warningsOf(warningRows(projected).orderBy(WarningOrder: _*))
+    Result(detailed, aggregate, warnings)
+  }
+
+  /** Warning channel rows over a [[projectedOf]] table, unordered, single
+    * pass: a skipped entry emits the skip alone; a complete one emits 0..2
+    * (its Query_time, its empty query) — P10/R4 skip (which patterns
+    * matched, Python-bool rendering, first 200 chars —
+    * mysqlLogParser.py:95-96), P11 cast failure (embeds the UNstripped
+    * capture, :72-74), P12 empty query (:83-87) — via a compact
+    * array-filter-explode instead of a 3-leg union that would re-run the
+    * regex battery per leg. Ordered by [[WarningOrder]], then
+    * [[warningsOf]] projects the channel's columns. */
+  private def warningRows(projected: DataFrame): DataFrame = {
     def pyBool(c: Column): Column = when(c, "True").otherwise("False")
     val skipMsg = concat(
       lit("Skipped log entry "), col("entry_no"),
@@ -198,31 +205,36 @@ object MySqlLogPipeline {
       lit("' in entry "), col("entry_no"), lit(". Skipping field."))
     val emptyMsg = concat(lit("Empty query string found in entry "), col("entry_no"),
       lit(". It might be a non-SELECT/INSERT/UPDATE/DELETE statement or a parsing issue."))
-
-    val warnings = projected
+    projected
       .select(col("file_id"), col("entry_no"), col("ord"),
         explode(filter(array(
           when(SkipGate, struct(lit(0).as("warn_rank"), skipMsg.as("warning"))),
           when(BadQueryTimeGate, struct(lit(1).as("warn_rank"), qtMsg.as("warning"))),
           when(EmptyQueryGate, struct(lit(2).as("warn_rank"), emptyMsg.as("warning")))),
           w => w.isNotNull)).as("w"))
-      .orderBy(col("ord"), col("w.warn_rank"))
-      .select(col("file_id"), col("entry_no"), col("w.warning").as("warning"))
-
-    Result(detailed, aggregate, warnings)
   }
+
+  /** The warnings' order: entry order, then the gate order within an entry. */
+  private val WarningOrder = Seq(col("ord"), col("w.warn_rank"))
+
+  private def warningsOf(rows: DataFrame): DataFrame =
+    rows.select(col("file_id"), col("entry_no"), col("w.warning").as("warning"))
 
   /** The `cli.Main` report over entry records: [[projectedOf]] persisted
     * for the report, its [[Census]] (empty: no complete entry), the
-    * warnings and the two reference sheets, Detailed in the order of
-    * `entries` (file order from `Sources.readDelimited`). */
+    * warnings (sorted in the one task that writes them, as the Mongo
+    * report's are: no range sort over the pinned table) and the two
+    * reference sheets, Detailed in the order of `entries` (file order
+    * from `Sources.readDelimited`). */
   def report(entries: DataFrame): ReportSink.LogReport = {
     val projected = projectedOf(entries).persist(StorageLevel.MEMORY_AND_DISK)
     val res = resultFromProjected(projected)
     ReportSink.LogReport(projected, Census, empty = col("valid") === 0,
       emptyNotice = "Warning: No valid log entries found in the input.",
       warningCount = col("warnings"),
-      warnings = res.warnings, warningCol = "warning",
+      warnings = warningsOf(warningRows(projected).repartition(1)
+        .sortWithinPartitions(WarningOrder: _*)),
+      warningCol = "warning",
       sheets = ReportSink.MySqlSheets.zip(Seq(referenceDetailed(res.detailed), res.aggregate)))
   }
 

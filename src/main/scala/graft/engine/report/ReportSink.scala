@@ -1,6 +1,13 @@
 package graft.engine.report
 
+import scala.collection.mutable
+
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+
+import graft.engine.StageCache
+import graft.engine.plans.PlanWalk
 
 /** Report sink (SURVEY.md §2.8 K1/K2): the reference writes one multi-sheet
   * Excel workbook (mongo_parser.py:134-143, mysqlLogParser.py:137-144); the
@@ -34,10 +41,11 @@ object ReportSink {
     * the two notices, then the warnings file, the sheets and, on request,
     * the workbook and the page; `pinned` is unpersisted after. The notices
     * read ONE census aggregate: the report's first action, it builds
-    * `pinned` in parallel.
+    * `pinned` in parallel. Each sheet is computed once: see [[once]].
     */
   def write(report: LogReport, outDir: String, csv: Boolean = false,
-            xlsx: Boolean = false, html: Boolean = false): (Boolean, String) =
+            xlsx: Boolean = false, html: Boolean = false): (Boolean, String) = {
+    val held = mutable.Buffer.empty[RDD[_]]
     try {
       val census = report.pinned.agg(report.census.head, report.census.tail: _*)
         .select(report.empty, report.warningCount).head()
@@ -46,11 +54,35 @@ object ReportSink {
       if (nWarn > 0) println(s"Encountered $nWarn parse warning(s).")
       attempt {
         writeWarnings(outDir, report.warnings, report.warningCol)
-        report.sheets.foreach { case (name, df) => writeSheet(outDir, name, df, csv) }
-        if (xlsx) XlsxWriter.write(s"$outDir/report.xlsx", report.sheets)
-        if (html) HtmlWriter.write(s"$outDir/report.html", "Log Report", report.sheets)
+        val sheets = report.sheets.map { case (name, df) => name -> once(df, held) }
+        sheets.foreach { case (name, df) => writeSheet(outDir, name, df, csv) }
+        if (xlsx) XlsxWriter.write(s"$outDir/report.xlsx", sheets)
+        if (html) HtmlWriter.write(s"$outDir/report.html", "Log Report", sheets)
       }
-    } finally report.pinned.unpersist(blocking = true)
+    } finally {
+      held.foreach(_.unpersist(blocking = true))
+      report.pinned.unpersist(blocking = true)
+    }
+  }
+
+  /** `sheet`, or an eager local checkpoint of it when its plan shuffles
+    * (an aggregate, a global sort), its blocks added to `held` for the
+    * caller to release. Every later read of the sheet (its parquet write,
+    * the workbook and page collects) then scans the checkpoint, run once
+    * with the adaptive plan's coalesced partitions, and a capped collect
+    * of it is a plain limit, not a top-k whose per-task buffer is sized
+    * by the cap. A row-level sheet is a projection of the pinned table
+    * and stays one. Not `persist`: a cached plan keeps every shuffle
+    * partition (adaptive execution does not coalesce inside it), so each
+    * read of the sheet would run `spark.sql.shuffle.partitions` tasks. */
+  private def once(sheet: DataFrame, held: mutable.Buffer[RDD[_]]): DataFrame =
+    if (!PlanWalk.nodes(sheet.queryExecution.executedPlan)
+          .exists(_.isInstanceOf[ShuffleExchangeLike])) sheet
+    else {
+      val cp = StageCache.checkpointed(sheet)
+      if (cp ne sheet) held ++= StageCache.checkpointRdd(cp)
+      cp
+    }
 
   /** The one error convention of every artifact write. */
   private def attempt(body: => Unit): (Boolean, String) =

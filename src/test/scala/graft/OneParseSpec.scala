@@ -45,13 +45,17 @@ class OneParseSpec extends SparkTestBase {
     df.write.format("noop").mode("overwrite").save()
 
   /** Input bytes of one `cli.Main --xlsx` report; the report must leave
-    * the session's cache as empty as it found it. */
+    * the session's cache as empty as it found it, and release every RDD
+    * it persisted (its sheet checkpoints) before it returns. */
   private def report(mode: String, in: String): (Long, String) = {
     spark.catalog.clearCache()
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted
     val out = Files.createTempDirectory(s"oneparse-$mode").toFile.getAbsolutePath
     val n = bytesRead(Main.main(Array("--mode", mode, "--input", in,
       "--output", out, "--xlsx")))
     assert(spark.sharedState.cacheManager.isEmpty, s"$mode report left a cached table")
+    assert((persisted -- before).isEmpty, s"$mode report left a persistent RDD")
     (n, out)
   }
 

@@ -164,6 +164,29 @@ class ReportSinkSpec extends SparkTestBase {
     assert(spark.sharedState.cacheManager.isEmpty)
   }
 
+  test("a sheet whose collect fails reads as a report error and leaves no workbook") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("xlsxfail").toFile
+    val in = new java.io.File(dir, "slow.log")
+    java.nio.file.Files.writeString(in.toPath, log)
+    val report = MySqlLogPipeline.report(Sources.readDelimited(spark, in.getAbsolutePath))
+    // a `line_no` column is a sheet of lines, sorted on the driver as
+    // Longs: a String one writes as parquet but fails the workbook collect
+    val bad = Seq("b", "a").toDF("line_no")
+    val out = new java.io.File(dir, "report")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val (ok, err) = Console.withOut(new java.io.ByteArrayOutputStream) {
+      ReportSink.write(report.copy(sheets = report.sheets :+ ("Bad" -> bad)),
+        out.getAbsolutePath, xlsx = true)
+    }
+    assert(!ok)
+    assert(err.startsWith("Error writing report: "), err)
+    assert(new java.io.File(out, "Bad").isDirectory)
+    assert(out.list().filter(_.contains("xlsx")).isEmpty, out.list().toSeq)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
+  }
+
   test("query CLI runs a registry operator against a table dir") {
     spark // force session init so Main's getOrCreate reuses it
     val dir = java.nio.file.Files.createTempDirectory("cliq").toFile
