@@ -39,9 +39,10 @@ object ReportSink {
 
   /** Run a log report as the reference's CLI does (mongo_parser.py:218-222):
     * the two notices, then the warnings file, the sheets and, on request,
-    * the workbook and the page; `pinned` is unpersisted after. The notices
-    * read ONE census aggregate: the report's first action, it builds
-    * `pinned` in parallel. Each sheet is computed once: see [[once]].
+    * the workbook and the page; `pinned` and the sheet checkpoints are
+    * released after. The notices read ONE census aggregate: the report's
+    * first action, it builds `pinned` in parallel. Each sheet is computed
+    * once: see [[once]].
     */
   def write(report: LogReport, outDir: String, csv: Boolean = false,
             xlsx: Boolean = false, html: Boolean = false): (Boolean, String) = {
