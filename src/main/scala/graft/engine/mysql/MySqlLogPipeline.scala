@@ -179,20 +179,21 @@ object MySqlLogPipeline {
       aggregateStats(detailed.groupBy(col("Normalized_Query")), col("ord"))
         .orderBy(col("Normalized_Query"))
 
-    val warnings = warningsOf(warningRows(projected).orderBy(WarningOrder: _*))
+    val warnings = warningsOf(projected)((rows, order) => rows.orderBy(order: _*))
     Result(detailed, aggregate, warnings)
   }
 
-  /** Warning channel rows over a [[projectedOf]] table, unordered, single
-    * pass: a skipped entry emits the skip alone; a complete one emits 0..2
-    * (its Query_time, its empty query) — P10/R4 skip (which patterns
-    * matched, Python-bool rendering, first 200 chars —
-    * mysqlLogParser.py:95-96), P11 cast failure (embeds the UNstripped
-    * capture, :72-74), P12 empty query (:83-87) — via a compact
-    * array-filter-explode instead of a 3-leg union that would re-run the
-    * regex battery per leg. Ordered by [[WarningOrder]], then
-    * [[warningsOf]] projects the channel's columns. */
-  private def warningRows(projected: DataFrame): DataFrame = {
+  /** Warning channel over a [[projectedOf]] table, single pass: a skipped
+    * entry emits the skip alone; a complete one emits 0..2 (its
+    * Query_time, its empty query) — P10/R4 skip (which patterns matched,
+    * Python-bool rendering, first 200 chars — mysqlLogParser.py:95-96),
+    * P11 cast failure (embeds the UNstripped capture, :72-74), P12 empty
+    * query (:83-87) — via a compact array-filter-explode instead of a
+    * 3-leg union that would re-run the regex battery per leg. `sorted`
+    * puts the rows in the given order (entry order, then gate order
+    * within an entry), globally or in one task. */
+  private def warningsOf(projected: DataFrame)(
+      sorted: (DataFrame, Seq[Column]) => DataFrame): DataFrame = {
     def pyBool(c: Column): Column = when(c, "True").otherwise("False")
     val skipMsg = concat(
       lit("Skipped log entry "), col("entry_no"),
@@ -205,20 +206,16 @@ object MySqlLogPipeline {
       lit("' in entry "), col("entry_no"), lit(". Skipping field."))
     val emptyMsg = concat(lit("Empty query string found in entry "), col("entry_no"),
       lit(". It might be a non-SELECT/INSERT/UPDATE/DELETE statement or a parsing issue."))
-    projected
+    val rows = projected
       .select(col("file_id"), col("entry_no"), col("ord"),
         explode(filter(array(
           when(SkipGate, struct(lit(0).as("warn_rank"), skipMsg.as("warning"))),
           when(BadQueryTimeGate, struct(lit(1).as("warn_rank"), qtMsg.as("warning"))),
           when(EmptyQueryGate, struct(lit(2).as("warn_rank"), emptyMsg.as("warning")))),
           w => w.isNotNull)).as("w"))
+    sorted(rows, Seq(col("ord"), col("w.warn_rank")))
+      .select(col("file_id"), col("entry_no"), col("w.warning").as("warning"))
   }
-
-  /** The warnings' order: entry order, then the gate order within an entry. */
-  private val WarningOrder = Seq(col("ord"), col("w.warn_rank"))
-
-  private def warningsOf(rows: DataFrame): DataFrame =
-    rows.select(col("file_id"), col("entry_no"), col("w.warning").as("warning"))
 
   /** The `cli.Main` report over entry records: [[projectedOf]] persisted
     * for the report, its [[Census]] (empty: no complete entry), the
@@ -232,8 +229,8 @@ object MySqlLogPipeline {
     ReportSink.LogReport(projected, Census, empty = col("valid") === 0,
       emptyNotice = "Warning: No valid log entries found in the input.",
       warningCount = col("warnings"),
-      warnings = warningsOf(warningRows(projected).repartition(1)
-        .sortWithinPartitions(WarningOrder: _*)),
+      warnings = warningsOf(projected)((rows, order) =>
+        rows.repartition(1).sortWithinPartitions(order: _*)),
       warningCol = "warning",
       sheets = ReportSink.MySqlSheets.zip(Seq(referenceDetailed(res.detailed), res.aggregate)))
   }

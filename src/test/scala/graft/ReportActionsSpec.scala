@@ -98,7 +98,7 @@ class ReportActionsSpec extends SparkTestBase {
     dir
   }
 
-  test("a mongo report runs 12 actions and each aggregate sheet's exchange once") {
+  test("a mongo report runs 12 actions, each exchange once") {
     spark
     val in = new File(Files.createTempDirectory("actions-mongo").toFile, "mongod.log")
     Files.writeString(in.toPath,
@@ -108,7 +108,7 @@ class ReportActionsSpec extends SparkTestBase {
     assertOnePass(report("mongo", in), 12, 2, "mongo")
   }
 
-  test("a mysql report runs 7 actions and its aggregate's exchange once, one file or rotated") {
+  test("a mysql report runs 7 actions, each exchange once") {
     spark
     for (in <- Seq(new File(mysqlDir, "slow.log"), new File(mysqlDir, "rotated")))
       assertOnePass(report("mysql", in), 7, 1, in.getName)
